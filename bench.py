@@ -270,8 +270,9 @@ def run_benchmarks(spark) -> tuple[dict[str, float], dict[str, float]]:
     )
 
     # streaming pipeline throughput (the north-star metric surface): file
-    # stream over the same corpus -> watermark -> stateful exact dedup ->
-    # token filters -> exactly-once sink; tokens/sec of the full run
+    # stream over the same corpus -> watermark -> exact dedup
+    # (dropDuplicatesWithinWatermark) -> token filters -> exactly-once sink;
+    # tokens/sec of the full run
     def stream_pipeline():
         import tempfile
 
@@ -284,7 +285,6 @@ def run_benchmarks(spark) -> tuple[dict[str, float], dict[str, float]]:
                 os.path.join(tmp, "out"),
                 os.path.join(tmp, "ckpt"),
                 max_files_per_trigger=64,
-                n_shards=CPUS * 4,
             )
             q.processAllAvailable()
             q.stop()
@@ -295,36 +295,9 @@ def run_benchmarks(spark) -> tuple[dict[str, float], dict[str, float]]:
             total_tokens / timings["stream_pipeline"], 1
         )
 
-    # same pipeline with the JVM-builtin dedup (dropDuplicatesWithinWatermark)
-    # — the production default for PLAIN exact dedup; the custom
-    # applyInPandasWithState variant above is the CEP/extension path and the
-    # conservative number for scaling claims
-    def stream_pipeline_builtin():
-        import tempfile
-
-        from dataflow_spark.streaming.pipeline import run_dedup_filter_stream
-
-        with tempfile.TemporaryDirectory() as tmp:
-            q = run_dedup_filter_stream(
-                spark,
-                corpus_dir,
-                os.path.join(tmp, "out"),
-                os.path.join(tmp, "ckpt"),
-                max_files_per_trigger=64,
-                dedup_mode="builtin",
-            )
-            q.processAllAvailable()
-            q.stop()
-
-    bench("stream_pipeline_builtin", stream_pipeline_builtin)
-    if "stream_pipeline_builtin" in timings:
-        extras["stream_builtin_tokens_per_sec"] = round(
-            total_tokens / timings["stream_pipeline_builtin"], 1
-        )
-
     # round-4 O(batch)-state-IO path: exact dedup over the generation-
-    # segment parquet index (streaming/indexed.py — the tws.py delta-log
-    # design on foreachBatch).  Dedup-only (no filter chain), so the
+    # segment parquet index (streaming/indexed.py — a delta-log design on
+    # foreachBatch).  Dedup-only (no filter chain), so the
     # tok/s is comparable to the dedup stage of the pipelines above, not
     # to their full chains.
     def stream_pipeline_indexed():

@@ -111,24 +111,25 @@ def run_stream_spec(
 
         name: stream_exact_dedup
         stream:
-          dedup: builtin          # custom | builtin | tws | indexed
-          watermark: 10 minutes
+          dedup: builtin          # builtin | indexed
+          watermark: 10 minutes   # builtin only
           max_files_per_trigger: 1
         stages:                    # optional post-dedup operator chain
           - operator: ContentNullFilter
             params: {input_key: text}
 
-    Tiers reuse the tested kernels 1:1 (streaming/pipeline.py,
-    streaming/indexed.py), so the spec runner inherits their exactly-once
-    sink, watermark and resume semantics.  ``dedup: indexed`` delegates to
-    the generation-segment operator, which owns its own sink — a spec
-    combining it with ``stages`` is rejected rather than silently ignored.
+    Two tiers reuse the tested kernels 1:1, so the spec runner inherits
+    their exactly-once sink and resume semantics: ``builtin``
+    (dropDuplicatesWithinWatermark, streaming/pipeline.py) for bounded
+    horizons and ``indexed`` (the generation-segment index,
+    streaming/indexed.py) for durable, unbounded ones.  ``dedup: indexed``
+    owns its own sink and keeps no watermark, so a spec combining it with
+    ``stages`` or ``watermark`` is rejected rather than silently ignored.
     Returns the started StreamingQuery; the caller drives it."""
     from dataflow_spark.streaming.pipeline import (
         file_stream_source,
         idempotent_parquet_sink,
         streaming_builtin_dedup,
-        streaming_exact_dedup,
     )
 
     if isinstance(spec, str):
@@ -136,13 +137,14 @@ def run_stream_spec(
     scfg = spec.get("stream")
     if not isinstance(scfg, dict):
         raise ValueError("streaming spec needs a 'stream' mapping")
-    unknown = set(scfg) - {"dedup", "watermark", "max_files_per_trigger", "n_shards"}
+    unknown = set(scfg) - {"dedup", "watermark", "max_files_per_trigger"}
     if unknown:
         raise ValueError(f"stream block: unknown key(s) {sorted(unknown)}")
     tier = scfg.get("dedup", "builtin")
+    if tier not in ("builtin", "indexed"):
+        raise ValueError(f"stream.dedup {tier!r}: 'builtin' or 'indexed'")
     watermark = scfg.get("watermark", "10 minutes")
     per_trigger = int(scfg.get("max_files_per_trigger", 1))
-    n_shards = int(scfg.get("n_shards", 8))
     stages = spec.get("stages") or []
 
     if tier == "indexed":
@@ -150,6 +152,11 @@ def run_stream_spec(
             raise ValueError(
                 "stream.dedup=indexed owns its sink and carries no operator "
                 "chain; drop 'stages' or pick another tier"
+            )
+        if "watermark" in scfg:
+            raise ValueError(
+                "stream.dedup=indexed keeps no watermark (its horizon is "
+                "expire_seen_index); drop 'watermark' or pick 'builtin'"
             )
         from dataflow_spark.streaming.indexed import (
             run_exact_dedup_stream_indexed,
@@ -161,18 +168,7 @@ def run_stream_spec(
         )
 
     stream = file_stream_source(spark, corpus_dir, per_trigger)
-    if tier == "builtin":
-        deduped = streaming_builtin_dedup(stream, watermark)
-    elif tier == "custom":
-        deduped = streaming_exact_dedup(stream, watermark, n_shards)
-    elif tier == "tws":
-        from dataflow_spark.streaming.tws import streaming_exact_dedup_tws
-
-        deduped = streaming_exact_dedup_tws(stream, watermark, n_shards)
-    else:
-        raise ValueError(
-            f"stream.dedup {tier!r}: 'custom', 'builtin', 'tws' or 'indexed'"
-        )
+    deduped = streaming_builtin_dedup(stream, watermark)
     out = pipeline_from_spec(spec).run(deduped) if stages else deduped
     sink = idempotent_parquet_sink(
         out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")

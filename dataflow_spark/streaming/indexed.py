@@ -1,17 +1,16 @@
-"""Exact streaming dedup with O(batch) durable-state IO — the tws.py
-delta-log/generation design shipped on an API that runs today.
+"""Exact streaming dedup with O(batch) durable-state IO: a generation-tagged
+delta log of hash segments on ``foreachBatch``.
 
 Why (VERDICT r3 #3): ``applyInPandasWithState`` exposes ONE value per group
-key, so the Python-side seen-set must be rewritten wholesale every
+key, so a Python-side seen-set must be rewritten wholesale every
 micro-batch — per-batch durable-state IO is O(history) no matter how the
-buffer is laid out.  The asymptotically right operator
-(``transformWithStateInPandas``, streaming/tws.py) is runtime-blocked in
-this sandbox (google.protobuf absent — re-verified round 4: no runtime, no
-wheel, no conda pkg anywhere on the image, pip index unreachable).  This
-module ports the SAME design — a generation-tagged append-only delta log of
-sorted int64 hash segments — onto ``foreachBatch`` + a batch-versioned
-parquet index, exactly the machinery the exact-mode streaming near-dedup
-already proved out (pipeline.run_near_dedup_stream_exact):
+buffer is laid out.  The asymptotically right operator,
+``transformWithStateInPandas`` with a per-key delta log, needs
+google.protobuf at runtime.  This module implements the same design — a
+generation-tagged append-only delta log of sorted int64 hash segments —
+with ``foreachBatch`` + a batch-versioned parquet index, exactly the
+machinery the exact-mode streaming near-dedup already proved out
+(pipeline.run_near_dedup_stream_exact):
 
 - **Generation = micro-batch id.**  Batch N appends ONE segment
   (``_seen_state/batch_id=N/bucket=K``) holding only the hashes FIRST SEEN
@@ -26,13 +25,13 @@ already proved out (pipeline.run_near_dedup_stream_exact):
   bounded by real hash-prefix overlap, not history length (the same
   VERDICT-r2-#5 contract as the near-dedup index, asserted flat in
   tests/test_streaming_indexed.py).
-- **Compaction** (tws.py's ``compact_every`` analogue) is offline table
-  maintenance: ``compact_seen_index`` merges all sealed segments into one
-  generation so a cold scan is one partition + a short tail; in prod this
-  is an Iceberg ``rewrite_data_files`` call.
+- **Compaction** is offline table maintenance: ``compact_seen_index``
+  merges all sealed segments into one generation so a cold scan is one
+  partition + a short tail; in prod this is an Iceberg
+  ``rewrite_data_files`` call.
 - **Horizon/TTL**: ``expire_seen_index`` drops generations older than a
   cutoff — the dedup horizon becomes "since expiry", the same bounded-state
-  contract as the watermark TTL on the applyInPandasWithState path.
+  contract as the watermark horizon of the builtin tier.
 - **Exactly-once / replay**: segments and row outputs are each guarded by
   their own ``_SUCCESS`` marker and the probe reads only generations < N,
   so a replayed batch recomputes identical survivors and re-appends
@@ -90,12 +89,20 @@ def _index_meta(
     so a resume or compaction run with a different ``n`` would prune the
     wrong buckets and silently miss duplicates.  First writer records the
     geometry; every later entry point reads and uses the recorded values
-    (the caller's arguments are a default, not an override)."""
+    (the caller's arguments are a default, not an override).  Sealed
+    segments without the meta file have an unknown geometry, so that case
+    raises instead of recording the caller's values."""
     path = os.path.join(state_dir, "_index_meta.json")
     if os.path.exists(path):
         with open(path) as fh:
             m = json.load(fh)
         return int(m["n_state_buckets"]), int(m["summary_prefix_bits"])
+    if _list_sealed_batches(state_dir):
+        raise ValueError(
+            f"{state_dir} holds sealed segments but no _index_meta.json: "
+            "the geometry they were written with is unknown; restore the "
+            "meta file or rebuild the index"
+        )
     os.makedirs(state_dir, exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
@@ -438,11 +445,10 @@ def compact_seen_index(
     spark: SparkSession, out_dir: str, n_state_buckets: int = 16,
     summary_prefix_bits: int = 20,
 ) -> int:
-    """Offline compaction (tws.py ``compact_every`` analogue; Iceberg
-    ``rewrite_data_files`` in prod): merge every SEALED generation into the
-    oldest one as a single distinct-sorted segment and drop the rest.  Run
-    while the stream is STOPPED (table maintenance).  Returns the number of
-    generations merged away.  Probe results are unchanged: the merged
+    """Offline compaction (Iceberg ``rewrite_data_files`` in prod): merge
+    every SEALED generation into the oldest one as a single distinct-sorted
+    segment and drop the rest.  Run while the stream is STOPPED (table
+    maintenance).  Returns the number of generations merged away.  Probe results are unchanged: the merged
     segment holds exactly the union of the merged hash sets, and its
     summary the union of prefixes.
 

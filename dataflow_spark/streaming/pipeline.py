@@ -11,11 +11,10 @@ a real Structured Streaming job:
   behind an import-try (``iceberg_source``) with the file stream as the
   drop-in stand-in (identical schema and semantics downstream);
 * event-time watermark (``withWatermark``) bounds all state;
-* exact dedup: ``applyInPandasWithState`` keyed by a hash shard, state = seen
-  token-hash set with event-time timeout — the streaming analogue of the
-  reference's in-memory ``seen`` set (hash_deduplicate_filter.py:75-89),
-  approximation contract identical to dropDuplicatesWithinWatermark: exact
-  within the watermark horizon;
+* exact dedup: ``dropDuplicatesWithinWatermark`` on the token-array hash —
+  the streaming analogue of the reference's in-memory ``seen`` set
+  (hash_deduplicate_filter.py:75-89), exact within the watermark horizon;
+  streaming/indexed.py is the durable, unbounded-horizon tier;
 * rule filters: the same Catalyst predicates as batch (stateless, fuse);
 * windowed aggregation: tumbling window keyed by (skew-salted) source;
 * sink: ``foreachBatch`` idempotent parquet append keyed by batchId —
@@ -27,14 +26,13 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from dataflow_spark.corpus import CORPUS_SCHEMA
 
@@ -90,108 +88,8 @@ def file_stream_source(
 
 
 # ---------------------------------------------------------------------------
-# stateful exact dedup (applyInPandasWithState)
+# stateful exact dedup
 # ---------------------------------------------------------------------------
-
-_DEDUP_OUT_SCHEMA = T.StructType(
-    list(CORPUS_SCHEMA.fields)
-    + [
-        T.StructField("shard", T.IntegerType()),
-        T.StructField("_seen_total", T.LongType()),
-    ]
-)
-_DEDUP_STATE_SCHEMA = T.StructType(
-    [T.StructField("seen_hashes", T.BinaryType())]
-)
-
-
-def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
-    """Vectorized membership of ``values`` in a SORTED int64 array."""
-    if not len(sorted_arr):
-        return np.zeros(len(values), dtype=bool)
-    pos = np.searchsorted(sorted_arr, values)
-    pos_c = np.minimum(pos, len(sorted_arr) - 1)
-    return (pos < len(sorted_arr)) & (sorted_arr[pos_c] == values)
-
-
-def _dedup_fn(
-    key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-shard first-seen dedup.  State: the seen token hashes as one
-    SORTED int64 numpy buffer in a binary column — a state entry of S hashes
-    costs one 8S-byte memcpy per micro-batch in each direction, where the
-    previous array<long> layout boxed S Python ints on both load and store
-    (measured 4.8x slower at S=15k on the isolated kernel).  Within a
-    micro-batch rows are processed in doc_seq order so first-seen semantics
-    hold inside the batch too."""
-    if state.hasTimedOut:
-        state.remove()
-        return
-    (buf,) = state.get if state.exists else (None,)
-    seen = (
-        np.frombuffer(buf, dtype=np.int64) if buf else np.empty(0, np.int64)
-    )  # sorted invariant: np.union1d output below is sorted
-    pending = np.empty(0, np.int64)  # new this batch, sorted
-    max_ev_ms = 0
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("doc_seq")
-        if len(pdf):
-            # _ev_ms is unix_millis(event_time) computed JVM-side: pandas
-            # .timestamp() on the delivered tz-naive values would assume UTC
-            # while Spark delivers them in spark.sql.session.timeZone — under
-            # a non-UTC session TZ the TTL base would be offset by the zone
-            # delta (hours-long TTL drift).
-            max_ev_ms = max(max_ev_ms, int(pdf["_ev_ms"].max()))
-        # vectorized first-seen: new = not in persisted state, not in an
-        # earlier chunk of this batch, and first occurrence in this
-        # (doc_seq-sorted) chunk — no per-row Python (input_hint)
-        th = pdf["_th"].to_numpy(dtype=np.int64)
-        keep_mask = (
-            ~_sorted_member(seen, th)
-            & ~_sorted_member(pending, th)
-            & ~pd.Series(th).duplicated(keep="first").to_numpy()
-        )
-        pending = np.union1d(pending, th[keep_mask])
-        out = pdf[keep_mask].drop(columns=["_th", "_ev_ms"])
-        if len(out):
-            out = out.assign(_seen_total=len(seen) + len(pending))
-            yield out
-    state.update((np.union1d(seen, pending).tobytes(),))
-    # TTL: one hour of EVENT time past the newest row this shard has seen.
-    # (Not the current watermark — on the first batch the watermark is still
-    # epoch-0, and a watermark-relative timeout would expire the whole state
-    # the moment the watermark jumps forward, e.g. across a restart.)
-    ttl_base = max(state.getCurrentWatermarkMs(), max_ev_ms)
-    state.setTimeoutTimestamp(ttl_base + 3600 * 1000)
-
-
-def streaming_exact_dedup(
-    stream: DataFrame,
-    watermark_delay: str = "10 minutes",
-    n_shards: int = N_SHARDS_DEFAULT,
-) -> DataFrame:
-    """Exact first-seen dedup over the stream.  The seen-hash state is sharded
-    by hash prefix (``n_shards`` keys) so state distributes across executors;
-    at 10^12-sequence scale raise n_shards to O(10 × cores) and the state
-    store (RocksDB in prod) holds the horizon's hashes.  TTL via event-time
-    timeout bounds state to the watermark horizon — the same approximation
-    contract as dropDuplicatesWithinWatermark."""
-    tagged = (
-        stream.withColumn("_th", F.xxhash64(F.col("tokens")))
-        .withColumn("shard", F.pmod(F.col("_th"), F.lit(n_shards)).cast("int"))
-        .withColumn("_ev_ms", F.unix_millis(F.col("event_time")))
-    )
-    return (
-        tagged.withWatermark("event_time", watermark_delay)
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _dedup_fn,
-            outputStructType=_DEDUP_OUT_SCHEMA,
-            stateStructType=_DEDUP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 def streaming_builtin_dedup(
@@ -421,38 +319,31 @@ def run_dedup_filter_stream(
     checkpoint_dir: str,
     watermark_delay: str = "10 minutes",
     max_files_per_trigger: int = 1,
-    n_shards: int = 8,
     filters: list | None = None,
-    dedup_mode: str = "custom",
+    dedup_mode: str = "builtin",
 ):
-    """The full streaming pipeline: source -> watermark -> stateful exact
-    dedup -> rule filters -> exactly-once sink.  Returns the started query;
-    caller drives it (processAllAvailable in tests) and can kill/restart with
-    the same checkpoint_dir to prove resume.
+    """The full streaming pipeline: source -> watermark -> exact dedup
+    (``streaming_builtin_dedup``) -> rule filters -> exactly-once sink.
+    Returns the started query; caller drives it (processAllAvailable in
+    tests) and can kill/restart with the same checkpoint_dir to prove
+    resume.
 
-    ``dedup_mode='builtin'`` swaps the sharded applyInPandasWithState
-    operator for dropDuplicatesWithinWatermark (JVM state, per-hash keys)
-    — measured ~30% faster for PLAIN exact dedup on the r400 corpus
-    (builtin ~8.6 s vs custom ~12.2 s warm at the 128-shard knee), because
-    builtins skip the Arrow state round-trip.  Keep 'custom' when the state
-    logic goes beyond what the builtin expresses (band near-dedup state,
-    custom TTL/CEP emission) — that is what the operator exists for."""
+    Dedup keeps one survivor per token-array hash, taken from the
+    micro-batch where that hash first arrived; which row of that batch
+    survives is Spark's choice.  ``dedup_mode`` accepts only ``'builtin'``;
+    for durable, unbounded-horizon dedup with min-``doc_seq`` survivors use
+    ``streaming.indexed.run_exact_dedup_stream_indexed``."""
     from dataflow_spark.operators.filters import keep_n_tok_range
 
-    stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)
-    if dedup_mode == "builtin":
-        deduped = streaming_builtin_dedup(stream, watermark_delay)
-    elif dedup_mode == "custom":
-        deduped = streaming_exact_dedup(stream, watermark_delay, n_shards)
-    elif dedup_mode == "tws":
-        # delta-log state: O(batch) state IO per micro-batch (streaming/tws.py)
-        from dataflow_spark.streaming.tws import streaming_exact_dedup_tws
-
-        deduped = streaming_exact_dedup_tws(stream, watermark_delay, n_shards)
-    else:
+    if dedup_mode != "builtin":
         raise ValueError(
-            f"dedup_mode {dedup_mode!r}: 'custom', 'builtin' or 'tws'"
+            f"dedup_mode {dedup_mode!r}: only 'builtin' is supported (the "
+            "'custom' and 'tws' tiers were removed); use "
+            "streaming.indexed.run_exact_dedup_stream_indexed for the "
+            "durable-index tier"
         )
+    stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)
+    deduped = streaming_builtin_dedup(stream, watermark_delay)
     filtered = deduped.where(keep_n_tok_range(1, 10**9))
     for cond in filters or []:
         filtered = filtered.where(cond)
@@ -483,12 +374,24 @@ _BAND_STATE_SCHEMA = T.StructType(
 )
 
 
+def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
+    """Vectorized membership of ``values`` in a SORTED int64 array."""
+    if not len(sorted_arr):
+        return np.zeros(len(values), dtype=bool)
+    pos = np.searchsorted(sorted_arr, values)
+    pos_c = np.minimum(pos, len(sorted_arr) - 1)
+    return (pos < len(sorted_arr)) & (sorted_arr[pos_c] == values)
+
+
 def _band_state_fn(key, pdf_iter, state):
     """Per band-shard state = set of band hashes seen, stored as one SORTED
-    int64 numpy buffer (binary column) — same zero-boxing layout and rationale
-    as _dedup_fn.  Emits one row per (doc, band) with matched=1 iff the band
-    hash was already present (from an earlier doc — rows are processed in
-    doc_seq order within the batch)."""
+    int64 numpy buffer in a binary column — a state entry of S hashes costs
+    one 8S-byte memcpy per micro-batch in each direction, where an
+    array<long> layout would box S Python ints on both load and store
+    (measured 4.8x slower at S=15k on the isolated kernel).  Emits one row
+    per (doc, band) with matched=1 iff the band hash was already present
+    (from an earlier doc — rows are processed in doc_seq order within the
+    batch)."""
     if state.hasTimedOut:
         state.remove()
         return
@@ -499,7 +402,11 @@ def _band_state_fn(key, pdf_iter, state):
     for pdf in pdf_iter:
         pdf = pdf.sort_values("doc_seq")
         if len(pdf):
-            # JVM-computed unix_millis — see _dedup_fn for the TZ rationale
+            # _ev_ms is unix_millis(event_time) computed JVM-side: pandas
+            # .timestamp() on the delivered tz-naive values would assume UTC
+            # while Spark delivers them in spark.sql.session.timeZone — under
+            # a non-UTC session TZ the TTL base would be offset by the zone
+            # delta (hours-long TTL drift).
             max_ev_ms = max(max_ev_ms, int(pdf["_ev_ms"].max()))
         bh = pdf["band_hash"].to_numpy(dtype=np.int64)
         # matched: band already in state, new this batch, or earlier in this
@@ -518,6 +425,10 @@ def _band_state_fn(key, pdf_iter, state):
             }
         )
     state.update((np.union1d(seen, pending).tobytes(),))
+    # TTL: one hour of EVENT time past the newest row this shard has seen.
+    # (Not the current watermark — on the first batch the watermark is still
+    # epoch-0, and a watermark-relative timeout would expire the whole state
+    # the moment the watermark jumps forward, e.g. across a restart.)
     ttl_base = max(state.getCurrentWatermarkMs(), max_ev_ms)
     state.setTimeoutTimestamp(ttl_base + 3600 * 1000)
 

@@ -11,7 +11,7 @@ Launch (multi-executor cluster, north rule):
       --py-files dist/dataflow_spark.zip \
       jobs/stream_job.py \
       --corpus /data/tokenized_corpus --out /data/clean --checkpoint /ckpt/clean \
-      --watermark "10 minutes" --shards $((N*40))
+      --watermark "10 minutes"
 
 Run the same job at N and 4N executors to evidence the scaling rule; in the
 sandbox, tools/bench_scaling.py does this with local[8]/local[32].
@@ -33,7 +33,10 @@ def main():
     ap.add_argument("--out", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--watermark", default="10 minutes")
-    ap.add_argument("--shards", type=int, default=64, help="dedup state shards (~10x cores)")
+    ap.add_argument(
+        "--shards", type=int, default=64,
+        help="band-state shards for --mode near only (~10x cores)",
+    )
     ap.add_argument("--max-files-per-trigger", type=int, default=8)
     ap.add_argument("--mode", choices=["exact", "near"], default="exact")
     ap.add_argument("--min-tok", type=int, default=8)
@@ -60,7 +63,6 @@ def main():
             args.checkpoint,
             watermark_delay=args.watermark,
             max_files_per_trigger=args.max_files_per_trigger,
-            n_shards=args.shards,
             filters=[keep_n_tok_range(args.min_tok, args.max_tok)],
         )
     else:

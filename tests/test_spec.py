@@ -195,7 +195,8 @@ def test_stream_spec_matches_batch(spark, tmp_path):
 
 def test_stream_spec_indexed_tier_and_rejections(spark, tmp_path):
     """The indexed tier delegates to the generation-segment operator; a
-    spec combining it with stages is rejected, as is an unknown tier."""
+    spec combining it with stages or a watermark is rejected, as are an
+    unknown tier and the removed n_shards key."""
     import pytest as _pytest
 
     from dataflow_spark.core.spec import run_stream_spec
@@ -211,11 +212,23 @@ def test_stream_spec_indexed_tier_and_rejections(spark, tmp_path):
              "stages": [{"operator": "ContentNullFilter"}]},
             corpus_dir, str(tmp_path / "o1"), str(tmp_path / "k1"),
         )
-    with _pytest.raises(ValueError, match="'custom', 'builtin'"):
+    with _pytest.raises(ValueError, match="no watermark"):
         run_stream_spec(
-            spark, {"stream": {"dedup": "nope"}},
-            corpus_dir, str(tmp_path / "o2"), str(tmp_path / "k2"),
+            spark, {"stream": {"dedup": "indexed", "watermark": "1 hour"}},
+            corpus_dir, str(tmp_path / "o1"), str(tmp_path / "k1"),
         )
+    for tier in ("nope", "custom", "tws"):
+        with _pytest.raises(ValueError, match="'builtin' or 'indexed'"):
+            run_stream_spec(
+                spark, {"stream": {"dedup": tier}},
+                corpus_dir, str(tmp_path / "o2"), str(tmp_path / "k2"),
+            )
+    for tier in ("builtin", "indexed"):
+        with _pytest.raises(ValueError, match="unknown key.*n_shards"):
+            run_stream_spec(
+                spark, {"stream": {"dedup": tier, "n_shards": 8}},
+                corpus_dir, str(tmp_path / "o2"), str(tmp_path / "k2"),
+            )
     q = run_stream_spec(
         spark, {"stream": {"dedup": "indexed"}},
         corpus_dir, str(tmp_path / "o3"), str(tmp_path / "k3"),

@@ -28,9 +28,9 @@ from dataflow_spark.streaming.pipeline import (
     near_dup_candidates_stream,
     run_dedup_filter_stream,
     session_windows_per_source,
-    streaming_exact_dedup,
     windowed_source_stats,
 )
+from dataflow_spark.streaming.indexed import run_exact_dedup_stream_indexed
 
 BASE_TS = "2026-01-01 00:00:00"
 
@@ -80,6 +80,14 @@ def dirs(tmp_path):
     )
 
 
+def survivors_by_content(spark, out_dir):
+    """{token tuple: [doc_seq, ...]} over the sink's rows."""
+    got: dict = {}
+    for r in spark.read.parquet(out_dir).select("doc_seq", "tokens").collect():
+        got.setdefault(tuple(r.tokens), []).append(r.doc_seq)
+    return got
+
+
 def test_stream_matches_batch_dedup(spark, dirs):
     corpus_dir, out_dir, ckpt = dirs
     # dups within a file (2==1), across files (11==1, 13==12), uniques
@@ -103,23 +111,28 @@ def test_stream_matches_batch_dedup(spark, dirs):
     write_file(spark, f2, corpus_dir)
 
     q = run_dedup_filter_stream(
-        spark, corpus_dir, out_dir, ckpt, max_files_per_trigger=1, n_shards=4
+        spark, corpus_dir, out_dir, ckpt, max_files_per_trigger=1
     )
     q.processAllAvailable()
     q.stop()
 
-    got = {r.doc_id for r in read_sink(spark, out_dir).select("doc_id").collect()}
-
     batch = spark.createDataFrame(f1 + f2, CORPUS_SCHEMA)
     expect = {
-        r.doc_id
+        tuple(r.tokens)
         for r in dedup.exact_dedup(
             batch.withColumn("_th", dedup.token_hash()), hash_col="_th"
         )
-        .select("doc_id")
+        .select("tokens")
         .collect()
     }
-    assert got == expect == {"d000001", "d000003", "d000004", "d000012", "d000014"}
+    got = survivors_by_content(spark, out_dir)
+    # one survivor per content class, same classes as batch; each from the
+    # batch where its content first arrived (which row of that batch is
+    # Spark's choice: d1/d2 share f1, d12/d13 share f2)
+    assert set(got) == expect
+    assert got[(1, 2, 3)] in ([1], [2])
+    assert got[(4, 5)] == [3] and got[(6,)] == [4] and got[(9,)] == [14]
+    assert got[(7, 8)] in ([12], [13])
 
 
 def test_checkpoint_resume_preserves_state(spark, dirs):
@@ -131,7 +144,7 @@ def test_checkpoint_resume_preserves_state(spark, dirs):
         ]
     )
     write_file(spark, f1, corpus_dir)
-    q = run_dedup_filter_stream(spark, corpus_dir, out_dir, ckpt, n_shards=4)
+    q = run_dedup_filter_stream(spark, corpus_dir, out_dir, ckpt)
     q.processAllAvailable()
     q.stop()  # "kill"
 
@@ -144,7 +157,7 @@ def test_checkpoint_resume_preserves_state(spark, dirs):
         ]
     )
     write_file(spark, f2, corpus_dir)
-    q2 = run_dedup_filter_stream(spark, corpus_dir, out_dir, ckpt, n_shards=4)
+    q2 = run_dedup_filter_stream(spark, corpus_dir, out_dir, ckpt)
     q2.processAllAvailable()
     q2.stop()
 
@@ -273,8 +286,10 @@ def test_stream_stream_join_candidate_pairs(spark, dirs):
 
 
 def test_streaming_exact_dedup_first_seen_within_batch(spark, dirs):
-    corpus_dir, _, ckpt = dirs
-    # same hash three times in ONE batch: only min doc_seq survives
+    corpus_dir, out_dir, ckpt = dirs
+    # same hash three times in ONE batch: only min doc_seq survives (the
+    # indexed tier runs the batch exact_dedup kernel on each micro-batch;
+    # the builtin tier leaves the in-batch pick to Spark)
     rows = make_rows(
         [
             (5, toks(1, 1), "cc", 2),
@@ -283,16 +298,8 @@ def test_streaming_exact_dedup_first_seen_within_batch(spark, dirs):
         ]
     )
     write_file(spark, rows, corpus_dir)
-    stream = file_stream_source(spark, corpus_dir)
-    out = streaming_exact_dedup(stream, n_shards=2)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_one_batch")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
+    q = run_exact_dedup_stream_indexed(spark, corpus_dir, out_dir, ckpt)
     q.processAllAvailable()
     q.stop()
-    got = [r.doc_id for r in spark.sql("select doc_id from dedup_one_batch").collect()]
+    got = [r.doc_id for r in read_sink(spark, out_dir).select("doc_id").collect()]
     assert got == ["d000003"]

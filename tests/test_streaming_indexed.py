@@ -1,6 +1,6 @@
 """Exact streaming dedup over the generation-segment parquet index
-(streaming/indexed.py) — the tws.py delta-log design on the API that runs
-today: stream==batch parity, kill/resume idempotence, O(batch) state WRITE
+(streaming/indexed.py) — a delta-log design on foreachBatch: stream==batch
+parity, kill/resume idempotence, O(batch) state WRITE
 (segments hold only first-seen hashes), pruned bounded state READ, and
 offline compaction/expiry maintenance."""
 
@@ -323,3 +323,30 @@ def test_index_geometry_pinned_across_resume(spark, tmp_path):
         r.doc_seq for r in spark.read.parquet(out_dir).select("doc_seq").collect()
     )
     assert got == [1]
+
+
+def test_missing_index_meta_with_sealed_segments_raises(spark, tmp_path):
+    """Sealed segments without _index_meta.json have an unknown geometry:
+    a restart must refuse rather than record its own (different) defaults
+    and prune the wrong buckets."""
+    import re
+
+    import pytest
+
+    corpus_dir, out_dir, ckpt = (
+        str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
+    )
+    write_file(spark, make_rows([(1, list(range(100, 150)), "cc", 0)]), corpus_dir)
+    q = run_exact_dedup_stream_indexed(
+        spark, corpus_dir, out_dir, ckpt, n_state_buckets=4
+    )
+    q.processAllAvailable()
+    q.stop()
+    state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
+    os.remove(os.path.join(state_dir, "_index_meta.json"))
+
+    with pytest.raises(ValueError, match=re.escape(state_dir)):
+        run_exact_dedup_stream_indexed(
+            spark, corpus_dir, out_dir, ckpt, n_state_buckets=32
+        )
+    assert not os.path.exists(os.path.join(state_dir, "_index_meta.json"))

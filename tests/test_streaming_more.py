@@ -2,14 +2,21 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from dataflow_spark.corpus import CORPUS_SCHEMA
 from dataflow_spark.streaming.pipeline import (
     file_stream_source,
     streaming_builtin_dedup,
     windowed_source_stats,
 )
-from tests.test_streaming import make_rows, toks, write_file
+from tests.test_streaming import (
+    make_rows,
+    survivors_by_content,
+    toks,
+    write_file,
+)
 
 
 def test_sliding_window_stream_matches_batch(spark, tmp_path):
@@ -91,7 +98,7 @@ def test_builtin_dedup_within_watermark(spark, tmp_path):
 
 
 def test_rocksdb_state_store_provider(spark, tmp_path):
-    """The 'RocksDB in prod' claim is real in THIS sandbox: the stateful
+    """The 'RocksDB in prod' claim holds on a local session too: the builtin
     dedup stream runs under RocksDBStateStoreProvider (bundled with Spark)
     and checkpoints RocksDB snapshots.  Provider is a runtime SQL conf read
     at query start, so it applies to the shared session's next query."""
@@ -112,12 +119,13 @@ def test_rocksdb_state_store_provider(spark, tmp_path):
         synthetic_corpus(spark, 800).repartition(4).write.parquet(corpus_dir)
         q = run_dedup_filter_stream(
             spark, corpus_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-            max_files_per_trigger=2, n_shards=4,
+            max_files_per_trigger=2,
         )
         q.processAllAvailable()
         q.stop()
         out = spark.read.parquet(str(tmp_path / "out"))
-        assert out.count() == out.select("doc_id").distinct().count() > 0
+        # one survivor per content class (which row of a batch is Spark's)
+        assert out.count() == out.select(F.xxhash64("tokens")).distinct().count() > 0
         snaps = glob.glob(str(tmp_path / "ckpt" / "state" / "**" / "*.zip"), recursive=True)
         assert snaps, "no RocksDB snapshot zips under the state checkpoint"
     finally:
@@ -127,57 +135,87 @@ def test_rocksdb_state_store_provider(spark, tmp_path):
             spark.conf.set(key, prev)
 
 
-def test_dedup_mode_builtin_matches_custom(spark, tmp_path):
-    """run_dedup_filter_stream(dedup_mode='builtin') keeps exactly the same
-    survivor set as the custom sharded-state operator: first occurrence per
-    token-array hash, multi-file source so the state actually spans
-    micro-batches."""
-    import os
+def test_dedup_mode_builtin_matches_batch(spark, tmp_path):
+    """run_dedup_filter_stream (builtin tier) keeps the same content classes
+    as the batch exact_dedup oracle: one survivor per token-array hash, from
+    the micro-batch where that hash first arrived; multi-file source so the
+    state actually spans micro-batches."""
+    from dataflow_spark.operators.dedup import exact_dedup
+    from dataflow_spark.streaming.pipeline import run_dedup_filter_stream
 
+    corpus_dir = str(tmp_path / "c")
+    f1 = make_rows(
+        [
+            (1, toks(1, 2, 3), "cc", 0),
+            (2, toks(1, 2, 3), "cc", 5),  # dup of 1, same batch
+            (3, toks(4), "web", 10),
+        ]
+    )
+    f2 = make_rows(
+        [
+            (4, toks(1, 2, 3), "cc", 20),  # dup of 1, later batch
+            (5, toks(7, 8), "web", 30),
+        ]
+    )
+    write_file(spark, f1, corpus_dir)
+    write_file(spark, f2, corpus_dir)
+
+    out = str(tmp_path / "out")
+    q = run_dedup_filter_stream(
+        spark, corpus_dir, out, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    )
+    q.processAllAvailable()
+    q.stop()
+    got = survivors_by_content(spark, out)
+
+    batch = spark.createDataFrame(f1 + f2, CORPUS_SCHEMA)
+    oracle = {
+        tuple(r.tokens): [r.doc_seq]
+        for r in exact_dedup(
+            batch.withColumn("_th", F.xxhash64("tokens")), hash_col="_th"
+        ).collect()
+    }
+    assert oracle == {(1, 2, 3): [1], (4,): [3], (7, 8): [5]}
+    assert set(got) == set(oracle)
+    assert got[(1, 2, 3)] in ([1], [2])  # first-seen batch; row is Spark's pick
+    assert got[(4,)] == [3] and got[(7, 8)] == [5]
+
+
+def test_dedup_mode_rejects_removed_tiers(spark, tmp_path):
+    from dataflow_spark.streaming.pipeline import run_dedup_filter_stream
+
+    for mode in ("custom", "tws", "indexed"):
+        with pytest.raises(ValueError, match="run_exact_dedup_stream_indexed"):
+            run_dedup_filter_stream(
+                spark, str(tmp_path / "c"), str(tmp_path / "o"),
+                str(tmp_path / "k"), dedup_mode=mode,
+            )
+
+
+@pytest.mark.parametrize("tier", ["builtin", "indexed"])
+def test_stream_tiers_leave_no_persisted_rdds(spark, tmp_path, tier):
+    """Nothing persisted inside a tier's micro-batches outlives the query.
+    Compared with the ids persisted before the run: the session is shared,
+    and earlier tests' minhash/CC localCheckpoint RDDs stay registered
+    until the JVM collects them."""
+    from dataflow_spark.streaming.indexed import run_exact_dedup_stream_indexed
     from dataflow_spark.streaming.pipeline import run_dedup_filter_stream
 
     corpus_dir = str(tmp_path / "c")
     write_file(
         spark,
-        make_rows(
-            [
-                (1, toks(1, 2, 3), "cc", 0),
-                (2, toks(1, 2, 3), "cc", 5),  # dup of 1, same batch
-                (3, toks(4), "web", 10),
-            ]
-        ),
+        make_rows([(1, toks(1, 2), "cc", 0), (2, toks(1, 2), "cc", 1)]),
         corpus_dir,
     )
-    write_file(
-        spark,
-        make_rows(
-            [
-                (4, toks(1, 2, 3), "cc", 20),  # dup of 1, later batch
-                (5, toks(7, 8), "web", 30),
-            ]
-        ),
-        corpus_dir,
+    write_file(spark, make_rows([(3, toks(1, 2), "cc", 5)]), corpus_dir)
+    run = (
+        run_dedup_filter_stream
+        if tier == "builtin"
+        else run_exact_dedup_stream_indexed
     )
-
-    survivors = {}
-    for mode in ("custom", "builtin"):
-        out = str(tmp_path / f"out_{mode}")
-        q = run_dedup_filter_stream(
-            spark,
-            corpus_dir,
-            out,
-            str(tmp_path / f"ckpt_{mode}"),
-            max_files_per_trigger=1,
-            n_shards=4,
-            dedup_mode=mode,
-        )
-        q.processAllAvailable()
-        q.stop()
-        survivors[mode] = sorted(
-            r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
-        )
-    assert survivors["custom"] == survivors["builtin"] == [
-        "d000001",
-        "d000003",
-        "d000005",
-    ]
+    jsc = spark.sparkContext._jsc
+    before = set(dict(jsc.getPersistentRDDs()))
+    q = run(spark, corpus_dir, str(tmp_path / "o"), str(tmp_path / "k"))
+    q.processAllAvailable()
+    q.stop()
+    assert set(dict(jsc.getPersistentRDDs())) - before == set()

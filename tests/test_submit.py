@@ -1,8 +1,9 @@
 """spark-submit --py-files launchability (north rule's launch path).
 
-Builds dist/dataflow_spark.zip, then runs jobs/stream_job.py under a real
-``spark-submit --master local[4]`` subprocess against a 2-file corpus and
-checks the exactly-once sink output.
+Builds the --py-files zip into the test's tmp dir (the committed
+dist/dataflow_spark.zip is left alone), then runs jobs/stream_job.py under a
+real ``spark-submit --master local[4]`` subprocess against a 2-file corpus
+and checks the exactly-once sink output.
 """
 
 from __future__ import annotations
@@ -37,7 +38,11 @@ def test_spark_submit_pyfiles_stream_job(spark, tmp_path):
         corpus_dir,
     )
     zip_path = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "build_pyfiles.py")],
+        [
+            sys.executable,
+            os.path.join(ROOT, "tools", "build_pyfiles.py"),
+            str(tmp_path / "dataflow_spark.zip"),
+        ],
         capture_output=True,
         text=True,
         check=True,
@@ -65,8 +70,6 @@ def test_spark_submit_pyfiles_stream_job(spark, tmp_path):
             out_dir,
             "--checkpoint",
             ckpt,
-            "--shards",
-            "4",
             "--min-tok",
             "1",
             "--once",
@@ -78,7 +81,8 @@ def test_spark_submit_pyfiles_stream_job(spark, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     got = {r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()}
-    assert got == {"d000001", "d000003"}
+    # d1/d2 share one batch: the builtin tier keeps one, Spark picks which
+    assert got in ({"d000001", "d000003"}, {"d000002", "d000003"})
 
 
 @pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
@@ -102,7 +106,11 @@ def test_spark_submit_pyfiles_multi_executor(spark, tmp_path):
         corpus_dir,
     )
     zip_path = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "build_pyfiles.py")],
+        [
+            sys.executable,
+            os.path.join(ROOT, "tools", "build_pyfiles.py"),
+            str(tmp_path / "dataflow_spark.zip"),
+        ],
         capture_output=True,
         text=True,
         check=True,
@@ -131,8 +139,6 @@ def test_spark_submit_pyfiles_multi_executor(spark, tmp_path):
             out_dir,
             "--checkpoint",
             ckpt,
-            "--shards",
-            "4",
             "--min-tok",
             "1",
             "--once",
@@ -144,4 +150,5 @@ def test_spark_submit_pyfiles_multi_executor(spark, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     got = {r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()}
-    assert got == {"d000001", "d000003"}
+    # d1/d2 share one batch: the builtin tier keeps one, Spark picks which
+    assert got in ({"d000001", "d000003"}, {"d000002", "d000003"})

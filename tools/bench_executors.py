@@ -39,7 +39,7 @@ LEGS = {
     8: ("local-cluster[2,4,6144]", 2),
     32: ("local-cluster[8,4,6144]", 8),
 }
-DEFAULT_QUERIES = "pt_pipeline,minhash_dedup,exact_dedup,stream_pipeline_builtin"
+DEFAULT_QUERIES = "pt_pipeline,minhash_dedup,exact_dedup,stream_pipeline"
 
 
 def run_bench(cores: int, replicas: int, queries: str, timed_runs: int) -> dict:

@@ -221,9 +221,7 @@ def update_baseline_md(res: dict):
         "broadcast hash relation (~6 s -> ~0.9 s).",
         "",
         "stream_pipeline remains floor-bound at this input size (~5 s of "
-        "core-count-independent source/sink/offset work; see the shard "
-        "sweep in §4 for the streaming scale-out axis: state sharding "
-        "across executors, not intra-box cores).",
+        "core-count-independent source/sink/offset work).",
         "",
     ]
     block = "\n".join(lines)

@@ -1,17 +1,20 @@
-"""Build dist/dataflow_spark.zip for spark-submit --py-files."""
+"""Build dist/dataflow_spark.zip for spark-submit --py-files.
+
+Usage: python tools/build_pyfiles.py [OUT_ZIP]   (default dist/dataflow_spark.zip)
+"""
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "dataflow_spark.zip")
+def main(out: str | None = None) -> str:
+    out = out or os.path.join(ROOT, "dist", "dataflow_spark.zip")
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         pkg = os.path.join(ROOT, "dataflow_spark")
         for dirpath, _dirs, files in os.walk(pkg):
@@ -26,4 +29,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1] if len(sys.argv) > 1 else None)
