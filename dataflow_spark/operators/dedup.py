@@ -346,20 +346,25 @@ def _checkpoint_reset_stats(df: DataFrame) -> DataFrame:
     job count all constant).  Rebuilding the DataFrame from the
     checkpointed InternalRow RDD yields a LogicalRDD with no origin
     stats, so estimates restart from the default size.  Falls back to the
-    plain checkpoint if the (stable-in-practice, private[sql]) JVM hook is
-    unavailable."""
+    checkpoint WITH its stats if the (stable-in-practice, private[sql]) JVM
+    hook is unavailable, and to the plain ``localCheckpoint`` when there is
+    no JVM-backed DataFrame at all (e.g. Spark Connect) — exactly one
+    checkpoint either way."""
     try:
         jdf = df._jdf.localCheckpoint(True)
+    except Exception:
+        return df.localCheckpoint(eager=True)
+    try:
         jspark = df.sparkSession._jsparkSession
         new_jdf = jspark.internalCreateDataFrame(
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
-        return DataFrame(new_jdf, df.sparkSession)
     except Exception:
-        # no JVM-backed DataFrame (e.g. Spark Connect) or hook changed:
-        # plain eager checkpoint still truncates lineage, just without the
-        # stats reset
-        return df.localCheckpoint(eager=True)
+        # hook changed: keep the checkpoint already taken (lineage is
+        # truncated, only the stats reset is lost) — checkpointing again
+        # would leak the first one's blocks
+        new_jdf = jdf
+    return DataFrame(new_jdf, df.sparkSession)
 
 
 def connected_components_min(
@@ -523,6 +528,19 @@ def _not_in_sorted_udf(arr: "np.ndarray"):
     return not_in_sorted
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free a ``localCheckpoint``-ed frame's blocks now: otherwise they stay
+    registered in ``getPersistentRDDs`` until the JVM garbage-collects the
+    frame (one leaked edge set per streaming micro-batch that runs
+    minhash_dedup).  A no-op for frames that are not checkpoints."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:
+        return
+    plan = jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def keep_cluster_min(
     df: DataFrame,
     edges: DataFrame,
@@ -532,7 +550,10 @@ def keep_cluster_min(
     """Drop every row whose seq appears in a duplicate cluster with a smaller
     min-seq; annotate nothing (reference drops silently).
     ``edges_materialized=True`` skips the eager checkpoint when the caller
-    already returned a materialized edge set (minhash_candidate_edges)."""
+    already returned a materialized edge set (minhash_candidate_edges) and
+    hands that set over: like the checkpoint taken here, it is consumed —
+    on the local path its blocks are released once collected, so do not
+    reuse it after the call."""
     if not edges_materialized:
         edges = edges.localCheckpoint(eager=True)
     if edges.count() <= cc_local_edge_threshold(df.sparkSession):
@@ -550,6 +571,7 @@ def keep_cluster_min(
         # the engine assigns them (monotonically_increasing_id / source
         # doc_seq).
         pdf = edges.select(F.col("a").cast("long"), F.col("b").cast("long")).toPandas()
+        _release_checkpoint(edges)
         if len(pdf) == 0:
             return df
         nodes, lbl = _cc_min_numpy(
@@ -823,6 +845,39 @@ def _minhash_from_hashes(
     return keep_cluster_min(df, edges, seq_col, edges_materialized=True)
 
 
+def packed_band_keys(
+    df: DataFrame, seq_col: str, bands_col: str, key_col: str
+) -> DataFrame:
+    """(seq, array<long> band hashes) -> one (seq, key) row per band, where
+    key = ``xxhash64(band_id, band_hash)`` packs the LSH bucket identity
+    into ONE 64-bit column.  The single band-key format of the engine: the
+    bucket key batch MinHash shuffles on (minhash_candidate_edges) and the
+    key of the exact near-dedup stream's band index
+    (pipeline.run_near_dedup_stream_exact).
+
+    posexplode_OUTER, then drop the null rows ourselves: a plain posexplode
+    makes InferFiltersFromGenerate add ``size(bands) > 0`` BELOW the
+    generate, and ExtractPythonUDFs then plans a band UDF twice — once for
+    the inferred filter, once for the generate (verified in PLANS.md; the
+    outer variant is exempt from that inference).  Cost: one null row per
+    empty doc instead of a full second UDF pass.
+
+    Packing (round-5, VERDICT r4 #1): an agg or join on the key then
+    shuffles/hashes/compares a single long instead of an (int, long) pair —
+    12.3% fewer physical shuffle bytes in batch MinHash
+    (BENCH_minhash_pack_ab.json).  xxhash64 keeps the full 64-bit collision
+    space (a truncation to 32 bits would birthday-collide at ~10^5
+    docs/band and manufacture false candidate edges between unrelated
+    docs); results are unchanged modulo 2^-64-scale key collisions."""
+    return (
+        df.select(
+            seq_col, F.posexplode_outer(bands_col).alias("band_id", "band_hash")
+        )
+        .where(F.col("band_id").isNotNull())
+        .select(seq_col, F.xxhash64("band_id", "band_hash").alias(key_col))
+    )
+
+
 def minhash_candidate_edges(
     df: DataFrame,
     shingle_hashes,
@@ -834,7 +889,6 @@ def minhash_candidate_edges(
     bands_expr=None,
     materialize: bool = True,
     drop_oversized_early: bool = False,
-    pack_bucket_key: bool = True,
 ) -> DataFrame:
     """The distributed half of MinHash-LSH: signature -> banded buckets ->
     star edges (a, b), returned MATERIALIZED (eager localCheckpoint).
@@ -889,37 +943,8 @@ def minhash_candidate_edges(
     if materialize:
         sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # posexplode_OUTER, then drop the null rows ourselves: a plain
-        # posexplode makes InferFiltersFromGenerate add `size(_bands) > 0`
-        # BELOW the generate, and ExtractPythonUDFs then plans the signature
-        # UDF twice — once for the inferred filter, once for the generate
-        # (verified in PLANS.md; the outer variant is exempt from that
-        # inference).  Cost: one null row per empty doc instead of a full
-        # second UDF pass.
-        # pack the (band_id, band_hash) bucket identity into ONE 64-bit key
-        # before the shuffle (round-5, VERDICT r4 #1): the agg and join then
-        # shuffle/hash/compare a single long instead of an (int, long) pair
-        # — fewer key bytes per banded row across the two largest exchanges
-        # and single-column comparisons in both operators.  xxhash64 keeps
-        # the full 64-bit collision space (a truncation to 32 bits would
-        # birthday-collide at ~10^5 docs/band and manufacture false
-        # candidate edges between unrelated docs); survivors are unchanged
-        # modulo 2^-64-scale key collisions.
-        exploded = sig.select(
-            "_seq", F.posexplode_outer("_bands").alias("band_id", "band_hash")
-        ).where(F.col("band_id").isNotNull())
-        if pack_bucket_key:
-            banded = exploded.select(
-                "_seq", F.xxhash64("band_id", "band_hash").alias("_bkey")
-            )
-            key_cols = ["_bkey"]
-        else:
-            # unpacked two-column key — kept as the measurement control for
-            # the round-5 shuffle-bytes attribution (tools/bench_minhash_
-            # pack_ab.py); identical semantics, ~50% more key bytes per row
-            banded = exploded
-            key_cols = ["band_id", "band_hash"]
-        roots = banded.groupBy(*key_cols).agg(
+        banded = packed_band_keys(sig, "_seq", "_bands", "_bkey")
+        roots = banded.groupBy("_bkey").agg(
             F.min("_seq").alias("_root"), F.count("*").alias("_n")
         )
         # Degenerate-bucket reducer pile-up (round-4 measurement, NOTES.md):
@@ -944,14 +969,12 @@ def minhash_candidate_edges(
         # show them.
         paired = banded
         if drop_oversized_early:
-            dropped_keys = roots.where(F.col("_n") > bucket_cap).select(*key_cols)
-            paired = banded.join(
-                F.broadcast(dropped_keys), key_cols, "left_anti"
-            )
+            dropped_keys = roots.where(F.col("_n") > bucket_cap).select("_bkey")
+            paired = banded.join(F.broadcast(dropped_keys), "_bkey", "left_anti")
         edges = (
             paired.join(
                 roots.where(F.col("_n") <= bucket_cap),
-                key_cols,
+                "_bkey",
             )
             .where(F.col("_seq") != F.col("_root"))
             .select(F.col("_seq").alias("a"), F.col("_root").alias("b"))

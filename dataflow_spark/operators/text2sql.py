@@ -501,22 +501,23 @@ def text2sql_prompt(
             yield pd.DataFrame({db_id_key: ids, "_db_details": det})
 
     id_type = df.schema[db_id_key].dataType.simpleString()
-    dmap_df = (
+    dmap_schema = f"{db_id_key} {id_type}, _db_details string"
+    # the map is capped at broadcast size above: collect it once and
+    # broadcast a driver-built frame — nothing is cached past the call
+    dmap_pdf = (
         distinct.repartition(
             max(1, min(64, spark.sparkContext.defaultParallelism))
         )
-        .mapInPandas(introspect, f"{db_id_key} {id_type}, _db_details string")
-        .persist()
+        .mapInPandas(introspect, dmap_schema)
+        .toPandas()
     )
     missing = [
-        str(r[0]).replace("\n", "").replace("\r", "").strip()
-        for r in dmap_df.where(F.col("_db_details").isNull())
-        .select(db_id_key).collect()
+        str(v).replace("\n", "").replace("\r", "").strip()
+        for v in dmap_pdf.loc[dmap_pdf["_db_details"].isna(), db_id_key]
     ]
     if missing:
-        dmap_df.unpersist()
         raise ValueError(f"Database(s) not found: {sorted(missing)}")
-    dmap = F.broadcast(dmap_df)
+    dmap = F.broadcast(spark.createDataFrame(dmap_pdf, dmap_schema))
     if evidence_key and evidence_key in df.columns:
         ev = F.coalesce(F.col(evidence_key).cast("string"), F.lit(""))
         qe = F.when(

@@ -1,51 +1,64 @@
-"""Exact streaming dedup with O(batch) durable-state IO: a generation-tagged
-delta log of hash segments on ``foreachBatch``.
+"""The generation-segment index: a durable, append-only set of int64 keys
+that a ``foreachBatch`` stream probes and extends once per micro-batch with
+O(batch) state IO, and the exact-dedup stream built on it.
 
 Why (VERDICT r3 #3): ``applyInPandasWithState`` exposes ONE value per group
 key, so a Python-side seen-set must be rewritten wholesale every
 micro-batch — per-batch durable-state IO is O(history) no matter how the
-buffer is laid out.  The asymptotically right operator,
-``transformWithStateInPandas`` with a per-key delta log, needs
-google.protobuf at runtime.  This module implements the same design — a
-generation-tagged append-only delta log of sorted int64 hash segments —
-with ``foreachBatch`` + a batch-versioned parquet index, exactly the
-machinery the exact-mode streaming near-dedup already proved out
-(pipeline.run_near_dedup_stream_exact):
+buffer is laid out.  ``SegmentIndex`` keeps a generation-tagged append-only
+delta log of int64 key segments in batch-versioned parquet instead.  Both
+durable dedup streams run on it, each a thin ``foreachBatch`` body:
+
+- ``run_exact_dedup_stream_indexed`` (here) keys it on the token-array hash
+  ``_th = xxhash64(tokens)``;
+- ``pipeline.run_near_dedup_stream_exact`` keys it on the packed MinHash
+  band key ``xxhash64(band_id, band_hash)`` (``dedup.packed_band_keys``,
+  the bucket key batch MinHash shuffles on).
+
+Design:
 
 - **Generation = micro-batch id.**  Batch N appends ONE segment
-  (``_seen_state/batch_id=N/bucket=K``) holding only the hashes FIRST SEEN
-  in batch N — nothing is ever rewritten, so per-batch state WRITE is
-  O(new hashes), not O(history).
-- **Pruned membership probe.**  The read side filters to (a) the hash
+  (``<name>/batch_id=N/bucket=K``, schema ``_th BIGINT, bucket INT``)
+  holding only the keys its survivors add — nothing is ever rewritten, so
+  per-batch state WRITE is O(new keys), not O(history).
+- **Pruned membership probe.**  The read side filters to (a) the key
   buckets the current batch touches (Hive partition pruning; Iceberg's
-  bucket(_th) transform in prod) and (b) the batch partitions whose
-  KB-scale prefix summary (``_th >> (64-summary_prefix_bits)``) intersects
-  the current batch's prefixes.  A true hash match implies an equal bucket
-  and a matching prefix, so both skips are exact — per-batch state READ is
-  bounded by real hash-prefix overlap, not history length (the same
-  VERDICT-r2-#5 contract as the near-dedup index, asserted flat in
-  tests/test_streaming_indexed.py).
-- **Compaction** is offline table maintenance: ``compact_seen_index``
+  bucket transform in prod) and (b) the generations whose KB-scale prefix
+  summary (``_th >> (64-summary_prefix_bits)``) intersects the current
+  batch's prefixes.  A true key match implies an equal bucket and a
+  matching prefix, so both skips are exact — per-batch state READ is
+  bounded by real key-prefix overlap, not history length (asserted flat
+  in tests/test_streaming_indexed.py and tests/test_streaming_ext.py).
+- **Pinned geometry.**  Bucket count and prefix bits are recorded in
+  ``<name>/_index_meta.json`` by the first writer and re-read by every
+  later run and maintenance call.
+- **Compaction** is offline table maintenance: ``SegmentIndex.compact``
   merges all sealed segments into one generation so a cold scan is one
   partition + a short tail; in prod this is an Iceberg
   ``rewrite_data_files`` call.
-- **Horizon/TTL**: ``expire_seen_index`` drops generations older than a
-  cutoff — the dedup horizon becomes "since expiry", the same bounded-state
-  contract as the watermark horizon of the builtin tier.
+- **Horizon/TTL**: ``SegmentIndex.expire`` drops generations older than a
+  cutoff — the dedup horizon becomes "since expiry", the same
+  bounded-state contract as the watermark horizon of the builtin tier.
 - **Exactly-once / replay**: segments and row outputs are each guarded by
   their own ``_SUCCESS`` marker and the probe reads only generations < N,
   so a replayed batch recomputes identical survivors and re-appends
   nothing (idempotent_parquet_sink skips the committed partition).
 
-Reference semantics mirrored: first-seen exact dedup by token-array hash,
-identical survivors to batch ``dedup.exact_dedup`` (reference
-hash_deduplicate_filter.py:10-91) — stream==batch parity pinned in tests.
+Reference semantics mirrored by the exact stream: first-seen exact dedup by
+token-array hash, identical survivors to batch ``dedup.exact_dedup``
+(reference hash_deduplicate_filter.py:10-91) — stream==batch parity pinned
+in tests.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import shutil
+import time
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -150,8 +163,6 @@ def _finish_compaction(state_dir: str, summary_dir: str, base: int) -> None:
     place, and the BASE SUMMARY is removed before the base segment is
     replaced — a missing summary is safe (probe falls back to scanning the
     generation) whereas a stale one would wrongly prune it."""
-    import shutil
-
     manifest, tmp_seg, tmp_sum = _compaction_paths(state_dir, summary_dir, base)
     with open(manifest) as fh:
         merged_ids = json.load(fh)["merged"]
@@ -180,9 +191,7 @@ def recover_compaction(state_dir: str, summary_dir: str) -> str | None:
     (deletions may already have begun); anything less is rolled BACK by
     discarding the tmps (no generation was touched before both tmps
     committed).  Returns 'forward', 'back', or None.  Called automatically
-    by the stream runner and the maintenance entry points."""
-    import shutil
-
+    whenever a ``SegmentIndex`` is opened."""
     if not os.path.isdir(state_dir):
         return None
     for name in os.listdir(state_dir):
@@ -206,6 +215,272 @@ def recover_compaction(state_dir: str, summary_dir: str) -> str | None:
     return None
 
 
+class SegmentIndex:
+    """One generation-segment index over an int64 key column ``_th``, kept
+    beside a stream's row output: segments under ``out_dir/<name>``,
+    prefix summaries under ``out_dir/<name>_summary``, one ``kind`` record
+    per batch in ``out_dir/_metrics.jsonl``.
+
+    Opening it rolls an interrupted compaction forward or back and pins the
+    geometry: ``n_state_buckets``/``summary_prefix_bits`` apply to a NEW
+    index only, an existing one keeps what ``_index_meta.json`` recorded.
+    ``n_state_buckets`` trades probe read granularity (what fraction of a
+    scanned generation — chiefly the big compacted base at long horizons —
+    one batch must read) against per-generation file count and write/walk
+    overhead; the O(overlap) READ bound comes from the prefix summaries,
+    not the bucket fan-out, so the default stays small (16; round-5
+    measurement: 64 buckets cost ~25% of the whole bench wall in file
+    creation + dir walks at bench trigger sizes).
+
+    Per micro-batch: ``probe`` the batch's keys, then ``seal`` the
+    generation with the keys its survivors add."""
+
+    def __init__(
+        self,
+        out_dir: str,
+        name: str = SEEN_STATE_DIRNAME,
+        kind: str = "seen_state_scan",
+        n_state_buckets: int = 16,
+        summary_prefix_bits: int = 20,
+    ):
+        self.out_dir = out_dir
+        self.state_dir = os.path.join(out_dir, name)
+        self.summary_dir = os.path.join(out_dir, name + "_summary")
+        self.kind = kind
+        recover_compaction(self.state_dir, self.summary_dir)
+        self.n_buckets, bits = _index_meta(
+            self.state_dir, n_state_buckets, summary_prefix_bits
+        )
+        self.pfx_shift = 64 - bits
+        # driver-side memo of sealed generations' prefix sets: summaries are
+        # KB-scale and immutable once sealed, so each is read from disk at
+        # most once per query lifetime (cold after restart, warm within a
+        # run) — without this, batch N re-reads all N-1 summaries every
+        # trigger
+        self._summaries: dict[int, set] = {}
+        # sealed bucket dirs are immutable — size each at most once per run
+        self._bucket_bytes = functools.lru_cache(maxsize=None)(_dir_bytes)
+
+    def probe(self, keys: DataFrame, batch_id: int) -> "_Generation":
+        """Probe the generations sealed before ``batch_id`` for ``keys``
+        (a persisted DataFrame with an ``_th`` column); the result's
+        ``seen`` is the matching-candidate key set to anti/semi-join
+        against, or None when no generation can hold a match."""
+        return _Generation(self, keys, batch_id)
+
+    def _gen_dir(self, root: str, b: int) -> str:
+        return os.path.join(root, f"batch_id={b}")
+
+    def _summary(self, b: int) -> set | None:
+        pfx = self._summaries.get(b)
+        if pfx is None:
+            sdir = self._gen_dir(self.summary_dir, b)
+            if os.path.exists(os.path.join(sdir, "_SUCCESS")):
+                # KB-scale immutable file: read driver-side with pyarrow
+                # (~ms) instead of a Spark collect job (~0.3-0.5 s of pure
+                # scheduling per cold read)
+                import pyarrow.parquet as pq
+
+                pfx = set(pq.read_table(sdir, columns=["p"])["p"].to_pylist())
+                self._summaries[b] = pfx
+        return pfx
+
+    def _seal_summary(self, b: int, pfx: set) -> None:
+        _write_summary_driver_side(self._gen_dir(self.summary_dir, b), sorted(pfx))
+        self._summaries[b] = set(pfx)
+
+    def _prefixes(self, keys: DataFrame) -> set:
+        return set(
+            keys.select(F.shiftright("_th", self.pfx_shift).alias("p"))
+            .distinct().toPandas()["p"].tolist()
+        )
+
+    def _backfill_summaries(self, spark: SparkSession, gens: list[int]) -> None:
+        """A crash after a segment sealed but before its summary wrote
+        (ADVICE r4 #2) leaves a sealed generation that every probe must
+        scan; derive its summary from the segment once and seal it."""
+        for b in gens:
+            if self._summary(b) is None:
+                seg = spark.read.parquet(self._gen_dir(self.state_dir, b))
+                self._seal_summary(b, self._prefixes(seg))
+
+    def compact(self, spark: SparkSession) -> int:
+        """Offline compaction (Iceberg ``rewrite_data_files`` in prod):
+        merge every SEALED generation into the oldest one as a single
+        distinct-sorted segment and drop the rest.  Run while the stream is
+        STOPPED (table maintenance).  Returns the number of generations
+        merged away.  Probe results are unchanged: the merged segment holds
+        exactly the union of the merged key sets, and its summary the union
+        of prefixes.
+
+        Crash-safe swap (ADVICE r4 #1): a manifest names the generations
+        being merged, both tmp dirs are fully written (``_SUCCESS``) BEFORE
+        any old generation is touched, and the swap itself
+        (`_finish_compaction`) only deletes a superseded generation once the
+        merged union is durable — at every crash point the key set is
+        recoverable, and ``recover_compaction`` (run whenever an index is
+        opened) rolls an interrupted swap forward or an uncommitted one
+        back."""
+        sealed = _list_sealed_batches(self.state_dir)
+        if len(sealed) < 2:
+            return 0
+        base = sealed[0]
+        paths = [self._gen_dir(self.state_dir, b) for b in sealed]
+        merged = (
+            spark.read.option("basePath", self.state_dir).parquet(*paths)
+            .select("_th").distinct()
+            .select("_th", F.pmod("_th", F.lit(self.n_buckets)).alias("bucket"))
+            .sortWithinPartitions("_th")
+            .persist()
+        )
+        manifest, tmp_seg, tmp_sum = _compaction_paths(
+            self.state_dir, self.summary_dir, base
+        )
+        with open(manifest, "w") as fh:
+            json.dump({"merged": sealed}, fh)
+        _sink_writer(merged).partitionBy("bucket").parquet(tmp_seg)
+        _write_summary_driver_side(tmp_sum, sorted(self._prefixes(merged)))
+        merged.unpersist()
+        _finish_compaction(self.state_dir, self.summary_dir, base)
+        return len(sealed) - 1
+
+    def expire(self, keep_from_batch: int) -> int:
+        """Horizon maintenance: drop generations < ``keep_from_batch``
+        (Iceberg ``expire_snapshots``/partition drop in prod).  Key history
+        before the cutoff is forgotten — the same bounded-state contract as
+        a watermark TTL.  Returns the number of generations dropped."""
+        dropped = 0
+        for b in _list_sealed_batches(self.state_dir):
+            if b < keep_from_batch:
+                shutil.rmtree(self._gen_dir(self.state_dir, b))
+                sdir = self._gen_dir(self.summary_dir, b)
+                if os.path.isdir(sdir):
+                    shutil.rmtree(sdir)
+                dropped += 1
+        return dropped
+
+
+class _Generation:
+    """One micro-batch's pass over a ``SegmentIndex``: the probe runs at
+    construction, ``seal`` appends the generation.  ``phases`` holds
+    disjoint wall-clock windows — each ``mark`` closes the window the
+    previous one opened."""
+
+    def __init__(self, index: SegmentIndex, keys: DataFrame, batch_id: int):
+        self.index, self.batch_id = index, batch_id
+        self.spark = keys.sparkSession
+        self.phases: dict[str, float] = {}
+        self._t = time.monotonic()
+        self.prior = _list_sealed_batches(index.state_dir, upto=batch_id)
+        self.bytes_read, self.scanned, self.seen = 0, [], None
+        # the batch's distinct (prefix, bucket) pairs drive BOTH the probe
+        # pruning and (since round 5) this generation's prefix summary —
+        # one job over the persisted batch, fetched via ARROW (a large
+        # batch has 10^5-10^6 distinct prefixes; row-collect over py4j cost
+        # 7-13 s/batch at r1600 — 75% of the indexed path's overhead — vs
+        # ~0.5 s as Arrow)
+        cur = keys.select(
+            F.shiftright("_th", index.pfx_shift).alias("p"),
+            F.pmod("_th", F.lit(index.n_buckets)).alias("k"),
+        ).distinct().toPandas()
+        self.cur_pfx = set(cur["p"].tolist())
+        cur_buckets = sorted(int(x) for x in set(cur["k"].tolist()))
+        self.mark("probe_collect_s")
+        if not self.prior:
+            return
+        # a generation without a summary (crash between segment and
+        # summary) cannot be pruned: scan it
+        candidates = [
+            b for b in self.prior
+            if (pfx := index._summary(b)) is None or pfx & self.cur_pfx
+        ]
+        if candidates and cur_buckets:
+            paths = [index._gen_dir(index.state_dir, b) for b in candidates]
+            # explicit schema: parquet schema inference on a
+            # multi-generation path list costs a per-batch footer-sampling
+            # pass on the driver (measured ~0.3-0.5 s)
+            seen = (
+                self.spark.read.option("basePath", index.state_dir)
+                .schema("_th BIGINT, bucket INT")
+                .parquet(*paths)
+                .where(F.col("bucket").isin(cur_buckets))
+                .select("_th")
+            )
+            self.bytes_read = sum(
+                index._bucket_bytes(os.path.join(p, f"bucket={k}"))
+                for p in paths
+                for k in cur_buckets
+            )
+            # join strategy by MEASURED probe size: a small scanned state
+            # (compressed segment bytes known exactly from the dir walk)
+            # broadcasts — the batch never shuffles for the probe; past the
+            # bound it falls back to the shuffle join, the right shape when
+            # the probed state outgrows one executor (Catalyst can't pick
+            # this itself: parquet stats under-inform the probed side)
+            if self.bytes_read < 32 * 1024 * 1024:
+                seen = F.broadcast(seen)
+            self.seen, self.scanned = seen, candidates
+        self.mark("summary_prune_s")
+
+    def mark(self, name: str) -> None:
+        t = time.monotonic()
+        self.phases[name] = round(t - self._t, 3)
+        self._t = t
+
+    def seal(self, new_keys: DataFrame, write_rows: Callable[[], None]) -> None:
+        """Append ``new_keys`` (``_th`` column; the caller materializes its
+        input first) as this batch's segment CONCURRENTLY with
+        ``write_rows()``, the caller's row sink, and return once both are
+        durable — the batch must not commit before its segment.  The
+        segment and its summary are each skipped when already sealed (a
+        replayed batch), and the scan record is written only with a fresh
+        row output."""
+        ix, b = self.index, self.batch_id
+        sb_dir = ix._gen_dir(ix.state_dir, b)
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            segment = None
+            if not os.path.exists(os.path.join(sb_dir, "_SUCCESS")):
+                # repartition ON bucket before partitionBy: otherwise every
+                # task writes a file into every bucket dir (tasks × buckets
+                # tiny files per generation — measured 5x batch overhead)
+                segment = pool.submit(
+                    lambda: _sink_writer(
+                        new_keys.select(
+                            "_th", F.pmod("_th", F.lit(ix.n_buckets)).alias("bucket")
+                        ).repartition(min(ix.n_buckets, 16), "bucket")
+                    ).partitionBy("bucket").parquet(sb_dir)
+                )
+            # the summary check is INDEPENDENT of the segment guard (ADVICE
+            # r4 #2).  It is written DRIVER-side from the already-collected
+            # batch prefixes: `cur_pfx` is a superset of the new keys'
+            # prefixes (a dropped row's prefixes already live in older
+            # generations' summaries or are merely a false candidate), so
+            # pruning stays exact and the per-batch summary Spark job
+            # disappears.
+            if ix._summary(b) is None:
+                ix._seal_summary(b, self.cur_pfx)
+            ix._backfill_summaries(self.spark, self.prior)
+            self.mark("summary_write_s")
+            fresh_output = not os.path.exists(
+                os.path.join(ix.out_dir, f"batch_id={b}", "_SUCCESS")
+            )
+            write_rows()
+            self.mark("rows_sink_s")
+            if segment is not None:
+                segment.result()  # re-raises a failed segment write
+                self.mark("segment_join_s")
+        if fresh_output:
+            with open(os.path.join(ix.out_dir, "_metrics.jsonl"), "a") as fh:
+                fh.write(json.dumps({
+                    "batch_id": b,
+                    "kind": ix.kind,
+                    "state_bytes_read": self.bytes_read,
+                    "state_batches_scanned": len(self.scanned),
+                    "state_batches_total": len(self.prior),
+                    "phases": self.phases,
+                }) + "\n")
+
+
 def run_exact_dedup_stream_indexed(
     spark: SparkSession,
     corpus_dir: str,
@@ -216,218 +491,39 @@ def run_exact_dedup_stream_indexed(
     summary_prefix_bits: int = 20,
 ):
     """First-seen exact dedup over the stream with the generation-segment
-    index described in the module docstring.  Emits FULL survivor rows
+    index keyed on the token-array hash.  Emits FULL survivor rows
     (token-array equality) exactly-once under ``out_dir/batch_id=N``.
+    ``n_state_buckets``/``summary_prefix_bits`` set the geometry of a new
+    index (see ``SegmentIndex``); raise the bucket count for horizons where
+    the compacted base is much larger than a trigger."""
+    from dataflow_spark.operators.dedup import exact_dedup
 
-    ``n_state_buckets`` trades probe read granularity (what fraction of a
-    scanned generation — chiefly the big compacted base at long horizons —
-    one batch must read) against per-generation file count and write/walk
-    overhead; the O(overlap) READ bound comes from the prefix summaries,
-    not the bucket fan-out, so the default stays small (16; round-5
-    measurement: 64 buckets cost ~25% of the whole bench wall in file
-    creation + dir walks at bench trigger sizes).  Raise it for horizons
-    where the compacted base is much larger than a trigger.  The geometry
-    is recorded in ``_index_meta.json`` on first write and re-read on
-    every resume/compaction — later calls cannot diverge from the layout
-    the segments were written with."""
-    state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
-    summary_dir = os.path.join(out_dir, SEEN_SUMMARY_DIRNAME)
-    recover_compaction(state_dir, summary_dir)
-    n_state_buckets, summary_prefix_bits = _index_meta(
-        state_dir, n_state_buckets, summary_prefix_bits
+    index = SegmentIndex(
+        out_dir, n_state_buckets=n_state_buckets,
+        summary_prefix_bits=summary_prefix_bits,
     )
-    metrics_path = os.path.join(out_dir, "_metrics.jsonl")
-    rows_sink = idempotent_parquet_sink(out_dir, metrics_path=metrics_path)
-    pfx_shift = 64 - summary_prefix_bits
-    # driver-side memo of sealed generations' prefix sets: summaries are
-    # KB-scale and immutable once sealed, so each is read from disk at most
-    # once per query lifetime (cold after restart, warm within a run) —
-    # without this, batch N re-reads all N-1 summaries every trigger
-    summary_cache: dict[int, set] = {}
-    # sealed bucket dirs are immutable — size each at most once per run
-    dir_bytes_cache: dict[str, int] = {}
-
-    def _cached_dir_bytes(path: str) -> int:
-        v = dir_bytes_cache.get(path)
-        if v is None:
-            v = _dir_bytes(path)
-            dir_bytes_cache[path] = v
-        return v
+    rows_sink = idempotent_parquet_sink(
+        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
+    )
 
     def sink(df: DataFrame, batch_id: int):
-        import time
-
-        from dataflow_spark.operators.dedup import exact_dedup
-
-        phases: dict[str, float] = {}
-
-        def _mark(name: str, t0: float) -> float:
-            t1 = time.monotonic()
-            phases[name] = round(t1 - t0, 3)
-            return t1
-
         tagged = df.withColumn("_th", F.xxhash64(F.col("tokens"))).persist()
         try:
-            t = time.monotonic()
-            prior = _list_sealed_batches(state_dir, upto=batch_id)
-            bytes_read, scanned = 0, []
+            gen = index.probe(tagged, batch_id)
             fresh = tagged
-            # the batch's distinct (prefix, bucket) pairs drive BOTH the
-            # probe pruning and (since round 5) this generation's prefix
-            # summary — one job over the persisted batch, fetched via ARROW
-            # (a large batch has 10^5-10^6 distinct prefixes; row-collect
-            # over py4j cost 7-13 s/batch at r1600 — 75% of the indexed
-            # path's overhead — vs ~0.5 s as Arrow)
-            cur = tagged.select(
-                F.shiftright("_th", pfx_shift).alias("p"),
-                F.pmod("_th", F.lit(n_state_buckets)).alias("k"),
-            ).distinct().toPandas()
-            cur_pfx = set(cur["p"].tolist())
-            cur_buckets = sorted(int(x) for x in set(cur["k"].tolist()))
-            t = _mark("probe_collect_s", t)
-            if prior:
-                candidates = []
-                for b in prior:
-                    pfx = summary_cache.get(b)
-                    if pfx is None:
-                        sdir = os.path.join(summary_dir, f"batch_id={b}")
-                        if os.path.exists(os.path.join(sdir, "_SUCCESS")):
-                            # KB-scale immutable file: read driver-side with
-                            # pyarrow (~ms) instead of a Spark collect job
-                            # (~0.3-0.5 s of pure scheduling per cold read)
-                            import pyarrow.parquet as pq
-
-                            pfx = set()
-                            for fname in os.listdir(sdir):
-                                if fname.endswith(".parquet"):
-                                    pfx.update(
-                                        pq.read_table(
-                                            os.path.join(sdir, fname),
-                                            columns=["p"],
-                                        ).column("p").to_pylist()
-                                    )
-                            summary_cache[b] = pfx
-                    if pfx is None:  # crash between segment+summary: scan it
-                        candidates.append(b)
-                    elif pfx & cur_pfx:
-                        candidates.append(b)
-                if candidates and cur_buckets:
-                    paths = [
-                        os.path.join(state_dir, f"batch_id={b}") for b in candidates
-                    ]
-                    # explicit schema: parquet schema inference on a
-                    # multi-generation path list costs a per-batch footer-
-                    # sampling pass on the driver (measured ~0.3-0.5 s)
-                    seen = (
-                        spark.read.option("basePath", state_dir)
-                        .schema("_th BIGINT, bucket INT")
-                        .parquet(*paths)
-                        .where(F.col("bucket").isin(cur_buckets))
-                        .select("_th")
-                    )
-                    bytes_read = sum(
-                        _cached_dir_bytes(os.path.join(p, f"bucket={k}"))
-                        for p in paths
-                        for k in cur_buckets
-                        if os.path.isdir(os.path.join(p, f"bucket={k}"))
-                    )
-                    # anti-join strategy by MEASURED probe size: a small
-                    # scanned state (compressed segment bytes known exactly
-                    # from the dir walk) broadcasts — the batch never
-                    # shuffles for the probe; past the bound it falls back
-                    # to the shuffle join, the right shape when the probed
-                    # state outgrows one executor (Catalyst can't pick this
-                    # itself: parquet stats under-inform the anti-join side)
-                    if bytes_read < 32 * 1024 * 1024:
-                        seen = F.broadcast(seen)
-                    fresh = tagged.join(seen, "_th", "left_anti")
-                    scanned = candidates
-                t = _mark("summary_prune_s", t)
+            if gen.seen is not None:
+                fresh = tagged.join(gen.seen, "_th", "left_anti")
             # batch-local first-seen (min doc_seq per hash), the same
             # single-shuffle kernel as the batch operator
             survivors = exact_dedup(fresh, hash_col="_th").persist()
-            # materialize the dedup ONCE into the cache: the two writers
-            # below then run CONCURRENTLY against cached partitions (round
-            # 5 — serially they each paid scheduling + the second waited on
-            # the first; a cache-miss race would instead compute the plan
-            # twice)
+            # materialize the dedup ONCE into the cache: the segment and row
+            # writers then run CONCURRENTLY against cached partitions (a
+            # cache-miss race would instead compute the plan twice)
             survivors.count()
-            t = _mark("dedup_s", t)
-            sb_dir = os.path.join(state_dir, f"batch_id={batch_id}")
-            sm_dir = os.path.join(summary_dir, f"batch_id={batch_id}")
-
-            def _write_segment():
-                # repartition ON bucket before partitionBy: otherwise every
-                # task writes a file into every bucket dir (tasks × buckets
-                # tiny files per generation — measured 5x batch overhead)
-                new_hashes = survivors.select(
-                    "_th", F.pmod("_th", F.lit(n_state_buckets)).alias("bucket")
-                ).repartition(min(n_state_buckets, 16), "bucket")
-                _sink_writer(new_hashes).partitionBy("bucket").parquet(sb_dir)
-
-            import threading
-
-            seg_err: list[BaseException] = []
-            seg_thread = None
-            if not os.path.exists(os.path.join(sb_dir, "_SUCCESS")):
-
-                def _seg_run():
-                    try:
-                        _write_segment()
-                    except BaseException as e:  # noqa: BLE001 - re-raised below
-                        seg_err.append(e)
-
-                seg_thread = threading.Thread(target=_seg_run, daemon=True)
-                seg_thread.start()
-            # summary check is INDEPENDENT of the segment guard (ADVICE r4
-            # #2): a crash after the segment sealed but before the summary
-            # wrote must not leave the generation permanently summary-less.
-            # The summary itself is written DRIVER-side from the already-
-            # collected batch prefixes (round 5): `cur_pfx` is a superset of
-            # the new-hash prefixes (dup rows' prefixes already live in
-            # older generations' summaries), so pruning stays exact and the
-            # per-batch summary Spark job disappears.  The rare backfill of
-            # a crash-orphaned PRIOR generation still derives from its
-            # sealed segment (whose prefix set we did not collect).
-            if not os.path.exists(os.path.join(sm_dir, "_SUCCESS")):
-                _write_summary_driver_side(sm_dir, sorted(cur_pfx))
-                summary_cache[batch_id] = set(cur_pfx)
-                t = _mark("summary_write_s", t)
-            for b in prior:
-                bs = os.path.join(summary_dir, f"batch_id={b}")
-                if b not in summary_cache and not os.path.exists(
-                    os.path.join(bs, "_SUCCESS")
-                ) and os.path.exists(
-                    os.path.join(state_dir, f"batch_id={b}", "_SUCCESS")
-                ):
-                    _sink_writer(
-                        spark.read.parquet(
-                            os.path.join(state_dir, f"batch_id={b}")
-                        ).select(
-                            F.shiftright("_th", pfx_shift).alias("p")
-                        ).distinct().coalesce(1)
-                    ).parquet(bs)
-            fresh_output = not os.path.exists(
-                os.path.join(out_dir, f"batch_id={batch_id}", "_SUCCESS")
+            gen.mark("dedup_s")
+            gen.seal(
+                survivors, lambda: rows_sink(survivors.drop("_th"), batch_id)
             )
-            rows_sink(survivors.drop("_th"), batch_id)
-            _mark("rows_sink_s", t)
-            if seg_thread is not None:
-                # the batch must not commit until the segment is durable
-                seg_thread.join()
-                if seg_err:
-                    raise seg_err[0]
-                _mark("segment_join_s", t)
-            if fresh_output:
-                with open(metrics_path, "a") as fh:
-                    fh.write(json.dumps({
-                        "batch_id": batch_id,
-                        "kind": "seen_state_scan",
-                        "state_bytes_read": bytes_read,
-                        "state_batches_scanned": len(scanned),
-                        "state_batches_total": len(prior),
-                        "phases": phases,
-                    }) + "\n")
             survivors.unpersist()
         finally:
             tagged.unpersist()
@@ -441,72 +537,13 @@ def run_exact_dedup_stream_indexed(
     )
 
 
-def compact_seen_index(
-    spark: SparkSession, out_dir: str, n_state_buckets: int = 16,
-    summary_prefix_bits: int = 20,
-) -> int:
-    """Offline compaction (Iceberg ``rewrite_data_files`` in prod): merge
-    every SEALED generation into the oldest one as a single distinct-sorted
-    segment and drop the rest.  Run while the stream is STOPPED (table
-    maintenance).  Returns the number of generations merged away.  Probe results are unchanged: the merged
-    segment holds exactly the union of the merged hash sets, and its
-    summary the union of prefixes.
-
-    Crash-safe swap (ADVICE r4 #1): a manifest names the generations being
-    merged, both tmp dirs are fully written (``_SUCCESS``) BEFORE any old
-    generation is touched, and the swap itself (`_finish_compaction`) only
-    deletes a superseded generation once the merged union is durable —
-    at every crash point the seen-set is recoverable, and
-    ``recover_compaction`` (run automatically at stream start) rolls an
-    interrupted swap forward or an uncommitted one back."""
-    state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
-    summary_dir = os.path.join(out_dir, SEEN_SUMMARY_DIRNAME)
-    recover_compaction(state_dir, summary_dir)
-    n_state_buckets, summary_prefix_bits = _index_meta(
-        state_dir, n_state_buckets, summary_prefix_bits
-    )
-    sealed = _list_sealed_batches(state_dir)
-    if len(sealed) < 2:
-        return 0
-    base = sealed[0]
-    pfx_shift = 64 - summary_prefix_bits
-    paths = [os.path.join(state_dir, f"batch_id={b}") for b in sealed]
-    merged = (
-        spark.read.option("basePath", state_dir).parquet(*paths)
-        .select("_th").distinct()
-        .select("_th", F.pmod("_th", F.lit(n_state_buckets)).alias("bucket"))
-        .sortWithinPartitions("_th")
-        .persist()
-    )
-    manifest, tmp_seg, tmp_sum = _compaction_paths(state_dir, summary_dir, base)
-    with open(manifest, "w") as fh:
-        json.dump({"merged": sealed}, fh)
-    _sink_writer(merged).partitionBy("bucket").parquet(tmp_seg)
-    _sink_writer(
-        merged.select(F.shiftright("_th", pfx_shift).alias("p"))
-        .distinct().coalesce(1)
-    ).parquet(tmp_sum)
-    merged.unpersist()
-    _finish_compaction(state_dir, summary_dir, base)
-    return len(sealed) - 1
+def compact_seen_index(spark: SparkSession, out_dir: str) -> int:
+    """``SegmentIndex.compact`` on the exact stream's index under
+    ``out_dir``, with the geometry recorded in its ``_index_meta.json``."""
+    return SegmentIndex(out_dir).compact(spark)
 
 
 def expire_seen_index(out_dir: str, keep_from_batch: int) -> int:
-    """Horizon maintenance: drop generations < ``keep_from_batch`` (Iceberg
-    ``expire_snapshots``/partition drop in prod).  Dedup history before the
-    cutoff is forgotten — the same bounded-state contract as a watermark
-    TTL.  Returns the number of generations dropped."""
-    import shutil
-
-    dropped = 0
-    state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
-    summary_dir = os.path.join(out_dir, SEEN_SUMMARY_DIRNAME)
-    recover_compaction(state_dir, summary_dir)
-    for b in _list_sealed_batches(state_dir):
-        if b < keep_from_batch:
-            shutil.rmtree(os.path.join(state_dir, f"batch_id={b}"))
-            sdir = os.path.join(summary_dir, f"batch_id={b}")
-            if os.path.isdir(sdir):
-                shutil.rmtree(sdir)
-            dropped += 1
-    return dropped
+    """``SegmentIndex.expire`` on the exact stream's index under
+    ``out_dir``."""
+    return SegmentIndex(out_dir).expire(keep_from_batch)

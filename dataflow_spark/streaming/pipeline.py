@@ -530,8 +530,6 @@ def run_near_dedup_stream_exact(
     bands: int = 16,
     num_perm: int = 128,
     token_ngram: int = 3,
-    n_state_buckets: int = 64,
-    summary_prefix_bits: int = 20,
 ):
     """EXACT-mode streaming near-dedup: insert-only-survivor-bands, the
     reference's sequential query-then-insert semantics
@@ -542,130 +540,48 @@ def run_near_dedup_stream_exact(
     The insert decision needs the doc-level vote BEFORE the state update, and
     a doc's bands live in different band-hash shards, so this is not
     expressible inside one applyInPandasWithState pass.  Instead the LSH
-    index lives as a batch-versioned parquet band table
-    (``out_dir/_band_state/batch_id=N/bucket=K`` — an Iceberg table with a
-    bucket(band_hash) partition transform in prod), and each micro-batch runs
-    three joins in foreachBatch:
+    index is a ``streaming.indexed.SegmentIndex`` under
+    ``out_dir/_band_state`` keyed on the packed band key
+    ``xxhash64(band_id, band_hash)`` (``dedup.packed_band_keys``) — the same
+    generation-segment index, pruned O(overlap) probe, geometry pinning,
+    crash recovery and per-batch ``state_scan`` record as the exact-dedup
+    stream.  Each micro-batch:
 
-      1. drop docs whose ANY band semi-joins the index of batches < N;
-      2. batch-local cluster-min dedup among the remainder (minhash_dedup —
-         coincides with the sequential loop on chain-free clusters, the same
-         contract as the batch operator);
-      3. append ONLY the survivors' bands as the batch-N index partition and
-         write FULL survivor rows exactly-once.
-
-    Per-batch index-read cost is BOUNDED (VERDICT r2 #5), not O(history):
-
-    * each batch partition is sub-partitioned by ``bucket =
-      pmod(band_hash, n_state_buckets)``; the read filters to the buckets
-      the current batch actually touches (Hive partition pruning — the same
-      pruning Iceberg's bucket transform gives a storage-partitioned join);
-    * a per-batch SUMMARY table (``_band_state_summary/batch_id=N``) holds
-      the distinct ``band_hash >> (64-summary_prefix_bits)`` prefixes —
-      KB-scale per batch.  The read first intersects the current batch's
-      prefixes with each summary and fully scans ONLY candidate batch
-      partitions.  A true band_hash match implies a prefix match and an
-      equal bucket, so neither skip can lose a hit — pruning is exact.
-    * per-batch scan metrics (state_bytes_read, state_batches_scanned,
-      state_batches_total) land in ``_metrics.jsonl`` — at 10^12 sequences
-      these are the Iceberg scan metrics you'd alert on.
-
-    Replay safety: bands are written before rows, each guarded by its own
-    _SUCCESS marker, and the index read excludes partitions >= N, so a
-    replayed batch recomputes identical survivors.  State TTL = drop old
-    batch_id partitions (compaction/expiry is table maintenance in prod)."""
+      1. drops docs whose ANY band key semi-joins the index's probe result
+         (generations < N);
+      2. runs batch-local cluster-min dedup among the remainder
+         (minhash_dedup — coincides with the sequential loop on chain-free
+         clusters, the same contract as the batch operator);
+      3. seals ONLY the survivors' band keys as generation N, concurrently
+         with the exactly-once write of FULL survivor rows."""
     from dataflow_spark.operators.dedup import (
         minhash_bands_from_tokens_udf,
         minhash_dedup,
+        packed_band_keys,
     )
+    from dataflow_spark.streaming.indexed import SegmentIndex
 
-    state_dir = os.path.join(out_dir, "_band_state")
-    summary_dir = os.path.join(out_dir, "_band_state_summary")
-    metrics_path = os.path.join(out_dir, "_metrics.jsonl")
-    rows_sink = idempotent_parquet_sink(out_dir, metrics_path=metrics_path)
-    pfx_shift = 64 - summary_prefix_bits
-
-    def bands_of(df: DataFrame) -> DataFrame:
-        band_udf = minhash_bands_from_tokens_udf(num_perm, bands, token_ngram)
-        return df.select(
-            "doc_seq", band_udf(F.col("tokens")).alias("_bands")
-        ).select(
-            "doc_seq", F.posexplode_outer("_bands").alias("band_id", "band_hash")
-        ).where(F.col("band_id").isNotNull())
-
-    def _list_state_batches(upto: int) -> list[int]:
-        if not os.path.isdir(state_dir):
-            return []
-        ids = []
-        for d in os.listdir(state_dir):
-            if d.startswith("batch_id="):
-                b = int(d.split("=", 1)[1])
-                if b < upto and os.path.exists(os.path.join(state_dir, d, "_SUCCESS")):
-                    ids.append(b)
-        return sorted(ids)
-
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
+    index = SegmentIndex(out_dir, name="_band_state", kind="state_scan")
+    rows_sink = idempotent_parquet_sink(
+        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
+    )
+    band_udf = minhash_bands_from_tokens_udf(num_perm, bands, token_ngram)
 
     def sink(df: DataFrame, batch_id: int):
         df = df.persist()
+        cur_bands = packed_band_keys(
+            df.select("doc_seq", band_udf(F.col("tokens")).alias("_bands")),
+            "doc_seq", "_bands", "_th",
+        ).persist()
         try:
-            prior = _list_state_batches(batch_id)
-            bytes_read, scanned = 0, []
-            if prior:
-                cur_bands = bands_of(df).persist()
-                cur_pfx = {
-                    r["p"]
-                    for r in cur_bands.select(
-                        F.shiftright("band_hash", pfx_shift).alias("p")
-                    ).distinct().collect()
-                }
-                cur_buckets = sorted(
-                    r["k"]
-                    for r in cur_bands.select(
-                        F.pmod("band_hash", F.lit(n_state_buckets)).alias("k")
-                    ).distinct().collect()
+            gen = index.probe(cur_bands, batch_id)
+            fresh = df
+            if gen.seen is not None:
+                hit_docs = (
+                    cur_bands.join(gen.seen, "_th", "left_semi")
+                    .select("doc_seq").distinct()
                 )
-                # batch-partition skipping: summaries are KB-scale
-                candidates = []
-                for b in prior:
-                    sdir = os.path.join(summary_dir, f"batch_id={b}")
-                    if os.path.exists(os.path.join(sdir, "_SUCCESS")):
-                        pfx = {r["p"] for r in spark.read.parquet(sdir).collect()}
-                        if pfx & cur_pfx:
-                            candidates.append(b)
-                    else:  # pre-summary state (or crash between writes): scan it
-                        candidates.append(b)
-                if candidates:
-                    paths = [os.path.join(state_dir, f"batch_id={b}") for b in candidates]
-                    state = (
-                        spark.read.option("basePath", state_dir)
-                        .parquet(*paths)
-                        .where(F.col("bucket").isin(*[int(k) for k in cur_buckets]))
-                        .select("band_id", "band_hash")
-                    )
-                    hit_docs = (
-                        cur_bands
-                        .join(state, ["band_id", "band_hash"], "left_semi")
-                        .select("doc_seq")
-                        .distinct()
-                    )
-                    fresh = df.join(hit_docs, "doc_seq", "left_anti")
-                    bytes_read = sum(
-                        _dir_bytes(os.path.join(p, f"bucket={k}"))
-                        for p in paths
-                        for k in cur_buckets
-                        if os.path.isdir(os.path.join(p, f"bucket={k}"))
-                    )
-                    scanned = candidates
-                else:
-                    fresh = df
-                cur_bands.unpersist()
-            else:
-                fresh = df
+                fresh = df.join(hit_docs, "doc_seq", "left_anti")
             survivors = minhash_dedup(
                 fresh,
                 use_tokens=True,
@@ -673,34 +589,17 @@ def run_near_dedup_stream_exact(
                 num_perm=num_perm,
                 bands=bands,
             ).persist()
-            sb_dir = os.path.join(state_dir, f"batch_id={batch_id}")
-            sm_dir = os.path.join(summary_dir, f"batch_id={batch_id}")
-            if not os.path.exists(os.path.join(sb_dir, "_SUCCESS")):
-                new_bands = bands_of(survivors).withColumn(
-                    "bucket", F.pmod("band_hash", F.lit(n_state_buckets))
-                ).persist()
-                _sink_writer(new_bands).partitionBy("bucket").parquet(sb_dir)
-                if not os.path.exists(os.path.join(sm_dir, "_SUCCESS")):
-                    _sink_writer(
-                        new_bands.select(
-                            F.shiftright("band_hash", pfx_shift).alias("p")
-                        ).distinct().coalesce(1)
-                    ).parquet(sm_dir)
-                new_bands.unpersist()
-            if metrics_path and not os.path.exists(
-                os.path.join(out_dir, f"batch_id={batch_id}", "_SUCCESS")
-            ):
-                with open(metrics_path, "a") as fh:
-                    fh.write(json.dumps({
-                        "batch_id": batch_id,
-                        "kind": "state_scan",
-                        "state_bytes_read": bytes_read,
-                        "state_batches_scanned": len(scanned),
-                        "state_batches_total": len(prior),
-                    }) + "\n")
-            rows_sink(survivors, batch_id)
+            survivors.count()
+            gen.mark("dedup_s")
+            # the survivors' band keys are a subset of the batch's, already
+            # cached: no second band-UDF pass
+            new_bands = cur_bands.join(
+                survivors.select("doc_seq"), "doc_seq", "left_semi"
+            )
+            gen.seal(new_bands, lambda: rows_sink(survivors, batch_id))
             survivors.unpersist()
         finally:
+            cur_bands.unpersist()
             df.unpersist()
 
     stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)

@@ -475,3 +475,38 @@ def test_cc_force_local_cap_never_truncates(spark, monkeypatch):
     assert got == want
     deep = [d for d in stats["depths"] if d["depth"] >= 2]
     assert deep and all(d["strategy"] == "iterative" for d in deep), stats
+
+
+def test_checkpoint_reset_stats_hook_failure_checkpoints_once(spark):
+    """When only the stats-reset hook (internalCreateDataFrame) fails, the
+    checkpoint already taken is returned as is: exactly one checkpoint, no
+    second one leaking the first one's blocks."""
+    real = spark.range(3).toDF("a")
+
+    class _JDF:
+        calls = 0
+
+        def localCheckpoint(self, eager):
+            _JDF.calls += 1
+            return real._jdf.localCheckpoint(eager)
+
+    class _JSession:
+        def internalCreateDataFrame(self, *args):
+            raise RuntimeError("hook unavailable")
+
+    class _Session:
+        _jsparkSession = _JSession()
+        _sc = spark.sparkContext
+
+    class _DF:
+        _jdf = _JDF()
+        sparkSession = _Session()
+        df_calls = 0
+
+        def localCheckpoint(self, eager=True):
+            _DF.df_calls += 1
+            return real.localCheckpoint(eager)
+
+    out = dedup._checkpoint_reset_stats(_DF())
+    assert (_JDF.calls, _DF.df_calls) == (1, 0)
+    assert out._jdf.count() == 3

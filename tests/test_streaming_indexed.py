@@ -8,6 +8,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
+import time
+
+import pytest
 
 from dataflow_spark.operators.dedup import exact_dedup
 from dataflow_spark.streaming.indexed import (
@@ -16,6 +21,7 @@ from dataflow_spark.streaming.indexed import (
     expire_seen_index,
     run_exact_dedup_stream_indexed,
 )
+from dataflow_spark.streaming.pipeline import run_near_dedup_stream_exact
 from tests.test_streaming import make_rows, write_file
 
 
@@ -325,28 +331,130 @@ def test_index_geometry_pinned_across_resume(spark, tmp_path):
     assert got == [1]
 
 
-def test_missing_index_meta_with_sealed_segments_raises(spark, tmp_path):
+@pytest.mark.parametrize(
+    "run, state_name, first_kw, second_kw",
+    [
+        (
+            run_exact_dedup_stream_indexed, SEEN_STATE_DIRNAME,
+            {"n_state_buckets": 4}, {"n_state_buckets": 32},
+        ),
+        (run_near_dedup_stream_exact, "_band_state", {}, {}),
+    ],
+    ids=["exact", "near"],
+)
+def test_missing_index_meta_with_sealed_segments_raises(
+    spark, tmp_path, run, state_name, first_kw, second_kw
+):
     """Sealed segments without _index_meta.json have an unknown geometry:
     a restart must refuse rather than record its own (different) defaults
-    and prune the wrong buckets."""
-    import re
-
-    import pytest
-
+    and prune the wrong buckets.  Both streams share the index, so both
+    refuse — including a near-dedup band index written before it carried
+    a meta file."""
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
     write_file(spark, make_rows([(1, list(range(100, 150)), "cc", 0)]), corpus_dir)
-    q = run_exact_dedup_stream_indexed(
-        spark, corpus_dir, out_dir, ckpt, n_state_buckets=4
-    )
+    q = run(spark, corpus_dir, out_dir, ckpt, **first_kw)
     q.processAllAvailable()
     q.stop()
-    state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
+    state_dir = os.path.join(out_dir, state_name)
     os.remove(os.path.join(state_dir, "_index_meta.json"))
 
     with pytest.raises(ValueError, match=re.escape(state_dir)):
-        run_exact_dedup_stream_indexed(
-            spark, corpus_dir, out_dir, ckpt, n_state_buckets=32
-        )
+        run(spark, corpus_dir, out_dir, ckpt, **second_kw)
     assert not os.path.exists(os.path.join(state_dir, "_index_meta.json"))
+
+
+def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch):
+    """Each phase window starts where the previous one ended: a rows sink
+    slowed by 0.5 s shows up in rows_sink_s only, not again in
+    segment_join_s, and the phases never sum past the batch's addBatch."""
+    from dataflow_spark.streaming import indexed
+
+    real_sink = indexed.idempotent_parquet_sink
+
+    def slow_sink(*args, **kwargs):
+        write = real_sink(*args, **kwargs)
+
+        def slow_write(df, batch_id):
+            time.sleep(0.5)
+            write(df, batch_id)
+
+        return slow_write
+
+    monkeypatch.setattr(indexed, "idempotent_parquet_sink", slow_sink)
+    corpus_dir, out_dir, ckpt = (
+        str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
+    )
+    a = list(range(100, 150))
+    write_file(spark, make_rows([(1, a, "cc", 0), (2, a, "cc", 1)]), corpus_dir)
+    write_file(spark, make_rows([(11, a, "cc", 30)]), corpus_dir)
+    q = run_exact_dedup_stream_indexed(spark, corpus_dir, out_dir, ckpt)
+    q.processAllAvailable()
+    add_batch_s = {
+        p["batchId"]: p["durationMs"]["addBatch"] / 1000
+        for p in q.recentProgress
+    }
+    q.stop()
+    recs = _metrics(out_dir)
+    assert [m["batch_id"] for m in recs] == [0, 1]
+    for m in recs:
+        ph = m["phases"]
+        assert ph["rows_sink_s"] >= 0.5, ph
+        assert ph["segment_join_s"] < 0.5, ph
+        assert sum(ph.values()) <= add_batch_s[m["batch_id"]], (ph, add_batch_s)
+
+
+def test_near_dedup_missing_summary_backfilled_and_prunes(spark, tmp_path):
+    """Near-dedup on the shared index: a crash-orphaned generation (segment
+    sealed, summary missing) is scanned while summary-less — so its near
+    dup is still dropped — and its summary is backfilled from the segment,
+    after which it prunes exactly: it holds the prefixes of exactly the
+    segment's keys, and a batch of fresh docs scans no generation."""
+    corpus_dir, out_dir, ckpt = (
+        str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
+    )
+    a = [1000 + 7 * k for k in range(60)]
+    b = [50_000 + 11 * k for k in range(60)]
+    write_file(spark, make_rows([(1, a, "cc", 0)]), corpus_dir)
+    write_file(spark, make_rows([(2, b, "web", 30)]), corpus_dir)
+    q = run_near_dedup_stream_exact(spark, corpus_dir, out_dir, ckpt)
+    q.processAllAvailable()
+    q.stop()
+    summary_dir = os.path.join(out_dir, "_band_state_summary")
+    victim = os.path.join(summary_dir, "batch_id=0")
+    shutil.rmtree(victim)
+
+    near_a = list(a)
+    near_a[0], near_a[30] = 7, 9
+    write_file(
+        spark,
+        make_rows([(3, near_a, "cc", 60), (4, [90_000 + 13 * k for k in range(60)], "cc", 61)]),
+        corpus_dir,
+    )
+    q2 = run_near_dedup_stream_exact(spark, corpus_dir, out_dir, ckpt)
+    q2.processAllAvailable()
+    write_file(
+        spark,
+        make_rows([(5, [200_000 + 17 * k for k in range(60)], "book", 90)]),
+        corpus_dir,
+    )
+    q2.processAllAvailable()
+    q2.stop()
+
+    got = sorted(
+        r.doc_seq for r in spark.read.parquet(out_dir).select("doc_seq").collect()
+    )
+    assert got == [1, 2, 4, 5]
+    scans = {m["batch_id"]: m for m in _metrics(out_dir, kind="state_scan")}
+    assert scans[2]["state_batches_scanned"] >= 1, scans[2]
+    assert os.path.exists(os.path.join(victim, "_SUCCESS"))
+    seg_pfx = {
+        r.p for r in spark.read.parquet(
+            os.path.join(out_dir, "_band_state", "batch_id=0")
+        ).selectExpr("shiftright(_th, 44) AS p").distinct().collect()
+    }
+    summary_pfx = {r.p for r in spark.read.parquet(victim).collect()}
+    assert summary_pfx == seg_pfx
+    assert scans[3]["state_batches_total"] == 3
+    assert scans[3]["state_batches_scanned"] == 0, scans[3]

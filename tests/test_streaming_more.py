@@ -192,14 +192,17 @@ def test_dedup_mode_rejects_removed_tiers(spark, tmp_path):
             )
 
 
-@pytest.mark.parametrize("tier", ["builtin", "indexed"])
+@pytest.mark.parametrize("tier", ["builtin", "indexed", "near_exact"])
 def test_stream_tiers_leave_no_persisted_rdds(spark, tmp_path, tier):
     """Nothing persisted inside a tier's micro-batches outlives the query.
     Compared with the ids persisted before the run: the session is shared,
     and earlier tests' minhash/CC localCheckpoint RDDs stay registered
     until the JVM collects them."""
     from dataflow_spark.streaming.indexed import run_exact_dedup_stream_indexed
-    from dataflow_spark.streaming.pipeline import run_dedup_filter_stream
+    from dataflow_spark.streaming.pipeline import (
+        run_dedup_filter_stream,
+        run_near_dedup_stream_exact,
+    )
 
     corpus_dir = str(tmp_path / "c")
     write_file(
@@ -208,11 +211,11 @@ def test_stream_tiers_leave_no_persisted_rdds(spark, tmp_path, tier):
         corpus_dir,
     )
     write_file(spark, make_rows([(3, toks(1, 2), "cc", 5)]), corpus_dir)
-    run = (
-        run_dedup_filter_stream
-        if tier == "builtin"
-        else run_exact_dedup_stream_indexed
-    )
+    run = {
+        "builtin": run_dedup_filter_stream,
+        "indexed": run_exact_dedup_stream_indexed,
+        "near_exact": run_near_dedup_stream_exact,
+    }[tier]
     jsc = spark.sparkContext._jsc
     before = set(dict(jsc.getPersistentRDDs()))
     q = run(spark, corpus_dir, str(tmp_path / "o"), str(tmp_path / "k"))

@@ -269,6 +269,43 @@ def test_text2sql_prompt_missing_db_raises(spark, tmp_path):
         text2sql_prompt(df, str(root))
 
 
+def test_text2sql_prompt_persists_nothing(spark, tmp_path):
+    """The (db_id -> db_details) map is collected and broadcast, never
+    cached: neither a successful call nor a missing-db failure leaves a
+    persisted RDD behind (ids compared with those persisted before — the
+    session is shared, and earlier tests' checkpoints may be collected
+    meanwhile)."""
+    import sqlite3
+
+    import pytest as _pytest
+
+    from dataflow_spark.operators.text2sql import text2sql_prompt
+
+    root = tmp_path / "dbs"
+    root.mkdir()
+    con = sqlite3.connect(root / "petdb.sqlite")
+    con.executescript(
+        "CREATE TABLE pets (id INTEGER PRIMARY KEY, name TEXT);"
+        "INSERT INTO pets VALUES (1, 'alpha');"
+    )
+    con.commit()
+    con.close()
+    jsc = spark.sparkContext._jsc
+    before = set(dict(jsc.getPersistentRDDs()))
+    df = spark.createDataFrame(
+        [("r1", "petdb", "How many pets?", "")],
+        ["id", "db_id", "question", "evidence"],
+    )
+    prompt = text2sql_prompt(df, str(root)).collect()[0].prompt
+    assert "【DB_ID】 petdb" in prompt and prompt.endswith(
+        "find the correct SQL query."
+    )
+    ghost = spark.createDataFrame([("a", "ghost", "q?")], ["id", "db_id", "question"])
+    with _pytest.raises(ValueError, match="ghost"):
+        text2sql_prompt(ghost, str(root))
+    assert set(dict(jsc.getPersistentRDDs())) - before == set()
+
+
 def test_resolve_db_path_recursive_glob(tmp_path):
     """discover_databases globs root/**/pattern recursively with db_id taken
     from the top-level directory name (sqlite_connector.py:330-353) — so a
