@@ -296,10 +296,10 @@ def run_benchmarks(spark) -> tuple[dict[str, float], dict[str, float]]:
         )
 
     # round-4 O(batch)-state-IO path: exact dedup over the generation-
-    # segment parquet index (streaming/indexed.py — a delta-log design on
-    # foreachBatch).  Dedup-only (no filter chain), so the
-    # tok/s is comparable to the dedup stage of the pipelines above, not
-    # to their full chains.
+    # segment index (streaming/indexed.py — one sorted key file per
+    # micro-batch, probed on the driver, on foreachBatch).  Dedup-only (no
+    # filter chain), so the tok/s is comparable to the dedup stage of the
+    # pipelines above, not to their full chains.
     def stream_pipeline_indexed():
         import tempfile
 

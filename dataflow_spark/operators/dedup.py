@@ -513,17 +513,22 @@ def connected_components_min(
     return labels
 
 
+def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
+    """Vectorized membership of ``values`` in a SORTED int64 array (also a
+    read-only memory map: only the probed pages are touched)."""
+    if not len(sorted_arr):
+        return np.zeros(len(values), dtype=bool)
+    pos = np.searchsorted(sorted_arr, values)
+    pos_c = np.minimum(pos, len(sorted_arr) - 1)
+    return (pos < len(sorted_arr)) & (sorted_arr[pos_c] == values)
+
+
 def _not_in_sorted_udf(arr: "np.ndarray"):
-    """Boolean pandas UDF: value NOT present in the sorted int64 array
-    (vectorized np.searchsorted membership probe)."""
+    """Boolean pandas UDF: value NOT present in the sorted int64 array."""
 
     @pandas_udf(T.BooleanType())
     def not_in_sorted(s: pd.Series) -> pd.Series:
-        v = s.to_numpy(np.int64)
-        if len(arr) == 0:
-            return pd.Series(np.ones(len(v), dtype=bool))
-        pos = np.minimum(np.searchsorted(arr, v), len(arr) - 1)
-        return pd.Series(arr[pos] != v)
+        return pd.Series(~_sorted_member(arr, s.to_numpy(np.int64)))
 
     return not_in_sorted
 

@@ -5,44 +5,44 @@ O(batch) state IO, and the exact-dedup stream built on it.
 Why (VERDICT r3 #3): ``applyInPandasWithState`` exposes ONE value per group
 key, so a Python-side seen-set must be rewritten wholesale every
 micro-batch — per-batch durable-state IO is O(history) no matter how the
-buffer is laid out.  ``SegmentIndex`` keeps a generation-tagged append-only
-delta log of int64 key segments in batch-versioned parquet instead.  Both
-durable dedup streams run on it, each a thin ``foreachBatch`` body:
+buffer is laid out.  ``SegmentIndex`` is the durable form of the
+reference's seen-set (hash_deduplicate_filter.py:75-89, and the band-key
+query-then-insert of minhash_deduplicate_filter.py:66-83) as an append-only
+log of sorted key arrays, one per generation.  Both durable dedup streams
+run on it, each a thin ``foreachBatch`` body:
 
 - ``run_exact_dedup_stream_indexed`` (here) keys it on the token-array hash
   ``_th = xxhash64(tokens)``;
 - ``pipeline.run_near_dedup_stream_exact`` keys it on the packed MinHash
-  band key ``xxhash64(band_id, band_hash)`` (``dedup.packed_band_keys``,
-  the bucket key batch MinHash shuffles on).
+  band key ``xxhash64(band_id, band_hash)`` (``dedup.packed_band_keys``).
 
 Design:
 
-- **Generation = micro-batch id.**  Batch N appends ONE segment
-  (``<name>/batch_id=N/bucket=K``, schema ``_th BIGINT, bucket INT``)
-  holding only the keys its survivors add — nothing is ever rewritten, so
-  per-batch state WRITE is O(new keys), not O(history).
-- **Pruned membership probe.**  The read side filters to (a) the key
-  buckets the current batch touches (Hive partition pruning; Iceberg's
-  bucket transform in prod) and (b) the generations whose KB-scale prefix
-  summary (``_th >> (64-summary_prefix_bits)``) intersects the current
-  batch's prefixes.  A true key match implies an equal bucket and a
-  matching prefix, so both skips are exact — per-batch state READ is
-  bounded by real key-prefix overlap, not history length (asserted flat
-  in tests/test_streaming_indexed.py and tests/test_streaming_ext.py).
-- **Pinned geometry.**  Bucket count and prefix bits are recorded in
-  ``<name>/_index_meta.json`` by the first writer and re-read by every
-  later run and maintenance call.
+- **Generation = micro-batch id.**  Batch N seals ONE file
+  ``<name>/batch_id=N.npy``: the sorted, unique int64 keys its survivors
+  add.  The driver writes it (tmp file, fsync, atomic rename) before the
+  batch's rows; nothing is ever rewritten, so per-batch state WRITE is
+  O(new keys), not O(history).
+- **Driver-side probe.**  One Arrow fetch of the batch's distinct keys,
+  then ``np.searchsorted`` over each sealed generation opened as a
+  read-only memory map — the OS page cache, not the heap, bounds RAM.
+  Only the batch's true duplicate keys go back into Spark, as a broadcast
+  driver-built frame, so the state handed to Spark is O(duplicates).  No
+  Spark job reads or writes the index.
+- **Format pin.**  ``<name>/_index_meta.json`` records ``{"format": 2}``.
+  A v1 index (bucketed parquet segments, geometry meta) or sealed
+  generations without the meta file are refused, never misread.
 - **Compaction** is offline table maintenance: ``SegmentIndex.compact``
-  merges all sealed segments into one generation so a cold scan is one
-  partition + a short tail; in prod this is an Iceberg
-  ``rewrite_data_files`` call.
-- **Horizon/TTL**: ``SegmentIndex.expire`` drops generations older than a
+  replaces the oldest generation with the union of all and deletes the
+  rest.  A key held twice never changes a probe answer, so every crash
+  point leaves the union intact and no recovery step exists.
+- **Horizon/TTL**: ``SegmentIndex.expire`` deletes generations older than a
   cutoff — the dedup horizon becomes "since expiry", the same
   bounded-state contract as the watermark horizon of the builtin tier.
-- **Exactly-once / replay**: segments and row outputs are each guarded by
-  their own ``_SUCCESS`` marker and the probe reads only generations < N,
-  so a replayed batch recomputes identical survivors and re-appends
-  nothing (idempotent_parquet_sink skips the committed partition).
+- **Exactly-once / replay**: a generation file and a row output are each
+  written once (the file's existence, the output's ``_SUCCESS``) and the
+  probe reads only generations < N, so a replayed batch recomputes
+  identical survivors and re-writes nothing.
 
 Reference semantics mirrored by the exact stream: first-seen exact dedup by
 token-array hash, identical survivors to batch ``dedup.exact_dedup``
@@ -52,185 +52,91 @@ in tests.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
-import shutil
 import time
-from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataflow_spark.operators.dedup import _sorted_member
 from dataflow_spark.streaming.pipeline import (
-    _sink_writer,
     file_stream_source,
     idempotent_parquet_sink,
 )
 
 SEEN_STATE_DIRNAME = "_seen_state"
-SEEN_SUMMARY_DIRNAME = "_seen_state_summary"
+INDEX_FORMAT = 2
 
 
 def _list_sealed_batches(state_dir: str, upto: int | None = None) -> list[int]:
     if not os.path.isdir(state_dir):
         return []
     ids = []
-    for d in os.listdir(state_dir):
-        if d.startswith("batch_id="):
-            b = int(d.split("=", 1)[1])
-            if (upto is None or b < upto) and os.path.exists(
-                os.path.join(state_dir, d, "_SUCCESS")
-            ):
+    for name in os.listdir(state_dir):
+        if name.startswith("batch_id=") and name.endswith(".npy"):
+            b = int(name[len("batch_id="):-len(".npy")])
+            if upto is None or b < upto:
                 ids.append(b)
     return sorted(ids)
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
+def _write_keys(path: str, keys: np.ndarray) -> None:
+    """Durable atomic write: a crash leaves either no file or the whole one
+    (a stray ``.tmp`` is never listed as a generation)."""
+    tmp = path + ".tmp"
+    with open(tmp, "wb") as fh:
+        np.save(fh, keys)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
 
 
-def _index_meta(
-    state_dir: str, n_state_buckets: int, summary_prefix_bits: int
-) -> tuple[int, int]:
-    """Pin the index geometry (bucket count, summary prefix bits) to the
-    index itself: segments are bucketed by ``pmod(_th, n)`` at WRITE time,
-    so a resume or compaction run with a different ``n`` would prune the
-    wrong buckets and silently miss duplicates.  First writer records the
-    geometry; every later entry point reads and uses the recorded values
-    (the caller's arguments are a default, not an override).  Sealed
-    segments without the meta file have an unknown geometry, so that case
-    raises instead of recording the caller's values."""
+def _check_format(state_dir: str) -> None:
+    """Pin the on-disk format to the index: the first writer records it,
+    every later entry point checks it before touching anything.  A v1
+    index (``batch_id=N/bucket=K`` parquet dirs, bucket-geometry meta) or
+    sealed generations without the meta file raise a ``ValueError`` naming
+    the state dir."""
     path = os.path.join(state_dir, "_index_meta.json")
+    meta = None
     if os.path.exists(path):
         with open(path) as fh:
-            m = json.load(fh)
-        return int(m["n_state_buckets"]), int(m["summary_prefix_bits"])
+            meta = json.load(fh)
+    v1_dirs = os.path.isdir(state_dir) and any(
+        name.startswith("batch_id=") and os.path.isdir(os.path.join(state_dir, name))
+        for name in os.listdir(state_dir)
+    )
+    if v1_dirs or (meta is not None and meta.get("format") != INDEX_FORMAT):
+        raise ValueError(
+            f"{state_dir} holds a v1 generation-segment index (bucketed "
+            f"parquet segments); this version reads format {INDEX_FORMAT} "
+            "only: rebuild it by replaying the stream into a fresh output dir"
+        )
+    if meta is not None:
+        return
     if _list_sealed_batches(state_dir):
         raise ValueError(
-            f"{state_dir} holds sealed segments but no _index_meta.json: "
-            "the geometry they were written with is unknown; restore the "
-            "meta file or rebuild the index"
+            f"{state_dir} holds sealed generations but no _index_meta.json: "
+            "their format is unknown; restore the meta file or rebuild the "
+            "index"
         )
     os.makedirs(state_dir, exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "n_state_buckets": n_state_buckets,
-                "summary_prefix_bits": summary_prefix_bits,
-            },
-            fh,
-        )
-    os.rename(tmp, path)
-    return n_state_buckets, summary_prefix_bits
-
-
-def _write_summary_driver_side(sm_dir: str, prefixes: list[int]) -> None:
-    """Seal a generation's prefix summary from driver-held prefixes (one
-    pyarrow write, no Spark job — summaries are KB-scale by construction).
-    The data file lands before the ``_SUCCESS`` marker, so a crash mid-write
-    reads as 'missing summary' (scan fallback + later backfill), never as a
-    truncated one."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(sm_dir, exist_ok=True)
-    pq.write_table(
-        pa.table({"p": pa.array(prefixes, type=pa.int64())}),
-        os.path.join(sm_dir, "part-00000-summary.parquet"),
-    )
-    with open(os.path.join(sm_dir, "_SUCCESS"), "w"):
-        pass
-
-
-def _compaction_paths(state_dir: str, summary_dir: str, base: int):
-    return (
-        os.path.join(state_dir, f"_compact_manifest_{base}.json"),
-        os.path.join(state_dir, f"_compact_tmp_{base}"),
-        os.path.join(summary_dir, f"_compact_tmp_{base}"),
-    )
-
-
-def _finish_compaction(state_dir: str, summary_dir: str, base: int) -> None:
-    """Idempotent completion of a committed compaction (both tmp dirs carry
-    ``_SUCCESS``).  Order is the crash-safety contract (ADVICE r4 #1): the
-    merged tmp segment is never deleted until it has been renamed into
-    place, and the BASE SUMMARY is removed before the base segment is
-    replaced — a missing summary is safe (probe falls back to scanning the
-    generation) whereas a stale one would wrongly prune it."""
-    manifest, tmp_seg, tmp_sum = _compaction_paths(state_dir, summary_dir, base)
-    with open(manifest) as fh:
-        merged_ids = json.load(fh)["merged"]
-    base_seg = os.path.join(state_dir, f"batch_id={base}")
-    base_sum = os.path.join(summary_dir, f"batch_id={base}")
-    for b in merged_ids:
-        sdir = os.path.join(summary_dir, f"batch_id={b}")
-        if os.path.isdir(sdir):
-            shutil.rmtree(sdir)  # includes base's summary — see docstring
-        if b != base:
-            seg = os.path.join(state_dir, f"batch_id={b}")
-            if os.path.isdir(seg):
-                shutil.rmtree(seg)
-    if os.path.isdir(tmp_seg):
-        if os.path.isdir(base_seg):
-            shutil.rmtree(base_seg)
-        os.rename(tmp_seg, base_seg)
-    if os.path.isdir(tmp_sum) and not os.path.isdir(base_sum):
-        os.rename(tmp_sum, base_sum)
-    os.remove(manifest)
-
-
-def recover_compaction(state_dir: str, summary_dir: str) -> str | None:
-    """Resolve a compaction interrupted by a crash.  A leftover manifest
-    whose tmp dirs are both sealed (``_SUCCESS``) is rolled FORWARD
-    (deletions may already have begun); anything less is rolled BACK by
-    discarding the tmps (no generation was touched before both tmps
-    committed).  Returns 'forward', 'back', or None.  Called automatically
-    whenever a ``SegmentIndex`` is opened."""
-    if not os.path.isdir(state_dir):
-        return None
-    for name in os.listdir(state_dir):
-        if not name.startswith("_compact_manifest_"):
-            continue
-        base = int(name.rsplit("_", 1)[1].removesuffix(".json"))
-        manifest, tmp_seg, tmp_sum = _compaction_paths(
-            state_dir, summary_dir, base
-        )
-        committed = os.path.exists(
-            os.path.join(tmp_seg, "_SUCCESS")
-        ) and os.path.exists(os.path.join(tmp_sum, "_SUCCESS"))
-        if committed:
-            _finish_compaction(state_dir, summary_dir, base)
-            return "forward"
-        for p in (tmp_seg, tmp_sum):
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-        os.remove(manifest)
-        return "back"
-    return None
+        json.dump({"format": INDEX_FORMAT}, fh)
+    os.replace(tmp, path)
 
 
 class SegmentIndex:
     """One generation-segment index over an int64 key column ``_th``, kept
-    beside a stream's row output: segments under ``out_dir/<name>``,
-    prefix summaries under ``out_dir/<name>_summary``, one ``kind`` record
-    per batch in ``out_dir/_metrics.jsonl``.
-
-    Opening it rolls an interrupted compaction forward or back and pins the
-    geometry: ``n_state_buckets``/``summary_prefix_bits`` apply to a NEW
-    index only, an existing one keeps what ``_index_meta.json`` recorded.
-    ``n_state_buckets`` trades probe read granularity (what fraction of a
-    scanned generation — chiefly the big compacted base at long horizons —
-    one batch must read) against per-generation file count and write/walk
-    overhead; the O(overlap) READ bound comes from the prefix summaries,
-    not the bucket fan-out, so the default stays small (16; round-5
-    measurement: 64 buckets cost ~25% of the whole bench wall in file
-    creation + dir walks at bench trigger sizes).
+    beside a stream's row output: one sorted, unique ``.npy`` key file per
+    sealed generation under ``out_dir/<name>``, one ``kind`` record per
+    batch in ``out_dir/_metrics.jsonl``.  Opening it checks (or, for a new
+    index, records) the format in ``_index_meta.json``.
 
     Per micro-batch: ``probe`` the batch's keys, then ``seal`` the
     generation with the keys its survivors add."""
@@ -240,108 +146,37 @@ class SegmentIndex:
         out_dir: str,
         name: str = SEEN_STATE_DIRNAME,
         kind: str = "seen_state_scan",
-        n_state_buckets: int = 16,
-        summary_prefix_bits: int = 20,
     ):
         self.out_dir = out_dir
         self.state_dir = os.path.join(out_dir, name)
-        self.summary_dir = os.path.join(out_dir, name + "_summary")
         self.kind = kind
-        recover_compaction(self.state_dir, self.summary_dir)
-        self.n_buckets, bits = _index_meta(
-            self.state_dir, n_state_buckets, summary_prefix_bits
-        )
-        self.pfx_shift = 64 - bits
-        # driver-side memo of sealed generations' prefix sets: summaries are
-        # KB-scale and immutable once sealed, so each is read from disk at
-        # most once per query lifetime (cold after restart, warm within a
-        # run) — without this, batch N re-reads all N-1 summaries every
-        # trigger
-        self._summaries: dict[int, set] = {}
-        # sealed bucket dirs are immutable — size each at most once per run
-        self._bucket_bytes = functools.lru_cache(maxsize=None)(_dir_bytes)
+        _check_format(self.state_dir)
 
     def probe(self, keys: DataFrame, batch_id: int) -> "_Generation":
         """Probe the generations sealed before ``batch_id`` for ``keys``
-        (a persisted DataFrame with an ``_th`` column); the result's
-        ``seen`` is the matching-candidate key set to anti/semi-join
-        against, or None when no generation can hold a match."""
+        (a DataFrame with an ``_th`` column); the result's ``seen`` is the
+        batch's duplicate-key set to anti/semi-join against, or None when
+        no key was seen before."""
         return _Generation(self, keys, batch_id)
 
-    def _gen_dir(self, root: str, b: int) -> str:
-        return os.path.join(root, f"batch_id={b}")
+    def _path(self, b: int) -> str:
+        return os.path.join(self.state_dir, f"batch_id={b}.npy")
 
-    def _summary(self, b: int) -> set | None:
-        pfx = self._summaries.get(b)
-        if pfx is None:
-            sdir = self._gen_dir(self.summary_dir, b)
-            if os.path.exists(os.path.join(sdir, "_SUCCESS")):
-                # KB-scale immutable file: read driver-side with pyarrow
-                # (~ms) instead of a Spark collect job (~0.3-0.5 s of pure
-                # scheduling per cold read)
-                import pyarrow.parquet as pq
-
-                pfx = set(pq.read_table(sdir, columns=["p"])["p"].to_pylist())
-                self._summaries[b] = pfx
-        return pfx
-
-    def _seal_summary(self, b: int, pfx: set) -> None:
-        _write_summary_driver_side(self._gen_dir(self.summary_dir, b), sorted(pfx))
-        self._summaries[b] = set(pfx)
-
-    def _prefixes(self, keys: DataFrame) -> set:
-        return set(
-            keys.select(F.shiftright("_th", self.pfx_shift).alias("p"))
-            .distinct().toPandas()["p"].tolist()
-        )
-
-    def _backfill_summaries(self, spark: SparkSession, gens: list[int]) -> None:
-        """A crash after a segment sealed but before its summary wrote
-        (ADVICE r4 #2) leaves a sealed generation that every probe must
-        scan; derive its summary from the segment once and seal it."""
-        for b in gens:
-            if self._summary(b) is None:
-                seg = spark.read.parquet(self._gen_dir(self.state_dir, b))
-                self._seal_summary(b, self._prefixes(seg))
-
-    def compact(self, spark: SparkSession) -> int:
+    def compact(self) -> int:
         """Offline compaction (Iceberg ``rewrite_data_files`` in prod):
-        merge every SEALED generation into the oldest one as a single
-        distinct-sorted segment and drop the rest.  Run while the stream is
-        STOPPED (table maintenance).  Returns the number of generations
-        merged away.  Probe results are unchanged: the merged segment holds
-        exactly the union of the merged key sets, and its summary the union
-        of prefixes.
-
-        Crash-safe swap (ADVICE r4 #1): a manifest names the generations
-        being merged, both tmp dirs are fully written (``_SUCCESS``) BEFORE
-        any old generation is touched, and the swap itself
-        (`_finish_compaction`) only deletes a superseded generation once the
-        merged union is durable — at every crash point the key set is
-        recoverable, and ``recover_compaction`` (run whenever an index is
-        opened) rolls an interrupted swap forward or an uncommitted one
-        back."""
+        replace the oldest sealed generation with the sorted union of all
+        of them and delete the rest.  Run while the stream is STOPPED
+        (table maintenance).  Returns the number of generations merged
+        away.  Probe answers never change: the union lands durably before
+        any generation is deleted, and until then every key is held twice
+        at most."""
         sealed = _list_sealed_batches(self.state_dir)
         if len(sealed) < 2:
             return 0
-        base = sealed[0]
-        paths = [self._gen_dir(self.state_dir, b) for b in sealed]
-        merged = (
-            spark.read.option("basePath", self.state_dir).parquet(*paths)
-            .select("_th").distinct()
-            .select("_th", F.pmod("_th", F.lit(self.n_buckets)).alias("bucket"))
-            .sortWithinPartitions("_th")
-            .persist()
-        )
-        manifest, tmp_seg, tmp_sum = _compaction_paths(
-            self.state_dir, self.summary_dir, base
-        )
-        with open(manifest, "w") as fh:
-            json.dump({"merged": sealed}, fh)
-        _sink_writer(merged).partitionBy("bucket").parquet(tmp_seg)
-        _write_summary_driver_side(tmp_sum, sorted(self._prefixes(merged)))
-        merged.unpersist()
-        _finish_compaction(self.state_dir, self.summary_dir, base)
+        merged = np.unique(np.concatenate([np.load(self._path(b)) for b in sealed]))
+        _write_keys(self._path(sealed[0]), merged)
+        for b in sealed[1:]:
+            os.remove(self._path(b))
         return len(sealed) - 1
 
     def expire(self, keep_from_batch: int) -> int:
@@ -349,133 +184,70 @@ class SegmentIndex:
         (Iceberg ``expire_snapshots``/partition drop in prod).  Key history
         before the cutoff is forgotten — the same bounded-state contract as
         a watermark TTL.  Returns the number of generations dropped."""
-        dropped = 0
-        for b in _list_sealed_batches(self.state_dir):
-            if b < keep_from_batch:
-                shutil.rmtree(self._gen_dir(self.state_dir, b))
-                sdir = self._gen_dir(self.summary_dir, b)
-                if os.path.isdir(sdir):
-                    shutil.rmtree(sdir)
-                dropped += 1
-        return dropped
+        old = [b for b in _list_sealed_batches(self.state_dir) if b < keep_from_batch]
+        for b in old:
+            os.remove(self._path(b))
+        return len(old)
 
 
 class _Generation:
     """One micro-batch's pass over a ``SegmentIndex``: the probe runs at
-    construction, ``seal`` appends the generation.  ``phases`` holds
-    disjoint wall-clock windows — each ``mark`` closes the window the
+    construction (``cur`` = the batch's sorted distinct keys, ``hits`` =
+    those already sealed), ``seal`` appends the generation.  ``phases``
+    holds disjoint wall-clock windows — each ``mark`` closes the window the
     previous one opened."""
 
     def __init__(self, index: SegmentIndex, keys: DataFrame, batch_id: int):
         self.index, self.batch_id = index, batch_id
-        self.spark = keys.sparkSession
         self.phases: dict[str, float] = {}
         self._t = time.monotonic()
         self.prior = _list_sealed_batches(index.state_dir, upto=batch_id)
-        self.bytes_read, self.scanned, self.seen = 0, [], None
-        # the batch's distinct (prefix, bucket) pairs drive BOTH the probe
-        # pruning and (since round 5) this generation's prefix summary —
-        # one job over the persisted batch, fetched via ARROW (a large
-        # batch has 10^5-10^6 distinct prefixes; row-collect over py4j cost
-        # 7-13 s/batch at r1600 — 75% of the indexed path's overhead — vs
-        # ~0.5 s as Arrow)
-        cur = keys.select(
-            F.shiftright("_th", index.pfx_shift).alias("p"),
-            F.pmod("_th", F.lit(index.n_buckets)).alias("k"),
-        ).distinct().toPandas()
-        self.cur_pfx = set(cur["p"].tolist())
-        cur_buckets = sorted(int(x) for x in set(cur["k"].tolist()))
-        self.mark("probe_collect_s")
-        if not self.prior:
-            return
-        # a generation without a summary (crash between segment and
-        # summary) cannot be pruned: scan it
-        candidates = [
-            b for b in self.prior
-            if (pfx := index._summary(b)) is None or pfx & self.cur_pfx
-        ]
-        if candidates and cur_buckets:
-            paths = [index._gen_dir(index.state_dir, b) for b in candidates]
-            # explicit schema: parquet schema inference on a
-            # multi-generation path list costs a per-batch footer-sampling
-            # pass on the driver (measured ~0.3-0.5 s)
-            seen = (
-                self.spark.read.option("basePath", index.state_dir)
-                .schema("_th BIGINT, bucket INT")
-                .parquet(*paths)
-                .where(F.col("bucket").isin(cur_buckets))
-                .select("_th")
+        self.cur = np.unique(
+            keys.select("_th").distinct().toPandas()["_th"].to_numpy(np.int64)
+        )
+        hit = np.zeros(len(self.cur), dtype=bool)
+        self.scanned = 0
+        for b in self.prior:
+            member = _sorted_member(np.load(index._path(b), mmap_mode="r"), self.cur)
+            self.scanned += bool(member.any())
+            hit |= member
+        self.hits = self.cur[hit]
+        self.seen = None
+        if len(self.hits):
+            self.seen = F.broadcast(
+                keys.sparkSession.createDataFrame(
+                    pd.DataFrame({"_th": self.hits}), "_th BIGINT"
+                )
             )
-            self.bytes_read = sum(
-                index._bucket_bytes(os.path.join(p, f"bucket={k}"))
-                for p in paths
-                for k in cur_buckets
-            )
-            # join strategy by MEASURED probe size: a small scanned state
-            # (compressed segment bytes known exactly from the dir walk)
-            # broadcasts — the batch never shuffles for the probe; past the
-            # bound it falls back to the shuffle join, the right shape when
-            # the probed state outgrows one executor (Catalyst can't pick
-            # this itself: parquet stats under-inform the probed side)
-            if self.bytes_read < 32 * 1024 * 1024:
-                seen = F.broadcast(seen)
-            self.seen, self.scanned = seen, candidates
-        self.mark("summary_prune_s")
+        self.mark("probe_s")
 
     def mark(self, name: str) -> None:
         t = time.monotonic()
         self.phases[name] = round(t - self._t, 3)
         self._t = t
 
-    def seal(self, new_keys: DataFrame, write_rows: Callable[[], None]) -> None:
-        """Append ``new_keys`` (``_th`` column; the caller materializes its
-        input first) as this batch's segment CONCURRENTLY with
-        ``write_rows()``, the caller's row sink, and return once both are
-        durable — the batch must not commit before its segment.  The
-        segment and its summary are each skipped when already sealed (a
-        replayed batch), and the scan record is written only with a fresh
-        row output."""
+    def seal(self, new_keys: np.ndarray, write_rows: Callable[[], None]) -> None:
+        """Seal ``new_keys`` (int64, the keys this batch's survivors add)
+        as this batch's generation, then run ``write_rows()``, the caller's
+        row sink — the generation is durable before the batch can commit.
+        A generation already sealed (a replayed batch) is not rewritten,
+        and the scan record is written only with a fresh row output."""
         ix, b = self.index, self.batch_id
-        sb_dir = ix._gen_dir(ix.state_dir, b)
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            segment = None
-            if not os.path.exists(os.path.join(sb_dir, "_SUCCESS")):
-                # repartition ON bucket before partitionBy: otherwise every
-                # task writes a file into every bucket dir (tasks × buckets
-                # tiny files per generation — measured 5x batch overhead)
-                segment = pool.submit(
-                    lambda: _sink_writer(
-                        new_keys.select(
-                            "_th", F.pmod("_th", F.lit(ix.n_buckets)).alias("bucket")
-                        ).repartition(min(ix.n_buckets, 16), "bucket")
-                    ).partitionBy("bucket").parquet(sb_dir)
-                )
-            # the summary check is INDEPENDENT of the segment guard (ADVICE
-            # r4 #2).  It is written DRIVER-side from the already-collected
-            # batch prefixes: `cur_pfx` is a superset of the new keys'
-            # prefixes (a dropped row's prefixes already live in older
-            # generations' summaries or are merely a false candidate), so
-            # pruning stays exact and the per-batch summary Spark job
-            # disappears.
-            if ix._summary(b) is None:
-                ix._seal_summary(b, self.cur_pfx)
-            ix._backfill_summaries(self.spark, self.prior)
-            self.mark("summary_write_s")
-            fresh_output = not os.path.exists(
-                os.path.join(ix.out_dir, f"batch_id={b}", "_SUCCESS")
-            )
-            write_rows()
-            self.mark("rows_sink_s")
-            if segment is not None:
-                segment.result()  # re-raises a failed segment write
-                self.mark("segment_join_s")
+        if not os.path.exists(ix._path(b)):
+            _write_keys(ix._path(b), np.unique(np.asarray(new_keys, np.int64)))
+        self.mark("seal_s")
+        fresh_output = not os.path.exists(
+            os.path.join(ix.out_dir, f"batch_id={b}", "_SUCCESS")
+        )
+        write_rows()
+        self.mark("rows_sink_s")
         if fresh_output:
             with open(os.path.join(ix.out_dir, "_metrics.jsonl"), "a") as fh:
                 fh.write(json.dumps({
                     "batch_id": b,
                     "kind": ix.kind,
-                    "state_bytes_read": self.bytes_read,
-                    "state_batches_scanned": len(self.scanned),
+                    "state_bytes_read": 8 * len(self.hits),
+                    "state_batches_scanned": self.scanned,
                     "state_batches_total": len(self.prior),
                     "phases": self.phases,
                 }) + "\n")
@@ -487,21 +259,17 @@ def run_exact_dedup_stream_indexed(
     out_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    n_state_buckets: int = 16,
-    summary_prefix_bits: int = 20,
 ):
     """First-seen exact dedup over the stream with the generation-segment
     index keyed on the token-array hash.  Emits FULL survivor rows
-    (token-array equality) exactly-once under ``out_dir/batch_id=N``.
-    ``n_state_buckets``/``summary_prefix_bits`` set the geometry of a new
-    index (see ``SegmentIndex``); raise the bucket count for horizons where
-    the compacted base is much larger than a trigger."""
+    (token-array equality, min ``doc_seq`` per hash) exactly-once under
+    ``out_dir/batch_id=N``.  Per batch: the driver probes the batch's
+    distinct hashes against the index, the batch anti-joins the broadcast
+    duplicates, and the fresh hashes — exactly the survivors' — are sealed
+    without a Spark job."""
     from dataflow_spark.operators.dedup import exact_dedup
 
-    index = SegmentIndex(
-        out_dir, n_state_buckets=n_state_buckets,
-        summary_prefix_bits=summary_prefix_bits,
-    )
+    index = SegmentIndex(out_dir)
     rows_sink = idempotent_parquet_sink(
         out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
     )
@@ -514,17 +282,13 @@ def run_exact_dedup_stream_indexed(
             if gen.seen is not None:
                 fresh = tagged.join(gen.seen, "_th", "left_anti")
             # batch-local first-seen (min doc_seq per hash), the same
-            # single-shuffle kernel as the batch operator
-            survivors = exact_dedup(fresh, hash_col="_th").persist()
-            # materialize the dedup ONCE into the cache: the segment and row
-            # writers then run CONCURRENTLY against cached partitions (a
-            # cache-miss race would instead compute the plan twice)
-            survivors.count()
-            gen.mark("dedup_s")
+            # single-shuffle kernel as the batch operator: one survivor per
+            # fresh hash, so the fresh hashes are the generation's keys
+            survivors = exact_dedup(fresh, hash_col="_th").drop("_th")
             gen.seal(
-                survivors, lambda: rows_sink(survivors.drop("_th"), batch_id)
+                np.setdiff1d(gen.cur, gen.hits, assume_unique=True),
+                lambda: rows_sink(survivors, batch_id),
             )
-            survivors.unpersist()
         finally:
             tagged.unpersist()
 
@@ -537,10 +301,10 @@ def run_exact_dedup_stream_indexed(
     )
 
 
-def compact_seen_index(spark: SparkSession, out_dir: str) -> int:
+def compact_seen_index(out_dir: str) -> int:
     """``SegmentIndex.compact`` on the exact stream's index under
-    ``out_dir``, with the geometry recorded in its ``_index_meta.json``."""
-    return SegmentIndex(out_dir).compact(spark)
+    ``out_dir``."""
+    return SegmentIndex(out_dir).compact()
 
 
 def expire_seen_index(out_dir: str, keep_from_batch: int) -> int:

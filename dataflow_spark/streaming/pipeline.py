@@ -28,15 +28,10 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from dataflow_spark.corpus import CORPUS_SCHEMA
-
-N_SHARDS_DEFAULT = 64
 
 # Sink parquet encoding for the token-array payload, measured on the 110M-token
 # amplified corpus (tools/bench_sink_encode.py, median of 5):
@@ -359,166 +354,8 @@ def run_dedup_filter_stream(
 
 
 # ---------------------------------------------------------------------------
-# stateful MinHash-LSH near-dedup (banded hash-aggregate in state)
+# exact MinHash-LSH near-dedup on the generation-segment index
 # ---------------------------------------------------------------------------
-
-_BAND_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("doc_seq", T.LongType()),
-        T.StructField("matched", T.IntegerType()),
-    ]
-)
-_BAND_STATE_SCHEMA = T.StructType(
-    [T.StructField("band_hashes", T.BinaryType())]
-)
-
-
-def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
-    """Vectorized membership of ``values`` in a SORTED int64 array."""
-    if not len(sorted_arr):
-        return np.zeros(len(values), dtype=bool)
-    pos = np.searchsorted(sorted_arr, values)
-    pos_c = np.minimum(pos, len(sorted_arr) - 1)
-    return (pos < len(sorted_arr)) & (sorted_arr[pos_c] == values)
-
-
-def _band_state_fn(key, pdf_iter, state):
-    """Per band-shard state = set of band hashes seen, stored as one SORTED
-    int64 numpy buffer in a binary column — a state entry of S hashes costs
-    one 8S-byte memcpy per micro-batch in each direction, where an
-    array<long> layout would box S Python ints on both load and store
-    (measured 4.8x slower at S=15k on the isolated kernel).  Emits one row
-    per (doc, band) with matched=1 iff the band hash was already present
-    (from an earlier doc — rows are processed in doc_seq order within the
-    batch)."""
-    if state.hasTimedOut:
-        state.remove()
-        return
-    (buf,) = state.get if state.exists else (None,)
-    seen = np.frombuffer(buf, dtype=np.int64) if buf else np.empty(0, np.int64)
-    pending = np.empty(0, np.int64)
-    max_ev_ms = 0
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("doc_seq")
-        if len(pdf):
-            # _ev_ms is unix_millis(event_time) computed JVM-side: pandas
-            # .timestamp() on the delivered tz-naive values would assume UTC
-            # while Spark delivers them in spark.sql.session.timeZone — under
-            # a non-UTC session TZ the TTL base would be offset by the zone
-            # delta (hours-long TTL drift).
-            max_ev_ms = max(max_ev_ms, int(pdf["_ev_ms"].max()))
-        bh = pdf["band_hash"].to_numpy(dtype=np.int64)
-        # matched: band already in state, new this batch, or earlier in this
-        # sorted chunk
-        matched = (
-            _sorted_member(seen, bh)
-            | _sorted_member(pending, bh)
-            | pd.Series(bh).duplicated(keep="first").to_numpy()
-        )
-        pending = np.union1d(pending, bh[~matched])
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "doc_seq": pdf["doc_seq"],
-                "matched": matched.astype("int32"),
-            }
-        )
-    state.update((np.union1d(seen, pending).tobytes(),))
-    # TTL: one hour of EVENT time past the newest row this shard has seen.
-    # (Not the current watermark — on the first batch the watermark is still
-    # epoch-0, and a watermark-relative timeout would expire the whole state
-    # the moment the watermark jumps forward, e.g. across a restart.)
-    ttl_base = max(state.getCurrentWatermarkMs(), max_ev_ms)
-    state.setTimeoutTimestamp(ttl_base + 3600 * 1000)
-
-
-def streaming_minhash_dedup_decisions(
-    stream: DataFrame,
-    watermark_delay: str = "10 minutes",
-    bands: int = 16,
-    num_perm: int = 128,
-    token_ngram: int = 3,
-    n_shards: int = N_SHARDS_DEFAULT,
-) -> DataFrame:
-    """North-star stateful near-dedup: MinHash band hashes held in the state
-    store, keyed by (band_id, hash-shard).  Emits per-doc ``is_dup`` decisions
-    (dup ⇔ ANY band matched an earlier doc's band).
-
-    Approximation contract vs the reference's sequential query-then-insert
-    LSH (minhash_deduplicate_filter.py:66-83): bands of a doc that is itself
-    judged duplicate stay in state (the sequential scan would not insert
-    them), so dedup is at-least-as-aggressive; exact within the watermark
-    horizon otherwise.  The doc-level ANY-band vote is a plain per-microbatch
-    aggregation — do it in foreachBatch (see run_near_dedup_stream) so only
-    the band memory is long-lived state."""
-    from dataflow_spark.operators.dedup import minhash_bands_from_tokens_udf
-
-    band_udf = minhash_bands_from_tokens_udf(num_perm, bands, token_ngram)
-    banded = (
-        stream.withColumn("_bands", band_udf(F.col("tokens")))
-        .select(
-            "doc_id",
-            "doc_seq",
-            "event_time",
-            # outer + null-drop: see dedup.py double-UDF-eval rationale
-            F.posexplode_outer("_bands").alias("band_id", "band_hash"),
-        )
-        .where(F.col("band_id").isNotNull())
-        .withColumn(
-            "shard",
-            (F.col("band_id") * n_shards + F.pmod(F.col("band_hash"), F.lit(n_shards))).cast("int"),
-        )
-        .withColumn("_ev_ms", F.unix_millis(F.col("event_time")))
-        .withWatermark("event_time", watermark_delay)
-    )
-    return banded.groupBy("shard").applyInPandasWithState(
-        _band_state_fn,
-        outputStructType=_BAND_OUT_SCHEMA,
-        stateStructType=_BAND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def run_near_dedup_stream(
-    spark: SparkSession,
-    corpus_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark_delay: str = "10 minutes",
-    max_files_per_trigger: int = 1,
-    bands: int = 16,
-    n_shards: int = 8,
-):
-    """Streaming near-dedup, decision stream only: band decisions (stateful)
-    -> per-microbatch doc vote (any band matched => dup) -> the sink emits the
-    SURVIVOR ID LIST (doc_id, doc_seq) exactly-once, for an offline join back
-    to the source table.  The decisions stream deliberately does not carry
-    payload (it would multiply every token array by ``bands``); when the sink
-    must emit full rows use run_near_dedup_stream_exact, whose foreachBatch
-    sees the raw batch and therefore has the payload in hand."""
-    survivors_sink = idempotent_parquet_sink(
-        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
-    )
-
-    def sink(decisions: DataFrame, batch_id: int):
-        votes = decisions.groupBy("doc_id", "doc_seq").agg(
-            F.max("matched").alias("is_dup")
-        )
-        keep = votes.where(F.col("is_dup") == 0).select("doc_id", "doc_seq")
-        survivors_sink(keep, batch_id)
-
-    stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)
-    decisions = streaming_minhash_dedup_decisions(
-        stream, watermark_delay, bands=bands, n_shards=n_shards
-    )
-    return (
-        decisions.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
 
 
 def run_near_dedup_stream_exact(
@@ -531,29 +368,25 @@ def run_near_dedup_stream_exact(
     num_perm: int = 128,
     token_ngram: int = 3,
 ):
-    """EXACT-mode streaming near-dedup: insert-only-survivor-bands, the
-    reference's sequential query-then-insert semantics
-    (minhash_deduplicate_filter.py:66-83) — a dropped doc's bands never enter
-    the index, unlike streaming_minhash_dedup_decisions' at-least-as-
-    aggressive contract.
+    """Streaming near-dedup with the reference's sequential
+    query-then-insert LSH semantics (minhash_deduplicate_filter.py:66-83):
+    only survivors' bands enter the index, a dropped doc's never do.
 
-    The insert decision needs the doc-level vote BEFORE the state update, and
-    a doc's bands live in different band-hash shards, so this is not
-    expressible inside one applyInPandasWithState pass.  Instead the LSH
-    index is a ``streaming.indexed.SegmentIndex`` under
-    ``out_dir/_band_state`` keyed on the packed band key
-    ``xxhash64(band_id, band_hash)`` (``dedup.packed_band_keys``) — the same
-    generation-segment index, pruned O(overlap) probe, geometry pinning,
-    crash recovery and per-batch ``state_scan`` record as the exact-dedup
+    The insert decision needs the doc-level vote BEFORE the state update,
+    and a doc's bands hash to unrelated keys, so the LSH index is a
+    ``streaming.indexed.SegmentIndex`` under ``out_dir/_band_state`` keyed
+    on the packed band key ``xxhash64(band_id, band_hash)``
+    (``dedup.packed_band_keys``) — the same index, driver-side probe,
+    format pin and per-batch ``state_scan`` record as the exact-dedup
     stream.  Each micro-batch:
 
-      1. drops docs whose ANY band key semi-joins the index's probe result
-         (generations < N);
+      1. drops docs whose ANY band key semi-joins the index's duplicate
+         keys (generations < N);
       2. runs batch-local cluster-min dedup among the remainder
          (minhash_dedup — coincides with the sequential loop on chain-free
          clusters, the same contract as the batch operator);
-      3. seals ONLY the survivors' band keys as generation N, concurrently
-         with the exactly-once write of FULL survivor rows."""
+      3. fetches the survivors' band keys (one Arrow fetch), seals them as
+         generation N, then writes FULL survivor rows exactly-once."""
     from dataflow_spark.operators.dedup import (
         minhash_bands_from_tokens_udf,
         minhash_dedup,
@@ -589,14 +422,15 @@ def run_near_dedup_stream_exact(
                 num_perm=num_perm,
                 bands=bands,
             ).persist()
-            survivors.count()
-            gen.mark("dedup_s")
             # the survivors' band keys are a subset of the batch's, already
-            # cached: no second band-UDF pass
-            new_bands = cur_bands.join(
-                survivors.select("doc_seq"), "doc_seq", "left_semi"
+            # cached: no second band-UDF pass; the fetch also fills the
+            # survivors' cache for the row write
+            new_keys = (
+                cur_bands.join(survivors.select("doc_seq"), "doc_seq", "left_semi")
+                .select("_th").toPandas()["_th"].to_numpy(np.int64)
             )
-            gen.seal(new_bands, lambda: rows_sink(survivors, batch_id))
+            gen.mark("dedup_s")
+            gen.seal(new_keys, lambda: rows_sink(survivors, batch_id))
             survivors.unpersist()
         finally:
             cur_bands.unpersist()

@@ -33,12 +33,12 @@ def main():
     ap.add_argument("--out", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--watermark", default="10 minutes")
-    ap.add_argument(
-        "--shards", type=int, default=64,
-        help="band-state shards for --mode near only (~10x cores)",
-    )
     ap.add_argument("--max-files-per-trigger", type=int, default=8)
-    ap.add_argument("--mode", choices=["exact", "near"], default="exact")
+    ap.add_argument(
+        "--mode", choices=["exact", "near"], default="exact",
+        help="exact: watermark dedup + n_tok filter; near: MinHash near-dedup "
+        "on the durable band index (--watermark/--min-tok/--max-tok: exact only)",
+    )
     ap.add_argument("--min-tok", type=int, default=8)
     ap.add_argument("--max-tok", type=int, default=100000)
     ap.add_argument("--once", action="store_true", help="process available data then exit")
@@ -52,7 +52,7 @@ def main():
     from dataflow_spark.operators.filters import keep_n_tok_range
     from dataflow_spark.streaming.pipeline import (
         run_dedup_filter_stream,
-        run_near_dedup_stream,
+        run_near_dedup_stream_exact,
     )
 
     if args.mode == "exact":
@@ -66,14 +66,12 @@ def main():
             filters=[keep_n_tok_range(args.min_tok, args.max_tok)],
         )
     else:
-        q = run_near_dedup_stream(
+        q = run_near_dedup_stream_exact(
             spark,
             args.corpus,
             args.out,
             args.checkpoint,
-            watermark_delay=args.watermark,
             max_files_per_trigger=args.max_files_per_trigger,
-            n_shards=args.shards,
         )
     if args.once:
         q.processAllAvailable()

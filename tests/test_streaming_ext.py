@@ -1,4 +1,5 @@
-"""Streaming near-dedup (banded MinHash state) + source routing tests."""
+"""Streaming near-dedup (band-key generation-segment index) + source routing
+tests."""
 
 from __future__ import annotations
 
@@ -9,58 +10,8 @@ from pyspark.sql import functions as F
 from dataflow_spark.streaming.pipeline import (
     file_stream_source,
     route_by_source,
-    run_near_dedup_stream,
 )
 from tests.test_streaming import make_rows, toks, write_file
-
-
-def test_near_dedup_stream_drops_cross_batch_near_dups(spark, tmp_path):
-    corpus_dir = str(tmp_path / "c")
-    out_dir = str(tmp_path / "o")
-    ckpt = str(tmp_path / "k")
-    shared = list(range(100, 140))
-    f1 = make_rows(
-        [
-            (1, shared, "cc", 0),
-            (2, list(range(500, 530)), "web", 1),
-        ]
-    )
-    # d11: identical token stream to d1 (all bands match) -> dup, dropped.
-    # d12: fresh -> kept.
-    f2 = make_rows(
-        [
-            (11, shared, "cc", 30),
-            (12, list(range(900, 940)), "book", 31),
-        ]
-    )
-    write_file(spark, f1, corpus_dir)
-    write_file(spark, f2, corpus_dir)
-
-    q = run_near_dedup_stream(
-        spark, corpus_dir, out_dir, ckpt, bands=8, n_shards=4
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()}
-    assert got == {"d000001", "d000002", "d000012"}
-
-
-def test_near_dedup_stream_resumes_band_state(spark, tmp_path):
-    corpus_dir = str(tmp_path / "c")
-    out_dir = str(tmp_path / "o")
-    ckpt = str(tmp_path / "k")
-    shared = list(range(200, 240))
-    write_file(spark, make_rows([(1, shared, "cc", 0)]), corpus_dir)
-    q = run_near_dedup_stream(spark, corpus_dir, out_dir, ckpt, bands=8, n_shards=4)
-    q.processAllAvailable()
-    q.stop()
-    # after restart the band state must remember d1's bands
-    write_file(spark, make_rows([(21, shared, "cc", 40)]), corpus_dir)
-    q2 = run_near_dedup_stream(spark, corpus_dir, out_dir, ckpt, bands=8, n_shards=4)
-    q2.processAllAvailable()
-    q2.stop()
-    got = {r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()}
-    assert got == {"d000001"}
 
 
 def test_near_dedup_stream_exact_matches_batch(spark, tmp_path):

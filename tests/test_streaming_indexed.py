@@ -1,17 +1,18 @@
-"""Exact streaming dedup over the generation-segment parquet index
-(streaming/indexed.py) — a delta-log design on foreachBatch: stream==batch
-parity, kill/resume idempotence, O(batch) state WRITE
-(segments hold only first-seen hashes), pruned bounded state READ, and
-offline compaction/expiry maintenance."""
+"""Exact streaming dedup over the generation-segment index
+(streaming/indexed.py) — one sorted int64 key file per generation, probed
+on the driver: stream==batch parity, kill/resume idempotence, O(batch)
+state WRITE (generations hold only first-seen hashes), O(duplicates) state
+handed to Spark, format pinning, crash-safe seal and compaction, offline
+compaction/expiry maintenance, and the per-batch Spark-job budget."""
 
 from __future__ import annotations
 
 import json
 import os
 import re
-import shutil
 import time
 
+import numpy as np
 import pytest
 
 from dataflow_spark.operators.dedup import exact_dedup
@@ -94,16 +95,15 @@ def test_indexed_dedup_resume_and_idempotent_replay(spark, tmp_path):
 
 
 def test_indexed_dedup_state_io_is_o_batch(spark, tmp_path):
-    """The delta-log property: (a) WRITE — each generation's segment holds
-    only that batch's first-seen hashes (segment row count == new hashes,
-    not cumulative history); (b) READ — a batch whose hash prefixes overlap
-    nothing skips every prior generation (prefix pruning), so state read
-    bytes are 0 while history keeps growing."""
+    """The delta-log property: (a) WRITE — each generation holds only that
+    batch's first-seen hashes (key count == new hashes, not cumulative
+    history); (b) READ — a batch whose hashes were never seen hits no prior
+    generation, so no state bytes go to Spark while history keeps
+    growing."""
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
-    # three batches of DISJOINT token streams -> disjoint hash prefixes
-    # (with overwhelming probability over xxhash64 at 20-bit prefixes)
+    # three batches of DISJOINT token streams -> disjoint hashes
     write_file(
         spark,
         make_rows([(i, list(range(i * 100, i * 100 + 40)), "cc", i) for i in range(1, 5)]),
@@ -123,17 +123,17 @@ def test_indexed_dedup_state_io_is_o_batch(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    # (a) O(batch) write: every generation's segment has exactly that
-    # batch's 4 new hashes — NOT the cumulative count
+    # (a) O(batch) write: every generation has exactly that batch's 4 new
+    # hashes — NOT the cumulative count
     state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
-    for gen_dir in sorted(os.listdir(state_dir)):
-        if not gen_dir.startswith("batch_id="):
-            continue
-        n = spark.read.parquet(os.path.join(state_dir, gen_dir)).count()
-        assert n == 4, (gen_dir, n)
+    gens = sorted(n for n in os.listdir(state_dir) if n.startswith("batch_id="))
+    assert gens == ["batch_id=0.npy", "batch_id=1.npy", "batch_id=2.npy"]
+    for gen in gens:
+        n = len(np.load(os.path.join(state_dir, gen)))
+        assert n == 4, (gen, n)
 
-    # (b) bounded read: disjoint prefixes -> later batches scanned 0 prior
-    # generations despite history having 1..2 generations available
+    # (b) bounded read: no hits -> later batches hit 0 prior generations
+    # despite history having 1..2 generations available
     scans = sorted(_metrics(out_dir), key=lambda m: m["batch_id"])
     assert [m["state_batches_total"] for m in scans] == [0, 1, 2]
     assert all(m["state_batches_scanned"] == 0 for m in scans), scans
@@ -154,7 +154,7 @@ def test_indexed_dedup_compact_and_expire(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    merged_away = compact_seen_index(spark, out_dir)
+    merged_away = compact_seen_index(out_dir)
     assert merged_away == 1
     state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
     gens = [d for d in os.listdir(state_dir) if d.startswith("batch_id=")]
@@ -192,50 +192,32 @@ def _run_two_generations(spark, tmp_path):
     return corpus_dir, out_dir, ckpt, a, b
 
 
-def test_compaction_crash_rolls_forward(spark, tmp_path, monkeypatch):
-    """ADVICE r4 #1: a crash AFTER the merged tmp segment commits but
-    mid-swap (old generations partially deleted) must not lose the seen
-    state — recovery rolls the committed compaction forward and every
-    pre-compaction dup is still dropped."""
-    import shutil
-
-    from dataflow_spark.streaming import indexed
-
+@pytest.mark.parametrize("crash_at", [0, 1])
+def test_compaction_crash_keeps_union(spark, tmp_path, monkeypatch, crash_at):
+    """Compacting two generations makes two filesystem calls: the
+    ``os.replace`` that lands the union on the oldest generation, then one
+    ``os.remove``.  Whichever of them raises, the reopened index still
+    drops dups of BOTH pre-compaction batches: the union is durable before
+    anything is deleted, and a key held twice changes no probe answer."""
     corpus_dir, out_dir, ckpt, a, b = _run_two_generations(spark, tmp_path)
-    state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
-    summary_dir = os.path.join(out_dir, indexed.SEEN_SUMMARY_DIRNAME)
+    calls = []
 
-    def crash_mid_swap(sd, smd, base):
-        # simulate the worst pre-fix window: one superseded generation and
-        # the base summary already deleted, then the process dies
-        gens = sorted(
-            d for d in os.listdir(sd) if d.startswith("batch_id=")
-        )
-        shutil.rmtree(os.path.join(sd, gens[-1]))
-        bs = os.path.join(smd, f"batch_id={base}")
-        if os.path.isdir(bs):
-            shutil.rmtree(bs)
-        raise RuntimeError("simulated crash mid-compaction-swap")
+    def crashing(real):
+        def call(*args):
+            calls.append(real.__name__)
+            if len(calls) - 1 == crash_at:
+                raise OSError("simulated crash inside compaction")
+            return real(*args)
 
-    monkeypatch.setattr(indexed, "_finish_compaction", crash_mid_swap)
-    try:
-        compact_seen_index(spark, out_dir)
-    except RuntimeError:
-        pass
+        return call
+
+    monkeypatch.setattr(os, "replace", crashing(os.replace))
+    monkeypatch.setattr(os, "remove", crashing(os.remove))
+    with pytest.raises(OSError, match="simulated crash"):
+        compact_seen_index(out_dir)
     monkeypatch.undo()
+    assert calls == ["replace", "remove"][: crash_at + 1]
 
-    # manifest + committed tmps left behind -> next stream start recovers
-    assert any(
-        n.startswith("_compact_manifest_") for n in os.listdir(state_dir)
-    )
-    assert indexed.recover_compaction(state_dir, summary_dir) == "forward"
-    gens = [d for d in os.listdir(state_dir) if d.startswith("batch_id=")]
-    assert len(gens) == 1
-    assert not any(
-        n.startswith("_compact") for n in os.listdir(state_dir)
-    )
-
-    # dedup history intact: dups of BOTH original batches still dropped
     write_file(spark, make_rows([(11, a, "cc", 60), (12, b, "web", 61)]), corpus_dir)
     q2 = run_exact_dedup_stream_indexed(spark, corpus_dir, out_dir, ckpt)
     q2.processAllAvailable()
@@ -246,129 +228,100 @@ def test_compaction_crash_rolls_forward(spark, tmp_path, monkeypatch):
     assert got == [1, 2]
 
 
-def test_compaction_crash_rolls_back(spark, tmp_path):
-    """A crash BEFORE both tmp dirs commit (no generation touched yet) is
-    rolled back: tmps + manifest discarded, original generations intact."""
+def test_torn_seal_ignored_and_resealed_on_replay(spark, tmp_path):
+    """A crash inside a seal leaves at most a partial tmp file beside a
+    missing ``batch_id=N.npy``: it is never read as a generation, and a
+    fresh-checkpoint replay seals batch 0 again with the same keys, so its
+    dups are still dropped."""
     from dataflow_spark.streaming import indexed
 
     corpus_dir, out_dir, ckpt, a, b = _run_two_generations(spark, tmp_path)
     state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
-    summary_dir = os.path.join(out_dir, indexed.SEEN_SUMMARY_DIRNAME)
-    manifest, tmp_seg, _ = indexed._compaction_paths(state_dir, summary_dir, 0)
-    with open(manifest, "w") as fh:
-        json.dump({"merged": [0, 1]}, fh)
-    os.makedirs(tmp_seg)  # partial write: no _SUCCESS
+    gen0 = os.path.join(state_dir, "batch_id=0.npy")
+    keys0 = np.load(gen0)
+    os.replace(gen0, gen0 + ".tmp")
+    with open(gen0 + ".tmp", "r+b") as fh:
+        fh.truncate(20)
+    assert indexed._list_sealed_batches(state_dir) == [1]
 
-    assert indexed.recover_compaction(state_dir, summary_dir) == "back"
-    assert not os.path.exists(manifest) and not os.path.exists(tmp_seg)
-    gens = [d for d in os.listdir(state_dir) if d.startswith("batch_id=")]
-    assert len(gens) == 2
-
+    # a fresh checkpoint reprocesses the whole corpus; output replay is
+    # idempotent
     write_file(spark, make_rows([(11, a, "cc", 60), (12, b, "web", 61)]), corpus_dir)
-    q2 = run_exact_dedup_stream_indexed(spark, corpus_dir, out_dir, ckpt)
-    q2.processAllAvailable()
-    q2.stop()
-    got = sorted(
-        r.doc_seq for r in spark.read.parquet(out_dir).select("doc_seq").collect()
-    )
-    assert got == [1, 2]
-
-
-def test_missing_summary_backfilled_on_replay(spark, tmp_path):
-    """ADVICE r4 #2: a generation whose segment sealed but whose prefix
-    summary never wrote (crash window) gets its summary BACKFILLED by a
-    later stream run instead of being scanned forever."""
-    import shutil
-
-    from dataflow_spark.streaming import indexed
-
-    corpus_dir, out_dir, ckpt, a, b = _run_two_generations(spark, tmp_path)
-    summary_dir = os.path.join(out_dir, indexed.SEEN_SUMMARY_DIRNAME)
-    victim = os.path.join(summary_dir, "batch_id=0")
-    assert os.path.exists(os.path.join(victim, "_SUCCESS"))
-    shutil.rmtree(victim)
-
-    # restart + replay batch 0 (fresh checkpoint forces reprocessing of the
-    # whole corpus; output replay is idempotent) -> summary reappears
     q2 = run_exact_dedup_stream_indexed(
         spark, corpus_dir, out_dir, str(tmp_path / "k2")
     )
     q2.processAllAvailable()
     q2.stop()
-    assert os.path.exists(os.path.join(victim, "_SUCCESS"))
+    assert np.array_equal(np.load(gen0), keys0)
     got = sorted(
         r.doc_seq for r in spark.read.parquet(out_dir).select("doc_seq").collect()
     )
     assert got == [1, 2]
 
 
-def test_index_geometry_pinned_across_resume(spark, tmp_path):
-    """Segments are bucketed by pmod(_th, n) at WRITE time, so a resume
-    with a different n_state_buckets would prune the wrong buckets and
-    re-emit dups.  _index_meta.json pins the geometry: the first writer
-    records it and later runs use the recorded value, so the dup below
-    is still dropped."""
-    corpus_dir, out_dir, ckpt = (
-        str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
-    )
-    a = list(range(100, 150))
-    write_file(spark, make_rows([(1, a, "cc", 0)]), corpus_dir)
-    q = run_exact_dedup_stream_indexed(
-        spark, corpus_dir, out_dir, ckpt, n_state_buckets=4
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    write_file(spark, make_rows([(11, a, "cc", 40)]), corpus_dir)
-    q2 = run_exact_dedup_stream_indexed(
-        spark, corpus_dir, out_dir, ckpt, n_state_buckets=32
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    got = sorted(
-        r.doc_seq for r in spark.read.parquet(out_dir).select("doc_seq").collect()
-    )
-    assert got == [1]
+def test_v1_index_layout_refused(spark, tmp_path):
+    """A v1 index (bucketed parquet segments, bucket-geometry meta) must be
+    refused with a ValueError naming its state dir — by the stream and by
+    both maintenance calls — and nothing may be written to it.  Each v1
+    signal is refused on its own too."""
+    corpus_dir = str(tmp_path / "c")
+    write_file(spark, make_rows([(1, list(range(100, 150)), "cc", 0)]), corpus_dir)
+    v1_meta = {"n_state_buckets": 16, "summary_prefix_bits": 20}
+    for layout in ("meta+segments", "meta", "segments"):
+        out_dir = str(tmp_path / layout)
+        state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
+        os.makedirs(state_dir)
+        if "meta" in layout:
+            with open(os.path.join(state_dir, "_index_meta.json"), "w") as fh:
+                json.dump(v1_meta, fh)
+        if "segments" in layout:
+            os.makedirs(os.path.join(state_dir, "batch_id=0", "bucket=3"))
+            open(os.path.join(state_dir, "batch_id=0", "_SUCCESS"), "w").close()
+        before = sorted(os.walk(out_dir))
+        with pytest.raises(ValueError, match=re.escape(state_dir)):
+            run_exact_dedup_stream_indexed(
+                spark, corpus_dir, out_dir, str(tmp_path / f"k-{layout}")
+            )
+        with pytest.raises(ValueError, match=re.escape(state_dir)):
+            compact_seen_index(out_dir)
+        with pytest.raises(ValueError, match=re.escape(state_dir)):
+            expire_seen_index(out_dir, keep_from_batch=10**9)
+        assert sorted(os.walk(out_dir)) == before, layout
 
 
 @pytest.mark.parametrize(
-    "run, state_name, first_kw, second_kw",
+    "run, state_name",
     [
-        (
-            run_exact_dedup_stream_indexed, SEEN_STATE_DIRNAME,
-            {"n_state_buckets": 4}, {"n_state_buckets": 32},
-        ),
-        (run_near_dedup_stream_exact, "_band_state", {}, {}),
+        (run_exact_dedup_stream_indexed, SEEN_STATE_DIRNAME),
+        (run_near_dedup_stream_exact, "_band_state"),
     ],
     ids=["exact", "near"],
 )
 def test_missing_index_meta_with_sealed_segments_raises(
-    spark, tmp_path, run, state_name, first_kw, second_kw
+    spark, tmp_path, run, state_name
 ):
-    """Sealed segments without _index_meta.json have an unknown geometry:
-    a restart must refuse rather than record its own (different) defaults
-    and prune the wrong buckets.  Both streams share the index, so both
-    refuse — including a near-dedup band index written before it carried
-    a meta file."""
+    """Sealed generations without _index_meta.json have an unknown format:
+    a restart must refuse rather than record the current one over them.
+    Both streams share the index, so both refuse."""
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
     write_file(spark, make_rows([(1, list(range(100, 150)), "cc", 0)]), corpus_dir)
-    q = run(spark, corpus_dir, out_dir, ckpt, **first_kw)
+    q = run(spark, corpus_dir, out_dir, ckpt)
     q.processAllAvailable()
     q.stop()
     state_dir = os.path.join(out_dir, state_name)
     os.remove(os.path.join(state_dir, "_index_meta.json"))
 
     with pytest.raises(ValueError, match=re.escape(state_dir)):
-        run(spark, corpus_dir, out_dir, ckpt, **second_kw)
+        run(spark, corpus_dir, out_dir, ckpt)
     assert not os.path.exists(os.path.join(state_dir, "_index_meta.json"))
 
 
 def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch):
     """Each phase window starts where the previous one ended: a rows sink
-    slowed by 0.5 s shows up in rows_sink_s only, not again in
-    segment_join_s, and the phases never sum past the batch's addBatch."""
+    slowed by 0.5 s shows up in rows_sink_s only, not in the seal_s window
+    before it, and the phases never sum past the batch's addBatch."""
     from dataflow_spark.streaming import indexed
 
     real_sink = indexed.idempotent_parquet_sink
@@ -401,60 +354,53 @@ def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch):
     for m in recs:
         ph = m["phases"]
         assert ph["rows_sink_s"] >= 0.5, ph
-        assert ph["segment_join_s"] < 0.5, ph
+        assert ph["seal_s"] < 0.5, ph
         assert sum(ph.values()) <= add_batch_s[m["batch_id"]], (ph, add_batch_s)
 
 
-def test_near_dedup_missing_summary_backfilled_and_prunes(spark, tmp_path):
-    """Near-dedup on the shared index: a crash-orphaned generation (segment
-    sealed, summary missing) is scanned while summary-less — so its near
-    dup is still dropped — and its summary is backfilled from the segment,
-    after which it prunes exactly: it holds the prefixes of exactly the
-    segment's keys, and a batch of fresh docs scans no generation."""
+@pytest.mark.parametrize(
+    "run, budget",
+    [
+        (run_exact_dedup_stream_indexed, [5, 6, 6]),
+        (run_near_dedup_stream_exact, [16, 20, 20]),
+    ],
+    ids=["exact", "near"],
+)
+def test_index_streams_spark_job_budget(spark, tmp_path, monkeypatch, run, budget):
+    """Spark jobs per micro-batch of both index streams, pinned exactly: a
+    job added to the hot path (a second fetch, a re-materialized batch, a
+    Spark job back inside the seal) fails here instead of in a bench row.
+    Each batch's jobs are tagged with a job group set where the batch
+    enters the index, and counted through the status tracker.  At the
+    previous, bucketed-parquet index the exact stream ran [10, 11, 11].  Batch 0 has
+    no history; batches 1 and 2 each hold one cross-batch dup, so they add
+    the broadcast of the duplicate keys."""
+    from dataflow_spark.streaming import indexed
+
+    sc = spark.sparkContext
+    group = f"jobs-{os.path.basename(tmp_path)}-b"
+    real_probe = indexed.SegmentIndex.probe
+
+    def probe(self, keys, batch_id):
+        sc.setJobGroup(f"{group}{batch_id}", "index stream job budget")
+        return real_probe(self, keys, batch_id)
+
+    monkeypatch.setattr(indexed.SegmentIndex, "probe", probe)
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
-    a = [1000 + 7 * k for k in range(60)]
-    b = [50_000 + 11 * k for k in range(60)]
-    write_file(spark, make_rows([(1, a, "cc", 0)]), corpus_dir)
-    write_file(spark, make_rows([(2, b, "web", 30)]), corpus_dir)
-    q = run_near_dedup_stream_exact(spark, corpus_dir, out_dir, ckpt)
+    a, b, c = list(range(100, 160)), list(range(500, 560)), list(range(900, 960))
+    write_file(spark, make_rows([(1, a, "cc", 0), (2, a, "cc", 1)]), corpus_dir)
+    write_file(spark, make_rows([(11, a, "cc", 30), (12, b, "web", 31)]), corpus_dir)
+    write_file(spark, make_rows([(21, b, "web", 60), (22, c, "book", 61)]), corpus_dir)
+    dag = sc._jsc.sc().dagScheduler()
+    jobs_before = dag.numTotalJobs()
+    q = run(spark, corpus_dir, out_dir, ckpt)
     q.processAllAvailable()
     q.stop()
-    summary_dir = os.path.join(out_dir, "_band_state_summary")
-    victim = os.path.join(summary_dir, "batch_id=0")
-    shutil.rmtree(victim)
-
-    near_a = list(a)
-    near_a[0], near_a[30] = 7, 9
-    write_file(
-        spark,
-        make_rows([(3, near_a, "cc", 60), (4, [90_000 + 13 * k for k in range(60)], "cc", 61)]),
-        corpus_dir,
-    )
-    q2 = run_near_dedup_stream_exact(spark, corpus_dir, out_dir, ckpt)
-    q2.processAllAvailable()
-    write_file(
-        spark,
-        make_rows([(5, [200_000 + 17 * k for k in range(60)], "book", 90)]),
-        corpus_dir,
-    )
-    q2.processAllAvailable()
-    q2.stop()
-
-    got = sorted(
-        r.doc_seq for r in spark.read.parquet(out_dir).select("doc_seq").collect()
-    )
-    assert got == [1, 2, 4, 5]
-    scans = {m["batch_id"]: m for m in _metrics(out_dir, kind="state_scan")}
-    assert scans[2]["state_batches_scanned"] >= 1, scans[2]
-    assert os.path.exists(os.path.join(victim, "_SUCCESS"))
-    seg_pfx = {
-        r.p for r in spark.read.parquet(
-            os.path.join(out_dir, "_band_state", "batch_id=0")
-        ).selectExpr("shiftright(_th, 44) AS p").distinct().collect()
-    }
-    summary_pfx = {r.p for r in spark.read.parquet(victim).collect()}
-    assert summary_pfx == seg_pfx
-    assert scans[3]["state_batches_total"] == 3
-    assert scans[3]["state_batches_scanned"] == 0, scans[3]
+    tracker = sc.statusTracker()
+    got = [len(tracker.getJobIdsForGroup(f"{group}{i}")) for i in range(3)]
+    assert got == budget
+    # every job the query ran is in a batch's group: none escaped the count
+    # on another thread (a job group does not follow a job into one)
+    assert dag.numTotalJobs() - jobs_before == sum(got)
