@@ -8,8 +8,9 @@ with planted exact-dup replicas and near-dup perturbations, pure Catalyst
 expressions) and materialized to parquet once — the timed pipeline then reads
 parquet like it would read the Iceberg table.
 
-Scaling evidence (N vs 4N): tools/bench_scaling.py runs this same pipeline at
-local[8] and local[32] and records efficiency in BASELINE.md.
+Scaling evidence (N vs 4N): `python3 tools/ab.py .:SPARK_GRAFT_CPUS=8
+.:SPARK_GRAFT_CPUS=32 -- python3 bench.py` runs this same pipeline at local[8]
+and local[32], interleaved, and reports both legs' medians.
 """
 
 from __future__ import annotations

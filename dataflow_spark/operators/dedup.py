@@ -28,8 +28,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -194,48 +192,32 @@ def _cc_min_numpy(a: "np.ndarray", b: "np.ndarray") -> tuple:
 # Spark's own broadcast threshold: a driver round-trip beats O(rounds)
 # shuffle jobs whose fixed cost (checkpoint + convergence count per round)
 # is serial and does not parallelize — that fixed cost is what held
-# 8->32-core scaling at 0.56 in round 2.  The cutoff's VALUE is measured in
-# both directions — see cc_local_edge_threshold() for the r1600 A/B that
-# keeps it at 4M (heap-scaled variants lose above it on every topology).
+# 8->32-core scaling at 0.56 in round 2.  The 4M value is MEASURED, both
+# directions, at r1600 (8,339,450 edges — 2.1x the cutoff):
+#
+# * the driver-local solve WINS below it: the r400 edge set (2.08M) solves
+#   in ~1 s and removed the per-round checkpoint+count serial barrier that
+#   held 8->32-core efficiency at 0.56 (round-2 ledger);
+# * it LOSES above it, on BOTH topologies: at local-cluster[8,4] a
+#   back-to-back A/B read local 95.9-121.8 s vs distributed 72.2-118.1 s
+#   (edge collect over executor RPC + shipping the ~3.2M-long loser array
+#   to every Python worker); at local[8]/local[32] a heap-scaled variant
+#   improved the pinned 8-core leg (~173 -> ~120 s, the distributed
+#   rounds are join-heavy at few cores) but DEGRADED the 32-core leg
+#   (61 -> 78-98 s) — the single-threaded driver solve is a
+#   core-count-independent Amdahl term that costs the fast leg exactly
+#   what the well-parallelized rounds no longer do.
 CC_LOCAL_EDGE_THRESHOLD = 4_000_000
 
 # Hard cap for the depth-2 contraction terminator's forced driver-local
 # solve (see connected_components_min): 200M edges = 3.2 GB of raw longs,
 # feasible on a large driver; beyond it the until-convergence propagation
 # loop is the only remaining (correct, slow) option.
-CC_FORCE_LOCAL_CAP = int(os.environ.get("DATAFLOW_CC_FORCE_LOCAL_CAP", str(200_000_000)))
-
-
-def cc_local_edge_threshold(spark) -> int:
-    """Local/distributed CC crossover: the 4M floor, overridable via
-    ``DATAFLOW_CC_LOCAL_EDGES``.
-
-    The 4M default is MEASURED, both directions, at r1600 (8,339,450
-    edges — 2.1x the cutoff):
-
-    * the driver-local solve WINS below it: the r400 edge set (2.08M) solves
-      in ~1 s and removed the per-round checkpoint+count serial barrier that
-      held 8->32-core efficiency at 0.56 (round-2 ledger);
-    * it LOSES above it, on BOTH topologies: at local-cluster[8,4] a
-      back-to-back A/B read local 95.9-121.8 s vs distributed 72.2-118.1 s
-      (edge collect over executor RPC + shipping the ~3.2M-long loser array
-      to every Python worker); at local[8]/local[32] a heap-scaled variant
-      improved the pinned 8-core leg (~173 -> ~120 s, the distributed
-      rounds are join-heavy at few cores) but DEGRADED the 32-core leg
-      (61 -> 78-98 s) — the single-threaded driver solve is a
-      core-count-independent Amdahl term that costs the fast leg exactly
-      what the well-parallelized rounds no longer do.
-
-    Raising the cutoff via the env knob is for single-leg batch jobs where
-    wall time at few cores matters more than scaling headroom."""
-    override = os.environ.get("DATAFLOW_CC_LOCAL_EDGES")
-    if override:
-        return int(override)
-    return CC_LOCAL_EDGE_THRESHOLD
+CC_FORCE_LOCAL_CAP = 200_000_000
 
 # per-worker byte budget for the minhash signature intermediate (see
-# minhash_band_udf); overridable for cache-topology tuning
-SIG_CHUNK_BYTES = int(os.environ.get("DATAFLOW_SIG_CHUNK_BYTES", str(512 * 1024)))
+# minhash_band_udf)
+SIG_CHUNK_BYTES = 512 * 1024
 
 
 def _cc_distributed_contract(
@@ -409,7 +391,7 @@ def connected_components_min(
     if not _materialized:
         edges = edges.localCheckpoint(eager=True)
     if local_threshold is None:
-        local_threshold = cc_local_edge_threshold(edges.sparkSession)
+        local_threshold = CC_LOCAL_EDGE_THRESHOLD
     n_edges = edges.count()
     if stats is not None:
         # ladder observability (round 5): edge count and strategy at each
@@ -561,7 +543,7 @@ def keep_cluster_min(
     reuse it after the call."""
     if not edges_materialized:
         edges = edges.localCheckpoint(eager=True)
-    if edges.count() <= cc_local_edge_threshold(df.sparkSession):
+    if edges.count() <= CC_LOCAL_EDGE_THRESHOLD:
         # local CC: solve on the driver and ship ONLY the loser ids back as
         # a sorted array inside a vectorized-searchsorted pandas UDF.  This
         # replaces a broadcast anti-join whose BroadcastExchange converts
@@ -658,7 +640,7 @@ def _band_hashes_from_flat(
     matrix stays cache-resident: a full-width matrix makes the kernel pure
     DRAM traffic, which saturates at ~8 cores and flatlines scaling —
     measured 50s at local[8] == 52s at local[32] before chunking.  The
-    budget is per-WORKER (SIG_CHUNK_BYTES, default 512 KiB): with 32
+    budget is per-WORKER (SIG_CHUNK_BYTES, 512 KiB): with 32
     concurrent workers the combined working set must fit the shared L3."""
     n_ne = len(lens_ne)
     offsets = np.zeros(n_ne, dtype=np.int64)

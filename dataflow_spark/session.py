@@ -25,11 +25,11 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 
-    # SPARK_GRAFT_MASTER overrides the master verbatim — used by
-    # tools/bench_executors.py to run the engine on local-cluster[N,c,mem]
-    # (real separate executor JVMs, each with its own shuffle/state/Python
-    # workers): the honest single-box stand-in for the north rule's
-    # "N and 4N executors" criterion.  Executors are separate processes, so
+    # SPARK_GRAFT_MASTER overrides the master verbatim — a tools/ab.py leg
+    # such as `.:SPARK_GRAFT_MASTER=local-cluster[2,4,6144]` runs the engine
+    # on local-cluster[N,c,mem] (real separate executor JVMs, each with its
+    # own shuffle/state/Python workers): the honest single-box stand-in for
+    # the north rule's "N and 4N executors" criterion.  Executors are separate processes, so
     # they need the repo on their workers' PYTHONPATH (on a real cluster:
     # spark-submit --py-files dist/dataflow_spark.zip, see tests/test_submit).
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")

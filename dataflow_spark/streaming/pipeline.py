@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from dataflow_spark.corpus import CORPUS_SCHEMA
 
 # Sink parquet encoding for the token-array payload, measured on the 110M-token
-# amplified corpus (tools/bench_sink_encode.py, median of 5):
+# amplified corpus (NOTES.md "Sink encoding", median of 5):
 #   snappy+dict (parquet default)  10.6 s   49.4 MB
 #   zstd+dict                      12.3 s   12.4 MB
 #   zstd, dictionary OFF            9.3 s   11.8 MB   <- default here

@@ -13,8 +13,9 @@ Launch (multi-executor cluster, north rule):
       --corpus /data/tokenized_corpus --out /data/clean --checkpoint /ckpt/clean \
       --watermark "10 minutes"
 
-Run the same job at N and 4N executors to evidence the scaling rule; in the
-sandbox, tools/bench_scaling.py does this with local[8]/local[32].
+Run the same job at N and 4N executors to evidence the scaling rule; on one
+box, `python3 tools/ab.py .:SPARK_GRAFT_CPUS=8 .:SPARK_GRAFT_CPUS=32 --
+python3 bench.py` does this with local[8]/local[32].
 
 Sandbox smoke run (local mode):
 

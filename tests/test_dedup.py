@@ -376,18 +376,6 @@ def test_tokens_band_udf_parity_with_jvm_shingles(spark):
     assert got_new[998] is None and any(v is not None for v in got_new.values())
 
 
-def test_cc_local_threshold(spark, monkeypatch):
-    from dataflow_spark.operators.dedup import (
-        CC_LOCAL_EDGE_THRESHOLD,
-        cc_local_edge_threshold,
-    )
-
-    # measured default: the 4M floor on every topology (see docstring)
-    assert cc_local_edge_threshold(spark) == CC_LOCAL_EDGE_THRESHOLD
-    monkeypatch.setenv("DATAFLOW_CC_LOCAL_EDGES", "123456")
-    assert cc_local_edge_threshold(spark) == 123456
-
-
 def test_cc_iterative_late_merge_convergence(spark):
     """Round-4 correctness find: two long chains that each converge locally,
     bridged by ONE edge far from both minima.  The smaller label then walks

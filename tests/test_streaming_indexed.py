@@ -22,7 +22,10 @@ from dataflow_spark.streaming.indexed import (
     expire_seen_index,
     run_exact_dedup_stream_indexed,
 )
-from dataflow_spark.streaming.pipeline import run_near_dedup_stream_exact
+from dataflow_spark.streaming.pipeline import (
+    run_dedup_filter_stream,
+    run_near_dedup_stream_exact,
+)
 from tests.test_streaming import make_rows, write_file
 
 
@@ -363,29 +366,54 @@ def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch):
     [
         (run_exact_dedup_stream_indexed, [5, 6, 6]),
         (run_near_dedup_stream_exact, [16, 20, 20]),
+        (run_dedup_filter_stream, [1, 1, 1, 1]),
     ],
-    ids=["exact", "near"],
+    ids=["exact", "near", "builtin"],
 )
 def test_index_streams_spark_job_budget(spark, tmp_path, monkeypatch, run, budget):
-    """Spark jobs per micro-batch of both index streams, pinned exactly: a
-    job added to the hot path (a second fetch, a re-materialized batch, a
-    Spark job back inside the seal) fails here instead of in a bench row.
-    Each batch's jobs are tagged with a job group set where the batch
-    enters the index, and counted through the status tracker.  At the
-    previous, bucketed-parquet index the exact stream ran [10, 11, 11].  Batch 0 has
-    no history; batches 1 and 2 each hold one cross-batch dup, so they add
-    the broadcast of the duplicate keys."""
-    from dataflow_spark.streaming import indexed
+    """Spark jobs per micro-batch of both index streams and the builtin
+    tier, pinned exactly: a job added to the hot path (a second fetch, a
+    re-materialized batch, a Spark job back inside the seal) fails here
+    instead of in a bench row.  Each batch's jobs are tagged with a job
+    group set where the batch enters the index (the builtin tier has no
+    index: at the top of its sink), and counted through the status
+    tracker.  At the previous, bucketed-parquet index the exact stream ran
+    [10, 11, 11].  Batch 0 has no history; batches 1 and 2 each hold one
+    cross-batch dup, so they add the broadcast of the duplicate keys.  The
+    builtin tier runs one job per batch, the sink's write with the state
+    store inside its stages, also in the no-data batch 3 that follows the
+    last file to advance the watermark."""
+    from dataflow_spark.streaming import indexed, pipeline
 
     sc = spark.sparkContext
     group = f"jobs-{os.path.basename(tmp_path)}-b"
-    real_probe = indexed.SegmentIndex.probe
+    batches = []
 
-    def probe(self, keys, batch_id):
-        sc.setJobGroup(f"{group}{batch_id}", "index stream job budget")
-        return real_probe(self, keys, batch_id)
+    def tag(batch_id):
+        sc.setJobGroup(f"{group}{batch_id}", "stream job budget")
+        batches.append(batch_id)
 
-    monkeypatch.setattr(indexed.SegmentIndex, "probe", probe)
+    if run is run_dedup_filter_stream:
+        real_sink = pipeline.idempotent_parquet_sink
+
+        def sink(*args, **kwargs):
+            write = real_sink(*args, **kwargs)
+
+            def tagged_write(df, batch_id):
+                tag(batch_id)
+                write(df, batch_id)
+
+            return tagged_write
+
+        monkeypatch.setattr(pipeline, "idempotent_parquet_sink", sink)
+    else:
+        real_probe = indexed.SegmentIndex.probe
+
+        def probe(self, keys, batch_id):
+            tag(batch_id)
+            return real_probe(self, keys, batch_id)
+
+        monkeypatch.setattr(indexed.SegmentIndex, "probe", probe)
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
@@ -399,7 +427,8 @@ def test_index_streams_spark_job_budget(spark, tmp_path, monkeypatch, run, budge
     q.processAllAvailable()
     q.stop()
     tracker = sc.statusTracker()
-    got = [len(tracker.getJobIdsForGroup(f"{group}{i}")) for i in range(3)]
+    assert batches == list(range(len(budget)))
+    got = [len(tracker.getJobIdsForGroup(f"{group}{i}")) for i in batches]
     assert got == budget
     # every job the query ran is in a batch's group: none escaped the count
     # on another thread (a job group does not follow a job into one)
