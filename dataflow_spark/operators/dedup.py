@@ -22,8 +22,10 @@ Scale notes (100 TB):
   degenerate bucket of B rows costs B edges, never B²;
 * SimHash/n-gram verification needs true pairwise checks — bucket sizes are
   capped (cap param) to bound the self-join blow-up on degenerate buckets;
-* connected components = iterative min-label propagation (few rounds at 0.9
-  threshold), each round one shuffle join.
+* connected components = one driver-local numpy solve up to
+  CC_LOCAL_EDGE_THRESHOLD edges, otherwise partition-local solves plus edge
+  contraction (Kiveris et al., SoCC 2014) — a fixed number of jobs, no
+  per-round loop.
 """
 
 from __future__ import annotations
@@ -78,39 +80,22 @@ def exact_dedup(
     seq_col: str = "doc_seq",
     algo: str = "md5",
     hash_col: str | None = None,
-    strategy: str = "min_by",
 ) -> DataFrame:
     """First-seen-wins exact dedup (HashDeduplicateFilter,
     hash_deduplicate_filter.py:10-91).  Survivor = min arrival seq per hash.
 
-    strategy='min_by' (default): groupBy(hash).agg(min_by(struct(*cols),
-    seq)) — ONE shuffle whose map-side partial aggregation collapses
-    duplicates before the wire; the struct agg buffer forces SortAggregate,
-    but the sorts are partition-local over bounded (~128 MB) partitions.
-    Measured 2x faster than 'join' at bench scale.
-
-    strategy='join': HashAggregate min(seq) per hash (fixed-width buffer, no
-    sorts) then an equi-join back on (hash, seq).  No sort anywhere, but the
-    full table crosses the wire un-combined plus a second (tiny) shuffle —
-    preferable only when rows are so wide that sorting them dominates.
+    groupBy(hash).agg(min_by(struct(*cols), seq)) — ONE shuffle whose
+    map-side partial aggregation collapses duplicates before the wire; the
+    struct agg buffer forces SortAggregate, but the sorts are
+    partition-local over bounded (~128 MB) partitions.  Measured 2x faster
+    than a min(seq) aggregate joined back on (hash, seq) at bench scale.
     """
     h = F.col(hash_col) if hash_col else content_hash(keys, algo)
-    cols = df.columns
-    tagged = df.withColumn("_content_hash", h)
-    if strategy == "min_by":
-        return (
-            tagged.groupBy("_content_hash")
-            .agg(F.min_by(F.struct(*cols), F.col(seq_col)).alias("_row"))
-            .select("_row.*")
-        )
-    firsts = tagged.groupBy("_content_hash").agg(F.min(seq_col).alias("_keep_seq"))
     return (
-        tagged.join(
-            firsts,
-            (tagged["_content_hash"] == firsts["_content_hash"])
-            & (tagged[seq_col] == firsts["_keep_seq"]),
-        )
-        .select(*[tagged[c] for c in cols])
+        df.withColumn("_content_hash", h)
+        .groupBy("_content_hash")
+        .agg(F.min_by(F.struct(*df.columns), F.col(seq_col)).alias("_row"))
+        .select("_row.*")
     )
 
 
@@ -144,7 +129,7 @@ def ccnet_dedup_stage(input_key: str = "text", bits: int = 64, seq_col: str = "d
 
 
 # ---------------------------------------------------------------------------
-# connected components (min-label propagation) — shared by all near-dedup ops
+# connected components (min-label) — shared by all near-dedup ops
 # ---------------------------------------------------------------------------
 
 
@@ -189,10 +174,10 @@ def _cc_min_numpy(a: "np.ndarray", b: "np.ndarray") -> tuple:
 # driver and solved in one vectorized numpy pass; above it, it stays
 # distributed.  (After LSH bucketing, star edges are ~dup_count, not
 # pair_count, so the local case is overwhelmingly common.)  Same design as
-# Spark's own broadcast threshold: a driver round-trip beats O(rounds)
-# shuffle jobs whose fixed cost (checkpoint + convergence count per round)
-# is serial and does not parallelize — that fixed cost is what held
-# 8->32-core scaling at 0.56 in round 2.  The 4M value is MEASURED, both
+# Spark's own broadcast threshold: a driver round-trip beat the old
+# propagation loop's O(rounds) shuffle jobs, whose fixed cost (checkpoint +
+# convergence count per round) is serial and does not parallelize — that
+# fixed cost is what held 8->32-core scaling at 0.56 in round 2.  The 4M value is MEASURED, both
 # directions, at r1600 (8,339,450 edges — 2.1x the cutoff):
 #
 # * the driver-local solve WINS below it: the r400 edge set (2.08M) solves
@@ -209,22 +194,38 @@ def _cc_min_numpy(a: "np.ndarray", b: "np.ndarray") -> tuple:
 #   what the well-parallelized rounds no longer do.
 CC_LOCAL_EDGE_THRESHOLD = 4_000_000
 
-# Hard cap for the depth-2 contraction terminator's forced driver-local
-# solve (see connected_components_min): 200M edges = 3.2 GB of raw longs,
-# feasible on a large driver; beyond it the until-convergence propagation
-# loop is the only remaining (correct, slow) option.
-CC_FORCE_LOCAL_CAP = 200_000_000
-
 # per-worker byte budget for the minhash signature intermediate (see
 # minhash_band_udf)
 SIG_CHUNK_BYTES = 512 * 1024
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free a ``localCheckpoint``-ed frame's blocks now: otherwise they stay
+    registered in ``getPersistentRDDs`` until the JVM garbage-collects the
+    frame (one leaked edge set per streaming micro-batch that runs
+    minhash_dedup).  A no-op for frames that are not checkpoints."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:
+        return
+    plan = jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+def _local_labels(edges: DataFrame):
+    """Driver solve: collect ``a``/``b`` through Arrow, release the input
+    checkpoint (the collected arrays are all the solve reads), run the numpy
+    kernel.  Returns (nodes, labels), or None when there are no edges."""
+    pdf = edges.select(F.col("a").cast("long"), F.col("b").cast("long")).toPandas()
+    _release_checkpoint(edges)
+    if len(pdf) == 0:
+        return None
+    return _cc_min_numpy(pdf["a"].to_numpy(np.int64), pdf["b"].to_numpy(np.int64))
+
+
 def _cc_distributed_contract(
     edges: DataFrame,
     local_threshold: int,
-    max_iter: int | None = None,
-    n_parts: int | None = None,
     _depth: int = 0,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -235,8 +236,9 @@ def _cc_distributed_contract(
     shuffle + parallel local solves + a TINY residual beats even 2-3
     star rounds):
 
-    1. hash-shuffle edges on ``a`` (bucket stars have constant ``a``, so a
-       whole LSH star lands in one partition);
+    1. range-shuffle edges on ``a`` into spark.sql.shuffle.partitions
+       partitions (bucket stars have constant ``a``, so a whole LSH star
+       lands in one partition, and consecutive chain links colocate);
     2. per partition, run the vectorized numpy min-label kernel on that
        partition's edge set -> (node, local_root) rows — the root is the
        min node id of the node's PARTITION-LOCAL component;
@@ -253,18 +255,17 @@ def _cc_distributed_contract(
     linked by a chain of shared-node residual stars; the global min label
     survives because the component-wide min node m is a local root wherever
     it appears (its local component contains m, and roots are local minima,
-    so root <= m and root >= min = m).  Parity with both the numpy kernel
-    and the iterative propagation loop is pinned in tests/test_dedup.py.
+    so root <= m and root >= min = m).  Parity with the numpy kernel and a
+    union-find oracle is pinned in tests/test_dedup.py.
 
     Scale shape: a FIXED pipeline of one repartition shuffle, one narrow
     mapInPandas, one groupBy shuffle, one join + final min-agg — no
     O(rounds) driver barrier, every stage fully parallel.  Partition-local
-    memory is the partition's edge list (~16 B/edge + kernel overhead);
-    size ``n_parts`` (default: spark.sql.shuffle.partitions) so partitions
-    fit executor memory — 1B edges over 2048 partitions is ~8 MB/task."""
-    spark = edges.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    memory is the partition's edge list (~16 B/edge + kernel overhead), so
+    size spark.sql.shuffle.partitions to fit executor memory — 1B edges
+    over 2048 partitions is ~8 MB/task.  ``edges`` is consumed: its
+    checkpoint is released once the local roots are materialized."""
+    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
 
     def solve(it):
         cas, cbs = [], []
@@ -286,6 +287,7 @@ def _cc_distributed_contract(
         .mapInPandas(solve, "node long, local_root long")
         .localCheckpoint(eager=True)  # reused: residual build + final map
     )
+    _release_checkpoint(edges)
     residual = (
         m.groupBy("node")
         .agg(
@@ -297,8 +299,7 @@ def _cc_distributed_contract(
         .distinct()
     )
     roots = connected_components_min(
-        residual, max_iter=max_iter, local_threshold=local_threshold,
-        _depth=_depth + 1, stats=stats,
+        residual, local_threshold=local_threshold, _depth=_depth + 1, stats=stats,
     ).withColumnRenamed("node", "local_root")
     # every multi-root node's roots share one residual component, so the
     # min-agg only dedupes the per-partition copies (values are equal);
@@ -314,185 +315,59 @@ def _cc_distributed_contract(
     )
 
 
-def _checkpoint_reset_stats(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` that also DROPS inherited plan statistics.
-
-    ``Dataset.localCheckpoint`` truncates lineage but keeps the origin
-    plan's Statistics on the resulting LogicalRDD.  In an iterative
-    self-join loop the ``sizeInBytes`` estimate therefore SQUARES every
-    round (join stats = product of child sizes), and after ~15 rounds
-    Catalyst's SizeInBytesOnlyStatsPlanVisitor is multiplying 2^15-bit
-    BigIntegers — the stats walk itself dominates and wall time DOUBLES
-    per round (diagnosed round 4 via jstack: 112 s of
-    BigInteger.multiplyToomCook3 under visitJoin; plan size, row count,
-    job count all constant).  Rebuilding the DataFrame from the
-    checkpointed InternalRow RDD yields a LogicalRDD with no origin
-    stats, so estimates restart from the default size.  Falls back to the
-    checkpoint WITH its stats if the (stable-in-practice, private[sql]) JVM
-    hook is unavailable, and to the plain ``localCheckpoint`` when there is
-    no JVM-backed DataFrame at all (e.g. Spark Connect) — exactly one
-    checkpoint either way."""
-    try:
-        jdf = df._jdf.localCheckpoint(True)
-    except Exception:
-        return df.localCheckpoint(eager=True)
-    try:
-        jspark = df.sparkSession._jsparkSession
-        new_jdf = jspark.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-    except Exception:
-        # hook changed: keep the checkpoint already taken (lineage is
-        # truncated, only the stats reset is lost) — checkpointing again
-        # would leak the first one's blocks
-        new_jdf = jdf
-    return DataFrame(new_jdf, df.sparkSession)
-
-
 def connected_components_min(
-    edges: DataFrame, max_iter: int | None = None,
+    edges: DataFrame,
     local_threshold: int | None = None,
     _materialized: bool = False,
-    strategy: str = "auto",
     _depth: int = 0,
     stats: dict | None = None,
 ) -> DataFrame:
     """Edges (a:long, b:long) -> (node:long, component:long) where component
-    is the min node id reachable.  Strategies:
+    is the min node id reachable.  One ladder:
 
-    - **local** (edge count <= local_threshold): collect the two long columns
-      via Arrow and run the numpy min-label kernel — one job, no per-round
-      serial barrier.  At 10% dup rate the threshold covers corpora of ~40M
-      docs per dedup invocation.
-    - **contract** (above threshold, the default since round 4): one
-      hash-shuffle of the edges, a partition-local numpy CC inside
-      mapInPandas, then a CONTRACTED residual graph (local-root links of
-      nodes seen in several partitions) solved recursively — it collapses
-      under the local threshold in one step on every real near-dup graph,
-      so the whole solve is a FIXED number of data-heavy jobs with no
-      per-round checkpoint+convergence-count serial barrier (that barrier
-      was the measured core-count-independent gap at executor topology,
-      VERDICT r3 #1).  See _cc_distributed_contract.
-    - **iterative**: the pre-round-4 min-label propagation loop — kept as
-      the parity baseline and as the depth-2 terminator for adversarial
-      contraction inputs.  Since round 4 it runs to TRUE convergence:
-      the old ``max_iter=20`` cutoff silently under-converged on graphs
-      where two locally-converged regions merge late (the new smaller
-      label then walks back one hop per round — the pointer jump is a
-      no-op across a run of EQUAL labels, so convergence is O(diameter)
-      after the merge, not O(log); found by the round-4 contraction
-      parity sweep, pinned in test_cc_iterative_late_merge_convergence).
-      ``max_iter`` is now an optional safety valve that RAISES on overrun
-      instead of silently returning wrong labels.
+    - **local** (edge count <= local_threshold, or recursion depth >= 2):
+      collect the two long columns via Arrow and run the numpy min-label
+      kernel — one job, no per-round serial barrier.  At 10% dup rate the
+      threshold covers corpora of ~40M docs per dedup invocation.  A
+      residual still above the threshold after two contractions (every
+      partition stays cross-connected, as in an expander) goes to the
+      driver too: a third contraction would barely shrink it.
+    - **contract** (otherwise): one shuffle of the edges, a partition-local
+      numpy CC inside mapInPandas, then a CONTRACTED residual graph
+      (local-root links of nodes seen in several partitions) solved
+      recursively — it collapses under the local threshold in one step on
+      every real near-dup graph, so the whole solve is a FIXED number of
+      data-heavy jobs (VERDICT r3 #1).  See _cc_distributed_contract.
+
+    ``_materialized=True`` skips the eager checkpoint when ``edges`` already
+    is one and hands it over: like the checkpoint taken here, it is
+    released once read, so do not reuse it after the call.  The returned
+    frame of the contract path reads the materialized local roots, which
+    stay registered until the JVM collects them.  ``stats`` (a dict)
+    collects one ``{"depth", "edges", "strategy"}`` row per recursion depth
+    under ``"depths"`` — depth>0 rows are the residual-graph sizes, the
+    quantity the contraction design's "tiny residual" claim rests on.
     """
-    # materialize the (usually small) edge set once — every propagation round
-    # joins against it twice, and without this the entire upstream chain
-    # (MinHash UDF, band explode, bucket join) re-executes per round
     if not _materialized:
         edges = edges.localCheckpoint(eager=True)
     if local_threshold is None:
         local_threshold = CC_LOCAL_EDGE_THRESHOLD
     n_edges = edges.count()
+    local = n_edges <= local_threshold or _depth >= 2
     if stats is not None:
-        # ladder observability (round 5): edge count and strategy at each
-        # recursion depth — depth>0 rows are the residual-graph sizes, the
-        # quantity the contraction design's "tiny residual" claim rests on
-        stats.setdefault("depths", []).append(
-            {"depth": _depth, "edges": int(n_edges)}
-        )
-    # Depth-2 terminator: a residual still above local_threshold after two
-    # contractions means an extremely chain-shaped graph (hash partitioning
-    # barely merges consecutive links) — the vectorized driver solve is the
-    # only fast option there, and 200M edges (3.2 GB of longs) is within a
-    # large driver.  Only the propagation loop (correct but O(diameter)
-    # rounds) remains beyond the cap.
-    force_local = (
-        strategy == "auto" and _depth >= 2 and n_edges <= CC_FORCE_LOCAL_CAP
-    )
-    if n_edges <= local_threshold or force_local:
-        if stats is not None:
-            stats["depths"][-1]["strategy"] = (
-                "local_forced" if (force_local and n_edges > local_threshold)
-                else "local"
-            )
-        pdf = edges.select(
-            F.col("a").cast("long"), F.col("b").cast("long")
-        ).toPandas()
-        spark = edges.sparkSession
-        if len(pdf) == 0:
-            return spark.createDataFrame([], "node long, component long")
-        nodes, lbl = _cc_min_numpy(
-            pdf["a"].to_numpy(np.int64), pdf["b"].to_numpy(np.int64)
-        )
-        out = pd.DataFrame({"node": nodes, "component": lbl})
-        return spark.createDataFrame(out)
-    if strategy == "auto":
-        strategy = "contract" if _depth < 2 else "iterative"
-    if stats is not None:
-        stats["depths"][-1]["strategy"] = strategy
-    if strategy == "contract":
-        return _cc_distributed_contract(
-            edges, local_threshold=local_threshold, max_iter=max_iter,
-            _depth=_depth, stats=stats,
-        )
-    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = (
-        sym.groupBy("a").agg(F.min("b").alias("lbl"))
-        .select(F.col("a").alias("node"), F.least("a", "lbl").alias("component"))
-    )
-    rounds = 0
-    while True:
-        rounds += 1
-        if max_iter is not None and rounds > max_iter:
-            raise RuntimeError(
-                f"connected_components_min: no convergence within max_iter="
-                f"{max_iter} rounds — the graph has a long post-merge "
-                "propagation path; raise max_iter (or leave it None to run "
-                "to convergence), or use strategy='contract'"
-            )
-        # neighbor's current label, pulled across edges
-        prop = (
-            sym.join(labels, sym["b"] == labels["node"], "inner")
-            .groupBy(sym["a"].alias("node"))
-            .agg(F.min("component").alias("nbr_lbl"))
-        )
-        # fold the convergence flag into the same join (no extra per-round
-        # join): _chg marks rows whose label shrank this round
-        new_labels = (
-            labels.join(prop, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("component"), F.coalesce("nbr_lbl", F.col("component"))).alias("new_component"),
-                (F.coalesce("nbr_lbl", F.col("component")) < F.col("component")).alias("_chg"),
-            )
-            .withColumnRenamed("new_component", "component")
-        )
-        # pointer-jump (component <- min(component, component[component])):
-        # label values are node ids, so a self-join compresses paths —
-        # doubling per round while labels still form deep chains.  NOTE the
-        # jump is a no-op across a run of EQUAL labels, so after a late
-        # merge of two converged regions propagation is one hop per round;
-        # that is why the loop runs to convergence instead of a fixed
-        # round cap (round-4 fix; test_cc_iterative_late_merge_convergence).
-        parent = new_labels.select(
-            F.col("node").alias("_pn"), F.col("component").alias("_pc")
-        )
-        new_labels = (
-            new_labels.join(parent, new_labels["component"] == parent["_pn"], "left")
-            .select(
-                "node",
-                F.least(F.col("component"), F.coalesce("_pc", F.col("component"))).alias("component"),
-                (F.col("_chg") | (F.coalesce("_pc", F.col("component")) < F.col("component"))).alias("_chg"),
-            )
-        )
-        # stats-resetting checkpoint — the plain localCheckpoint compounds
-        # join-size estimates across rounds (see _checkpoint_reset_stats)
-        new_labels = _checkpoint_reset_stats(new_labels)
-        changed = new_labels.where(F.col("_chg")).limit(1).count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
-            break
-    return labels
+        stats.setdefault("depths", []).append({
+            "depth": _depth,
+            "edges": int(n_edges),
+            "strategy": "local" if local else "contract",
+        })
+    if not local:
+        return _cc_distributed_contract(edges, local_threshold, _depth, stats)
+    spark = edges.sparkSession
+    solved = _local_labels(edges)
+    if solved is None:
+        return spark.createDataFrame([], "node long, component long")
+    nodes, lbl = solved
+    return spark.createDataFrame(pd.DataFrame({"node": nodes, "component": lbl}))
 
 
 def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -515,19 +390,6 @@ def _not_in_sorted_udf(arr: "np.ndarray"):
     return not_in_sorted
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a ``localCheckpoint``-ed frame's blocks now: otherwise they stay
-    registered in ``getPersistentRDDs`` until the JVM garbage-collects the
-    frame (one leaked edge set per streaming micro-batch that runs
-    minhash_dedup).  A no-op for frames that are not checkpoints."""
-    jdf = getattr(df, "_jdf", None)
-    if jdf is None:
-        return
-    plan = jdf.queryExecution().logical()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
-
-
 def keep_cluster_min(
     df: DataFrame,
     edges: DataFrame,
@@ -539,8 +401,7 @@ def keep_cluster_min(
     ``edges_materialized=True`` skips the eager checkpoint when the caller
     already returned a materialized edge set (minhash_candidate_edges) and
     hands that set over: like the checkpoint taken here, it is consumed —
-    on the local path its blocks are released once collected, so do not
-    reuse it after the call."""
+    its blocks are released once read, so do not reuse it after the call."""
     if not edges_materialized:
         edges = edges.localCheckpoint(eager=True)
     if edges.count() <= CC_LOCAL_EDGE_THRESHOLD:
@@ -550,20 +411,16 @@ def keep_cluster_min(
         # the 2M-row loser relation to a hash table on the DRIVER (serial,
         # measured ~6s at r400) with a fully parallel binary-search probe
         # (~0.9s warm): the array ships once per worker in the task
-        # closure (TorrentBroadcast); losers <= duplicate-node count, and
-        # the adaptive threshold bounds the worst case at 32M longs
-        # (256 MB) on a large driver, 4M (32 MB) at the floor.
+        # closure (TorrentBroadcast); losers <= duplicate-node count <=
+        # CC_LOCAL_EDGE_THRESHOLD longs (32 MB).
         # This serial driver time is the Amdahl term of the whole
         # minhash job (BENCH_scaling.json).  Requires non-null seq ids —
         # the engine assigns them (monotonically_increasing_id / source
         # doc_seq).
-        pdf = edges.select(F.col("a").cast("long"), F.col("b").cast("long")).toPandas()
-        _release_checkpoint(edges)
-        if len(pdf) == 0:
+        solved = _local_labels(edges)
+        if solved is None:
             return df
-        nodes, lbl = _cc_min_numpy(
-            pdf["a"].to_numpy(np.int64), pdf["b"].to_numpy(np.int64)
-        )
+        nodes, lbl = solved
         losers_np = np.sort(nodes[nodes != lbl])
         return df.where(_not_in_sorted_udf(losers_np)(F.col(seq_col)))
     comps = connected_components_min(edges, _materialized=True)
@@ -760,6 +617,36 @@ def minhash_bands_from_tokens_udf(
     return udf
 
 
+def _bands_expr(
+    key: str,
+    num_perm: int,
+    bands: int,
+    shingle_n: int,
+    use_tokens: bool,
+    token_ngram: int,
+    seed: int,
+):
+    """The array<long> band-hash column of MinHash-LSH: the tokens fast path
+    (minhash_bands_from_tokens_udf: grams hashed inside the Arrow batch), or
+    char ``shingle_n``-grams — a sliding substring window as a JVM-side HOF
+    (dynamic start position needs the SQL expr form of substring), xxhash64
+    per shingle, then the numpy band UDF."""
+    if use_tokens:
+        return minhash_bands_from_tokens_udf(num_perm, bands, token_ngram, seed)(
+            F.col("tokens")
+        )
+    s = F.col(key)
+    shingles = F.when(
+        F.length(s) >= shingle_n,
+        F.expr(
+            f"transform(sequence(1, length({key}) - {shingle_n} + 1), "
+            f"i -> substring({key}, i, {shingle_n}))"
+        ),
+    ).otherwise(F.array(s))
+    shingle_hashes = F.transform(shingles, lambda g: F.xxhash64(g))
+    return minhash_band_udf(num_perm, bands, seed)(shingle_hashes)
+
+
 def minhash_dedup(
     df: DataFrame,
     key: str = "text",
@@ -771,7 +658,6 @@ def minhash_dedup(
     token_ngram: int = 3,
     seed: int = 1,
     bucket_cap: int = 100_000,
-    drop_oversized_early: bool = False,
 ) -> DataFrame:
     """MinHashDeduplicateFilter (minhash_deduplicate_filter.py:9-89): char
     5-gram MinHash(num_perm=128) + LSH at threshold≈0.9; survivor = min-seq
@@ -788,46 +674,11 @@ def minhash_dedup(
     roots agg -> join back for star edges -> CC -> sorted-array survivor
     filter.  No B² bucket blow-up anywhere, no unbounded agg buffers.
     """
-    if use_tokens:
-        bands_expr = minhash_bands_from_tokens_udf(num_perm, bands, token_ngram, seed)(
-            F.col("tokens")
-        )
-        edges = minhash_candidate_edges(
-            df, None, seq_col, num_perm, bands, seed, bucket_cap,
-            bands_expr=bands_expr, drop_oversized_early=drop_oversized_early,
-        )
-        return keep_cluster_min(df, edges, seq_col, edges_materialized=True)
-    else:
-        # char n-grams: sliding substring window, JVM-side HOF (dynamic start
-        # position needs the SQL expr form of substring)
-        s = F.col(key)
-        shingles = F.when(
-            F.length(s) >= shingle_n,
-            F.expr(
-                f"transform(sequence(1, length({key}) - {shingle_n} + 1), "
-                f"i -> substring({key}, i, {shingle_n}))"
-            ),
-        ).otherwise(F.array(s))
-    shingle_hashes = F.transform(shingles, lambda g: F.xxhash64(g))
-    return _minhash_from_hashes(
-        df, shingle_hashes, seq_col, num_perm, bands, seed, bucket_cap,
-        drop_oversized_early,
-    )
-
-
-def _minhash_from_hashes(
-    df: DataFrame,
-    shingle_hashes,
-    seq_col: str,
-    num_perm: int,
-    bands: int,
-    seed: int,
-    bucket_cap: int = 100_000,
-    drop_oversized_early: bool = False,
-) -> DataFrame:
     edges = minhash_candidate_edges(
-        df, shingle_hashes, seq_col, num_perm, bands, seed, bucket_cap,
-        drop_oversized_early=drop_oversized_early,
+        df, None, seq_col, num_perm, bands, seed, bucket_cap,
+        bands_expr=_bands_expr(
+            key, num_perm, bands, shingle_n, use_tokens, token_ngram, seed
+        ),
     )
     return keep_cluster_min(df, edges, seq_col, edges_materialized=True)
 
@@ -875,7 +726,6 @@ def minhash_candidate_edges(
     bucket_cap: int = 100_000,
     bands_expr=None,
     materialize: bool = True,
-    drop_oversized_early: bool = False,
 ) -> DataFrame:
     """The distributed half of MinHash-LSH: signature -> banded buckets ->
     star edges (a, b), returned MATERIALIZED (eager localCheckpoint).
@@ -896,12 +746,11 @@ def minhash_candidate_edges(
     external-sort straggler — round-4 measurement falsified the earlier
     assumption that AQE skew-join splits it (OptimizeSkewedJoin only
     matches SMJ(Sort(Shuffle), Sort(Shuffle)); the roots side aggregates
-    between its shuffle and the join — NOTES.md round-4);
-    ``drop_oversized_early`` removes those rows before the shuffle at the
-    measured cost of one extra explode+agg pass (see inline comment).  Under a broadcast the banded side never shuffles for the
-    join, and distinct's map-side combine then runs with all of a doc's
-    bands colocated, collapsing the up-to-``bands``x duplicate (member,
-    root) pairs before the only large exchange.
+    between its shuffle and the join — NOTES.md round-4), paid only when
+    a degenerate bucket exists.  Under a broadcast the banded side never
+    shuffles for the join, and distinct's map-side combine then runs with
+    all of a doc's bands colocated, collapsing the up-to-``bands``x
+    duplicate (member, root) pairs before the only large exchange.
 
     This replaced a collect_list-based salted two-level aggregation: the
     member-array build (collect_list + sort + slice + flatten + explode) was
@@ -921,8 +770,7 @@ def minhash_candidate_edges(
     from pyspark import StorageLevel
 
     if bands_expr is None:
-        band_udf = minhash_band_udf(num_perm, bands, seed)
-        bands_expr = band_udf(shingle_hashes)
+        bands_expr = minhash_band_udf(num_perm, bands, seed)(shingle_hashes)
     sig = df.select(
         F.col(seq_col).alias("_seq"),
         bands_expr.alias("_bands"),
@@ -934,32 +782,8 @@ def minhash_candidate_edges(
         roots = banded.groupBy("_bkey").agg(
             F.min("_seq").alias("_root"), F.count("*").alias("_n")
         )
-        # Degenerate-bucket reducer pile-up (round-4 measurement, NOTES.md):
-        # rows of a DROPPED over-cap bucket still flow into the join
-        # shuffle (matching nothing, but sorted on one reducer), and the
-        # round-3 assumption that AQE skew-join splits that pile-up is
-        # FALSE — OptimizeSkewedJoin only pattern-matches SMJ(Sort(Shuffle),
-        # Sort(Shuffle)), and this join's roots side has the bucket
-        # aggregate between its shuffle and the join, so the rule never
-        # fires on this shape.  ``drop_oversized_early`` broadcast-anti-
-        # joins the over-cap keys out of the banded side BEFORE the join
-        # shuffle, hard-bounding every reducer's per-key rows at
-        # ``bucket_cap`` by construction.  It is OPT-IN because the
-        # broadcast subtree re-runs the explode + bucket agg (Catalyst does
-        # not ReuseExchange into a broadcast subtree; the signature UDF
-        # itself is served from the persisted sig via canonicalized-plan
-        # cache match) — a measured constant cost on EVERY run, vs one
-        # bounded-memory external-sort straggler task only when a
-        # degenerate bucket actually exists (rare: exact dedup upstream
-        # collapses identical docs first).  Audit degenerate buckets with
-        # minhash_dropped_buckets and enable the guard for corpora that
-        # show them.
-        paired = banded
-        if drop_oversized_early:
-            dropped_keys = roots.where(F.col("_n") > bucket_cap).select("_bkey")
-            paired = banded.join(F.broadcast(dropped_keys), "_bkey", "left_anti")
         edges = (
-            paired.join(
+            banded.join(
                 roots.where(F.col("_n") <= bucket_cap),
                 "_bkey",
             )
@@ -994,25 +818,15 @@ def minhash_dropped_buckets(
     Runs the same signature chain (``use_tokens`` mirrors minhash_dedup's
     tokens fast path); intended for pipeline health checks, not the hot
     path."""
-    if use_tokens:
-        bands_expr = minhash_bands_from_tokens_udf(
-            num_perm, bands, token_ngram, seed
-        )(F.col("tokens"))
-    else:
-        s = F.col(key)
-        shingles = F.when(
-            F.length(s) >= shingle_n,
-            F.expr(
-                f"transform(sequence(1, length({key}) - {shingle_n} + 1), "
-                f"i -> substring({key}, i, {shingle_n}))"
-            ),
-        ).otherwise(F.array(s))
-        shingle_hashes = F.transform(shingles, lambda g: F.xxhash64(g))
-        bands_expr = minhash_band_udf(num_perm, bands, seed)(shingle_hashes)
-    sig = df.select(F.col(seq_col).alias("_seq"), bands_expr.alias("_bands"))
+    sig = df.select(
+        F.col(seq_col).alias("_seq"),
+        _bands_expr(
+            key, num_perm, bands, shingle_n, use_tokens, token_ngram, seed
+        ).alias("_bands"),
+    )
     return (
         # outer + null-drop: same double-UDF-eval avoidance as
-        # _minhash_from_hashes
+        # packed_band_keys
         sig.select(F.posexplode_outer("_bands").alias("band_id", "band_hash"))
         .where(F.col("band_id").isNotNull())
         .groupBy("band_id", "band_hash")

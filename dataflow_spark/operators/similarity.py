@@ -209,7 +209,7 @@ def embedding_near_dup(
     ).select(
         # explode_outer + null-drop: plain explode makes
         # InferFiltersFromGenerate add size(udf(..))>0 below the generate and
-        # the probe UDF gets planned twice (see dedup.py:_minhash_from_hashes)
+        # the probe UDF gets planned twice (see dedup.py:packed_band_keys)
         "_seq", "_v", F.explode_outer(probe_udf(F.col("_v"))).alias("_bucket")
     ).where(F.col("_bucket").isNotNull())
     sizes = b.groupBy("_bucket").agg(F.count("*").alias("_n"))

@@ -2,6 +2,7 @@
 SimHash, n-gram segment — vs independent oracles; token-array equality on
 survivors (the north-star invariant)."""
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -174,8 +175,9 @@ def test_ngramhash_dedup(spark):
 
 
 def test_cc_local_vs_distributed_parity(spark):
-    """The numpy local CC kernel and the distributed min-label loop agree on
-    a random graph with chains, stars, and singleton-free components."""
+    """The numpy local CC kernel and the distributed contraction ladder
+    (local_threshold=0: contract -> contract -> driver solve) agree on a
+    random graph with chains, stars, and singleton-free components."""
     import random
 
     rng = random.Random(7)
@@ -262,7 +264,7 @@ def test_cc_contract_two_level_parity(spark):
     got = {
         r["node"]: r["component"]
         for r in dedup.connected_components_min(
-            df, local_threshold=len(edges) - 1, strategy="contract"
+            df, local_threshold=len(edges) - 1
         ).collect()
     }
     assert got == _uf_oracle(edges)
@@ -271,10 +273,9 @@ def test_cc_contract_two_level_parity(spark):
 def test_cc_contract_property_random_graphs(spark):
     """Property sweep: random Erdos-Renyi-ish graphs of varying density,
     forced through FULL multi-level recursion (local_threshold=0: contract
-    -> contract -> iterative-until-convergence) — contraction labels == the
-    union-find oracle.  Graphs kept small: with threshold 0 every residual
-    is solved distributed, and random graphs at these densities have tiny
-    diameters, so the depth-2 iterative terminator stays cheap."""
+    -> contract -> driver solve at depth 2) — contraction labels == the
+    union-find oracle.  Graphs kept small: with threshold 0 both levels
+    above depth 2 run distributed."""
     import random
 
     rng = random.Random(99)
@@ -290,7 +291,7 @@ def test_cc_contract_property_random_graphs(spark):
         got = {
             r["node"]: r["component"]
             for r in dedup.connected_components_min(
-                df, local_threshold=0, strategy="contract"
+                df, local_threshold=0
             ).collect()
         }
         assert got == _uf_oracle(edges), f"trial {trial}"
@@ -376,36 +377,6 @@ def test_tokens_band_udf_parity_with_jvm_shingles(spark):
     assert got_new[998] is None and any(v is not None for v in got_new.values())
 
 
-def test_cc_iterative_late_merge_convergence(spark):
-    """Round-4 correctness find: two long chains that each converge locally,
-    bridged by ONE edge far from both minima.  The smaller label then walks
-    back one hop per round (the pointer jump is a no-op over equal labels),
-    so the old fixed 20-round cap silently under-converged — the loop now
-    runs to true convergence.  26-hop walk > old 20-round cap by
-    construction (kept minimal: each distributed round costs ~1.5 s of
-    driver overhead on a tiny graph)."""
-    edges = [(i, i + 1) for i in range(0, 28)]
-    edges += [(1000 + i, 1000 + i + 1) for i in range(0, 28)]
-    edges += [(27, 1027)]  # bridge at the FAR end of both chains
-    df = spark.createDataFrame(edges, "a long, b long")
-    got = {
-        r["node"]: r["component"]
-        for r in dedup.connected_components_min(
-            df, local_threshold=0, strategy="iterative"
-        ).collect()
-    }
-    assert set(got.values()) == {0}, {
-        n: c for n, c in got.items() if c != 0
-    }
-    # and the explicit safety valve raises instead of silently returning
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="max_iter"):
-        dedup.connected_components_min(
-            df, local_threshold=0, strategy="iterative", max_iter=2
-        )
-
-
 def _numpy_labels(edges_pdf):
     import numpy as np
 
@@ -438,13 +409,10 @@ def test_cc_chain_graph_contracts_via_range_partitioning(spark):
     assert depths[1]["strategy"] == "local"
 
 
-def test_cc_force_local_cap_never_truncates(spark, monkeypatch):
-    """The depth-2 terminator must never silently drop work: with the
-    force-local cap at 0 an expander residual that survives two
-    contractions falls through to the ITERATIVE path (correct, O(rounds))
-    instead of a truncated local solve — labels stay exactly right."""
-    import pandas as pd
-
+def test_cc_depth2_residual_solved_on_driver(spark):
+    """A residual still above local_threshold after two contractions (an
+    expander: hash-scattered links keep every partition cross-connected) is
+    solved on the driver at depth 2 — labels stay exactly right."""
     n = 3000
     edges = spark.range(2 * n).select(
         F.pmod(F.col("id"), F.lit(n)).alias("a"),
@@ -452,7 +420,6 @@ def test_cc_force_local_cap_never_truncates(spark, monkeypatch):
     ).where(F.col("a") != F.col("b")).localCheckpoint(eager=True)
     want = _numpy_labels(edges.toPandas())
 
-    monkeypatch.setattr(dedup, "CC_FORCE_LOCAL_CAP", 0)
     stats = {}
     got = {
         r.node: r.component
@@ -462,39 +429,48 @@ def test_cc_force_local_cap_never_truncates(spark, monkeypatch):
     }
     assert got == want
     deep = [d for d in stats["depths"] if d["depth"] >= 2]
-    assert deep and all(d["strategy"] == "iterative" for d in deep), stats
+    assert deep and all(d["strategy"] == "local" for d in deep), stats
 
 
-def test_checkpoint_reset_stats_hook_failure_checkpoints_once(spark):
-    """When only the stats-reset hook (internalCreateDataFrame) fails, the
-    checkpoint already taken is returned as is: exactly one checkpoint, no
-    second one leaking the first one's blocks."""
-    real = spark.range(3).toDF("a")
-
-    class _JDF:
-        calls = 0
-
-        def localCheckpoint(self, eager):
-            _JDF.calls += 1
-            return real._jdf.localCheckpoint(eager)
-
-    class _JSession:
-        def internalCreateDataFrame(self, *args):
-            raise RuntimeError("hook unavailable")
-
-    class _Session:
-        _jsparkSession = _JSession()
-        _sc = spark.sparkContext
-
-    class _DF:
-        _jdf = _JDF()
-        sparkSession = _Session()
-        df_calls = 0
-
-        def localCheckpoint(self, eager=True):
-            _DF.df_calls += 1
-            return real.localCheckpoint(eager)
-
-    out = dedup._checkpoint_reset_stats(_DF())
-    assert (_JDF.calls, _DF.df_calls) == (1, 0)
-    assert out._jdf.count() == 3
+@pytest.mark.parametrize(
+    "path", ["local", "contract", "keep_cluster_min", "minhash"]
+)
+def test_cc_releases_checkpoints(spark, monkeypatch, path):
+    """CC leaves no checkpoint behind in getPersistentRDDs: the local path
+    adds none; the contract path (one contraction, residual solved on the
+    driver) keeps only the materialized local roots, which the returned
+    lazy plan still reads — the input and residual checkpoints are
+    released once solved.  keep_cluster_min's distributed branch is the
+    contract path behind the same threshold; minhash_dedup (signature
+    cache, edge checkpoint, local CC) adds none."""
+    edges = [(i, i + 1) for i in range(0, 60)]
+    edges += [(1000 + i, 1000 + i + 1) for i in range(0, 60)]
+    edges += [(30, 1030)]
+    edges += [(5000, m) for m in range(5001, 5040)]
+    df = spark.createDataFrame(edges, "a long, b long")
+    threshold = len(edges) if path == "local" else len(edges) - 1
+    jsc = spark.sparkContext._jsc
+    before = set(dict(jsc.getPersistentRDDs()))
+    stats = {}
+    if path == "minhash":
+        docs = spark.createDataFrame(
+            make_token_docs(n=250, dup_frac=0.1, near_frac=0.1), TOKEN_SCHEMA
+        )
+        assert dedup.minhash_dedup(docs, use_tokens=True).count() < 250
+    elif path == "keep_cluster_min":
+        monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", threshold)
+        docs = spark.range(6000).withColumnRenamed("id", "doc_seq")
+        got = {r.doc_seq for r in dedup.keep_cluster_min(docs, df).collect()}
+        assert len(got) == 6000 - (len(_uf_oracle(edges)) - 2)
+    else:
+        got = {
+            r.node: r.component
+            for r in dedup.connected_components_min(
+                df, local_threshold=threshold, stats=stats
+            ).collect()
+        }
+        assert got == _uf_oracle(edges)
+        want_ladder = ["local"] if path == "local" else ["contract", "local"]
+        assert [d["strategy"] for d in stats["depths"]] == want_ladder
+    added = set(dict(jsc.getPersistentRDDs())) - before
+    assert len(added) == (1 if path in ("contract", "keep_cluster_min") else 0), added

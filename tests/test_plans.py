@@ -118,8 +118,6 @@ def test_minhash_signature_udf_planned_once(corpus, path):
     # planned once per consumer; in production the signature is persisted and
     # the UDF runs once (PLANS.md §MinHash).  The InferFiltersFromGenerate
     # trap (NOTES round-2) would plan an EXTRA copy per consumer -> 3-4.
-    # (drop_oversized_early=True would add a third consumer for the
-    # over-cap-keys broadcast — opt-in, not the default plan.)
     assert nodes.count("ArrowEvalPython") == 2, nodes
     assert "CartesianProduct" not in nodes and "BroadcastNestedLoopJoin" not in nodes
 
@@ -168,18 +166,12 @@ def test_minhash_degenerate_bucket_hard_bound(spark):
     bucket piles onto (verified on a planted 500k-row hot cluster: the
     final adaptive plan carries no skew=true, while an isomorphic join
     WITHOUT the mid-stage aggregate does get split — NOTES.md round-4).
-    The fix is by construction, pinned here:
-
-    1. with the OPT-IN drop_oversized_early guard, over-cap bucket keys
-       are broadcast-anti-joined out of the banded side BEFORE the join
-       shuffle — the plan shows a BroadcastHashJoin LeftAnti, and a
-       60k-row degenerate bucket at cap 1000 yields zero edges (the guard
-       is opt-in because its broadcast subtree re-runs the explode+agg
-       chain — a measured constant cost per run, vs one bounded-memory
-       external-sort straggler only when degeneracy actually exists);
-    2. a hot bucket exactly AT the cap boundary (the worst KEPT case) is
-       still correct: the whole cluster collapses to its min doc_seq, and
-       the join's per-key reducer rows are bounded by the cap outright."""
+    A dropped over-cap bucket's rows therefore cost one bounded-memory
+    external-sort straggler on the join's hot reducer, paid only when a
+    degenerate bucket exists.  Pinned here: a hot bucket exactly AT the cap
+    boundary (the worst KEPT case) is still correct — the whole cluster
+    collapses to its min doc_seq, and the join's per-key reducer rows are
+    bounded by the cap outright."""
     from dataflow_spark.operators import dedup
 
     n_hot, n_normal = 60_000, 1_000
@@ -194,20 +186,7 @@ def test_minhash_degenerate_bucket_hard_bound(spark):
         ).alias("tokens"),
     )
     corpus = hot.unionByName(normal).localCheckpoint(eager=True)
-    bands_expr = dedup.minhash_bands_from_tokens_udf(64, 8, 3)(F.col("tokens"))
-
-    # (1) dropped bucket: anti-join is broadcast, no edges from the hot key
-    edges_dropped = dedup.minhash_candidate_edges(
-        corpus, None, "doc_seq", 64, 8, 1,
-        bucket_cap=1_000, bands_expr=bands_expr, materialize=False,
-        drop_oversized_early=True,
-    )
-    plan = plan_text(edges_dropped)
-    assert re.search(r"BroadcastHashJoin.*LeftAnti", plan), plan[:3000]
-    hot_edges = edges_dropped.where(F.col("a") < n_hot).count()
-    assert hot_edges == 0  # degenerate rows never reach the pairing join
-
-    # (2) at-cap bucket (kept): cluster collapses to min seq end to end
+    # at-cap bucket (kept): cluster collapses to min seq end to end
     out = dedup.minhash_dedup(
         corpus.withColumn("doc_id", F.col("doc_seq").cast("string"))
         .withColumn("n_tok", F.size("tokens"))

@@ -51,7 +51,7 @@ def main():
     )
     sections.append(
         (
-            "Exact dedup (min_by strategy)",
+            "Exact dedup (min_by)",
             "Expected: ONE Exchange (hash on content hash) with partial "
             "aggregation before it (map-side combine collapses duplicates "
             "pre-shuffle).",
