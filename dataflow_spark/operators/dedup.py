@@ -423,7 +423,9 @@ def keep_cluster_min(
         nodes, lbl = solved
         losers_np = np.sort(nodes[nodes != lbl])
         return df.where(_not_in_sorted_udf(losers_np)(F.col(seq_col)))
-    comps = connected_components_min(edges, _materialized=True)
+    # the count above already chose the contract rung of
+    # connected_components_min: enter it directly rather than count again
+    comps = _cc_distributed_contract(edges, CC_LOCAL_EDGE_THRESHOLD)
     losers = comps.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(seq_col)
     )

@@ -50,6 +50,15 @@ def get_spark(
         # Parquet scan sizing: 128 MiB splits keep 100 TB ~ 800k tasks, fine.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # File-stream triggers list their files on the driver: above this
+        # many paths (default 32) FileStreamSource's InMemoryFileIndex runs
+        # a parallel-listing Spark job in every getBatch.  On a 4-core box
+        # at 96 files per trigger, getBatch p50 was 0.73-0.92 s with that
+        # job and 40-50 ms listed serially (NOTES.md, "Stream micro-batch
+        # floor").  The value sits above any sane maxFilesPerTrigger.  The
+        # production Iceberg source reads its file list from table metadata
+        # and lists no files.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.ui.enabled", "false")
         # Local mode: driver.memory IS the whole JVM, and per-task working
         # memory (shuffle/Arrow/agg buffers) scales with CONCURRENT tasks —

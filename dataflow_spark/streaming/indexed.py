@@ -23,12 +23,19 @@ Design:
   add.  The driver writes it (tmp file, fsync, atomic rename) before the
   batch's rows; nothing is ever rewritten, so per-batch state WRITE is
   O(new keys), not O(history).
-- **Driver-side probe.**  One Arrow fetch of the batch's distinct keys,
-  then ``np.searchsorted`` over each sealed generation opened as a
-  read-only memory map — the OS page cache, not the heap, bounds RAM.
-  Only the batch's true duplicate keys go back into Spark, as a broadcast
-  driver-built frame, so the state handed to Spark is O(duplicates).  No
-  Spark job reads or writes the index.
+- **Driver-side probe.**  ``SegmentIndex.probe`` takes the batch's
+  sorted distinct keys as a numpy array and runs ``np.searchsorted`` over
+  each sealed generation opened as a read-only memory map — the OS page
+  cache, not the heap, bounds RAM.  No Spark job reads or writes the
+  index; each stream fetches its batch's keys itself.
+- **One-fetch decision (exact stream).**  One Arrow fetch of the batch's
+  ``(_th, doc_seq)`` pairs — O(batch) longs on the driver, the same order
+  as the keys the probe needs anyway.  ``np.lexsort`` by (key, seq) puts
+  each key's min-``doc_seq`` row first in its run; the losers are every
+  other row of a run plus the first rows whose key a sealed generation
+  holds.  Only the losers' pairs go back into Spark, as one broadcast
+  left-anti join, so the state handed to Spark is O(duplicates) and the
+  row write is the batch's only data job.
 - **Format pin.**  ``<name>/_index_meta.json`` records ``{"format": 2}``.
   A v1 index (bucketed parquet segments, geometry meta) or sealed
   generations without the meta file are refused, never misread.
@@ -152,12 +159,14 @@ class SegmentIndex:
         self.kind = kind
         _check_format(self.state_dir)
 
-    def probe(self, keys: DataFrame, batch_id: int) -> "_Generation":
+    def probe(self, keys: np.ndarray, batch_id: int, t0: float) -> "_Generation":
         """Probe the generations sealed before ``batch_id`` for ``keys``
-        (a DataFrame with an ``_th`` column); the result's ``seen`` is the
-        batch's duplicate-key set to anti/semi-join against, or None when
-        no key was seen before."""
-        return _Generation(self, keys, batch_id)
+        (the batch's sorted, unique int64 keys).  The result's ``hit``
+        marks the keys already sealed and ``hits`` holds them.  ``t0`` is
+        the ``time.monotonic()`` reading taken before the caller fetched
+        the keys: the ``probe_s`` window opens there, so it covers the
+        fetch."""
+        return _Generation(self, keys, batch_id, t0)
 
     def _path(self, b: int) -> str:
         return os.path.join(self.state_dir, f"batch_id={b}.npy")
@@ -192,33 +201,25 @@ class SegmentIndex:
 
 class _Generation:
     """One micro-batch's pass over a ``SegmentIndex``: the probe runs at
-    construction (``cur`` = the batch's sorted distinct keys, ``hits`` =
-    those already sealed), ``seal`` appends the generation.  ``phases``
-    holds disjoint wall-clock windows — each ``mark`` closes the window the
-    previous one opened."""
+    construction (``hit`` = which of the batch's sorted distinct keys are
+    already sealed, ``hits`` = those keys), ``seal`` appends the generation.
+    ``phases`` holds disjoint wall-clock windows — each ``mark`` closes
+    the window the previous one opened."""
 
-    def __init__(self, index: SegmentIndex, keys: DataFrame, batch_id: int):
+    def __init__(
+        self, index: SegmentIndex, keys: np.ndarray, batch_id: int, t0: float
+    ):
         self.index, self.batch_id = index, batch_id
         self.phases: dict[str, float] = {}
-        self._t = time.monotonic()
+        self._t = t0
         self.prior = _list_sealed_batches(index.state_dir, upto=batch_id)
-        self.cur = np.unique(
-            keys.select("_th").distinct().toPandas()["_th"].to_numpy(np.int64)
-        )
-        hit = np.zeros(len(self.cur), dtype=bool)
+        self.hit = np.zeros(len(keys), dtype=bool)
         self.scanned = 0
         for b in self.prior:
-            member = _sorted_member(np.load(index._path(b), mmap_mode="r"), self.cur)
+            member = _sorted_member(np.load(index._path(b), mmap_mode="r"), keys)
             self.scanned += bool(member.any())
-            hit |= member
-        self.hits = self.cur[hit]
-        self.seen = None
-        if len(self.hits):
-            self.seen = F.broadcast(
-                keys.sparkSession.createDataFrame(
-                    pd.DataFrame({"_th": self.hits}), "_th BIGINT"
-                )
-            )
+            self.hit |= member
+        self.hits = keys[self.hit]
         self.mark("probe_s")
 
     def mark(self, name: str) -> None:
@@ -262,32 +263,50 @@ def run_exact_dedup_stream_indexed(
 ):
     """First-seen exact dedup over the stream with the generation-segment
     index keyed on the token-array hash.  Emits FULL survivor rows
-    (token-array equality, min ``doc_seq`` per hash) exactly-once under
-    ``out_dir/batch_id=N``.  Per batch: the driver probes the batch's
-    distinct hashes against the index, the batch anti-joins the broadcast
-    duplicates, and the fresh hashes — exactly the survivors' — are sealed
-    without a Spark job."""
-    from dataflow_spark.operators.dedup import exact_dedup
+    (token-array equality, min ``doc_seq`` per hash, as batch
+    ``dedup.exact_dedup``) exactly-once under ``out_dir/batch_id=N``.
 
+    Per batch the driver decides from one Arrow fetch of the persisted
+    batch's ``(_th, doc_seq)`` pairs, O(batch) longs: ``np.lexsort`` by
+    (hash, seq) makes the first row of each hash's run its batch-local
+    survivor, the run heads' hashes are probed against the index, and the
+    losers — the rest of each run plus the heads whose hash is sealed —
+    leave the batch through one broadcast left-anti join on their pairs.
+    The fresh heads' hashes, exactly the survivors', are sealed without a
+    Spark job, and the row write is the batch's only data job.  ``doc_seq``
+    must be unique per row, as the corpus assigns it."""
     index = SegmentIndex(out_dir)
     rows_sink = idempotent_parquet_sink(
         out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
     )
 
     def sink(df: DataFrame, batch_id: int):
+        t0 = time.monotonic()
         tagged = df.withColumn("_th", F.xxhash64(F.col("tokens"))).persist()
         try:
-            gen = index.probe(tagged, batch_id)
-            fresh = tagged
-            if gen.seen is not None:
-                fresh = tagged.join(gen.seen, "_th", "left_anti")
-            # batch-local first-seen (min doc_seq per hash), the same
-            # single-shuffle kernel as the batch operator: one survivor per
-            # fresh hash, so the fresh hashes are the generation's keys
-            survivors = exact_dedup(fresh, hash_col="_th").drop("_th")
+            pairs = tagged.select("_th", "doc_seq").toPandas()
+            th = pairs["_th"].to_numpy(np.int64)
+            seq = pairs["doc_seq"].to_numpy(np.int64)
+            order = np.lexsort((seq, th))
+            th, seq = th[order], seq[order]
+            head = np.ones(len(th), dtype=bool)
+            head[1:] = th[1:] != th[:-1]
+            heads = th[head]
+            gen = index.probe(heads, batch_id, t0)
+            lose = ~head
+            lose[np.flatnonzero(head)[gen.hit]] = True
+            survivors = tagged
+            if lose.any():
+                losers = spark.createDataFrame(
+                    pd.DataFrame({"_th": th[lose], "doc_seq": seq[lose]}),
+                    "_th BIGINT, doc_seq BIGINT",
+                )
+                survivors = tagged.join(
+                    F.broadcast(losers), ["_th", "doc_seq"], "left_anti"
+                )
             gen.seal(
-                np.setdiff1d(gen.cur, gen.hits, assume_unique=True),
-                lambda: rows_sink(survivors, batch_id),
+                heads[~gen.hit],
+                lambda: rows_sink(survivors.select(df.columns), batch_id),
             )
         finally:
             tagged.unpersist()

@@ -26,8 +26,10 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -401,17 +403,26 @@ def run_near_dedup_stream_exact(
     band_udf = minhash_bands_from_tokens_udf(num_perm, bands, token_ngram)
 
     def sink(df: DataFrame, batch_id: int):
+        t0 = time.monotonic()
         df = df.persist()
         cur_bands = packed_band_keys(
             df.select("doc_seq", band_udf(F.col("tokens")).alias("_bands")),
             "doc_seq", "_bands", "_th",
         ).persist()
         try:
-            gen = index.probe(cur_bands, batch_id)
+            # one Arrow fetch of the batch's band keys (it also fills both
+            # caches); the distinct is np.unique on the driver, not a shuffle
+            cur = np.unique(
+                cur_bands.select("_th").toPandas()["_th"].to_numpy(np.int64)
+            )
+            gen = index.probe(cur, batch_id, t0)
             fresh = df
-            if gen.seen is not None:
+            if len(gen.hits):
+                seen = F.broadcast(spark.createDataFrame(
+                    pd.DataFrame({"_th": gen.hits}), "_th BIGINT"
+                ))
                 hit_docs = (
-                    cur_bands.join(gen.seen, "_th", "left_semi")
+                    cur_bands.join(seen, "_th", "left_semi")
                     .select("doc_seq").distinct()
                 )
                 fresh = df.join(hit_docs, "doc_seq", "left_anti")

@@ -8,10 +8,15 @@ Launch (multi-executor cluster, north rule):
       --num-executors $N --executor-cores 4 --executor-memory 8g \
       --conf spark.sql.shuffle.partitions=$((N*8)) \
       --conf spark.sql.adaptive.enabled=true \
+      --conf spark.sql.sources.parallelPartitionDiscovery.threshold=100000 \
       --py-files dist/dataflow_spark.zip \
       jobs/stream_job.py \
       --corpus /data/tokenized_corpus --out /data/clean --checkpoint /ckpt/clean \
       --watermark "10 minutes"
+
+The listing threshold keeps the file source from running a parallel-listing
+job in every trigger of more than 32 files; ``dataflow_spark.session.get_spark``
+sets the same value, but this entry point builds its own session.
 
 Run the same job at N and 4N executors to evidence the scaling rule; on one
 box, `python3 tools/ab.py .:SPARK_GRAFT_CPUS=8 .:SPARK_GRAFT_CPUS=32 --

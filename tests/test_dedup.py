@@ -474,3 +474,31 @@ def test_cc_releases_checkpoints(spark, monkeypatch, path):
         assert [d["strategy"] for d in stats["depths"]] == want_ladder
     added = set(dict(jsc.getPersistentRDDs())) - before
     assert len(added) == (1 if path in ("contract", "keep_cluster_min") else 0), added
+
+
+def test_keep_cluster_min_counts_edges_once(spark, monkeypatch):
+    """keep_cluster_min's distributed branch (more edges than
+    CC_LOCAL_EDGE_THRESHOLD) counts the input edge set once: the count that
+    picks the branch also decides connected_components_min's first rung, so
+    the contraction is entered without counting the same edges again."""
+    pairs = [(i, i + 1) for i in range(0, 60)] + [(500, m) for m in range(501, 520)]
+    edges = spark.createDataFrame(pairs, "a long, b long").localCheckpoint(eager=True)
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", len(pairs) - 1)
+    counted = []
+    frame_cls = type(edges)
+    real_count = frame_cls.count
+
+    def count(self):
+        counted.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(frame_cls, "count", count)
+    docs = spark.range(1000).withColumnRenamed("id", "doc_seq")
+    got = {
+        r.doc_seq
+        for r in dedup.keep_cluster_min(docs, edges, edges_materialized=True).collect()
+    }
+    monkeypatch.undo()
+    labels = _uf_oracle(pairs)
+    assert got == set(range(1000)) - {n for n, c in labels.items() if n != c}
+    assert sum(c is edges for c in counted) == 1, counted

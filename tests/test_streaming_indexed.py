@@ -7,12 +7,15 @@ compaction/expiry maintenance, and the per-batch Spark-job budget."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
 import time
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from dataflow_spark.operators.dedup import exact_dedup
@@ -41,14 +44,20 @@ def _metrics(out_dir, kind="seen_state_scan"):
 
 def test_indexed_dedup_matches_batch(spark, tmp_path):
     """Survivors == batch exact_dedup on the same corpus, with token-array
-    equality; in-batch AND cross-batch exact dups dropped."""
+    equality; in-batch AND cross-batch exact dups dropped.  The last batch
+    holds its dup pair with the LARGER doc_seq first in file order: the
+    survivor is still the min-doc_seq row, not the first one read."""
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
     a, b, c = list(range(100, 160)), list(range(500, 560)), list(range(900, 960))
+    d = list(range(1300, 1360))
     write_file(spark, make_rows([(1, a, "cc", 0), (2, a, "cc", 1)]), corpus_dir)
     write_file(spark, make_rows([(11, a, "cc", 30), (12, b, "web", 31)]), corpus_dir)
     write_file(spark, make_rows([(21, b, "web", 60), (22, c, "book", 61)]), corpus_dir)
+    write_file(spark, make_rows([(32, d, "cc", 90), (31, d, "cc", 91)]), corpus_dir)
+    last = max(glob.glob(os.path.join(corpus_dir, "*.parquet")), key=os.path.getmtime)
+    assert pq.read_table(last).column("doc_seq").to_pylist() == [32, 31]
 
     q = run_exact_dedup_stream_indexed(spark, corpus_dir, out_dir, ckpt)
     q.processAllAvailable()
@@ -69,7 +78,7 @@ def test_indexed_dedup_matches_batch(spark, tmp_path):
         for r in batch.select("doc_seq", "tokens").collect()
     }
     assert got == want
-    assert set(got) == {1, 12, 22}
+    assert set(got) == {1, 12, 22, 31}
 
 
 def test_indexed_dedup_resume_and_idempotent_replay(spark, tmp_path):
@@ -361,11 +370,47 @@ def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch):
         assert sum(ph.values()) <= add_batch_s[m["batch_id"]], (ph, add_batch_s)
 
 
+def _tag_batches(spark, monkeypatch, group):
+    """Set a job group ``<group><batch_id>`` where each foreachBatch
+    function is entered, so every job a micro-batch's sink runs carries
+    its batch id.  Returns the list the tagged batch ids are appended to."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    sc = spark.sparkContext
+    batches = []
+    real = DataStreamWriter.foreachBatch
+
+    def foreach_batch(self, func):
+        def tagged(df, batch_id):
+            sc.setJobGroup(f"{group}{batch_id}", "stream job budget")
+            batches.append(batch_id)
+            return func(df, batch_id)
+
+        return real(self, tagged)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", foreach_batch)
+    return batches
+
+
+def _count_jobs(spark, run, group, batches, *args, **kwargs):
+    """Run the query to completion; return the jobs of each tagged batch
+    and the jobs the query ran in total."""
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    jobs_before = dag.numTotalJobs()
+    q = run(spark, *args, **kwargs)
+    q.processAllAvailable()
+    q.stop()
+    tracker = sc.statusTracker()
+    got = [len(tracker.getJobIdsForGroup(f"{group}{i}")) for i in batches]
+    return got, dag.numTotalJobs() - jobs_before
+
+
 @pytest.mark.parametrize(
     "run, budget",
     [
-        (run_exact_dedup_stream_indexed, [5, 6, 6]),
-        (run_near_dedup_stream_exact, [16, 20, 20]),
+        (run_exact_dedup_stream_indexed, [3, 3, 3]),
+        (run_near_dedup_stream_exact, [14, 18, 18]),
         (run_dedup_filter_stream, [1, 1, 1, 1]),
     ],
     ids=["exact", "near", "builtin"],
@@ -373,47 +418,19 @@ def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch):
 def test_index_streams_spark_job_budget(spark, tmp_path, monkeypatch, run, budget):
     """Spark jobs per micro-batch of both index streams and the builtin
     tier, pinned exactly: a job added to the hot path (a second fetch, a
-    re-materialized batch, a Spark job back inside the seal) fails here
-    instead of in a bench row.  Each batch's jobs are tagged with a job
-    group set where the batch enters the index (the builtin tier has no
-    index: at the top of its sink), and counted through the status
-    tracker.  At the previous, bucketed-parquet index the exact stream ran
-    [10, 11, 11].  Batch 0 has no history; batches 1 and 2 each hold one
-    cross-batch dup, so they add the broadcast of the duplicate keys.  The
-    builtin tier runs one job per batch, the sink's write with the state
-    store inside its stages, also in the no-data batch 3 that follows the
-    last file to advance the watermark."""
-    from dataflow_spark.streaming import indexed, pipeline
-
-    sc = spark.sparkContext
+    re-materialized batch, a Spark job back inside the probe or the seal)
+    fails here instead of in a bench row.  Each batch's jobs are tagged
+    with a job group set where its foreachBatch function is entered and
+    counted through the status tracker.  The exact stream runs the
+    (_th, doc_seq) fetch, the row write, and the broadcast of its losers'
+    pairs; every batch here has losers (an in-batch dup in batch 0, one
+    cross-batch dup in batches 1 and 2).  At the previous probe (a Spark
+    distinct of the keys, then exact_dedup's shuffle) it ran [5, 6, 6].
+    The builtin tier runs one job per batch, the sink's write with the
+    state store inside its stages, also in the no-data batch 3 that
+    follows the last file to advance the watermark."""
     group = f"jobs-{os.path.basename(tmp_path)}-b"
-    batches = []
-
-    def tag(batch_id):
-        sc.setJobGroup(f"{group}{batch_id}", "stream job budget")
-        batches.append(batch_id)
-
-    if run is run_dedup_filter_stream:
-        real_sink = pipeline.idempotent_parquet_sink
-
-        def sink(*args, **kwargs):
-            write = real_sink(*args, **kwargs)
-
-            def tagged_write(df, batch_id):
-                tag(batch_id)
-                write(df, batch_id)
-
-            return tagged_write
-
-        monkeypatch.setattr(pipeline, "idempotent_parquet_sink", sink)
-    else:
-        real_probe = indexed.SegmentIndex.probe
-
-        def probe(self, keys, batch_id):
-            tag(batch_id)
-            return real_probe(self, keys, batch_id)
-
-        monkeypatch.setattr(indexed.SegmentIndex, "probe", probe)
+    batches = _tag_batches(spark, monkeypatch, group)
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
@@ -421,15 +438,43 @@ def test_index_streams_spark_job_budget(spark, tmp_path, monkeypatch, run, budge
     write_file(spark, make_rows([(1, a, "cc", 0), (2, a, "cc", 1)]), corpus_dir)
     write_file(spark, make_rows([(11, a, "cc", 30), (12, b, "web", 31)]), corpus_dir)
     write_file(spark, make_rows([(21, b, "web", 60), (22, c, "book", 61)]), corpus_dir)
-    dag = sc._jsc.sc().dagScheduler()
-    jobs_before = dag.numTotalJobs()
-    q = run(spark, corpus_dir, out_dir, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    tracker = sc.statusTracker()
+    got, total = _count_jobs(
+        spark, run, group, batches, corpus_dir, out_dir, ckpt
+    )
     assert batches == list(range(len(budget)))
-    got = [len(tracker.getJobIdsForGroup(f"{group}{i}")) for i in batches]
     assert got == budget
     # every job the query ran is in a batch's group: none escaped the count
     # on another thread (a job group does not follow a job into one)
-    assert dag.numTotalJobs() - jobs_before == sum(got)
+    assert total == sum(got)
+
+
+def test_trigger_over_32_files_runs_no_listing_job(spark, tmp_path, monkeypatch):
+    """One trigger over 40 files runs no job outside its batch groups.  At
+    Spark's default parallel-listing threshold (32 paths) the file
+    source's getBatch lists a trigger of more files with a Spark job of
+    its own, on the stream thread; ``get_spark`` raises the threshold so
+    the driver lists them."""
+    corpus_dir, out_dir, ckpt = (
+        str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
+    )
+    os.makedirs(corpus_dir)
+    schema = pa.schema([
+        ("doc_id", pa.string()), ("doc_seq", pa.int64()), ("text", pa.string()),
+        ("tokens", pa.list_(pa.int32())), ("n_tok", pa.int32()),
+        ("source", pa.string()), ("event_time", pa.timestamp("us", tz="UTC")),
+    ])
+    for i in range(40):
+        (row,) = make_rows([(i, list(range(100 * i, 100 * i + 20)), "cc", i)])
+        pq.write_table(
+            pa.Table.from_pylist([dict(zip(schema.names, row))], schema),
+            os.path.join(corpus_dir, f"part-{i:03d}.parquet"),
+        )
+    group = f"jobs-{os.path.basename(tmp_path)}-b"
+    batches = _tag_batches(spark, monkeypatch, group)
+    got, total = _count_jobs(
+        spark, run_dedup_filter_stream, group, batches, corpus_dir, out_dir,
+        ckpt, max_files_per_trigger=40,
+    )
+    assert spark.read.parquet(out_dir).count() == 40
+    assert batches[0] == 0 and got[0] == 1
+    assert total == sum(got)
