@@ -29,7 +29,6 @@ import os
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -380,18 +379,29 @@ def run_near_dedup_stream_exact(
     on the packed band key ``xxhash64(band_id, band_hash)``
     (``dedup.packed_band_keys``) — the same index, driver-side probe,
     format pin and per-batch ``state_scan`` record as the exact-dedup
-    stream.  Each micro-batch:
+    stream.  Each micro-batch decides on the driver from ONE Arrow fetch
+    of its ``(doc_seq, band key)`` pairs (the band UDF's only pass; the
+    fetch also fills the batch's cache for the row write):
 
-      1. drops docs whose ANY band key semi-joins the index's duplicate
-         keys (generations < N);
-      2. runs batch-local cluster-min dedup among the remainder
-         (minhash_dedup — coincides with the sequential loop on chain-free
-         clusters, the same contract as the batch operator);
-      3. fetches the survivors' band keys (one Arrow fetch), seals them as
-         generation N, then writes FULL survivor rows exactly-once."""
+      1. docs with ANY band key the index holds (generations < N) lose;
+      2. ``dedup.cluster_min_losers`` runs batch-local cluster-min among
+         the rest — the batch ``minhash_dedup`` decision at its default
+         bucket cap, which coincides with the sequential loop on
+         chain-free clusters;
+      3. the survivors' band keys are sealed as generation N, then the
+         FULL survivor rows are written exactly-once, the losers removed by
+         a sorted-array ``doc_seq`` filter.
+
+    Two Spark jobs per batch: the fetch and the row write.  The fetch
+    ceiling is 16 B × ``bands`` per doc on the driver (256 B/doc at 16
+    bands: ~0.6 MB for a 2,400-doc trigger, 256 MB at 1M docs per
+    trigger), so size ``max_files_per_trigger`` to keep a trigger's pairs
+    well inside driver memory."""
     from dataflow_spark.operators.dedup import (
+        _not_in_sorted_udf,
+        _sorted_member,
+        cluster_min_losers,
         minhash_bands_from_tokens_udf,
-        minhash_dedup,
         packed_band_keys,
     )
     from dataflow_spark.streaming.indexed import SegmentIndex
@@ -405,46 +415,29 @@ def run_near_dedup_stream_exact(
     def sink(df: DataFrame, batch_id: int):
         t0 = time.monotonic()
         df = df.persist()
-        cur_bands = packed_band_keys(
-            df.select("doc_seq", band_udf(F.col("tokens")).alias("_bands")),
-            "doc_seq", "_bands", "_th",
-        ).persist()
         try:
-            # one Arrow fetch of the batch's band keys (it also fills both
-            # caches); the distinct is np.unique on the driver, not a shuffle
-            cur = np.unique(
-                cur_bands.select("_th").toPandas()["_th"].to_numpy(np.int64)
-            )
-            gen = index.probe(cur, batch_id, t0)
-            fresh = df
-            if len(gen.hits):
-                seen = F.broadcast(spark.createDataFrame(
-                    pd.DataFrame({"_th": gen.hits}), "_th BIGINT"
-                ))
-                hit_docs = (
-                    cur_bands.join(seen, "_th", "left_semi")
-                    .select("doc_seq").distinct()
-                )
-                fresh = df.join(hit_docs, "doc_seq", "left_anti")
-            survivors = minhash_dedup(
-                fresh,
-                use_tokens=True,
-                token_ngram=token_ngram,
-                num_perm=num_perm,
-                bands=bands,
-            ).persist()
-            # the survivors' band keys are a subset of the batch's, already
-            # cached: no second band-UDF pass; the fetch also fills the
-            # survivors' cache for the row write
-            new_keys = (
-                cur_bands.join(survivors.select("doc_seq"), "doc_seq", "left_semi")
-                .select("_th").toPandas()["_th"].to_numpy(np.int64)
+            pairs = packed_band_keys(
+                df.select("doc_seq", band_udf(F.col("tokens")).alias("_bands")),
+                "doc_seq", "_bands", "_th",
+            ).toPandas()
+            seq = pairs["doc_seq"].to_numpy(np.int64)
+            key = pairs["_th"].to_numpy(np.int64)
+            gen = index.probe(np.unique(key), batch_id, t0)
+            hit = np.unique(seq[_sorted_member(gen.hits, key)])
+            rest = ~_sorted_member(hit, seq)
+            # 100_000: minhash_dedup's default bucket_cap
+            losers = np.union1d(
+                hit, cluster_min_losers(seq[rest], key[rest], 100_000)
             )
             gen.mark("dedup_s")
-            gen.seal(new_keys, lambda: rows_sink(survivors, batch_id))
-            survivors.unpersist()
+            survivors = df
+            if len(losers):
+                survivors = df.where(_not_in_sorted_udf(losers)(F.col("doc_seq")))
+            gen.seal(
+                key[~_sorted_member(losers, seq)],
+                lambda: rows_sink(survivors, batch_id),
+            )
         finally:
-            cur_bands.unpersist()
             df.unpersist()
 
     stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)

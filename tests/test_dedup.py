@@ -69,11 +69,24 @@ def test_ccnet_dedup_bits(spark):
     assert got == want
 
 
-def test_minhash_dedup_cluster_parity(spark):
-    """MinHash-LSH survivors == oracle union-find on identical band hashes."""
+@pytest.mark.parametrize("rung", ["driver", "edges"])
+def test_minhash_dedup_cluster_parity(spark, monkeypatch, rung):
+    """MinHash-LSH survivors == oracle union-find on identical band hashes,
+    on both rungs of minhash_dedup: the driver decision (n_docs × bands
+    within CC_LOCAL_EDGE_THRESHOLD) and the candidate-edge pipeline, forced
+    here by a bound one below n_docs × bands."""
     rows = make_token_docs(n=250, dup_frac=0.1, near_frac=0.1)
     df = spark.createDataFrame(rows, TOKEN_SCHEMA)
+    if rung == "edges":
+        monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", len(rows) * 16 - 1)
+    edge_calls = []
+    real_edges = dedup.minhash_candidate_edges
+    monkeypatch.setattr(
+        dedup, "minhash_candidate_edges",
+        lambda *a, **kw: edge_calls.append(1) or real_edges(*a, **kw),
+    )
     out = dedup.minhash_dedup(df, use_tokens=True, token_ngram=3, bands=16, num_perm=128)
+    assert len(edge_calls) == (rung == "edges")
     got = sorted(r["doc_seq"] for r in out.select("doc_seq").collect())
 
     # oracle: same shingle hashing pulled from the JVM, independent clustering
@@ -88,6 +101,81 @@ def test_minhash_dedup_cluster_parity(spark):
     assert got == want
     # sanity: planted exact+near dups actually got removed
     assert len(got) < len(rows)
+
+
+def _cluster_min_losers_oracle(seq, key, cap):
+    """Union-find over each bucket's distinct docs, buckets over ``cap``
+    skipped — independent of the numpy kernels."""
+    buckets = {}
+    for s_, k in zip(seq, key):
+        buckets.setdefault(k, set()).add(s_)
+    edges = []
+    for docs in buckets.values():
+        if 1 < len(docs) <= cap:
+            ordered = sorted(docs)
+            edges += [(ordered[0], d) for d in ordered[1:]]
+    return sorted(n for n, c in _uf_oracle(edges).items() if n != c)
+
+
+def test_cluster_min_losers_matches_union_find():
+    """The driver MinHash decision against a union-find oracle: a chain
+    across buckets, the bucket cap at exactly ``cap`` docs (kept) and
+    ``cap + 1`` (dropped), docs with no band rows, repeated (seq, key)
+    rows, then random bucket graphs."""
+    import random
+
+    import numpy as np
+
+    cap = 4
+    rows = [
+        # chain: 40-41 share key 1, 41-42 key 2, 42-30 key 3 -> {30, 40, 41, 42}
+        (40, 1), (41, 1), (41, 2), (42, 2), (42, 3), (30, 3),
+        # exactly cap docs (kept), listed twice: repeats count once
+        *[(100 + d, 10) for d in range(cap)] * 2,
+        # cap + 1 docs: no links, so 200..204 all survive
+        *[(200 + d, 11) for d in range(cap + 1)],
+        # singleton buckets link nothing
+        (300, 20), (301, 21),
+    ]
+    rng = random.Random(5)
+    rng.shuffle(rows)
+    seq = np.array([r[0] for r in rows], np.int64)
+    key = np.array([r[1] for r in rows], np.int64)
+    got = dedup.cluster_min_losers(seq, key, cap)
+    assert got.dtype == np.int64
+    assert got.tolist() == [40, 41, 42, 101, 102, 103]
+    assert got.tolist() == _cluster_min_losers_oracle(seq, key, cap)
+    # docs 500 and 501 have no band rows: nothing links or drops them
+    assert not np.isin([500, 501], got).any()
+    assert dedup.cluster_min_losers(seq[:0], key[:0], cap).tolist() == []
+    for trial in range(30):
+        n = rng.randrange(1, 300)
+        seq = np.array([rng.randrange(0, 120) for _ in range(n)], np.int64)
+        key = np.array([rng.randrange(-40, 40) for _ in range(n)], np.int64)
+        c = rng.choice([1, 2, 3, 5, 1000])
+        got = dedup.cluster_min_losers(seq, key, c).tolist()
+        assert got == _cluster_min_losers_oracle(seq.tolist(), key.tolist(), c), trial
+
+
+def test_minhash_dedup_driver_rung_job_budget(spark):
+    """A driver-rung minhash_dedup call runs 4 Spark jobs before it
+    returns: the signature ``count()`` (under AQE, the cache stage that
+    runs the band UDF, then the two aggregate stages) and the one
+    band-key fetch.  The candidate-edge rung runs 10 on this input: the
+    same count, then the roots aggregation, join and distinct into the
+    edge checkpoint, the edge count and the edge collect."""
+    df = spark.createDataFrame(
+        make_token_docs(n=250, dup_frac=0.1, near_frac=0.1), TOKEN_SCHEMA
+    )
+    sc = spark.sparkContext
+    group = "minhash-driver-rung-budget"
+    sc.setJobGroup(group, group)
+    try:
+        out = dedup.minhash_dedup(df, use_tokens=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert out.count() < 250
 
 
 def test_minhash_near_dups_detected(spark):

@@ -75,8 +75,9 @@ def main():
     )
 
     # minhash candidate-edge pipeline: everything up to (and including) the
-    # bucket shuffles.  CC runs on the driver below the 4M-edge threshold,
-    # so at bench scale THIS is the whole distributed plan.  Explained over a
+    # bucket shuffles -- minhash_dedup's rung above CC_LOCAL_EDGE_THRESHOLD
+    # band keys (below it the driver decides from one band-key fetch, and no
+    # edge plan runs).  Explained over a
     # MATERIALIZED parquet corpus: production inputs are tables, and the lazy
     # synthetic-corpus expression would smear generator CASE/transform
     # expressions (and a spurious re-evaluation) all over the audit.
@@ -97,6 +98,10 @@ def main():
         (
             "MinHash-LSH candidate edges (signature -> (min,count) roots agg "
             "-> join -> star edges), tokens fast path",
+            "minhash_dedup runs this plan only above CC_LOCAL_EDGE_THRESHOLD "
+            "band keys (n_docs x bands; ~250k docs at 16 bands); below it "
+            "the band keys are fetched once from the signature cache and "
+            "dedup.cluster_min_losers decides on the driver.  "
             "Expected: EXACTLY ONE ArrowEvalPython reading only (doc_seq, "
             "tokens) — the token n-gram hashing AND the numpy signature both "
             "run inside the Arrow batch, so 4 bytes/token cross the "
