@@ -175,15 +175,18 @@ def _cc_min_numpy(a: "np.ndarray", b: "np.ndarray") -> tuple:
         lbl = new
 
 
-def cluster_min_losers(seq: np.ndarray, key: np.ndarray, cap: int) -> np.ndarray:
+def cluster_min_losers(
+    seq: np.ndarray, key: np.ndarray, cap: int | None
+) -> np.ndarray:
     """The whole MinHash-LSH decision on the driver, from flat
     ``(doc_seq, packed band key)`` arrays (one row per doc and band, as
     ``packed_band_keys`` emits them): every bucket (rows sharing a key)
     links its docs to its min ``doc_seq`` root, a bucket of more than
-    ``cap`` docs makes no links (minhash_candidate_edges' bucket cap), and
-    ``_cc_min_numpy`` solves the star edges.  Returns the sorted
-    ``doc_seq`` values that are not the min of their cluster.  A repeated
-    ``(seq, key)`` row counts once; docs without rows never lose.
+    ``cap`` docs makes no links (minhash_candidate_edges' bucket cap;
+    ``None`` drops no bucket, as exact keys need), and ``_cc_min_numpy``
+    solves the star edges.  Returns the sorted ``doc_seq`` values that are
+    not the min of their cluster.  A repeated ``(seq, key)`` row counts
+    once; docs without rows never lose.
 
     Docs are renumbered densely in seq order first, so a star edge packs
     into one int64 and the up-to-``bands``-fold copies of a (member, root)
@@ -198,12 +201,14 @@ def cluster_min_losers(seq: np.ndarray, key: np.ndarray, cap: int) -> np.ndarray
     head[1:] = key[1:] != key[:-1]
     starts = np.flatnonzero(head)
     bucket = np.cumsum(head) - 1
-    size = np.diff(np.r_[starts, len(key)])
-    # only a bucket with more rows than cap can hold repeats that decide it
-    for b in np.flatnonzero(size > cap):
-        size[b] = len(np.unique(doc[starts[b]:starts[b] + size[b]]))
     root = np.minimum.reduceat(doc, starts)[bucket] if len(starts) else doc
-    member = (doc != root) & (size <= cap)[bucket]
+    member = doc != root
+    if cap is not None:
+        size = np.diff(np.r_[starts, len(key)])
+        # only a bucket with more rows than cap can hold repeats that decide it
+        for b in np.flatnonzero(size > cap):
+            size[b] = len(np.unique(doc[starts[b]:starts[b] + size[b]]))
+        member &= (size <= cap)[bucket]
     if not member.any():
         return np.empty(0, dtype=np.int64)
     n = np.int64(len(docs))
@@ -235,6 +240,11 @@ def cluster_min_losers(seq: np.ndarray, key: np.ndarray, cap: int) -> np.ndarray
 #   core-count-independent Amdahl term that costs the fast leg exactly
 #   what the well-parallelized rounds no longer do.
 CC_LOCAL_EDGE_THRESHOLD = 4_000_000
+
+# MinHash LSH buckets of more than this many docs make no candidate links
+# (audited by minhash_dropped_buckets); shared by batch minhash_dedup and
+# the near-dedup stream.
+MINHASH_BUCKET_CAP = 100_000
 
 # per-worker byte budget for the minhash signature intermediate (see
 # minhash_band_udf)
@@ -701,7 +711,7 @@ def minhash_dedup(
     use_tokens: bool = False,
     token_ngram: int = 3,
     seed: int = 1,
-    bucket_cap: int = 100_000,
+    bucket_cap: int = MINHASH_BUCKET_CAP,
 ) -> DataFrame:
     """MinHashDeduplicateFilter (minhash_deduplicate_filter.py:9-89): char
     5-gram MinHash(num_perm=128) + LSH at threshold≈0.9; survivor = min-seq
@@ -802,7 +812,7 @@ def minhash_candidate_edges(
     num_perm: int,
     bands: int,
     seed: int,
-    bucket_cap: int = 100_000,
+    bucket_cap: int = MINHASH_BUCKET_CAP,
     bands_expr=None,
     materialize: bool = True,
 ) -> DataFrame:
@@ -890,7 +900,7 @@ def minhash_dropped_buckets(
     bands: int = 16,
     shingle_n: int = 5,
     seed: int = 1,
-    bucket_cap: int = 100_000,
+    bucket_cap: int = MINHASH_BUCKET_CAP,
     use_tokens: bool = False,
     token_ngram: int = 3,
 ) -> DataFrame:

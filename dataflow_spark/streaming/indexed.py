@@ -1,6 +1,7 @@
 """The generation-segment index: a durable, append-only set of int64 keys
 that a ``foreachBatch`` stream probes and extends once per micro-batch with
-O(batch) state IO, and the exact-dedup stream built on it.
+O(batch) state IO, and the one ``foreachBatch`` body both index streams run
+on it.
 
 Why (VERDICT r3 #3): ``applyInPandasWithState`` exposes ONE value per group
 key, so a Python-side seen-set must be rewritten wholesale every
@@ -9,7 +10,7 @@ buffer is laid out.  ``SegmentIndex`` is the durable form of the
 reference's seen-set (hash_deduplicate_filter.py:75-89, and the band-key
 query-then-insert of minhash_deduplicate_filter.py:66-83) as an append-only
 log of sorted key arrays, one per generation.  Both durable dedup streams
-run on it, each a thin ``foreachBatch`` body:
+run on it through one ``foreachBatch`` body, each passing its key:
 
 - ``run_exact_dedup_stream_indexed`` (here) keys it on the token-array hash
   ``_th = xxhash64(tokens)``;
@@ -28,14 +29,18 @@ Design:
   each sealed generation opened as a read-only memory map — the OS page
   cache, not the heap, bounds RAM.  No Spark job reads or writes the
   index; each stream fetches its batch's keys itself.
-- **One-fetch decision (exact stream).**  One Arrow fetch of the batch's
-  ``(_th, doc_seq)`` pairs — O(batch) longs on the driver, the same order
-  as the keys the probe needs anyway.  ``np.lexsort`` by (key, seq) puts
-  each key's min-``doc_seq`` row first in its run; the losers are every
-  other row of a run plus the first rows whose key a sealed generation
-  holds.  Only the losers' pairs go back into Spark, as one broadcast
-  left-anti join, so the state handed to Spark is O(duplicates) and the
-  row write is the batch's only data job.
+- **One-fetch decision, one body.**  Both streams run ``_run_index_stream``:
+  persist the batch, one Arrow fetch of its ``(doc_seq, _th)`` pairs
+  (O(batch) longs, the keys the probe needs anyway), probe, then docs
+  holding a sealed key lose and ``dedup.cluster_min_losers`` picks the
+  min-``doc_seq`` survivors among the rest (no bucket cap for exact keys,
+  ``MINHASH_BUCKET_CAP`` for band keys).  The survivors' keys are sealed
+  without a Spark job and the rows written.  Each stream passes its own
+  loser filter, the form that measured faster for it (NOTES.md, "One
+  driver-decided sink"): the exact stream a broadcast left-anti join on
+  ``doc_seq``, since ``_not_in_sorted_udf`` would be the first Python UDF
+  it runs; the near stream ``_not_in_sorted_udf``, since it runs the band
+  UDF anyway and a broadcast was slower there.
 - **Format pin.**  ``<name>/_index_meta.json`` records ``{"format": 2}``.
   A v1 index (bucketed parquet segments, geometry meta) or sealed
   generations without the meta file are refused, never misread.
@@ -69,7 +74,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataflow_spark.operators.dedup import _sorted_member
+from dataflow_spark.operators.dedup import _sorted_member, cluster_min_losers
 from dataflow_spark.streaming.pipeline import (
     file_stream_source,
     idempotent_parquet_sink,
@@ -161,11 +166,10 @@ class SegmentIndex:
 
     def probe(self, keys: np.ndarray, batch_id: int, t0: float) -> "_Generation":
         """Probe the generations sealed before ``batch_id`` for ``keys``
-        (the batch's sorted, unique int64 keys).  The result's ``hit``
-        marks the keys already sealed and ``hits`` holds them.  ``t0`` is
-        the ``time.monotonic()`` reading taken before the caller fetched
-        the keys: the ``probe_s`` window opens there, so it covers the
-        fetch."""
+        (the batch's sorted, unique int64 keys).  The result's ``hits``
+        holds the keys already sealed.  ``t0`` is the ``time.monotonic()``
+        reading taken before the caller fetched the keys: the ``probe_s``
+        window opens there, so it covers the fetch."""
         return _Generation(self, keys, batch_id, t0)
 
     def _path(self, b: int) -> str:
@@ -201,10 +205,9 @@ class SegmentIndex:
 
 class _Generation:
     """One micro-batch's pass over a ``SegmentIndex``: the probe runs at
-    construction (``hit`` = which of the batch's sorted distinct keys are
-    already sealed, ``hits`` = those keys), ``seal`` appends the generation.
-    ``phases`` holds disjoint wall-clock windows — each ``mark`` closes
-    the window the previous one opened."""
+    construction (``hits`` = the batch's keys already sealed), ``seal``
+    appends the generation.  ``phases`` holds disjoint wall-clock windows
+    — each ``mark`` closes the window the previous one opened."""
 
     def __init__(
         self, index: SegmentIndex, keys: np.ndarray, batch_id: int, t0: float
@@ -213,13 +216,13 @@ class _Generation:
         self.phases: dict[str, float] = {}
         self._t = t0
         self.prior = _list_sealed_batches(index.state_dir, upto=batch_id)
-        self.hit = np.zeros(len(keys), dtype=bool)
+        hit = np.zeros(len(keys), dtype=bool)
         self.scanned = 0
         for b in self.prior:
             member = _sorted_member(np.load(index._path(b), mmap_mode="r"), keys)
             self.scanned += bool(member.any())
-            self.hit |= member
-        self.hits = keys[self.hit]
+            hit |= member
+        self.hits = keys[hit]
         self.mark("probe_s")
 
     def mark(self, name: str) -> None:
@@ -254,6 +257,60 @@ class _Generation:
                 }) + "\n")
 
 
+def _run_index_stream(
+    spark: SparkSession,
+    corpus_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    keys: Callable[[DataFrame], DataFrame],
+    cap: int | None,
+    drop_losers: Callable[[DataFrame, np.ndarray], DataFrame],
+    name: str = SEEN_STATE_DIRNAME,
+    kind: str = "seen_state_scan",
+):
+    """Start the file stream with the one ``foreachBatch`` body of both
+    index streams, over ``SegmentIndex(out_dir, name, kind)``.  Per batch:
+    persist it, fetch ``keys(df)`` (one ``(doc_seq, _th)`` row per doc and
+    key) in one Arrow fetch, probe the distinct keys; docs holding a
+    sealed key lose, ``cluster_min_losers`` at ``cap`` decides among the
+    rest; ``drop_losers(df, losers)`` (sorted int64 ``doc_seq``) builds
+    the survivors, whose keys are sealed before their rows are written
+    under ``out_dir``."""
+    index = SegmentIndex(out_dir, name, kind)
+    rows_sink = idempotent_parquet_sink(
+        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
+    )
+
+    def sink(df: DataFrame, batch_id: int):
+        t0 = time.monotonic()
+        df = df.persist()
+        try:
+            pairs = keys(df).toPandas()
+            seq = pairs["doc_seq"].to_numpy(np.int64)
+            key = pairs["_th"].to_numpy(np.int64)
+            gen = index.probe(np.unique(key), batch_id, t0)
+            hit = np.unique(seq[_sorted_member(gen.hits, key)])
+            rest = ~_sorted_member(hit, seq)
+            losers = np.union1d(hit, cluster_min_losers(seq[rest], key[rest], cap))
+            gen.mark("dedup_s")
+            survivors = drop_losers(df, losers) if len(losers) else df
+            gen.seal(
+                key[~_sorted_member(losers, seq)],
+                lambda: rows_sink(survivors, batch_id),
+            )
+        finally:
+            df.unpersist()
+
+    stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .start()
+    )
+
+
 def run_exact_dedup_stream_indexed(
     spark: SparkSession,
     corpus_dir: str,
@@ -262,61 +319,26 @@ def run_exact_dedup_stream_indexed(
     max_files_per_trigger: int = 1,
 ):
     """First-seen exact dedup over the stream with the generation-segment
-    index keyed on the token-array hash.  Emits FULL survivor rows
-    (token-array equality, min ``doc_seq`` per hash, as batch
-    ``dedup.exact_dedup``) exactly-once under ``out_dir/batch_id=N``.
+    index keyed on the token-array hash ``_th = xxhash64(tokens)``.  Emits
+    FULL survivor rows (token-array equality, min ``doc_seq`` per hash, as
+    batch ``dedup.exact_dedup``) exactly-once under ``out_dir/batch_id=N``.
 
-    Per batch the driver decides from one Arrow fetch of the persisted
-    batch's ``(_th, doc_seq)`` pairs, O(batch) longs: ``np.lexsort`` by
-    (hash, seq) makes the first row of each hash's run its batch-local
-    survivor, the run heads' hashes are probed against the index, and the
-    losers — the rest of each run plus the heads whose hash is sealed —
-    leave the batch through one broadcast left-anti join on their pairs.
-    The fresh heads' hashes, exactly the survivors', are sealed without a
-    Spark job, and the row write is the batch's only data job.  ``doc_seq``
+    Runs ``_run_index_stream`` with no bucket cap; the losers leave the
+    batch through one broadcast left-anti join on ``doc_seq``.  ``doc_seq``
     must be unique per row, as the corpus assigns it."""
-    index = SegmentIndex(out_dir)
-    rows_sink = idempotent_parquet_sink(
-        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
-    )
 
-    def sink(df: DataFrame, batch_id: int):
-        t0 = time.monotonic()
-        tagged = df.withColumn("_th", F.xxhash64(F.col("tokens"))).persist()
-        try:
-            pairs = tagged.select("_th", "doc_seq").toPandas()
-            th = pairs["_th"].to_numpy(np.int64)
-            seq = pairs["doc_seq"].to_numpy(np.int64)
-            order = np.lexsort((seq, th))
-            th, seq = th[order], seq[order]
-            head = np.ones(len(th), dtype=bool)
-            head[1:] = th[1:] != th[:-1]
-            heads = th[head]
-            gen = index.probe(heads, batch_id, t0)
-            lose = ~head
-            lose[np.flatnonzero(head)[gen.hit]] = True
-            survivors = tagged
-            if lose.any():
-                losers = spark.createDataFrame(
-                    pd.DataFrame({"_th": th[lose], "doc_seq": seq[lose]}),
-                    "_th BIGINT, doc_seq BIGINT",
-                )
-                survivors = tagged.join(
-                    F.broadcast(losers), ["_th", "doc_seq"], "left_anti"
-                )
-            gen.seal(
-                heads[~gen.hit],
-                lambda: rows_sink(survivors.select(df.columns), batch_id),
-            )
-        finally:
-            tagged.unpersist()
+    def drop_losers(df: DataFrame, losers: np.ndarray) -> DataFrame:
+        lose = spark.createDataFrame(
+            pd.DataFrame({"doc_seq": losers}), "doc_seq BIGINT"
+        )
+        # the join moves doc_seq first; the sink writes df's column order
+        return df.join(F.broadcast(lose), "doc_seq", "left_anti").select(df.columns)
 
-    stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _run_index_stream(
+        spark, corpus_dir, out_dir, checkpoint_dir, max_files_per_trigger,
+        lambda df: df.select("doc_seq", F.xxhash64("tokens").alias("_th")),
+        None,
+        drop_losers,
     )
 
 

@@ -26,9 +26,7 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -373,79 +371,38 @@ def run_near_dedup_stream_exact(
     query-then-insert LSH semantics (minhash_deduplicate_filter.py:66-83):
     only survivors' bands enter the index, a dropped doc's never do.
 
-    The insert decision needs the doc-level vote BEFORE the state update,
-    and a doc's bands hash to unrelated keys, so the LSH index is a
-    ``streaming.indexed.SegmentIndex`` under ``out_dir/_band_state`` keyed
-    on the packed band key ``xxhash64(band_id, band_hash)``
-    (``dedup.packed_band_keys``) — the same index, driver-side probe,
-    format pin and per-batch ``state_scan`` record as the exact-dedup
-    stream.  Each micro-batch decides on the driver from ONE Arrow fetch
-    of its ``(doc_seq, band key)`` pairs (the band UDF's only pass; the
-    fetch also fills the batch's cache for the row write):
+    Runs ``streaming.indexed._run_index_stream`` with its index under
+    ``out_dir/_band_state`` (``state_scan`` records), keyed on the
+    packed band key ``xxhash64(band_id, band_hash)``
+    (``dedup.packed_band_keys`` over the band UDF, its only pass), at
+    ``dedup.MINHASH_BUCKET_CAP`` — the batch ``minhash_dedup`` decision,
+    which coincides with the sequential loop on chain-free clusters.  The
+    losers leave the batch through the sorted-array ``_not_in_sorted_udf``
+    filter on ``doc_seq``.
 
-      1. docs with ANY band key the index holds (generations < N) lose;
-      2. ``dedup.cluster_min_losers`` runs batch-local cluster-min among
-         the rest — the batch ``minhash_dedup`` decision at its default
-         bucket cap, which coincides with the sequential loop on
-         chain-free clusters;
-      3. the survivors' band keys are sealed as generation N, then the
-         FULL survivor rows are written exactly-once, the losers removed by
-         a sorted-array ``doc_seq`` filter.
-
-    Two Spark jobs per batch: the fetch and the row write.  The fetch
-    ceiling is 16 B × ``bands`` per doc on the driver (256 B/doc at 16
-    bands: ~0.6 MB for a 2,400-doc trigger, 256 MB at 1M docs per
+    The fetch ceiling is 16 B × ``bands`` per doc on the driver (256 B/doc
+    at 16 bands: ~0.6 MB for a 2,400-doc trigger, 256 MB at 1M docs per
     trigger), so size ``max_files_per_trigger`` to keep a trigger's pairs
     well inside driver memory."""
     from dataflow_spark.operators.dedup import (
+        MINHASH_BUCKET_CAP,
         _not_in_sorted_udf,
-        _sorted_member,
-        cluster_min_losers,
         minhash_bands_from_tokens_udf,
         packed_band_keys,
     )
-    from dataflow_spark.streaming.indexed import SegmentIndex
+    from dataflow_spark.streaming.indexed import _run_index_stream
 
-    index = SegmentIndex(out_dir, name="_band_state", kind="state_scan")
-    rows_sink = idempotent_parquet_sink(
-        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
-    )
     band_udf = minhash_bands_from_tokens_udf(num_perm, bands, token_ngram)
-
-    def sink(df: DataFrame, batch_id: int):
-        t0 = time.monotonic()
-        df = df.persist()
-        try:
-            pairs = packed_band_keys(
-                df.select("doc_seq", band_udf(F.col("tokens")).alias("_bands")),
-                "doc_seq", "_bands", "_th",
-            ).toPandas()
-            seq = pairs["doc_seq"].to_numpy(np.int64)
-            key = pairs["_th"].to_numpy(np.int64)
-            gen = index.probe(np.unique(key), batch_id, t0)
-            hit = np.unique(seq[_sorted_member(gen.hits, key)])
-            rest = ~_sorted_member(hit, seq)
-            # 100_000: minhash_dedup's default bucket_cap
-            losers = np.union1d(
-                hit, cluster_min_losers(seq[rest], key[rest], 100_000)
-            )
-            gen.mark("dedup_s")
-            survivors = df
-            if len(losers):
-                survivors = df.where(_not_in_sorted_udf(losers)(F.col("doc_seq")))
-            gen.seal(
-                key[~_sorted_member(losers, seq)],
-                lambda: rows_sink(survivors, batch_id),
-            )
-        finally:
-            df.unpersist()
-
-    stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _run_index_stream(
+        spark, corpus_dir, out_dir, checkpoint_dir, max_files_per_trigger,
+        lambda df: packed_band_keys(
+            df.select("doc_seq", band_udf(F.col("tokens")).alias("_bands")),
+            "doc_seq", "_bands", "_th",
+        ),
+        MINHASH_BUCKET_CAP,
+        lambda df, losers: df.where(_not_in_sorted_udf(losers)(F.col("doc_seq"))),
+        name="_band_state",
+        kind="state_scan",
     )
 
 

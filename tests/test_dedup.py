@@ -105,13 +105,14 @@ def test_minhash_dedup_cluster_parity(spark, monkeypatch, rung):
 
 def _cluster_min_losers_oracle(seq, key, cap):
     """Union-find over each bucket's distinct docs, buckets over ``cap``
-    skipped — independent of the numpy kernels."""
+    skipped (none when ``cap`` is None) — independent of the numpy
+    kernels."""
     buckets = {}
     for s_, k in zip(seq, key):
         buckets.setdefault(k, set()).add(s_)
     edges = []
     for docs in buckets.values():
-        if 1 < len(docs) <= cap:
+        if 1 < len(docs) and (cap is None or len(docs) <= cap):
             ordered = sorted(docs)
             edges += [(ordered[0], d) for d in ordered[1:]]
     return sorted(n for n, c in _uf_oracle(edges).items() if n != c)
@@ -121,7 +122,8 @@ def test_cluster_min_losers_matches_union_find():
     """The driver MinHash decision against a union-find oracle: a chain
     across buckets, the bucket cap at exactly ``cap`` docs (kept) and
     ``cap + 1`` (dropped), docs with no band rows, repeated (seq, key)
-    rows, then random bucket graphs."""
+    rows, then random bucket graphs, then the exact stream's shape (one
+    key per doc) against a min-``doc_seq``-per-key oracle."""
     import random
 
     import numpy as np
@@ -152,9 +154,24 @@ def test_cluster_min_losers_matches_union_find():
         n = rng.randrange(1, 300)
         seq = np.array([rng.randrange(0, 120) for _ in range(n)], np.int64)
         key = np.array([rng.randrange(-40, 40) for _ in range(n)], np.int64)
-        c = rng.choice([1, 2, 3, 5, 1000])
+        c = rng.choice([1, 2, 3, 5, 1000, None])
         got = dedup.cluster_min_losers(seq, key, c).tolist()
         assert got == _cluster_min_losers_oracle(seq.tolist(), key.tolist(), c), trial
+    # one key per doc; key 7 is held by 100,001 docs, one over MINHASH_BUCKET_CAP
+    big = 100_001
+    seq = np.arange(big + 600, dtype=np.int64)
+    key = np.r_[np.full(big, 7), [rng.randrange(100, 200) for _ in range(600)]]
+    perm = np.array(rng.sample(range(len(seq)), len(seq)))
+    seq, key = seq[perm], key[perm].astype(np.int64)
+    first = {}
+    for s_, k in zip(seq.tolist(), key.tolist()):
+        first[k] = min(s_, first.get(k, s_))
+    want = sorted(set(seq.tolist()) - set(first.values()))
+    assert dedup.cluster_min_losers(seq, key, None).tolist() == want
+    # at the cap none of key 7's docs lose; the small keys still decide
+    held = set(seq[key == 7].tolist())
+    got = dedup.cluster_min_losers(seq, key, dedup.MINHASH_BUCKET_CAP).tolist()
+    assert got == [s_ for s_ in want if s_ not in held]
 
 
 def test_minhash_dedup_driver_rung_job_budget(spark):

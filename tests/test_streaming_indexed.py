@@ -330,10 +330,21 @@ def test_missing_index_meta_with_sealed_segments_raises(
     assert not os.path.exists(os.path.join(state_dir, "_index_meta.json"))
 
 
-def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "run, kind",
+    [
+        (run_exact_dedup_stream_indexed, "seen_state_scan"),
+        (run_near_dedup_stream_exact, "state_scan"),
+    ],
+    ids=["exact", "near"],
+)
+def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch, run, kind):
     """Each phase window starts where the previous one ended: a rows sink
     slowed by 0.5 s shows up in rows_sink_s only, not in the seal_s window
-    before it, and the phases never sum past the batch's addBatch."""
+    before it, and the phases never sum past the batch's addBatch.  Both
+    index streams record the same phases in the same order, and the slow
+    sink patched into ``indexed`` slows both: they write through one
+    body."""
     from dataflow_spark.streaming import indexed
 
     real_sink = indexed.idempotent_parquet_sink
@@ -354,17 +365,18 @@ def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch):
     a = list(range(100, 150))
     write_file(spark, make_rows([(1, a, "cc", 0), (2, a, "cc", 1)]), corpus_dir)
     write_file(spark, make_rows([(11, a, "cc", 30)]), corpus_dir)
-    q = run_exact_dedup_stream_indexed(spark, corpus_dir, out_dir, ckpt)
+    q = run(spark, corpus_dir, out_dir, ckpt)
     q.processAllAvailable()
     add_batch_s = {
         p["batchId"]: p["durationMs"]["addBatch"] / 1000
         for p in q.recentProgress
     }
     q.stop()
-    recs = _metrics(out_dir)
+    recs = _metrics(out_dir, kind)
     assert [m["batch_id"] for m in recs] == [0, 1]
     for m in recs:
         ph = m["phases"]
+        assert list(ph) == ["probe_s", "dedup_s", "seal_s", "rows_sink_s"], ph
         assert ph["rows_sink_s"] >= 0.5, ph
         assert ph["seal_s"] < 0.5, ph
         assert sum(ph.values()) <= add_batch_s[m["batch_id"]], (ph, add_batch_s)
@@ -421,14 +433,17 @@ def test_index_streams_spark_job_budget(spark, tmp_path, monkeypatch, run, budge
     re-materialized batch, a Spark job back inside the probe or the seal)
     fails here instead of in a bench row.  Each batch's jobs are tagged
     with a job group set where its foreachBatch function is entered and
-    counted through the status tracker.  The exact stream runs the
-    (_th, doc_seq) fetch, the row write, and the broadcast of its losers'
-    pairs; every batch here has losers (an in-batch dup in batch 0, one
-    cross-batch dup in batches 1 and 2).  At the previous probe (a Spark
+    counted through the status tracker.  Both index streams run one body:
+    the ``(doc_seq, key)`` fetch and the row write.  The exact stream's
+    third job is the broadcast of its losers' ``doc_seq``, kept on
+    purpose: every batch here has losers (an in-batch dup in batch 0, one
+    cross-batch dup in batches 1 and 2), and the sorted-array UDF that
+    would save the job measured slower on that stream, where it would be
+    the first Python UDF (NOTES.md).  At the previous probe (a Spark
     distinct of the keys, then exact_dedup's shuffle) it ran [5, 6, 6].
-    The near stream runs its ``(doc_seq, band key)`` fetch and the row
-    write; it ran [14, 18, 18] while each batch called ``minhash_dedup``
-    and semi/anti-joined the index hits and survivors in Spark.
+    The near stream ran [14, 18, 18] while each batch called
+    ``minhash_dedup`` and semi/anti-joined the index hits and survivors
+    in Spark.
     The builtin tier runs one job per batch, the sink's write with the
     state store inside its stages, also in the no-data batch 3 that
     follows the last file to advance the watermark."""
