@@ -30,7 +30,6 @@ CLI (spark-submit friendly)::
 from __future__ import annotations
 
 import json
-import os
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -101,35 +100,39 @@ def run_stream_spec(
     out_dir: str,
     checkpoint_dir: str,
 ):
-    """Launch a STREAMING pipeline declared by spec (round 5, VERDICT r4
-    #6): the compose-by-name surface now covers the north-rule path too.
-    The spec's ``stream`` block declares the pipeline SHAPE (watermark,
-    dedup tier, trigger sizing); the data paths are runtime arguments, the
-    same split as spark-submit jobs.
+    """Launch a STREAMING pipeline declared by spec: the one place a stream
+    tier is picked.  The spec's ``stream`` block declares the pipeline
+    SHAPE (dedup tier, watermark, trigger sizing); the data paths are
+    runtime arguments, the same split as spark-submit jobs.
 
     .. code-block:: yaml
 
         name: stream_exact_dedup
         stream:
-          dedup: builtin          # builtin | indexed
+          dedup: builtin          # builtin | indexed | near
           watermark: 10 minutes   # builtin only
           max_files_per_trigger: 1
         stages:                    # optional post-dedup operator chain
           - operator: ContentNullFilter
             params: {input_key: text}
 
-    Two tiers reuse the tested kernels 1:1, so the spec runner inherits
-    their exactly-once sink and resume semantics: ``builtin``
-    (dropDuplicatesWithinWatermark, streaming/pipeline.py) for bounded
-    horizons and ``indexed`` (the generation-segment index,
-    streaming/indexed.py) for durable, unbounded ones.  ``dedup: indexed``
-    owns its own sink and keeps no watermark, so a spec combining it with
-    ``stages`` or ``watermark`` is rejected rather than silently ignored.
-    Returns the started StreamingQuery; the caller drives it."""
+    Each tier is its tested runner, so the spec inherits its exactly-once
+    sink and resume semantics: ``builtin`` is ``run_dedup_filter_stream``
+    (dropDuplicatesWithinWatermark, then ``n_tok >= 1``) for bounded
+    horizons; ``indexed`` (``run_exact_dedup_stream_indexed``) and
+    ``near`` (``run_near_dedup_stream_exact``, MinHash at 16 bands of 128
+    permutations) dedup against a durable generation-segment index.  Every
+    tier runs ``stages`` on its dedup survivors before the sink; the index
+    tiers seal the keys of all survivors, the chain's rejects included.
+    A key a tier would ignore is rejected, not dropped: ``watermark``
+    outside ``builtin`` (the index tiers' horizon is ``expire``).
+    ``max_files_per_trigger`` must be a positive int.  Every check runs
+    before anything is written.  Returns the started StreamingQuery; the
+    caller drives it."""
+    from dataflow_spark.streaming.indexed import run_exact_dedup_stream_indexed
     from dataflow_spark.streaming.pipeline import (
-        file_stream_source,
-        idempotent_parquet_sink,
-        streaming_builtin_dedup,
+        run_dedup_filter_stream,
+        run_near_dedup_stream_exact,
     )
 
     if isinstance(spec, str):
@@ -140,45 +143,30 @@ def run_stream_spec(
     unknown = set(scfg) - {"dedup", "watermark", "max_files_per_trigger"}
     if unknown:
         raise ValueError(f"stream block: unknown key(s) {sorted(unknown)}")
+    runs = {
+        "builtin": run_dedup_filter_stream,
+        "indexed": run_exact_dedup_stream_indexed,
+        "near": run_near_dedup_stream_exact,
+    }
     tier = scfg.get("dedup", "builtin")
-    if tier not in ("builtin", "indexed"):
-        raise ValueError(f"stream.dedup {tier!r}: 'builtin' or 'indexed'")
-    watermark = scfg.get("watermark", "10 minutes")
-    per_trigger = int(scfg.get("max_files_per_trigger", 1))
-    stages = spec.get("stages") or []
-
-    if tier == "indexed":
-        if stages:
-            raise ValueError(
-                "stream.dedup=indexed owns its sink and carries no operator "
-                "chain; drop 'stages' or pick another tier"
-            )
-        if "watermark" in scfg:
-            raise ValueError(
-                "stream.dedup=indexed keeps no watermark (its horizon is "
-                "expire_seen_index); drop 'watermark' or pick 'builtin'"
-            )
-        from dataflow_spark.streaming.indexed import (
-            run_exact_dedup_stream_indexed,
+    if tier not in runs:
+        raise ValueError(f"stream.dedup {tier!r}: 'builtin', 'indexed' or 'near'")
+    per_trigger = scfg.get("max_files_per_trigger", 1)
+    if type(per_trigger) is not int or per_trigger < 1:  # bool is an int
+        raise ValueError(
+            f"stream.max_files_per_trigger {per_trigger!r}: a positive int"
         )
-
-        return run_exact_dedup_stream_indexed(
-            spark, corpus_dir, out_dir, checkpoint_dir,
-            max_files_per_trigger=per_trigger,
-        )
-
-    stream = file_stream_source(spark, corpus_dir, per_trigger)
-    deduped = streaming_builtin_dedup(stream, watermark)
-    out = pipeline_from_spec(spec).run(deduped) if stages else deduped
-    sink = idempotent_parquet_sink(
-        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
-    )
-    return (
-        out.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    kw = {"max_files_per_trigger": per_trigger}
+    if "watermark" in scfg:
+        if tier != "builtin":
+            raise ValueError(
+                f"stream.dedup={tier} keeps no watermark (its horizon is the "
+                "index's expire); drop 'watermark' or pick 'builtin'"
+            )
+        kw["watermark_delay"] = scfg["watermark"]
+    if spec.get("stages"):
+        kw["stages"] = pipeline_from_spec(spec)
+    return runs[tier](spark, corpus_dir, out_dir, checkpoint_dir, **kw)
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -35,12 +35,13 @@ Design:
   holding a sealed key lose and ``dedup.cluster_min_losers`` picks the
   min-``doc_seq`` survivors among the rest (no bucket cap for exact keys,
   ``MINHASH_BUCKET_CAP`` for band keys).  The survivors' keys are sealed
-  without a Spark job and the rows written.  Each stream passes its own
-  loser filter, the form that measured faster for it (NOTES.md, "One
-  driver-decided sink"): the exact stream a broadcast left-anti join on
-  ``doc_seq``, since ``_not_in_sorted_udf`` would be the first Python UDF
-  it runs; the near stream ``_not_in_sorted_udf``, since it runs the band
-  UDF anyway and a broadcast was slower there.
+  without a Spark job and their rows written, through the optional
+  post-dedup ``stages`` chain (``core.spec.run_stream_spec``).  Each
+  stream passes its own loser filter, the form that measured faster for
+  it (NOTES.md, "One driver-decided sink"): the exact stream a broadcast
+  left-anti join on ``doc_seq``, since ``_not_in_sorted_udf`` would be
+  the first Python UDF it runs; the near stream ``_not_in_sorted_udf``,
+  since it runs the band UDF anyway and a broadcast was slower there.
 - **Format pin.**  ``<name>/_index_meta.json`` records ``{"format": 2}``.
   A v1 index (bucketed parquet segments, geometry meta) or sealed
   generations without the meta file are refused, never misread.
@@ -268,6 +269,7 @@ def _run_index_stream(
     drop_losers: Callable[[DataFrame, np.ndarray], DataFrame],
     name: str = SEEN_STATE_DIRNAME,
     kind: str = "seen_state_scan",
+    stages: Callable[[DataFrame], DataFrame] | None = None,
 ):
     """Start the file stream with the one ``foreachBatch`` body of both
     index streams, over ``SegmentIndex(out_dir, name, kind)``.  Per batch:
@@ -275,8 +277,8 @@ def _run_index_stream(
     key) in one Arrow fetch, probe the distinct keys; docs holding a
     sealed key lose, ``cluster_min_losers`` at ``cap`` decides among the
     rest; ``drop_losers(df, losers)`` (sorted int64 ``doc_seq``) builds
-    the survivors, whose keys are sealed before their rows are written
-    under ``out_dir``."""
+    the survivors, whose keys are sealed before ``stages(survivors)``
+    (the post-dedup chain, when given) is written under ``out_dir``."""
     index = SegmentIndex(out_dir, name, kind)
     rows_sink = idempotent_parquet_sink(
         out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
@@ -295,6 +297,8 @@ def _run_index_stream(
             losers = np.union1d(hit, cluster_min_losers(seq[rest], key[rest], cap))
             gen.mark("dedup_s")
             survivors = drop_losers(df, losers) if len(losers) else df
+            if stages:
+                survivors = stages(survivors)
             gen.seal(
                 key[~_sorted_member(losers, seq)],
                 lambda: rows_sink(survivors, batch_id),
@@ -317,6 +321,7 @@ def run_exact_dedup_stream_indexed(
     out_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
+    stages: Callable[[DataFrame], DataFrame] | None = None,
 ):
     """First-seen exact dedup over the stream with the generation-segment
     index keyed on the token-array hash ``_th = xxhash64(tokens)``.  Emits
@@ -324,7 +329,8 @@ def run_exact_dedup_stream_indexed(
     batch ``dedup.exact_dedup``) exactly-once under ``out_dir/batch_id=N``.
 
     Runs ``_run_index_stream`` with no bucket cap; the losers leave the
-    batch through one broadcast left-anti join on ``doc_seq``.  ``doc_seq``
+    batch through one broadcast left-anti join on ``doc_seq``; ``stages``
+    then runs on the survivors before their rows are written.  ``doc_seq``
     must be unique per row, as the corpus assigns it."""
 
     def drop_losers(df: DataFrame, losers: np.ndarray) -> DataFrame:
@@ -339,6 +345,7 @@ def run_exact_dedup_stream_indexed(
         lambda df: df.select("doc_seq", F.xxhash64("tokens").alias("_th")),
         None,
         drop_losers,
+        stages=stages,
     )
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -313,14 +314,15 @@ def run_dedup_filter_stream(
     checkpoint_dir: str,
     watermark_delay: str = "10 minutes",
     max_files_per_trigger: int = 1,
-    filters: list | None = None,
+    stages: Callable[[DataFrame], DataFrame] | None = None,
     dedup_mode: str = "builtin",
 ):
     """The full streaming pipeline: source -> watermark -> exact dedup
-    (``streaming_builtin_dedup``) -> rule filters -> exactly-once sink.
-    Returns the started query; caller drives it (processAllAvailable in
-    tests) and can kill/restart with the same checkpoint_dir to prove
-    resume.
+    (``streaming_builtin_dedup``) -> ``n_tok >= 1`` -> ``stages`` (a
+    DataFrame -> DataFrame chain such as a ``core.stage.Pipeline``) ->
+    exactly-once sink.  Returns the started query; caller drives it
+    (processAllAvailable in tests) and can kill/restart with the same
+    checkpoint_dir to prove resume.
 
     Dedup keeps one survivor per token-array hash, taken from the
     micro-batch where that hash first arrived; which row of that batch
@@ -339,8 +341,8 @@ def run_dedup_filter_stream(
     stream = file_stream_source(spark, corpus_dir, max_files_per_trigger)
     deduped = streaming_builtin_dedup(stream, watermark_delay)
     filtered = deduped.where(keep_n_tok_range(1, 10**9))
-    for cond in filters or []:
-        filtered = filtered.where(cond)
+    if stages:
+        filtered = stages(filtered)
     sink = idempotent_parquet_sink(
         out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
     )
@@ -366,6 +368,7 @@ def run_near_dedup_stream_exact(
     bands: int = 16,
     num_perm: int = 128,
     token_ngram: int = 3,
+    stages: Callable[[DataFrame], DataFrame] | None = None,
 ):
     """Streaming near-dedup with the reference's sequential
     query-then-insert LSH semantics (minhash_deduplicate_filter.py:66-83):
@@ -378,7 +381,8 @@ def run_near_dedup_stream_exact(
     ``dedup.MINHASH_BUCKET_CAP`` — the batch ``minhash_dedup`` decision,
     which coincides with the sequential loop on chain-free clusters.  The
     losers leave the batch through the sorted-array ``_not_in_sorted_udf``
-    filter on ``doc_seq``.
+    filter on ``doc_seq``; ``stages`` then runs on the survivors before
+    their rows are written.
 
     The fetch ceiling is 16 B × ``bands`` per doc on the driver (256 B/doc
     at 16 bands: ~0.6 MB for a 2,400-doc trigger, 256 MB at 1M docs per
@@ -403,6 +407,7 @@ def run_near_dedup_stream_exact(
         lambda df, losers: df.where(_not_in_sorted_udf(losers)(F.col("doc_seq"))),
         name="_band_state",
         kind="state_scan",
+        stages=stages,
     )
 
 

@@ -14,6 +14,13 @@ Launch (multi-executor cluster, north rule):
       --corpus /data/tokenized_corpus --out /data/clean --checkpoint /ckpt/clean \
       --watermark "10 minutes"
 
+The flags build a streaming spec and ``core.spec.run_stream_spec`` runs it
+on this job's session: ``--mode exact`` is the ``builtin`` tier, ``--mode
+near`` the ``near`` tier; ``--min-tok``/``--max-tok`` become a
+``GeneralFilter`` stage ``n_tok >= MIN AND n_tok < MAX`` on both;
+``--watermark`` enters the spec only when given, so ``--mode near
+--watermark ...`` is rejected like the spec key.
+
 The listing threshold keeps the file source from running a parallel-listing
 job in every trigger of more than 32 files; ``dataflow_spark.session.get_spark``
 sets the same value, but this entry point builds its own session.
@@ -33,52 +40,50 @@ from __future__ import annotations
 import argparse
 
 
-def main():
+def main(argv: list[str] | None = None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--corpus", required=True, help="tokenized-corpus dir / Iceberg table")
     ap.add_argument("--out", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--watermark", default="10 minutes")
+    ap.add_argument(
+        "--watermark", help="builtin dedup horizon (exact mode only; default 10 minutes)"
+    )
     ap.add_argument("--max-files-per-trigger", type=int, default=8)
     ap.add_argument(
         "--mode", choices=["exact", "near"], default="exact",
-        help="exact: watermark dedup + n_tok filter; near: MinHash near-dedup "
-        "on the durable band index (--watermark/--min-tok/--max-tok: exact only)",
+        help="exact: watermark exact dedup (builtin tier); near: MinHash "
+        "near-dedup on the durable band index",
     )
-    ap.add_argument("--min-tok", type=int, default=8)
-    ap.add_argument("--max-tok", type=int, default=100000)
+    ap.add_argument("--min-tok", type=int, default=8, help="keep n_tok >= MIN-TOK")
+    ap.add_argument("--max-tok", type=int, default=100000, help="keep n_tok < MAX-TOK")
     ap.add_argument("--once", action="store_true", help="process available data then exit")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+
+    stream = {
+        "dedup": {"exact": "builtin", "near": "near"}[args.mode],
+        "max_files_per_trigger": args.max_files_per_trigger,
+    }
+    if args.watermark is not None:
+        stream["watermark"] = args.watermark
+    spec = {
+        "name": "stream_job",
+        "stream": stream,
+        "stages": [{
+            "operator": "GeneralFilter",
+            "params": {"predicates": [
+                f"n_tok >= {args.min_tok} AND n_tok < {args.max_tok}"
+            ]},
+        }],
+    }
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("dataflow_spark_stream").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from dataflow_spark.operators.filters import keep_n_tok_range
-    from dataflow_spark.streaming.pipeline import (
-        run_dedup_filter_stream,
-        run_near_dedup_stream_exact,
-    )
+    from dataflow_spark.core.spec import run_stream_spec
 
-    if args.mode == "exact":
-        q = run_dedup_filter_stream(
-            spark,
-            args.corpus,
-            args.out,
-            args.checkpoint,
-            watermark_delay=args.watermark,
-            max_files_per_trigger=args.max_files_per_trigger,
-            filters=[keep_n_tok_range(args.min_tok, args.max_tok)],
-        )
-    else:
-        q = run_near_dedup_stream_exact(
-            spark,
-            args.corpus,
-            args.out,
-            args.checkpoint,
-            max_files_per_trigger=args.max_files_per_trigger,
-        )
+    q = run_stream_spec(spark, spec, args.corpus, args.out, args.checkpoint)
     if args.once:
         q.processAllAvailable()
         q.stop()

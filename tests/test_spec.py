@@ -143,96 +143,150 @@ def test_code_spec_matches_composed_pipeline(spark):
     assert got == composed and len(got) > 0
 
 
-def test_stream_spec_matches_batch(spark, tmp_path):
-    """specs/stream_exact_dedup.yaml (round-5 streaming spec surface):
-    the spec-launched stream produces the same survivor set as the batch
-    chain (exact dedup by token hash + the same registry filters), with
-    in-batch AND cross-batch dups dropped and the filter chain applied."""
+def _stream_corpus(spark, corpus_dir):
+    """Three one-file triggers with in-batch and cross-batch exact dups of
+    ``a`` and of ``b``, plus two rows that survive dedup and die in the
+    specs' post-dedup chain: (31, []) in WordNumberFilter (the builtin
+    tier's ``n_tok >= 1`` drops it first) and (32, null text) in
+    ContentNullFilter."""
+    from tests.test_streaming import make_rows, write_file
+
+    a, b, c = list(range(100, 140)), list(range(500, 540)), list(range(900, 940))
+    write_file(spark, make_rows([(1, a, "cc", 0), (2, a, "cc", 1)]), corpus_dir)
+    write_file(spark, make_rows([(11, a, "cc", 30), (12, b, "web", 31)]), corpus_dir)
+    null_text = make_rows([(32, list(range(1300, 1340)), "cc", 63)])
+    null_text = [r[:2] + (None,) + r[3:] for r in null_text]
+    write_file(
+        spark,
+        make_rows([(21, b, "web", 60), (22, c, "book", 61), (31, [], "cc", 62)])
+        + null_text,
+        corpus_dir,
+    )
+
+
+def _spec_chain(batch):
+    from dataflow_spark.core.stage import get_operator
+
+    batch = get_operator("ContentNullFilter", input_key="text").apply(batch)
+    return get_operator(
+        "WordNumberFilter", input_key="text", min_words=1, max_words=100000
+    ).apply(batch)
+
+
+@pytest.mark.parametrize("tier", ["builtin", "indexed"])
+def test_stream_spec_matches_batch(spark, tmp_path, tier):
+    """specs/stream_exact_dedup.yaml on each exact tier: the spec-launched
+    stream produces the same survivor set as the batch chain (exact dedup
+    by token hash + the same registry filters), with in-batch AND
+    cross-batch dups dropped and the filter chain applied to the dedup
+    survivors.  The indexed tier also keeps the batch's min-doc_seq row of
+    each hash; on the builtin tier that row is Spark's pick."""
     from dataflow_spark.core.spec import load_spec, run_stream_spec
+    from dataflow_spark.operators.dedup import exact_dedup
+
+    corpus_dir, out_dir, ckpt = (
+        str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
+    )
+    _stream_corpus(spark, corpus_dir)
+    spec = load_spec("specs/stream_exact_dedup.yaml")
+    if tier == "indexed":
+        spec["stream"] = {"dedup": "indexed", "max_files_per_trigger": 1}
+
+    q = run_stream_spec(spark, spec, corpus_dir, out_dir, ckpt)
+    q.processAllAvailable()
+    q.stop()
+
+    out = spark.read.parquet(out_dir).withColumn("_th", F.xxhash64("tokens"))
+    got = {(r._th, r.doc_seq) for r in out.select("_th", "doc_seq").collect()}
+    batch = _spec_chain(exact_dedup(
+        spark.read.parquet(corpus_dir).withColumn("_th", F.xxhash64("tokens")),
+        hash_col="_th",
+    ))
+    want = {(r._th, r.doc_seq) for r in batch.select("_th", "doc_seq").collect()}
+    assert {h for h, _ in got} == {h for h, _ in want}
+    if tier == "indexed":
+        assert got == want
+    assert out.count() == 3  # empty-token and null-text rows filtered
+
+
+def test_stream_spec_near_matches_batch(spark, tmp_path):
+    """specs/stream_near_dedup.yaml through run_stream_spec keeps the same
+    survivors as batch minhash_dedup at the near tier's bands/num_perm,
+    then the same registry chain: the in-batch exact dup, the cross-batch
+    near dup of ``b`` (one token of 40 edited) and both chain rejects are
+    gone."""
+    from dataflow_spark.core.spec import run_stream_spec
+    from dataflow_spark.operators.dedup import minhash_dedup
     from tests.test_streaming import make_rows, write_file
 
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
-    a, b, c = list(range(100, 140)), list(range(500, 540)), list(range(900, 940))
-    write_file(spark, make_rows([(1, a, "cc", 0), (2, a, "cc", 1)]), corpus_dir)
-    write_file(spark, make_rows([(11, a, "cc", 30), (12, b, "web", 31)]), corpus_dir)
-    # (31, []) survives dedup but dies in the WordNumberFilter stage —
-    # proves the post-dedup operator chain actually runs on the stream
-    write_file(
-        spark,
-        make_rows([(21, b, "web", 60), (22, c, "book", 61), (31, [], "cc", 62)]),
-        corpus_dir,
-    )
+    _stream_corpus(spark, corpus_dir)
+    near_b = [7] + list(range(501, 540))
+    write_file(spark, make_rows([(41, near_b, "web", 90)]), corpus_dir)
 
     q = run_stream_spec(
-        spark, load_spec("specs/stream_exact_dedup.yaml"),
-        corpus_dir, out_dir, ckpt,
+        spark, "specs/stream_near_dedup.yaml", corpus_dir, out_dir, ckpt
     )
     q.processAllAvailable()
     q.stop()
 
-    got = {
-        r._th for r in spark.read.parquet(out_dir)
-        .select(F.xxhash64("tokens").alias("_th")).collect()
-    }
-    # batch equivalent: exact dedup by token hash + the same registry chain
-    from dataflow_spark.core.stage import get_operator
-    from dataflow_spark.operators.dedup import exact_dedup
-
-    batch = exact_dedup(
-        spark.read.parquet(corpus_dir).withColumn("_th", F.xxhash64("tokens")),
-        hash_col="_th",
-    )
-    batch = get_operator("ContentNullFilter", input_key="text").apply(batch)
-    batch = get_operator(
-        "WordNumberFilter", input_key="text", min_words=1, max_words=100000
-    ).apply(batch)
-    want = {r._th for r in batch.select("_th").collect()}
-    assert got == want
-    assert spark.read.parquet(out_dir).count() == 3  # empty-token row filtered
+    got = {r.doc_seq for r in spark.read.parquet(out_dir).select("doc_seq").collect()}
+    batch = _spec_chain(minhash_dedup(
+        spark.read.parquet(corpus_dir), use_tokens=True, token_ngram=3,
+        bands=16, num_perm=128,
+    ))
+    assert got == {r.doc_seq for r in batch.select("doc_seq").collect()}
+    assert got == {1, 12, 22}
 
 
 def test_stream_spec_indexed_tier_and_rejections(spark, tmp_path):
-    """The indexed tier delegates to the generation-segment operator; a
-    spec combining it with stages or a watermark is rejected, as are an
-    unknown tier and the removed n_shards key."""
-    import pytest as _pytest
-
+    """The index tiers take a post-dedup chain; a watermark on either is
+    rejected, as are an unknown tier and the removed n_shards key — all
+    before anything is written."""
     from dataflow_spark.core.spec import run_stream_spec
     from tests.test_streaming import make_rows, write_file
 
     corpus_dir = str(tmp_path / "c")
     write_file(spark, make_rows([(1, [1, 2, 3], "cc", 0)]), corpus_dir)
 
-    with _pytest.raises(ValueError, match="owns its sink"):
-        run_stream_spec(
-            spark,
-            {"stream": {"dedup": "indexed"},
-             "stages": [{"operator": "ContentNullFilter"}]},
-            corpus_dir, str(tmp_path / "o1"), str(tmp_path / "k1"),
-        )
-    with _pytest.raises(ValueError, match="no watermark"):
-        run_stream_spec(
-            spark, {"stream": {"dedup": "indexed", "watermark": "1 hour"}},
-            corpus_dir, str(tmp_path / "o1"), str(tmp_path / "k1"),
-        )
+    def rejects(match, stream):
+        with pytest.raises(ValueError, match=match):
+            run_stream_spec(
+                spark, {"stream": stream},
+                corpus_dir, str(tmp_path / "o1"), str(tmp_path / "k1"),
+            )
+
+    for tier in ("indexed", "near"):
+        rejects("no watermark", {"dedup": tier, "watermark": "1 hour"})
     for tier in ("nope", "custom", "tws"):
-        with _pytest.raises(ValueError, match="'builtin' or 'indexed'"):
-            run_stream_spec(
-                spark, {"stream": {"dedup": tier}},
-                corpus_dir, str(tmp_path / "o2"), str(tmp_path / "k2"),
-            )
-    for tier in ("builtin", "indexed"):
-        with _pytest.raises(ValueError, match="unknown key.*n_shards"):
-            run_stream_spec(
-                spark, {"stream": {"dedup": tier, "n_shards": 8}},
-                corpus_dir, str(tmp_path / "o2"), str(tmp_path / "k2"),
-            )
+        rejects("'builtin', 'indexed' or 'near'", {"dedup": tier})
+    for tier in ("builtin", "indexed", "near"):
+        rejects("unknown key.*n_shards", {"dedup": tier, "n_shards": 8})
+    assert not (tmp_path / "o1").exists() and not (tmp_path / "k1").exists()
     q = run_stream_spec(
-        spark, {"stream": {"dedup": "indexed"}},
+        spark,
+        {"stream": {"dedup": "indexed"},
+         "stages": [{"operator": "ContentNullFilter"}]},
         corpus_dir, str(tmp_path / "o3"), str(tmp_path / "k3"),
     )
     q.processAllAvailable()
     q.stop()
     assert spark.read.parquet(str(tmp_path / "o3")).count() == 1
+
+
+@pytest.mark.parametrize("value", [0, -1, True, 2.7], ids=str)
+def test_stream_spec_rejects_bad_max_files_per_trigger(spark, tmp_path, value):
+    """``max_files_per_trigger`` must be a positive int: 0 and -1 would
+    fail only inside the started query, after its checkpoint dir exists,
+    and True and 2.7 would run as 1 and 2.  Each is refused before
+    anything is written."""
+    from dataflow_spark.core.spec import run_stream_spec
+
+    with pytest.raises(ValueError, match="max_files_per_trigger"):
+        run_stream_spec(
+            spark, {"stream": {"max_files_per_trigger": value}},
+            str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
+        )
+    assert list(tmp_path.iterdir()) == []

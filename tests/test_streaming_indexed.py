@@ -12,12 +12,14 @@ import json
 import os
 import re
 import time
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from dataflow_spark.core.stage import get_operator
 from dataflow_spark.operators.dedup import exact_dedup
 from dataflow_spark.streaming.indexed import (
     SEEN_STATE_DIRNAME,
@@ -424,8 +426,15 @@ def _count_jobs(spark, run, group, batches, *args, **kwargs):
         (run_exact_dedup_stream_indexed, [3, 3, 3]),
         (run_near_dedup_stream_exact, [2, 2, 2]),
         (run_dedup_filter_stream, [1, 1, 1, 1]),
+        (
+            partial(
+                run_exact_dedup_stream_indexed,
+                stages=get_operator("GeneralFilter", predicates=["n_tok >= 1"]),
+            ),
+            [3, 3, 3],
+        ),
     ],
-    ids=["exact", "near", "builtin"],
+    ids=["exact", "near", "builtin", "exact_stage"],
 )
 def test_index_streams_spark_job_budget(spark, tmp_path, monkeypatch, run, budget):
     """Spark jobs per micro-batch of both index streams and the builtin
@@ -446,7 +455,8 @@ def test_index_streams_spark_job_budget(spark, tmp_path, monkeypatch, run, budge
     in Spark.
     The builtin tier runs one job per batch, the sink's write with the
     state store inside its stages, also in the no-data batch 3 that
-    follows the last file to advance the watermark."""
+    follows the last file to advance the watermark.  A post-dedup filter
+    stage on the exact stream adds no job: it fuses into the row write."""
     group = f"jobs-{os.path.basename(tmp_path)}-b"
     batches = _tag_batches(spark, monkeypatch, group)
     corpus_dir, out_dir, ckpt = (

@@ -3,12 +3,14 @@
 Builds the --py-files zip into the test's tmp dir (the committed
 dist/dataflow_spark.zip is left alone), then runs jobs/stream_job.py under a
 real ``spark-submit`` subprocess against a 3-row corpus, in both ``--mode``
-values, and checks the exactly-once sink output.
+values, and checks the exactly-once sink output.  The flag-to-spec mapping
+of the near mode is also driven in-process, through the job's ``main``.
 """
 
 from __future__ import annotations
 
 import os
+import runpy
 import shutil
 import subprocess
 import sys
@@ -113,3 +115,34 @@ def test_spark_submit_pyfiles_multi_executor(spark, tmp_path):
     )
     # d1/d2 share one batch: the builtin tier keeps one, Spark picks which
     assert got in ({"d000001", "d000003"}, {"d000002", "d000003"})
+
+
+def test_stream_job_near_flags(spark, tmp_path):
+    """``--mode near`` rejects ``--watermark`` before anything is written,
+    and its survivors pass ``--min-tok``/``--max-tok`` (n_tok in [5, 8)):
+    d1 (8 tokens) and its exact dup d2 are out, d3 (4) is too short, d4
+    (6) stays."""
+    main = runpy.run_path(os.path.join(ROOT, "jobs", "stream_job.py"))["main"]
+    corpus_dir, out_dir, ckpt = (
+        str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
+    )
+    write_file(
+        spark,
+        make_rows(
+            [
+                (1, toks(1, 2, 3, 4, 5, 6, 7, 8), "cc", 0),
+                (2, toks(1, 2, 3, 4, 5, 6, 7, 8), "cc", 1),
+                (3, toks(9, 10, 11, 12), "web", 2),
+                (4, toks(20, 21, 22, 23, 24, 25), "web", 3),
+            ]
+        ),
+        corpus_dir,
+    )
+    argv = ["--corpus", corpus_dir, "--out", out_dir, "--checkpoint", ckpt,
+            "--mode", "near", "--once"]
+    with pytest.raises(ValueError, match="no watermark"):
+        main(argv + ["--watermark", "1 hour"])
+    assert not os.path.exists(out_dir) and not os.path.exists(ckpt)
+    main(argv + ["--min-tok", "5", "--max-tok", "8"])
+    got = {r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()}
+    assert got == {"d000004"}
