@@ -58,6 +58,19 @@ def load_spec(path: str) -> dict:
     return spec
 
 
+def _refuse_unknown_keys(spec: dict, *extra: str) -> None:
+    """A top-level key no runner reads (``stage`` for ``stages``, or
+    ``stream`` given to a batch runner) raises, naming it, before
+    anything is written."""
+    allowed = {"name", "stages", *extra}
+    unknown = set(spec) - allowed
+    if unknown:
+        raise ValueError(
+            f"spec: unknown top-level key(s) {sorted(unknown)}; "
+            f"allowed: {sorted(allowed)}"
+        )
+
+
 def pipeline_from_spec(spec: dict) -> Pipeline:
     """Resolve ``spec['stages']`` through the operator registry into a
     Pipeline.  Fails fast with the offending stage index/name on an unknown
@@ -86,10 +99,12 @@ def pipeline_from_spec(spec: dict) -> Pipeline:
 
 def run_spec(df: DataFrame, spec: dict | str) -> DataFrame:
     """Compose and run a spec'd pipeline over ``df`` (spec dict or file
-    path).  ``Pipeline.run`` revalidates the column DAG against the real
-    input schema before building the lazy expression."""
+    path; top-level keys ``name`` and ``stages`` only).  ``Pipeline.run``
+    revalidates the column DAG against the real input schema before
+    building the lazy expression."""
     if isinstance(spec, str):
         spec = load_spec(spec)
+    _refuse_unknown_keys(spec)
     return pipeline_from_spec(spec).run(df)
 
 
@@ -124,7 +139,8 @@ def run_stream_spec(
     permutations) dedup against a durable generation-segment index.  Every
     tier runs ``stages`` on its dedup survivors before the sink; the index
     tiers seal the keys of all survivors, the chain's rejects included.
-    A key a tier would ignore is rejected, not dropped: ``watermark``
+    A key a tier would ignore is rejected, not dropped: a top-level key
+    other than ``name``, ``stages`` and ``stream``, and ``watermark``
     outside ``builtin`` (the index tiers' horizon is ``expire``).
     ``max_files_per_trigger`` must be a positive int.  Every check runs
     before anything is written.  Returns the started StreamingQuery; the
@@ -137,6 +153,7 @@ def run_stream_spec(
 
     if isinstance(spec, str):
         spec = load_spec(spec)
+    _refuse_unknown_keys(spec, "stream")
     scfg = spec.get("stream")
     if not isinstance(scfg, dict):
         raise ValueError("streaming spec needs a 'stream' mapping")
@@ -186,6 +203,7 @@ def main(argv: list[str] | None = None) -> None:
     from dataflow_spark.session import get_spark
 
     spec = load_spec(args.spec)
+    _refuse_unknown_keys(spec)
     pipe = pipeline_from_spec(spec)
     spark = get_spark(app_name=spec.get("name", "spec_pipeline"))
     df = spark.read.parquet(args.input)

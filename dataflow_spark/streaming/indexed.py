@@ -36,7 +36,8 @@ Design:
   min-``doc_seq`` survivors among the rest (no bucket cap for exact keys,
   ``MINHASH_BUCKET_CAP`` for band keys).  The survivors' keys are sealed
   without a Spark job and their rows written, through the optional
-  post-dedup ``stages`` chain (``core.spec.run_stream_spec``).  Each
+  post-dedup ``stages`` chain (``core.spec.run_stream_spec``), by
+  ``pipeline.write_batch_once``, the one writer of every tier.  Each
   stream passes its own loser filter, the form that measured faster for
   it (NOTES.md, "One driver-decided sink"): the exact stream a broadcast
   left-anti join on ``doc_seq``, since ``_not_in_sorted_udf`` would be
@@ -55,7 +56,15 @@ Design:
 - **Exactly-once / replay**: a generation file and a row output are each
   written once (the file's existence, the output's ``_SUCCESS``) and the
   probe reads only generations < N, so a replayed batch recomputes
-  identical survivors and re-writes nothing.
+  identical survivors and re-writes nothing: no rows, no generation, no
+  record.
+- **Metrics**: each written batch gets one ``v: 1`` record in
+  ``out_dir/_metrics.jsonl`` (keys in ``pipeline.write_batch_once``) with
+  ``tier`` ``indexed`` or ``near``; ``phases`` holds the disjoint windows
+  ``probe_s`` (persist, key fetch and probe), ``dedup_s``, ``seal_s`` and
+  ``rows_sink_s``; ``state_bytes_read`` is 8 B per key hit,
+  ``state_batches_scanned`` the generations holding a hit and
+  ``state_batches_total`` the generations probed.
 
 Reference semantics mirrored by the exact stream: first-seen exact dedup by
 token-array hash, identical survivors to batch ``dedup.exact_dedup``
@@ -76,10 +85,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataflow_spark.operators.dedup import _sorted_member, cluster_min_losers
-from dataflow_spark.streaming.pipeline import (
-    file_stream_source,
-    idempotent_parquet_sink,
-)
+from dataflow_spark.streaming.pipeline import file_stream_source, write_batch_once
 
 SEEN_STATE_DIRNAME = "_seen_state"
 INDEX_FORMAT = 2
@@ -147,34 +153,40 @@ def _check_format(state_dir: str) -> None:
 class SegmentIndex:
     """One generation-segment index over an int64 key column ``_th``, kept
     beside a stream's row output: one sorted, unique ``.npy`` key file per
-    sealed generation under ``out_dir/<name>``, one ``kind`` record per
-    batch in ``out_dir/_metrics.jsonl``.  Opening it checks (or, for a new
-    index, records) the format in ``_index_meta.json``.
+    sealed generation under ``out_dir/<name>``.  Opening it checks (or, for
+    a new index, records) the format in ``_index_meta.json``.
 
     Per micro-batch: ``probe`` the batch's keys, then ``seal`` the
     generation with the keys its survivors add."""
 
-    def __init__(
-        self,
-        out_dir: str,
-        name: str = SEEN_STATE_DIRNAME,
-        kind: str = "seen_state_scan",
-    ):
-        self.out_dir = out_dir
+    def __init__(self, out_dir: str, name: str = SEEN_STATE_DIRNAME):
         self.state_dir = os.path.join(out_dir, name)
-        self.kind = kind
         _check_format(self.state_dir)
-
-    def probe(self, keys: np.ndarray, batch_id: int, t0: float) -> "_Generation":
-        """Probe the generations sealed before ``batch_id`` for ``keys``
-        (the batch's sorted, unique int64 keys).  The result's ``hits``
-        holds the keys already sealed.  ``t0`` is the ``time.monotonic()``
-        reading taken before the caller fetched the keys: the ``probe_s``
-        window opens there, so it covers the fetch."""
-        return _Generation(self, keys, batch_id, t0)
 
     def _path(self, b: int) -> str:
         return os.path.join(self.state_dir, f"batch_id={b}.npy")
+
+    def probe(self, keys: np.ndarray, batch_id: int) -> tuple[np.ndarray, int, int]:
+        """Probe the generations sealed before ``batch_id`` for ``keys``
+        (the batch's sorted, unique int64 keys).  Returns the keys already
+        sealed, the number of generations holding any of them and the
+        number of generations probed."""
+        prior = _list_sealed_batches(self.state_dir, upto=batch_id)
+        hit = np.zeros(len(keys), dtype=bool)
+        scanned = 0
+        for b in prior:
+            member = _sorted_member(np.load(self._path(b), mmap_mode="r"), keys)
+            scanned += bool(member.any())
+            hit |= member
+        return keys[hit], scanned, len(prior)
+
+    def seal(self, batch_id: int, keys: np.ndarray) -> None:
+        """Seal ``keys`` (int64, the keys this batch's survivors add) as
+        generation ``batch_id``, durably, before the caller writes the
+        batch's rows.  A generation already sealed (a replayed batch) is
+        not rewritten."""
+        if not os.path.exists(self._path(batch_id)):
+            _write_keys(self._path(batch_id), np.unique(np.asarray(keys, np.int64)))
 
     def compact(self) -> int:
         """Offline compaction (Iceberg ``rewrite_data_files`` in prod):
@@ -204,60 +216,6 @@ class SegmentIndex:
         return len(old)
 
 
-class _Generation:
-    """One micro-batch's pass over a ``SegmentIndex``: the probe runs at
-    construction (``hits`` = the batch's keys already sealed), ``seal``
-    appends the generation.  ``phases`` holds disjoint wall-clock windows
-    — each ``mark`` closes the window the previous one opened."""
-
-    def __init__(
-        self, index: SegmentIndex, keys: np.ndarray, batch_id: int, t0: float
-    ):
-        self.index, self.batch_id = index, batch_id
-        self.phases: dict[str, float] = {}
-        self._t = t0
-        self.prior = _list_sealed_batches(index.state_dir, upto=batch_id)
-        hit = np.zeros(len(keys), dtype=bool)
-        self.scanned = 0
-        for b in self.prior:
-            member = _sorted_member(np.load(index._path(b), mmap_mode="r"), keys)
-            self.scanned += bool(member.any())
-            hit |= member
-        self.hits = keys[hit]
-        self.mark("probe_s")
-
-    def mark(self, name: str) -> None:
-        t = time.monotonic()
-        self.phases[name] = round(t - self._t, 3)
-        self._t = t
-
-    def seal(self, new_keys: np.ndarray, write_rows: Callable[[], None]) -> None:
-        """Seal ``new_keys`` (int64, the keys this batch's survivors add)
-        as this batch's generation, then run ``write_rows()``, the caller's
-        row sink — the generation is durable before the batch can commit.
-        A generation already sealed (a replayed batch) is not rewritten,
-        and the scan record is written only with a fresh row output."""
-        ix, b = self.index, self.batch_id
-        if not os.path.exists(ix._path(b)):
-            _write_keys(ix._path(b), np.unique(np.asarray(new_keys, np.int64)))
-        self.mark("seal_s")
-        fresh_output = not os.path.exists(
-            os.path.join(ix.out_dir, f"batch_id={b}", "_SUCCESS")
-        )
-        write_rows()
-        self.mark("rows_sink_s")
-        if fresh_output:
-            with open(os.path.join(ix.out_dir, "_metrics.jsonl"), "a") as fh:
-                fh.write(json.dumps({
-                    "batch_id": b,
-                    "kind": ix.kind,
-                    "state_bytes_read": 8 * len(self.hits),
-                    "state_batches_scanned": self.scanned,
-                    "state_batches_total": len(self.prior),
-                    "phases": self.phases,
-                }) + "\n")
-
-
 def _run_index_stream(
     spark: SparkSession,
     corpus_dir: str,
@@ -267,41 +225,49 @@ def _run_index_stream(
     keys: Callable[[DataFrame], DataFrame],
     cap: int | None,
     drop_losers: Callable[[DataFrame, np.ndarray], DataFrame],
-    name: str = SEEN_STATE_DIRNAME,
-    kind: str = "seen_state_scan",
+    tier: str = "indexed",
     stages: Callable[[DataFrame], DataFrame] | None = None,
 ):
     """Start the file stream with the one ``foreachBatch`` body of both
-    index streams, over ``SegmentIndex(out_dir, name, kind)``.  Per batch:
-    persist it, fetch ``keys(df)`` (one ``(doc_seq, _th)`` row per doc and
-    key) in one Arrow fetch, probe the distinct keys; docs holding a
-    sealed key lose, ``cluster_min_losers`` at ``cap`` decides among the
-    rest; ``drop_losers(df, losers)`` (sorted int64 ``doc_seq``) builds
-    the survivors, whose keys are sealed before ``stages(survivors)``
-    (the post-dedup chain, when given) is written under ``out_dir``."""
-    index = SegmentIndex(out_dir, name, kind)
-    rows_sink = idempotent_parquet_sink(
-        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
+    index streams, over the ``SegmentIndex`` of ``tier`` (``indexed``:
+    ``_seen_state``, ``near``: ``_band_state``).  Per batch: persist it,
+    fetch ``keys(df)`` (one ``(doc_seq, _th)`` row per doc and key) in one
+    Arrow fetch, probe the distinct keys; docs holding a sealed key lose,
+    ``cluster_min_losers`` at ``cap`` decides among the rest;
+    ``drop_losers(df, losers)`` (sorted int64 ``doc_seq``) builds the
+    survivors, whose keys are sealed before ``stages(survivors)`` (the
+    post-dedup chain, when given) goes to ``pipeline.write_batch_once``
+    with the batch's ``probe_s`` (the fetch and the probe), ``dedup_s``
+    and ``seal_s`` windows."""
+    index = SegmentIndex(
+        out_dir, SEEN_STATE_DIRNAME if tier == "indexed" else "_band_state"
     )
 
     def sink(df: DataFrame, batch_id: int):
-        t0 = time.monotonic()
+        ts = [time.monotonic()]
         df = df.persist()
         try:
             pairs = keys(df).toPandas()
             seq = pairs["doc_seq"].to_numpy(np.int64)
             key = pairs["_th"].to_numpy(np.int64)
-            gen = index.probe(np.unique(key), batch_id, t0)
-            hit = np.unique(seq[_sorted_member(gen.hits, key)])
+            hits, scanned, total = index.probe(np.unique(key), batch_id)
+            ts.append(time.monotonic())
+            hit = np.unique(seq[_sorted_member(hits, key)])
             rest = ~_sorted_member(hit, seq)
             losers = np.union1d(hit, cluster_min_losers(seq[rest], key[rest], cap))
-            gen.mark("dedup_s")
+            ts.append(time.monotonic())
             survivors = drop_losers(df, losers) if len(losers) else df
             if stages:
                 survivors = stages(survivors)
-            gen.seal(
-                key[~_sorted_member(losers, seq)],
-                lambda: rows_sink(survivors, batch_id),
+            index.seal(batch_id, key[~_sorted_member(losers, seq)])
+            ts.append(time.monotonic())
+            phases = {
+                name: round(b - a, 3)
+                for name, a, b in zip(("probe_s", "dedup_s", "seal_s"), ts, ts[1:])
+            }
+            write_batch_once(
+                survivors, out_dir, batch_id, tier, phases,
+                (8 * len(hits), scanned, total),
             )
         finally:
             df.unpersist()
@@ -348,14 +314,3 @@ def run_exact_dedup_stream_indexed(
         stages=stages,
     )
 
-
-def compact_seen_index(out_dir: str) -> int:
-    """``SegmentIndex.compact`` on the exact stream's index under
-    ``out_dir``."""
-    return SegmentIndex(out_dir).compact()
-
-
-def expire_seen_index(out_dir: str, keep_from_batch: int) -> int:
-    """``SegmentIndex.expire`` on the exact stream's index under
-    ``out_dir``."""
-    return SegmentIndex(out_dir).expire(keep_from_batch)

@@ -17,15 +17,28 @@ a real Structured Streaming job:
   streaming/indexed.py is the durable, unbounded-horizon tier;
 * rule filters: the same Catalyst predicates as batch (stateless, fuse);
 * windowed aggregation: tumbling window keyed by (skew-salted) source;
-* sink: ``foreachBatch`` idempotent parquet append keyed by batchId —
-  exactly-once via write-once batch directories + per-partition lineage
-  columns (batch_id, part_id) and per-batch metrics.
+* sink: ``write_batch_once``, the one ``foreachBatch`` writer of every
+  tier — exactly-once via write-once batch directories + per-partition
+  lineage columns (batch_id, part_id), and one metrics record per written
+  batch in ``out_dir/_metrics.jsonl``, the same keys on every tier::
+
+    {"v": 1, "batch_id": 3, "tier": "builtin" | "indexed" | "near",
+     "rows": 812, "tokens": 95391,
+     "phases": {"probe_s": .., "dedup_s": .., "seal_s": .., "rows_sink_s": ..},
+     "state_bytes_read": 64, "state_batches_scanned": 1,
+     "state_batches_total": 3}
+
+  ``rows``/``tokens`` are the rows written and their ``n_tok`` sum.
+  ``phases`` are disjoint wall-clock windows; the builtin tier has only
+  ``rows_sink_s`` and ``null`` for the three ``state_*`` keys (its state
+  lives in Spark's state store).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -241,70 +254,71 @@ def near_dup_candidates_stream(
 # ---------------------------------------------------------------------------
 
 
-def idempotent_parquet_sink(out_dir: str, metrics_path: str | None = None):
-    """foreachBatch writer: write-once per batchId (re-delivered batches after
-    restart are skipped — exactly-once on top of at-least-once), per-partition
-    lineage columns (batch_id, part_id), per-batch metrics JSON.
+def write_batch_once(
+    df: DataFrame,
+    out_dir: str,
+    batch_id: int,
+    tier: str | None = None,
+    phases: dict[str, float] | None = None,
+    state: tuple = (None, None, None),
+) -> None:
+    """The one writer of a micro-batch's rows and of its ``_metrics.jsonl``
+    record.  Writes ``df`` under ``out_dir/batch_id=N`` with the lineage
+    column ``part_id``, unless that dir's ``_SUCCESS`` exists: a replayed
+    batch writes no rows and no record (exactly-once on top of Spark's
+    at-least-once).  With a ``tier`` it then appends one record to
+    ``out_dir/_metrics.jsonl``; ``route_by_source`` passes none and writes
+    no record.
+
+    Every tier's record has the same keys: ``v`` (1), ``batch_id``,
+    ``tier`` (``builtin | indexed | near``), ``rows`` and ``tokens``
+    written, ``phases`` (the caller's disjoint wall-clock windows, then
+    ``rows_sink_s``, this write's own window) and ``state_bytes_read`` /
+    ``state_batches_scanned`` / ``state_batches_total`` from ``state``
+    (``null`` on the builtin tier).
 
     On a real cluster the same pattern targets an Iceberg table where the
     batchId is recorded as a snapshot property (commit-level idempotence)."""
+    # Hive-style batch_id=N dir: the lineage column materializes from the
+    # partition path on read, and _SUCCESS is the idempotence marker.
+    batch_dir = os.path.join(out_dir, f"batch_id={batch_id}")
+    if os.path.exists(os.path.join(batch_dir, "_SUCCESS")):
+        return  # replayed batch — already durable
+    t0 = time.monotonic()
+    out = df.withColumn("part_id", F.spark_partition_id())
+    if tier:
+        # totals ride the write job itself as observation metrics — no
+        # persist of the micro-batch, no second agg job, and the upstream
+        # stateful plan is never re-run.
+        from pyspark.sql import Observation
 
-    def write(df: DataFrame, batch_id: int):
-        # Hive-style batch_id=N dir: the lineage column materializes from the
-        # partition path on read, and dir existence is the idempotence marker.
-        batch_dir = os.path.join(out_dir, f"batch_id={batch_id}")
-        if os.path.exists(os.path.join(batch_dir, "_SUCCESS")):
-            return  # replayed batch — already durable
-        out = df.withColumn("part_id", F.spark_partition_id())
-        obs = None
-        if metrics_path:
-            # totals ride the write job itself as observation metrics — no
-            # persist of the micro-batch, no second agg job, and the
-            # upstream stateful plan is never re-run.  (The previous design
-            # persisted every batch to feed a groupBy('part_id') agg; at the
-            # production design point that doubles the memory footprint of
-            # every micro-batch for a metrics side-channel.)
-            from pyspark.sql import Observation
+        obs = Observation(f"sink_batch_{batch_id}")
+        tok = (F.sum("n_tok") if "n_tok" in out.columns else F.lit(0)).alias("tokens")
+        out = out.observe(obs, F.count(F.lit(1)).alias("rows"), tok)
+    _sink_writer(out).parquet(batch_dir)
+    if not tier:
+        return
+    got = obs.get
+    rec = {
+        "v": 1,
+        "batch_id": batch_id,
+        "tier": tier,
+        "rows": int(got["rows"] or 0),
+        "tokens": int(got["tokens"] or 0),
+        "phases": {**(phases or {}), "rows_sink_s": round(time.monotonic() - t0, 3)},
+        **dict(zip(
+            ("state_bytes_read", "state_batches_scanned", "state_batches_total"),
+            state,
+        )),
+    }
+    with open(os.path.join(out_dir, "_metrics.jsonl"), "a") as fh:
+        fh.write(json.dumps(rec) + "\n")
 
-            obs = Observation(f"sink_batch_{batch_id}")
-            tok = (
-                F.sum("n_tok") if "n_tok" in out.columns else F.lit(0)
-            ).alias("tokens")
-            out = out.observe(obs, F.count(F.lit(1)).alias("rows"), tok)
-        _sink_writer(out).parquet(batch_dir)
-        if metrics_path:
-            got = obs.get
-            # per-partition rows from the just-written parquet footers —
-            # file part-NNNNN maps 1:1 to write-task partition NNNNN (the
-            # value spark_partition_id stamped into the rows).  Footer reads
-            # are driver-side metadata IO, a few KB per file.  Per-partition
-            # token sums, if ever needed, aggregate from the sink itself.
-            import pyarrow.parquet as pq
 
-            parts = []
-            for fname in sorted(os.listdir(batch_dir)):
-                if not fname.endswith(".parquet"):
-                    continue
-                md = pq.read_metadata(os.path.join(batch_dir, fname))
-                if md.num_rows == 0:
-                    continue
-                parts.append(
-                    {
-                        "part_id": int(fname.split("-")[1]),
-                        "rows": md.num_rows,
-                    }
-                )
-            rec = {
-                "batch_id": batch_id,
-                "rows": int(got["rows"] or 0),
-                "tokens": int(got["tokens"] or 0),
-                "partitions": parts,
-            }
-            os.makedirs(os.path.dirname(metrics_path), exist_ok=True)
-            with open(metrics_path, "a") as f:
-                f.write(json.dumps(rec) + "\n")
-
-    return write
+def idempotent_parquet_sink(out_dir: str):
+    """The builtin tier's ``foreachBatch`` writer: ``write_batch_once``
+    with ``tier='builtin'``."""
+    return lambda df, batch_id: write_batch_once(df, out_dir, batch_id, "builtin")
 
 
 def run_dedup_filter_stream(
@@ -343,11 +357,8 @@ def run_dedup_filter_stream(
     filtered = deduped.where(keep_n_tok_range(1, 10**9))
     if stages:
         filtered = stages(filtered)
-    sink = idempotent_parquet_sink(
-        out_dir, metrics_path=os.path.join(out_dir, "_metrics.jsonl")
-    )
     return (
-        filtered.writeStream.foreachBatch(sink)
+        filtered.writeStream.foreachBatch(idempotent_parquet_sink(out_dir))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .start()
@@ -375,7 +386,7 @@ def run_near_dedup_stream_exact(
     only survivors' bands enter the index, a dropped doc's never do.
 
     Runs ``streaming.indexed._run_index_stream`` with its index under
-    ``out_dir/_band_state`` (``state_scan`` records), keyed on the
+    ``out_dir/_band_state`` (``tier: near`` records), keyed on the
     packed band key ``xxhash64(band_id, band_hash)``
     (``dedup.packed_band_keys`` over the band UDF, its only pass), at
     ``dedup.MINHASH_BUCKET_CAP`` — the batch ``minhash_dedup`` decision,
@@ -405,8 +416,7 @@ def run_near_dedup_stream_exact(
         ),
         MINHASH_BUCKET_CAP,
         lambda df, losers: df.where(_not_in_sorted_udf(losers)(F.col("doc_seq"))),
-        name="_band_state",
-        kind="state_scan",
+        tier="near",
         stages=stages,
     )
 
@@ -433,25 +443,16 @@ def route_by_source(
     def sink(df: DataFrame, batch_id: int):
         df.persist()
         try:
-            routed_sources = list(routes.keys())
             for src, preds in routes.items():
                 part = df.where(F.col("source") == src)
                 for p in preds:
                     part = part.where(p)
-                d = os.path.join(out_dir, f"source={src}", f"batch_id={batch_id}")
-                if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                    _sink_writer(
-                        part.withColumn("part_id", F.spark_partition_id())
-                    ).parquet(d)
+                write_batch_once(part, os.path.join(out_dir, f"source={src}"), batch_id)
             if default_route is not None:
-                rest = df.where(~F.col("source").isin(routed_sources))
-                d = os.path.join(
-                    out_dir, f"source={default_route}", f"batch_id={batch_id}"
+                rest = df.where(~F.col("source").isin(list(routes)))
+                write_batch_once(
+                    rest, os.path.join(out_dir, f"source={default_route}"), batch_id
                 )
-                if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                    _sink_writer(
-                        rest.withColumn("part_id", F.spark_partition_id())
-                    ).parquet(d)
         finally:
             df.unpersist()
 

@@ -290,3 +290,32 @@ def test_stream_spec_rejects_bad_max_files_per_trigger(spark, tmp_path, value):
             str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
         )
     assert list(tmp_path.iterdir()) == []
+
+
+def test_spec_unknown_top_level_key_refused(spark, tmp_path):
+    """A spec that misspells ``stages`` as ``stage`` is refused by all
+    three entry points with an error naming the key, before anything is
+    written; so is a ``stream`` block given to a batch runner."""
+    from dataflow_spark.core import spec as specmod
+
+    stage = [{"operator": "ContentNullFilter"}]
+    with pytest.raises(ValueError, match=r"\['stage'\]"):
+        specmod.run_stream_spec(
+            spark, {"stream": {"dedup": "indexed"}, "stage": stage},
+            str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
+        )
+    assert list(tmp_path.iterdir()) == []
+
+    with pytest.raises(ValueError, match=r"\['stage'\]"):
+        specmod.run_spec(_docs(spark), {"stages": stage, "stage": stage})
+    with pytest.raises(ValueError, match=r"\['stream'\]"):
+        specmod.run_spec(_docs(spark), {"stages": stage, "stream": {}})
+
+    path = tmp_path / "typo.json"
+    path.write_text(json.dumps({"name": "typo", "stage": stage}))
+    with pytest.raises(ValueError, match=r"\['stage'\]"):
+        specmod.main(
+            [str(path), "--input", str(tmp_path / "in"), "--output",
+             str(tmp_path / "out")]
+        )
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["typo.json"]

@@ -14,6 +14,7 @@ the stronger Structured Streaming contract.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -33,6 +34,12 @@ from dataflow_spark.streaming.pipeline import (
 from dataflow_spark.streaming.indexed import run_exact_dedup_stream_indexed
 
 BASE_TS = "2026-01-01 00:00:00"
+
+# the keys of every tier's per-batch _metrics.jsonl record (v 1)
+V1_KEYS = {
+    "v", "batch_id", "tier", "rows", "tokens", "phases",
+    "state_bytes_read", "state_batches_scanned", "state_batches_total",
+}
 
 
 def make_rows(spec):
@@ -173,7 +180,7 @@ def test_checkpoint_resume_preserves_state(spark, dirs):
 
     recs = [json.loads(l) for l in open(metrics)]
     assert sum(r["rows"] for r in recs) == 3
-    assert all("partitions" in r for r in recs)
+    assert all(set(r) == V1_KEYS and r["v"] == 1 for r in recs), recs
 
 
 def test_sink_replay_is_noop(spark, tmp_path):
@@ -187,6 +194,10 @@ def test_sink_replay_is_noop(spark, tmp_path):
     out = spark.read.parquet(out_dir)
     assert out.count() == 2
     assert out.select("batch_id").distinct().collect()[0][0] == 7
+    with open(os.path.join(out_dir, "_metrics.jsonl")) as fh:
+        recs = [json.loads(line) for line in fh]
+    # the replay adds no second record
+    assert [(r["batch_id"], r["rows"]) for r in recs] == [(7, 2)]
 
 
 def test_windowed_agg_watermark_and_late_drop(spark, dirs):

@@ -144,7 +144,7 @@ def test_near_dedup_stream_exact_bounded_state_read(spark, tmp_path):
     scans = [
         json.loads(l)
         for l in open(os.path.join(out_dir, "_metrics.jsonl"))
-        if json.loads(l).get("kind") == "state_scan"
+        if json.loads(l).get("tier") == "near"
     ]
     by_batch = {s["batch_id"]: s for s in scans}
     # history grows 1..8 batches, but the scan stays bounded: fresh batches

@@ -23,24 +23,23 @@ from dataflow_spark.core.stage import get_operator
 from dataflow_spark.operators.dedup import exact_dedup
 from dataflow_spark.streaming.indexed import (
     SEEN_STATE_DIRNAME,
-    compact_seen_index,
-    expire_seen_index,
+    SegmentIndex,
     run_exact_dedup_stream_indexed,
 )
 from dataflow_spark.streaming.pipeline import (
     run_dedup_filter_stream,
     run_near_dedup_stream_exact,
 )
-from tests.test_streaming import make_rows, write_file
+from tests.test_streaming import V1_KEYS, make_rows, write_file
 
 
-def _metrics(out_dir, kind="seen_state_scan"):
+def _metrics(out_dir, tier="indexed"):
     path = os.path.join(out_dir, "_metrics.jsonl")
     if not os.path.exists(path):
         return []
     with open(path) as fh:
         return [
-            json.loads(line) for line in fh if json.loads(line).get("kind") == kind
+            json.loads(line) for line in fh if json.loads(line).get("tier") == tier
         ]
 
 
@@ -168,7 +167,7 @@ def test_indexed_dedup_compact_and_expire(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    merged_away = compact_seen_index(out_dir)
+    merged_away = SegmentIndex(out_dir).compact()
     assert merged_away == 1
     state_dir = os.path.join(out_dir, SEEN_STATE_DIRNAME)
     gens = [d for d in os.listdir(state_dir) if d.startswith("batch_id=")]
@@ -183,7 +182,7 @@ def test_indexed_dedup_compact_and_expire(spark, tmp_path):
     assert got == [1, 2]
 
     # expire everything -> the same tokens pass again (horizon forgotten)
-    dropped = expire_seen_index(out_dir, keep_from_batch=10**9)
+    dropped = SegmentIndex(out_dir).expire(keep_from_batch=10**9)
     assert dropped >= 1
     write_file(spark, make_rows([(21, a, "cc", 90)]), corpus_dir)
     q3 = run_exact_dedup_stream_indexed(spark, corpus_dir, out_dir, ckpt)
@@ -228,7 +227,7 @@ def test_compaction_crash_keeps_union(spark, tmp_path, monkeypatch, crash_at):
     monkeypatch.setattr(os, "replace", crashing(os.replace))
     monkeypatch.setattr(os, "remove", crashing(os.remove))
     with pytest.raises(OSError, match="simulated crash"):
-        compact_seen_index(out_dir)
+        SegmentIndex(out_dir).compact()
     monkeypatch.undo()
     assert calls == ["replace", "remove"][: crash_at + 1]
 
@@ -297,9 +296,9 @@ def test_v1_index_layout_refused(spark, tmp_path):
                 spark, corpus_dir, out_dir, str(tmp_path / f"k-{layout}")
             )
         with pytest.raises(ValueError, match=re.escape(state_dir)):
-            compact_seen_index(out_dir)
+            SegmentIndex(out_dir).compact()
         with pytest.raises(ValueError, match=re.escape(state_dir)):
-            expire_seen_index(out_dir, keep_from_batch=10**9)
+            SegmentIndex(out_dir).expire(keep_from_batch=10**9)
         assert sorted(os.walk(out_dir)) == before, layout
 
 
@@ -333,34 +332,39 @@ def test_missing_index_meta_with_sealed_segments_raises(
 
 
 @pytest.mark.parametrize(
-    "run, kind",
+    "run, tier, order",
     [
-        (run_exact_dedup_stream_indexed, "seen_state_scan"),
-        (run_near_dedup_stream_exact, "state_scan"),
+        (
+            run_exact_dedup_stream_indexed, "indexed",
+            ["probe_s", "dedup_s", "seal_s", "rows_sink_s"],
+        ),
+        (
+            run_near_dedup_stream_exact, "near",
+            ["probe_s", "dedup_s", "seal_s", "rows_sink_s"],
+        ),
+        (run_dedup_filter_stream, "builtin", ["rows_sink_s"]),
     ],
-    ids=["exact", "near"],
+    ids=["exact", "near", "builtin"],
 )
-def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch, run, kind):
-    """Each phase window starts where the previous one ended: a rows sink
-    slowed by 0.5 s shows up in rows_sink_s only, not in the seal_s window
-    before it, and the phases never sum past the batch's addBatch.  Both
-    index streams record the same phases in the same order, and the slow
-    sink patched into ``indexed`` slows both: they write through one
-    body."""
-    from dataflow_spark.streaming import indexed
+def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch, run, tier, order):
+    """Each phase window starts where the previous one ended: a row write
+    slowed by 0.5 s where ``pipeline.write_batch_once`` times it (its
+    ``_sink_writer`` call) shows up in rows_sink_s only, not in the seal_s
+    window before it, and the phases never sum past the batch's addBatch.
+    Both index streams record the same phases in the same order; the
+    builtin tier records rows_sink_s alone.  Every tier writes through the
+    one writer: exactly one ``v: 1`` record per written batch, with the
+    same keys on every tier, whose ``rows`` add up to the rows in the
+    output."""
+    from dataflow_spark.streaming import pipeline
 
-    real_sink = indexed.idempotent_parquet_sink
+    real_writer = pipeline._sink_writer
 
-    def slow_sink(*args, **kwargs):
-        write = real_sink(*args, **kwargs)
+    def slow_writer(df):
+        time.sleep(0.5)
+        return real_writer(df)
 
-        def slow_write(df, batch_id):
-            time.sleep(0.5)
-            write(df, batch_id)
-
-        return slow_write
-
-    monkeypatch.setattr(indexed, "idempotent_parquet_sink", slow_sink)
+    monkeypatch.setattr(pipeline, "_sink_writer", slow_writer)
     corpus_dir, out_dir, ckpt = (
         str(tmp_path / "c"), str(tmp_path / "o"), str(tmp_path / "k"),
     )
@@ -374,13 +378,24 @@ def test_phase_timings_are_disjoint(spark, tmp_path, monkeypatch, run, kind):
         for p in q.recentProgress
     }
     q.stop()
-    recs = _metrics(out_dir, kind)
-    assert [m["batch_id"] for m in recs] == [0, 1]
+    recs = _metrics(out_dir, tier)
+    written = sorted(
+        int(d[len("batch_id="):]) for d in os.listdir(out_dir)
+        if d.startswith("batch_id=")
+    )
+    with open(os.path.join(out_dir, "_metrics.jsonl")) as fh:
+        assert sum(1 for _ in fh) == len(recs)  # no record of another shape
+    assert [m["batch_id"] for m in recs] == written
+    if tier != "builtin":
+        assert written == [0, 1]
+    assert sum(m["rows"] for m in recs) == spark.read.parquet(out_dir).count() == 1
     for m in recs:
+        assert set(m) == V1_KEYS and m["v"] == 1, m
+        assert (m["state_batches_total"] is None) == (tier == "builtin"), m
         ph = m["phases"]
-        assert list(ph) == ["probe_s", "dedup_s", "seal_s", "rows_sink_s"], ph
+        assert list(ph) == order, ph
         assert ph["rows_sink_s"] >= 0.5, ph
-        assert ph["seal_s"] < 0.5, ph
+        assert ph.get("seal_s", 0) < 0.5, ph
         assert sum(ph.values()) <= add_batch_s[m["batch_id"]], (ph, add_batch_s)
 
 

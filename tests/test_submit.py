@@ -3,12 +3,14 @@
 Builds the --py-files zip into the test's tmp dir (the committed
 dist/dataflow_spark.zip is left alone), then runs jobs/stream_job.py under a
 real ``spark-submit`` subprocess against a 3-row corpus, in both ``--mode``
-values, and checks the exactly-once sink output.  The flag-to-spec mapping
+values, and checks the exactly-once sink output and its one ``v: 1``
+metrics record per output batch.  The flag-to-spec mapping
 of the near mode is also driven in-process, through the job's ``main``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import runpy
 import shutil
@@ -17,7 +19,7 @@ import sys
 
 import pytest
 
-from tests.test_streaming import make_rows, toks, write_file
+from tests.test_streaming import V1_KEYS, make_rows, toks, write_file
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit")
@@ -85,6 +87,18 @@ def _submit_stream_job(spark, tmp_path, master, conf=(), mode="exact", timeout=4
         timeout=timeout,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+    # the shipped zip carries the one writer: one v1 record per output batch
+    with open(os.path.join(out_dir, "_metrics.jsonl")) as fh:
+        recs = [json.loads(line) for line in fh]
+    written = sorted(
+        int(d[len("batch_id="):]) for d in os.listdir(out_dir)
+        if d.startswith("batch_id=")
+    )
+    assert [r["batch_id"] for r in recs] == written, recs
+    tier = {"exact": "builtin", "near": "near"}[mode]
+    assert all(
+        set(r) == V1_KEYS and r["v"] == 1 and r["tier"] == tier for r in recs
+    ), recs
     return {r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()}
 
 
