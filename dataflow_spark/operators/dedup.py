@@ -27,10 +27,14 @@ Scale notes (100 TB):
   ladder below;
 * SimHash/n-gram verification needs true pairwise checks — bucket sizes are
   capped (cap param) to bound the self-join blow-up on degenerate buckets;
-* connected components = one driver-local numpy solve up to
-  CC_LOCAL_EDGE_THRESHOLD edges, otherwise partition-local solves plus edge
-  contraction (Kiveris et al., SoCC 2014) — a fixed number of jobs, no
-  per-round loop.
+* connected components: ``_solve`` is the one place the rung is picked,
+  from one count of a materialized edge set — one driver-local numpy solve
+  up to CC_LOCAL_EDGE_THRESHOLD edges, otherwise partition-local solves
+  plus edge contraction (Kiveris et al., SoCC 2014) whose residual goes
+  back through ``_solve`` — a fixed number of jobs, no per-round loop.
+  ``connected_components_min``, ``keep_cluster_min`` and the contraction's
+  residual all enter it; every driver-decided loser set leaves the frame
+  through ``drop_sorted``.
 """
 
 from __future__ import annotations
@@ -158,7 +162,9 @@ def _cc_min_numpy(a: "np.ndarray", b: "np.ndarray") -> tuple:
     order = np.argsort(dst, kind="stable")
     dsts = dst[order]
     srcs = src[order]
-    seg = np.flatnonzero(np.r_[True, dsts[1:] != dsts[:-1]])
+    head = np.ones(len(dsts), dtype=bool)
+    head[1:] = dsts[1:] != dsts[:-1]
+    seg = np.flatnonzero(head)
     seg_dst = dsts[seg]
     lbl = np.arange(n, dtype=np.int64)
     while True:
@@ -209,8 +215,6 @@ def cluster_min_losers(
         for b in np.flatnonzero(size > cap):
             size[b] = len(np.unique(doc[starts[b]:starts[b] + size[b]]))
         member &= (size <= cap)[bucket]
-    if not member.any():
-        return np.empty(0, dtype=np.int64)
     n = np.int64(len(docs))
     edge = np.unique(doc[member] * n + root[member])
     nodes, lbl = _cc_min_numpy(edge // n, edge % n)
@@ -264,23 +268,44 @@ def _release_checkpoint(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
 
 
-def _local_labels(edges: DataFrame):
-    """Driver solve: collect ``a``/``b`` through Arrow, release the input
-    checkpoint (the collected arrays are all the solve reads), run the numpy
-    kernel.  Returns (nodes, labels), or None when there are no edges."""
-    pdf = edges.select(F.col("a").cast("long"), F.col("b").cast("long")).toPandas()
-    _release_checkpoint(edges)
-    if len(pdf) == 0:
-        return None
-    return _cc_min_numpy(pdf["a"].to_numpy(np.int64), pdf["b"].to_numpy(np.int64))
+def _solve(edges: DataFrame, _depth: int = 0):
+    """The one CC rung decision, over a materialized ``(a, b)`` edge set
+    that it consumes (its blocks are released once read).  The edges are
+    counted at most once:
+
+    - **local** (at most CC_LOCAL_EDGE_THRESHOLD edges, or recursion depth
+      >= 2): one Arrow fetch of the two long columns and the numpy
+      min-label kernel — one job, no per-round serial barrier.  Returns
+      numpy ``(nodes, labels)``.  At 10% dup rate the threshold covers
+      corpora of ~40M docs per dedup invocation.  A residual still above
+      the threshold after two contractions (every partition stays
+      cross-connected, as in an expander) goes to the driver too: a third
+      contraction would barely shrink it.
+    - **contract** (otherwise): _cc_distributed_contract — one shuffle of
+      the edges, a partition-local numpy CC inside mapInPandas, then a
+      CONTRACTED residual graph solved through this function at the next
+      depth; it collapses under the threshold in one step on every real
+      near-dup graph, so the whole solve is a FIXED number of data-heavy
+      jobs (VERDICT r3 #1).  Returns the lazy ``(node, component)`` frame,
+      which reads the materialized local roots."""
+    if _depth >= 2 or edges.count() <= CC_LOCAL_EDGE_THRESHOLD:
+        pdf = edges.select(F.col("a").cast("long"), F.col("b").cast("long")).toPandas()
+        _release_checkpoint(edges)
+        return _cc_min_numpy(pdf["a"].to_numpy(np.int64), pdf["b"].to_numpy(np.int64))
+    return _cc_distributed_contract(edges, _depth)
 
 
-def _cc_distributed_contract(
-    edges: DataFrame,
-    local_threshold: int,
-    _depth: int = 0,
-    stats: dict | None = None,
-) -> DataFrame:
+def _as_frame(spark, solved) -> DataFrame:
+    """``_solve``'s result as a ``(node, component)`` frame."""
+    if isinstance(solved, DataFrame):
+        return solved
+    nodes, lbl = solved
+    return spark.createDataFrame(
+        pd.DataFrame({"node": nodes, "component": lbl}), "node long, component long"
+    )
+
+
+def _cc_distributed_contract(edges: DataFrame, _depth: int = 0) -> DataFrame:
     """Distributed CC by partition-local solve + edge contraction (VERDICT
     r3 task #1; the two-phase scheme behind CC-MR / Kiveris et al.'s
     MapReduce CC family, chosen over alternating large-star/small-star
@@ -300,8 +325,9 @@ def _cc_distributed_contract(
        one node per local root and collapses to the cross-partition
        adjacency only — orders of magnitude smaller than the input (at
        r1600, 8.3M edges -> residual well under the 4M local threshold);
-    4. solve the residual recursively (in practice: one driver-local numpy
-       pass), then map every node through root -> global component.
+    4. solve the residual through ``_solve`` at ``_depth + 1`` (in
+       practice: one driver-local numpy pass), then map every node through
+       root -> global component.
 
     Correctness: two nodes are globally connected iff their local roots are
     linked by a chain of shared-node residual stars; the global min label
@@ -326,11 +352,7 @@ def _cc_distributed_contract(
             cbs.append(pdf["b"].to_numpy(np.int64))
         if not cas:
             return
-        a = np.concatenate(cas)
-        b = np.concatenate(cbs)
-        if len(a) == 0:
-            return
-        nodes, lbl = _cc_min_numpy(a, b)
+        nodes, lbl = _cc_min_numpy(np.concatenate(cas), np.concatenate(cbs))
         yield pd.DataFrame({"node": nodes, "local_root": lbl})
 
     m = (
@@ -350,8 +372,8 @@ def _cc_distributed_contract(
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    roots = connected_components_min(
-        residual, local_threshold=local_threshold, _depth=_depth + 1, stats=stats,
+    roots = _as_frame(
+        m.sparkSession, _solve(residual.localCheckpoint(eager=True), _depth + 1)
     ).withColumnRenamed("node", "local_root")
     # every multi-root node's roots share one residual component, so the
     # min-agg only dedupes the per-partition copies (values are equal);
@@ -367,59 +389,13 @@ def _cc_distributed_contract(
     )
 
 
-def connected_components_min(
-    edges: DataFrame,
-    local_threshold: int | None = None,
-    _materialized: bool = False,
-    _depth: int = 0,
-    stats: dict | None = None,
-) -> DataFrame:
+def connected_components_min(edges: DataFrame) -> DataFrame:
     """Edges (a:long, b:long) -> (node:long, component:long) where component
-    is the min node id reachable.  One ladder:
-
-    - **local** (edge count <= local_threshold, or recursion depth >= 2):
-      collect the two long columns via Arrow and run the numpy min-label
-      kernel — one job, no per-round serial barrier.  At 10% dup rate the
-      threshold covers corpora of ~40M docs per dedup invocation.  A
-      residual still above the threshold after two contractions (every
-      partition stays cross-connected, as in an expander) goes to the
-      driver too: a third contraction would barely shrink it.
-    - **contract** (otherwise): one shuffle of the edges, a partition-local
-      numpy CC inside mapInPandas, then a CONTRACTED residual graph
-      (local-root links of nodes seen in several partitions) solved
-      recursively — it collapses under the local threshold in one step on
-      every real near-dup graph, so the whole solve is a FIXED number of
-      data-heavy jobs (VERDICT r3 #1).  See _cc_distributed_contract.
-
-    ``_materialized=True`` skips the eager checkpoint when ``edges`` already
-    is one and hands it over: like the checkpoint taken here, it is
-    released once read, so do not reuse it after the call.  The returned
-    frame of the contract path reads the materialized local roots, which
-    stay registered until the JVM collects them.  ``stats`` (a dict)
-    collects one ``{"depth", "edges", "strategy"}`` row per recursion depth
-    under ``"depths"`` — depth>0 rows are the residual-graph sizes, the
-    quantity the contraction design's "tiny residual" claim rests on.
-    """
-    if not _materialized:
-        edges = edges.localCheckpoint(eager=True)
-    if local_threshold is None:
-        local_threshold = CC_LOCAL_EDGE_THRESHOLD
-    n_edges = edges.count()
-    local = n_edges <= local_threshold or _depth >= 2
-    if stats is not None:
-        stats.setdefault("depths", []).append({
-            "depth": _depth,
-            "edges": int(n_edges),
-            "strategy": "local" if local else "contract",
-        })
-    if not local:
-        return _cc_distributed_contract(edges, local_threshold, _depth, stats)
-    spark = edges.sparkSession
-    solved = _local_labels(edges)
-    if solved is None:
-        return spark.createDataFrame([], "node long, component long")
-    nodes, lbl = solved
-    return spark.createDataFrame(pd.DataFrame({"node": nodes, "component": lbl}))
+    is the min node id reachable.  Checkpoints ``edges`` and hands the
+    checkpoint to ``_solve``, which picks the local or the contract rung.
+    The returned frame of the contract rung reads the materialized local
+    roots, which stay registered until the JVM collects them."""
+    return _as_frame(edges.sparkSession, _solve(edges.localCheckpoint(eager=True)))
 
 
 def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -432,14 +408,25 @@ def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
     return (pos < len(sorted_arr)) & (sorted_arr[pos_c] == values)
 
 
-def _not_in_sorted_udf(arr: "np.ndarray"):
-    """Boolean pandas UDF: value NOT present in the sorted int64 array."""
+def drop_sorted(df: DataFrame, seq_col: str, losers: np.ndarray) -> DataFrame:
+    """``df`` without the rows whose ``seq_col`` is in ``losers``, a sorted
+    int64 array; no losers returns ``df`` itself (no Python UDF in the
+    plan).  The filter is a vectorized binary-search pandas UDF: the array
+    ships once per worker in the task closure (TorrentBroadcast) and the
+    probe runs fully parallel.  It replaced a broadcast anti-join whose
+    BroadcastExchange built the 2M-row loser hash table on the DRIVER
+    (serial, measured ~6s at r400, against ~0.9s warm here) — serial
+    driver time is the Amdahl term of the whole minhash job
+    (BENCH_scaling.json).  Requires non-null seq ids, which the engine
+    assigns (monotonically_increasing_id / source doc_seq)."""
+    if not len(losers):
+        return df
 
     @pandas_udf(T.BooleanType())
     def not_in_sorted(s: pd.Series) -> pd.Series:
-        return pd.Series(~_sorted_member(arr, s.to_numpy(np.int64)))
+        return pd.Series(~_sorted_member(losers, s.to_numpy(np.int64)))
 
-    return not_in_sorted
+    return df.where(not_in_sorted(F.col(seq_col)))
 
 
 def keep_cluster_min(
@@ -456,34 +443,19 @@ def keep_cluster_min(
     its blocks are released once read, so do not reuse it after the call."""
     if not edges_materialized:
         edges = edges.localCheckpoint(eager=True)
-    if edges.count() <= CC_LOCAL_EDGE_THRESHOLD:
-        # local CC: solve on the driver and ship ONLY the loser ids back as
-        # a sorted array inside a vectorized-searchsorted pandas UDF.  This
-        # replaces a broadcast anti-join whose BroadcastExchange converts
-        # the 2M-row loser relation to a hash table on the DRIVER (serial,
-        # measured ~6s at r400) with a fully parallel binary-search probe
-        # (~0.9s warm): the array ships once per worker in the task
-        # closure (TorrentBroadcast); losers <= duplicate-node count <=
-        # CC_LOCAL_EDGE_THRESHOLD longs (32 MB).
-        # This serial driver time is the Amdahl term of the whole
-        # minhash job (BENCH_scaling.json).  Requires non-null seq ids —
-        # the engine assigns them (monotonically_increasing_id / source
-        # doc_seq).
-        solved = _local_labels(edges)
-        if solved is None:
-            return df
-        nodes, lbl = solved
-        losers_np = np.sort(nodes[nodes != lbl])
-        return df.where(_not_in_sorted_udf(losers_np)(F.col(seq_col)))
-    # the count above already chose the contract rung of
-    # connected_components_min: enter it directly rather than count again
-    comps = _cc_distributed_contract(edges, CC_LOCAL_EDGE_THRESHOLD)
-    losers = comps.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias(seq_col)
-    )
-    # left_anti shuffle join; AQE converts it to broadcast when losers is
-    # small (the usual case — dup fraction ~10%), and handles skew otherwise.
-    return df.join(losers, seq_col, "left_anti")
+    solved = _solve(edges)
+    if isinstance(solved, DataFrame):
+        losers = solved.where(F.col("node") != F.col("component")).select(
+            F.col("node").alias(seq_col)
+        )
+        # left_anti shuffle join; AQE converts it to broadcast when losers
+        # is small (the usual case — dup fraction ~10%), and handles skew
+        # otherwise.
+        return df.join(losers, seq_col, "left_anti")
+    # the local rung's losers: <= duplicate-node count <=
+    # CC_LOCAL_EDGE_THRESHOLD longs (32 MB), sorted because nodes ascend
+    nodes, lbl = solved
+    return drop_sorted(df, seq_col, nodes[nodes != lbl])
 
 
 # ---------------------------------------------------------------------------
@@ -730,7 +702,7 @@ def minhash_dedup(
     - **driver** (``n_docs × bands <= CC_LOCAL_EDGE_THRESHOLD``, the
       ~64 MB of longs the CC local rung already collects; ~250k docs at 16
       bands): one Arrow fetch of the ``packed_band_keys`` pairs from the
-      cache, ``cluster_min_losers`` on the driver, then the sorted-array
+      cache, ``cluster_min_losers`` on the driver, then the ``drop_sorted``
       survivor filter — no band-key shuffle and no edge checkpoint;
     - **edges** (above the bound): minhash_candidate_edges over the same
       cache — posexplode bands -> (min, count) bucket roots agg -> join
@@ -757,12 +729,9 @@ def minhash_dedup(
         pairs = packed_band_keys(sig, "_seq", "_bands", "_bkey").toPandas()
     finally:
         sig.unpersist()
-    losers = cluster_min_losers(
+    return drop_sorted(df, seq_col, cluster_min_losers(
         pairs["_seq"].to_numpy(np.int64), pairs["_bkey"].to_numpy(np.int64), bucket_cap
-    )
-    if not len(losers):
-        return df
-    return df.where(_not_in_sorted_udf(losers)(F.col(seq_col)))
+    ))
 
 
 def _signature(df: DataFrame, seq_col: str, bands_expr) -> DataFrame:

@@ -40,8 +40,8 @@ Design:
   ``pipeline.write_batch_once``, the one writer of every tier.  Each
   stream passes its own loser filter, the form that measured faster for
   it (NOTES.md, "One driver-decided sink"): the exact stream a broadcast
-  left-anti join on ``doc_seq``, since ``_not_in_sorted_udf`` would be
-  the first Python UDF it runs; the near stream ``_not_in_sorted_udf``,
+  left-anti join on ``doc_seq``, since ``dedup.drop_sorted``'s UDF would
+  be the first Python UDF it runs; the near stream ``dedup.drop_sorted``,
   since it runs the band UDF anyway and a broadcast was slower there.
 - **Format pin.**  ``<name>/_index_meta.json`` records ``{"format": 2}``.
   A v1 index (bucketed parquet segments, geometry meta) or sealed

@@ -270,6 +270,13 @@ def write_batch_once(
     ``out_dir/_metrics.jsonl``; ``route_by_source`` passes none and writes
     no record.
 
+    ``_SUCCESS`` is written last, by this function, not by Spark's
+    committer: rows, then the record, then the marker.  A process that
+    dies before the marker leaves a batch that its replay writes again:
+    the rows are overwritten, and the record is appended unless the
+    file's last line already is this batch's (a death between the record
+    and the marker), so every written batch ends with exactly one record.
+
     Every tier's record has the same keys: ``v`` (1), ``batch_id``,
     ``tier`` (``builtin | indexed | near``), ``rows`` and ``tokens``
     written, ``phases`` (the caller's disjoint wall-clock windows, then
@@ -282,7 +289,8 @@ def write_batch_once(
     # Hive-style batch_id=N dir: the lineage column materializes from the
     # partition path on read, and _SUCCESS is the idempotence marker.
     batch_dir = os.path.join(out_dir, f"batch_id={batch_id}")
-    if os.path.exists(os.path.join(batch_dir, "_SUCCESS")):
+    marker = os.path.join(batch_dir, "_SUCCESS")
+    if os.path.exists(marker):
         return  # replayed batch — already durable
     t0 = time.monotonic()
     out = df.withColumn("part_id", F.spark_partition_id())
@@ -295,23 +303,45 @@ def write_batch_once(
         obs = Observation(f"sink_batch_{batch_id}")
         tok = (F.sum("n_tok") if "n_tok" in out.columns else F.lit(0)).alias("tokens")
         out = out.observe(obs, F.count(F.lit(1)).alias("rows"), tok)
-    _sink_writer(out).parquet(batch_dir)
-    if not tier:
-        return
-    got = obs.get
-    rec = {
-        "v": 1,
-        "batch_id": batch_id,
-        "tier": tier,
-        "rows": int(got["rows"] or 0),
-        "tokens": int(got["tokens"] or 0),
-        "phases": {**(phases or {}), "rows_sink_s": round(time.monotonic() - t0, 3)},
-        **dict(zip(
-            ("state_bytes_read", "state_batches_scanned", "state_batches_total"),
-            state,
-        )),
-    }
-    with open(os.path.join(out_dir, "_metrics.jsonl"), "a") as fh:
+    _sink_writer(out).option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(batch_dir)
+    if tier:
+        got = obs.get
+        _append_record(os.path.join(out_dir, "_metrics.jsonl"), {
+            "v": 1,
+            "batch_id": batch_id,
+            "tier": tier,
+            "rows": int(got["rows"] or 0),
+            "tokens": int(got["tokens"] or 0),
+            "phases": {**(phases or {}), "rows_sink_s": round(time.monotonic() - t0, 3)},
+            **dict(zip(
+                ("state_bytes_read", "state_batches_scanned", "state_batches_total"),
+                state,
+            )),
+        })
+    open(marker, "w").close()
+
+
+def _append_record(path: str, rec: dict) -> None:
+    """Append ``rec`` as one JSON line to ``path``, unless the file's last
+    line already holds ``rec``'s ``batch_id`` (a replay of a batch whose
+    record landed but whose ``_SUCCESS`` did not).  The last line is read
+    by seeking back from the end, so the check costs one record, not the
+    file."""
+    if os.path.exists(path):
+        with open(path, "rb") as fh:
+            pos = fh.seek(0, os.SEEK_END)
+            tail = b""
+            while pos and tail.count(b"\n") < 2:
+                step = min(pos, 4096)
+                pos -= step
+                fh.seek(pos)
+                tail = fh.read(step) + tail
+        lines = tail.splitlines()
+        if lines and json.loads(lines[-1])["batch_id"] == rec["batch_id"]:
+            return
+    with open(path, "a") as fh:
         fh.write(json.dumps(rec) + "\n")
 
 
@@ -391,9 +421,8 @@ def run_near_dedup_stream_exact(
     (``dedup.packed_band_keys`` over the band UDF, its only pass), at
     ``dedup.MINHASH_BUCKET_CAP`` — the batch ``minhash_dedup`` decision,
     which coincides with the sequential loop on chain-free clusters.  The
-    losers leave the batch through the sorted-array ``_not_in_sorted_udf``
-    filter on ``doc_seq``; ``stages`` then runs on the survivors before
-    their rows are written.
+    losers leave the batch through ``dedup.drop_sorted`` on ``doc_seq``;
+    ``stages`` then runs on the survivors before their rows are written.
 
     The fetch ceiling is 16 B × ``bands`` per doc on the driver (256 B/doc
     at 16 bands: ~0.6 MB for a 2,400-doc trigger, 256 MB at 1M docs per
@@ -401,7 +430,7 @@ def run_near_dedup_stream_exact(
     well inside driver memory."""
     from dataflow_spark.operators.dedup import (
         MINHASH_BUCKET_CAP,
-        _not_in_sorted_udf,
+        drop_sorted,
         minhash_bands_from_tokens_udf,
         packed_band_keys,
     )
@@ -415,7 +444,7 @@ def run_near_dedup_stream_exact(
             "doc_seq", "_bands", "_th",
         ),
         MINHASH_BUCKET_CAP,
-        lambda df, losers: df.where(_not_in_sorted_udf(losers)(F.col("doc_seq"))),
+        lambda df, losers: drop_sorted(df, "doc_seq", losers),
         tier="near",
         stages=stages,
     )

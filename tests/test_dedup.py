@@ -279,9 +279,9 @@ def test_ngramhash_dedup(spark):
     assert set(texts.values()) <= set(got) | expect_drop
 
 
-def test_cc_local_vs_distributed_parity(spark):
+def test_cc_local_vs_distributed_parity(spark, monkeypatch):
     """The numpy local CC kernel and the distributed contraction ladder
-    (local_threshold=0: contract -> contract -> driver solve) agree on a
+    (threshold 0: contract -> contract -> driver solve) agree on a
     random graph with chains, stars, and singleton-free components."""
     import random
 
@@ -294,9 +294,10 @@ def test_cc_local_vs_distributed_parity(spark):
         (r["node"], r["component"])
         for r in dedup.connected_components_min(df).collect()
     }
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", 0)
     dist = {
         (r["node"], r["component"])
-        for r in dedup.connected_components_min(df, local_threshold=0).collect()
+        for r in dedup.connected_components_min(df).collect()
     }
     assert local == dist
     # the chain must collapse to a single component rooted at 0
@@ -321,7 +322,7 @@ def _uf_oracle(edges):
     return {n: find(n) for n in parent}
 
 
-def test_cc_contract_single_level_parity(spark):
+def test_cc_contract_single_level_parity(spark, monkeypatch):
     """Round-4 contraction CC (partition-local numpy solves + residual
     graph, residual solved locally) == the driver-local kernel, on the
     contraction worst case: long chains (every hop can straddle a
@@ -340,19 +341,18 @@ def test_cc_contract_single_level_parity(spark):
         eager=True
     )
     want = _uf_oracle(edges)
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", 10**9)
     got = {
         r["node"]: r["component"]
-        for r in dedup._cc_distributed_contract(
-            df, local_threshold=10**9
-        ).collect()
+        for r in dedup._cc_distributed_contract(df).collect()
     }
     assert got == want
     # merged chains collapse to one component rooted at 0
     assert all(want[n] == 0 for n in range(1000, 1061))
 
 
-def test_cc_contract_two_level_parity(spark):
-    """Same graph, but local_threshold sits BETWEEN the residual size and
+def test_cc_contract_two_level_parity(spark, monkeypatch):
+    """Same graph, but CC_LOCAL_EDGE_THRESHOLD sits BETWEEN the residual size and
     the input size, so the top level runs distributed contraction and the
     residual recursion exercises the local hand-off — the production shape
     (residual ≪ input ≤ threshold)."""
@@ -366,24 +366,24 @@ def test_cc_contract_two_level_parity(spark):
     edges += [(rng.randrange(9000, 9100), rng.randrange(9000, 9100))
               for _ in range(150)]
     df = spark.createDataFrame(edges, "a long, b long")
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", len(edges) - 1)
     got = {
         r["node"]: r["component"]
-        for r in dedup.connected_components_min(
-            df, local_threshold=len(edges) - 1
-        ).collect()
+        for r in dedup.connected_components_min(df).collect()
     }
     assert got == _uf_oracle(edges)
 
 
-def test_cc_contract_property_random_graphs(spark):
+def test_cc_contract_property_random_graphs(spark, monkeypatch):
     """Property sweep: random Erdos-Renyi-ish graphs of varying density,
-    forced through FULL multi-level recursion (local_threshold=0: contract
+    forced through FULL multi-level recursion (threshold 0: contract
     -> contract -> driver solve at depth 2) — contraction labels == the
     union-find oracle.  Graphs kept small: with threshold 0 both levels
     above depth 2 run distributed."""
     import random
 
     rng = random.Random(99)
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", 0)
     for trial, (n_nodes, n_edges) in enumerate([(30, 40), (20, 10), (40, 60)]):
         edges = [
             (rng.randrange(n_nodes), rng.randrange(n_nodes))
@@ -395,9 +395,7 @@ def test_cc_contract_property_random_graphs(spark):
         df = spark.createDataFrame(edges, "a long, b long")
         got = {
             r["node"]: r["component"]
-            for r in dedup.connected_components_min(
-                df, local_threshold=0
-            ).collect()
+            for r in dedup.connected_components_min(df).collect()
         }
         assert got == _uf_oracle(edges), f"trial {trial}"
 
@@ -491,7 +489,29 @@ def _numpy_labels(edges_pdf):
     return dict(zip(nodes.tolist(), lbl.tolist()))
 
 
-def test_cc_chain_graph_contracts_via_range_partitioning(spark):
+def _spy_solve(monkeypatch):
+    """Wrap ``dedup._solve`` (the residual recursion calls it through the
+    module, so every CC level passes the spy): one ``{"depth", "edges",
+    "strategy"}`` row per level, in entry order — depth>0 rows are the
+    residual-graph sizes, the quantity the contraction design's "tiny
+    residual" claim rests on."""
+    from pyspark.sql import DataFrame
+
+    rows = []
+    real = dedup._solve
+
+    def solve(edges, _depth=0):
+        row = {"depth": _depth, "edges": edges.count()}
+        rows.append(row)
+        out = real(edges, _depth)
+        row["strategy"] = "contract" if isinstance(out, DataFrame) else "local"
+        return out
+
+    monkeypatch.setattr(dedup, "_solve", solve)
+    return rows
+
+
+def test_cc_chain_graph_contracts_via_range_partitioning(spark, monkeypatch):
     """Adversarial shape (VERDICT r4 #5): a single long CHAIN spanning
     partitions.  Under hash partitioning the residual barely shrank
     (measured: 500k-edge chain -> 484k residual at BOTH depths, all work
@@ -502,22 +522,21 @@ def test_cc_chain_graph_contracts_via_range_partitioning(spark):
     edges = spark.range(n).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")
     )
-    stats = {}
-    out = dedup.connected_components_min(
-        edges, local_threshold=2000, stats=stats
-    ).collect()
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", 2000)
+    depths = _spy_solve(monkeypatch)
+    out = dedup.connected_components_min(edges).collect()
     assert all(r.component == 0 for r in out) and len(out) == n + 1
-    depths = stats["depths"]
     assert depths[0]["strategy"] == "contract"
     # one contraction collapses the chain to the cross-partition links
     assert depths[1]["edges"] < 1000, depths
     assert depths[1]["strategy"] == "local"
 
 
-def test_cc_depth2_residual_solved_on_driver(spark):
-    """A residual still above local_threshold after two contractions (an
-    expander: hash-scattered links keep every partition cross-connected) is
-    solved on the driver at depth 2 — labels stay exactly right."""
+def test_cc_depth2_residual_solved_on_driver(spark, monkeypatch):
+    """A residual still above CC_LOCAL_EDGE_THRESHOLD after two contractions
+    (an expander: hash-scattered links keep every partition
+    cross-connected) is solved on the driver at depth 2 — labels stay
+    exactly right."""
     n = 3000
     edges = spark.range(2 * n).select(
         F.pmod(F.col("id"), F.lit(n)).alias("a"),
@@ -525,16 +544,31 @@ def test_cc_depth2_residual_solved_on_driver(spark):
     ).where(F.col("a") != F.col("b")).localCheckpoint(eager=True)
     want = _numpy_labels(edges.toPandas())
 
-    stats = {}
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", 50)
+    depths = _spy_solve(monkeypatch)
     got = {
         r.node: r.component
-        for r in dedup.connected_components_min(
-            edges, local_threshold=50, _materialized=True, stats=stats
-        ).collect()
+        for r in dedup.connected_components_min(edges).collect()
     }
     assert got == want
-    deep = [d for d in stats["depths"] if d["depth"] >= 2]
-    assert deep and all(d["strategy"] == "local" for d in deep), stats
+    deep = [d for d in depths if d["depth"] >= 2]
+    assert deep and all(d["strategy"] == "local" for d in deep), depths
+
+
+def test_cc_min_numpy_and_keep_cluster_min_total_on_no_edges(spark):
+    """No edges is an ordinary input: ``_cc_min_numpy`` returns two empty
+    int64 arrays, and ``keep_cluster_min`` over an empty edge set returns
+    the input plan with no Python UDF (no ``ArrowEvalPython``) in it."""
+    import numpy as np
+
+    empty = np.empty(0, dtype=np.int64)
+    nodes, lbl = dedup._cc_min_numpy(empty, empty)
+    assert nodes.dtype == lbl.dtype == np.int64
+    assert len(nodes) == len(lbl) == 0
+    docs = spark.range(10).withColumnRenamed("id", "doc_seq")
+    out = dedup.keep_cluster_min(docs, spark.createDataFrame([], "a long, b long"))
+    assert "ArrowEvalPython" not in out._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r.doc_seq for r in out.collect()) == list(range(10))
 
 
 @pytest.mark.parametrize(
@@ -556,7 +590,6 @@ def test_cc_releases_checkpoints(spark, monkeypatch, path):
     threshold = len(edges) if path == "local" else len(edges) - 1
     jsc = spark.sparkContext._jsc
     before = set(dict(jsc.getPersistentRDDs()))
-    stats = {}
     if path == "minhash":
         docs = spark.createDataFrame(
             make_token_docs(n=250, dup_frac=0.1, near_frac=0.1), TOKEN_SCHEMA
@@ -568,27 +601,28 @@ def test_cc_releases_checkpoints(spark, monkeypatch, path):
         got = {r.doc_seq for r in dedup.keep_cluster_min(docs, df).collect()}
         assert len(got) == 6000 - (len(_uf_oracle(edges)) - 2)
     else:
+        monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", threshold)
+        depths = _spy_solve(monkeypatch)
         got = {
             r.node: r.component
-            for r in dedup.connected_components_min(
-                df, local_threshold=threshold, stats=stats
-            ).collect()
+            for r in dedup.connected_components_min(df).collect()
         }
         assert got == _uf_oracle(edges)
         want_ladder = ["local"] if path == "local" else ["contract", "local"]
-        assert [d["strategy"] for d in stats["depths"]] == want_ladder
+        assert [d["strategy"] for d in depths] == want_ladder
     added = set(dict(jsc.getPersistentRDDs())) - before
     assert len(added) == (1 if path in ("contract", "keep_cluster_min") else 0), added
 
 
-def test_keep_cluster_min_counts_edges_once(spark, monkeypatch):
-    """keep_cluster_min's distributed branch (more edges than
-    CC_LOCAL_EDGE_THRESHOLD) counts the input edge set once: the count that
-    picks the branch also decides connected_components_min's first rung, so
-    the contraction is entered without counting the same edges again."""
+@pytest.mark.parametrize("rung", ["local", "contract"])
+def test_keep_cluster_min_counts_edges_once(spark, monkeypatch, rung):
+    """keep_cluster_min counts its input edge set once on both rungs: the
+    count in ``_solve`` that picks the rung is the only one, and the
+    contraction is entered without counting the same edges again."""
     pairs = [(i, i + 1) for i in range(0, 60)] + [(500, m) for m in range(501, 520)]
     edges = spark.createDataFrame(pairs, "a long, b long").localCheckpoint(eager=True)
-    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", len(pairs) - 1)
+    threshold = len(pairs) if rung == "local" else len(pairs) - 1
+    monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", threshold)
     counted = []
     frame_cls = type(edges)
     real_count = frame_cls.count

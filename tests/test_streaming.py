@@ -200,6 +200,41 @@ def test_sink_replay_is_noop(spark, tmp_path):
     assert [(r["batch_id"], r["rows"]) for r in recs] == [(7, 2)]
 
 
+@pytest.mark.parametrize("crash", ["before_record", "before_marker"])
+def test_sink_crash_then_replay_writes_once(spark, tmp_path, monkeypatch, crash):
+    """A sink that dies once after its rows are written, either before the
+    ``_metrics.jsonl`` record is appended or after it but before
+    ``_SUCCESS``, leaves a batch that its replay completes: 2 rows and
+    exactly one record, ``(7, 2)``."""
+    from dataflow_spark.streaming import pipeline
+
+    out_dir = str(tmp_path / "sink")
+    real = pipeline._append_record
+
+    def append_then_die(path, rec):
+        monkeypatch.setattr(pipeline, "_append_record", real)  # dies once
+        if crash == "before_marker":
+            real(path, rec)
+        raise OSError("process died")
+
+    monkeypatch.setattr(pipeline, "_append_record", append_then_die)
+    sink = idempotent_parquet_sink(out_dir)
+    df = spark.createDataFrame(
+        make_rows([(1, toks(1), "cc", 0), (2, toks(2), "cc", 1)]), CORPUS_SCHEMA
+    )
+    with pytest.raises(OSError, match="process died"):
+        sink(df, 7)
+    assert not os.path.exists(os.path.join(out_dir, "batch_id=7", "_SUCCESS"))
+    sink(df, 7)  # the replay after restart
+    sink(df, 7)  # a second replay is a no-op
+    out = spark.read.parquet(out_dir)
+    assert out.count() == 2
+    assert out.select("batch_id").distinct().collect()[0][0] == 7
+    with open(os.path.join(out_dir, "_metrics.jsonl")) as fh:
+        recs = [json.loads(line) for line in fh]
+    assert [(r["batch_id"], r["rows"]) for r in recs] == [(7, 2)]
+
+
 def test_windowed_agg_watermark_and_late_drop(spark, dirs):
     corpus_dir, _, ckpt = dirs
     # trigger 1: hour-0 and hour-1 events -> watermark after = 01:30 - 10min
