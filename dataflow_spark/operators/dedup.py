@@ -23,12 +23,14 @@ Scale notes (100 TB):
   by the doc count: up to n_docs × bands = CC_LOCAL_EDGE_THRESHOLD band
   keys (~250k docs at 16 bands) the keys are fetched once and the whole
   decision runs on the driver (cluster_min_losers); above it the star
-  edges are built in Spark (minhash_candidate_edges) and solved by the CC
-  ladder below;
+  edges are built in Spark (_star_edges) and solved by the CC ladder
+  below.  Either way the signature is materialized once, by ``_checkpoint``,
+  whose observed row count picks the rung;
 * SimHash/n-gram verification needs true pairwise checks — bucket sizes are
   capped (cap param) to bound the self-join blow-up on degenerate buckets;
 * connected components: ``_solve`` is the one place the rung is picked,
-  from one count of a materialized edge set — one driver-local numpy solve
+  from the edge count that ``_checkpoint`` observes on the job that
+  materializes the edges (no count job) — one driver-local numpy solve
   up to CC_LOCAL_EDGE_THRESHOLD edges, otherwise partition-local solves
   plus edge contraction (Kiveris et al., SoCC 2014) whose residual goes
   back through ``_solve`` — a fixed number of jobs, no per-round loop.
@@ -41,7 +43,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -188,7 +190,7 @@ def cluster_min_losers(
     ``(doc_seq, packed band key)`` arrays (one row per doc and band, as
     ``packed_band_keys`` emits them): every bucket (rows sharing a key)
     links its docs to its min ``doc_seq`` root, a bucket of more than
-    ``cap`` docs makes no links (minhash_candidate_edges' bucket cap;
+    ``cap`` docs makes no links (_star_edges' bucket cap;
     ``None`` drops no bucket, as exact keys need), and ``_cc_min_numpy``
     solves the star edges.  Returns the sorted ``doc_seq`` values that are
     not the min of their cluster.  A repeated ``(seq, key)`` row counts
@@ -268,10 +270,20 @@ def _release_checkpoint(df: DataFrame) -> None:
         plan.rdd().unpersist(False)
 
 
-def _solve(edges: DataFrame, _depth: int = 0):
-    """The one CC rung decision, over a materialized ``(a, b)`` edge set
-    that it consumes (its blocks are released once read).  The edges are
-    counted at most once:
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` materialized by an eager ``localCheckpoint``, and its row
+    count.  The count is an ``Observation`` on the checkpoint's own job, so
+    it costs no second job (the way ``write_batch_once`` takes its totals
+    from the write).  Release the frame with ``_release_checkpoint``."""
+    obs = Observation()
+    frame = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return frame, obs.get["rows"]
+
+
+def _solve(edges: DataFrame, n: int, _depth: int = 0):
+    """The one CC rung decision, over a materialized ``(a, b)`` edge set of
+    ``n`` edges that it consumes (its blocks are released once read); it
+    runs no count of its own:
 
     - **local** (at most CC_LOCAL_EDGE_THRESHOLD edges, or recursion depth
       >= 2): one Arrow fetch of the two long columns and the numpy
@@ -288,7 +300,7 @@ def _solve(edges: DataFrame, _depth: int = 0):
       near-dup graph, so the whole solve is a FIXED number of data-heavy
       jobs (VERDICT r3 #1).  Returns the lazy ``(node, component)`` frame,
       which reads the materialized local roots."""
-    if _depth >= 2 or edges.count() <= CC_LOCAL_EDGE_THRESHOLD:
+    if _depth >= 2 or n <= CC_LOCAL_EDGE_THRESHOLD:
         pdf = edges.select(F.col("a").cast("long"), F.col("b").cast("long")).toPandas()
         _release_checkpoint(edges)
         return _cc_min_numpy(pdf["a"].to_numpy(np.int64), pdf["b"].to_numpy(np.int64))
@@ -373,7 +385,7 @@ def _cc_distributed_contract(edges: DataFrame, _depth: int = 0) -> DataFrame:
         .distinct()
     )
     roots = _as_frame(
-        m.sparkSession, _solve(residual.localCheckpoint(eager=True), _depth + 1)
+        m.sparkSession, _solve(*_checkpoint(residual), _depth + 1)
     ).withColumnRenamed("node", "local_root")
     # every multi-root node's roots share one residual component, so the
     # min-agg only dedupes the per-partition copies (values are equal);
@@ -392,10 +404,11 @@ def _cc_distributed_contract(edges: DataFrame, _depth: int = 0) -> DataFrame:
 def connected_components_min(edges: DataFrame) -> DataFrame:
     """Edges (a:long, b:long) -> (node:long, component:long) where component
     is the min node id reachable.  Checkpoints ``edges`` and hands the
-    checkpoint to ``_solve``, which picks the local or the contract rung.
-    The returned frame of the contract rung reads the materialized local
-    roots, which stay registered until the JVM collects them."""
-    return _as_frame(edges.sparkSession, _solve(edges.localCheckpoint(eager=True)))
+    checkpoint and its observed count to ``_solve``, which picks the local
+    or the contract rung.  The returned frame of the contract rung reads
+    the materialized local roots, which stay registered until the JVM
+    collects them."""
+    return _as_frame(edges.sparkSession, _solve(*_checkpoint(edges)))
 
 
 def _sorted_member(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -436,14 +449,16 @@ def keep_cluster_min(
     edges_materialized: bool = False,
 ) -> DataFrame:
     """Drop every row whose seq appears in a duplicate cluster with a smaller
-    min-seq; annotate nothing (reference drops silently).
-    ``edges_materialized=True`` skips the eager checkpoint when the caller
-    already returned a materialized edge set (minhash_candidate_edges) and
-    hands that set over: like the checkpoint taken here, it is consumed —
-    its blocks are released once read, so do not reuse it after the call."""
-    if not edges_materialized:
-        edges = edges.localCheckpoint(eager=True)
-    solved = _solve(edges)
+    min-seq; annotate nothing (reference drops silently).  The lazy
+    ``edges`` are checkpointed and counted by one job (``_checkpoint``).
+    ``edges_materialized=True`` takes an already materialized edge set
+    (minhash_candidate_edges) instead and counts it — the one ``count()``
+    job left in this module, reached only by a caller that times the edge
+    set on its own.  Either way the edge set is consumed: its blocks are
+    released once read, so do not reuse it after the call."""
+    solved = (
+        _solve(edges, edges.count()) if edges_materialized else _solve(*_checkpoint(edges))
+    )
     if isinstance(solved, DataFrame):
         losers = solved.where(F.col("node") != F.col("component")).select(
             F.col("node").alias(seq_col)
@@ -689,55 +704,50 @@ def minhash_dedup(
     5-gram MinHash(num_perm=128) + LSH at threshold≈0.9; survivor = min-seq
     per near-dup cluster (see module docstring for the semantics contract).
     Buckets larger than ``bucket_cap`` are dropped from pairing (see
-    minhash_candidate_edges; audit via minhash_dropped_buckets).
+    _star_edges; audit via minhash_dropped_buckets).
 
     bands=16 × r=8 gives LSH threshold (1/b)^(1/r) ≈ 0.707 band-collision
     knee; the reference's 0.9 threshold maps to bands=8/r=16 — configurable.
 
     Plan shape: scan -> (tokens: ONE Arrow UDF hashing grams + signing from
     raw int32 tokens | text: HOF shingling -> xxhash64 (JVM) -> Arrow batch
-    numpy signature), persisted and counted (the one job that runs the
-    band UDF) -> one of two rungs, chosen by that count:
+    numpy signature) -> one eager checkpoint of the signature, the one job
+    that runs the band UDF, whose row count is observed on that same job
+    (``_checkpoint``) -> one of two rungs, chosen by that count:
 
     - **driver** (``n_docs × bands <= CC_LOCAL_EDGE_THRESHOLD``, the
       ~64 MB of longs the CC local rung already collects; ~250k docs at 16
       bands): one Arrow fetch of the ``packed_band_keys`` pairs from the
-      cache, ``cluster_min_losers`` on the driver, then the ``drop_sorted``
-      survivor filter — no band-key shuffle and no edge checkpoint;
-    - **edges** (above the bound): minhash_candidate_edges over the same
-      cache — posexplode bands -> (min, count) bucket roots agg -> join
-      back for star edges -> keep_cluster_min's CC ladder -> survivor
-      filter.
+      checkpoint, ``cluster_min_losers`` on the driver, then the
+      ``drop_sorted`` survivor filter — no band-key shuffle and no edge
+      checkpoint;
+    - **edges** (above the bound): ``_star_edges`` over the same
+      checkpoint — (min, count) bucket roots agg -> join back for star
+      edges -> keep_cluster_min's CC ladder -> survivor filter.
 
     Both rungs give identical survivors.  No B² bucket blow-up anywhere,
-    no unbounded agg buffers.  The signature cache is released before the
-    call returns and no checkpoint is left registered.
+    no unbounded agg buffers.  The signature checkpoint is released before
+    the call returns and no other checkpoint is left registered.
     """
-    from pyspark import StorageLevel
-
     bands_expr = _bands_expr(
         key, num_perm, bands, shingle_n, use_tokens, token_ngram, seed
     )
-    sig = _signature(df, seq_col, bands_expr).persist(StorageLevel.MEMORY_AND_DISK)
+    sig, n_docs = _checkpoint(_signature(df, seq_col, bands_expr))
     try:
-        if sig.count() * bands > CC_LOCAL_EDGE_THRESHOLD:
-            edges = minhash_candidate_edges(
-                df, None, seq_col, num_perm, bands, seed, bucket_cap,
-                bands_expr=bands_expr,
-            )
-            return keep_cluster_min(df, edges, seq_col, edges_materialized=True)
-        pairs = packed_band_keys(sig, "_seq", "_bands", "_bkey").toPandas()
+        banded = packed_band_keys(sig, "_seq", "_bands", "_bkey")
+        if n_docs * bands > CC_LOCAL_EDGE_THRESHOLD:
+            return keep_cluster_min(df, _star_edges(banded, bucket_cap), seq_col)
+        pairs = banded.toPandas()
     finally:
-        sig.unpersist()
+        _release_checkpoint(sig)
     return drop_sorted(df, seq_col, cluster_min_losers(
         pairs["_seq"].to_numpy(np.int64), pairs["_bkey"].to_numpy(np.int64), bucket_cap
     ))
 
 
 def _signature(df: DataFrame, seq_col: str, bands_expr) -> DataFrame:
-    """(``_seq``, ``_bands``): the frame both MinHash rungs band.  Built
-    from the same ``bands_expr`` it is the same plan, so a cache one rung
-    persists serves the other."""
+    """(``_seq``, ``_bands``): the one frame every MinHash path bands — one
+    row per doc, null ``_bands`` for a doc too short to shingle."""
     return df.select(F.col(seq_col).alias("_seq"), bands_expr.alias("_bands"))
 
 
@@ -747,7 +757,7 @@ def packed_band_keys(
     """(seq, array<long> band hashes) -> one (seq, key) row per band, where
     key = ``xxhash64(band_id, band_hash)`` packs the LSH bucket identity
     into ONE 64-bit column.  The single band-key format of the engine: the
-    bucket key batch MinHash shuffles on (minhash_candidate_edges) and the
+    bucket key batch MinHash shuffles on (_star_edges) and the
     key of the exact near-dedup stream's band index
     (pipeline.run_near_dedup_stream_exact).
 
@@ -774,43 +784,27 @@ def packed_band_keys(
     )
 
 
-def minhash_candidate_edges(
-    df: DataFrame,
-    shingle_hashes,
-    seq_col: str,
-    num_perm: int,
-    bands: int,
-    seed: int,
-    bucket_cap: int = MINHASH_BUCKET_CAP,
-    bands_expr=None,
-    materialize: bool = True,
-) -> DataFrame:
-    """The distributed half of MinHash-LSH: signature -> banded buckets ->
-    star edges (a, b), returned MATERIALIZED (eager localCheckpoint).
-    minhash_dedup's above-bound rung (more than CC_LOCAL_EDGE_THRESHOLD
-    band keys; below it the driver decides, cluster_min_losers).  Split
-    out so the plan-audit tool explains exactly what runs
-    (PLANS.md §MinHash).  ``materialize=False`` skips the persist +
-    eager checkpoint and returns the raw logical plan — for plan audit
-    (tools/explain_plans.py) only; executing that plan runs the
-    signature UDF once per downstream consumer.
+def _star_edges(banded: DataFrame, bucket_cap: int) -> DataFrame:
+    """Lazy star edges ``(a, b)`` from ``packed_band_keys`` rows ``(_seq,
+    _bkey)``: each bucket of at most ``bucket_cap`` docs links its members
+    to its min-seq root.
 
-    Shape: ONE UDF pass over the input, persisted (the banded signature is a
-    fixed ~128 B/doc — far smaller than the input, and the standard
-    signature-table design at scale); a (min, count) aggregation per bucket
-    — FIXED 16-byte buffers, so a degenerate hot bucket can never blow an
-    executor no matter its size, with no salting machinery needed; an inner
-    join of the banded rows against the kept roots (AQE broadcasts the root
-    table when small); star edges; distinct.  A dropped over-cap bucket's
-    rows still cross that join's shuffle as one bounded-memory
-    external-sort straggler — round-4 measurement falsified the earlier
-    assumption that AQE skew-join splits it (OptimizeSkewedJoin only
-    matches SMJ(Sort(Shuffle), Sort(Shuffle)); the roots side aggregates
-    between its shuffle and the join — NOTES.md round-4), paid only when
-    a degenerate bucket exists.  Under a broadcast the banded side never
-    shuffles for the join, and distinct's map-side combine then runs with
-    all of a doc's bands colocated, collapsing the up-to-``bands``x
-    duplicate (member, root) pairs before the only large exchange.
+    Shape: a (min, count) aggregation per bucket — FIXED 16-byte buffers,
+    so a degenerate hot bucket can never blow an executor no matter its
+    size, with no salting machinery needed; an inner join of the banded
+    rows against the kept roots (AQE turns it into a broadcast join when a
+    side is small); star edges; distinct.  A dropped over-cap bucket's rows still cross
+    that join's shuffle as one bounded-memory external-sort straggler —
+    round-4 measurement falsified the earlier assumption that AQE skew-join
+    splits it (OptimizeSkewedJoin only matches SMJ(Sort(Shuffle),
+    Sort(Shuffle)); the roots side aggregates between its shuffle and the
+    join — NOTES.md round-4), paid only when a degenerate bucket exists.
+    AQE picks a broadcast only after both join sides' shuffles have run,
+    so the banded rows cross one shuffle either way (on the 250-doc test
+    input AQE broadcasts the banded side itself); distinct's map-side
+    combine collapses the up-to-``bands``x duplicate (member, root) pairs.
+    ``banded`` is read twice (roots agg and join), so callers hand in rows
+    over a materialized signature.
 
     This replaced a collect_list-based salted two-level aggregation: the
     member-array build (collect_list + sort + slice + flatten + explode) was
@@ -822,43 +816,46 @@ def minhash_candidate_edges(
     (same contract as simhash/ngram): at 100 TB a hot LSH bucket means a
     degenerate band value, and its near-dup content is already collapsed by
     exact dedup upstream.  The drop is not silent — minhash_dropped_buckets
-    reports (band_id, band_hash, size) for any cap audit.
+    reports (band_id, band_hash, size) for any cap audit."""
+    roots = banded.groupBy("_bkey").agg(
+        F.min("_seq").alias("_root"), F.count("*").alias("_n")
+    )
+    return (
+        banded.join(roots.where(F.col("_n") <= bucket_cap), "_bkey")
+        .where(F.col("_seq") != F.col("_root"))
+        .select(F.col("_seq").alias("a"), F.col("_root").alias("b"))
+        .distinct()
+    )
+
+
+def minhash_candidate_edges(
+    df: DataFrame,
+    shingle_hashes,
+    seq_col: str,
+    num_perm: int,
+    bands: int,
+    seed: int,
+    bucket_cap: int = MINHASH_BUCKET_CAP,
+    bands_expr=None,
+) -> DataFrame:
+    """MinHash-LSH star edges (a, b), returned MATERIALIZED (eager
+    localCheckpoint), for a caller that times the edge set on its own and
+    hands it to ``keep_cluster_min(..., edges_materialized=True)``.
+    ``minhash_dedup`` builds the same edges inside its edge rung.  The
+    signature is checkpointed first, so the band UDF runs once, then the
+    ``_star_edges`` plan is checkpointed and the signature released.
 
     ``bands_expr`` (Column -> array<long> band hashes) overrides the
     shingle_hashes + band-UDF pair — the tokens fast path hashes grams
     inside the Arrow batch (minhash_bands_from_tokens_udf)."""
-    from pyspark import StorageLevel
-
     if bands_expr is None:
         bands_expr = minhash_band_udf(num_perm, bands, seed)(shingle_hashes)
-    sig = _signature(df, seq_col, bands_expr)
-    # a signature cache the caller holds (minhash_dedup's) is read, not
-    # re-persisted, and the caller releases it
-    owned = materialize and sig.storageLevel == StorageLevel.NONE
-    if owned:
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    sig, _ = _checkpoint(_signature(df, seq_col, bands_expr))
     try:
         banded = packed_band_keys(sig, "_seq", "_bands", "_bkey")
-        roots = banded.groupBy("_bkey").agg(
-            F.min("_seq").alias("_root"), F.count("*").alias("_n")
-        )
-        edges = (
-            banded.join(
-                roots.where(F.col("_n") <= bucket_cap),
-                "_bkey",
-            )
-            .where(F.col("_seq") != F.col("_root"))
-            .select(F.col("_seq").alias("a"), F.col("_root").alias("b"))
-            .distinct()
-        )
-        if not materialize:
-            return edges
-        # materialize while the signature cache is alive: the roots agg fills
-        # the cache, the join reuses it — the UDF runs exactly once
-        return edges.localCheckpoint(eager=True)
+        return _star_edges(banded, bucket_cap).localCheckpoint(eager=True)
     finally:
-        if owned:
-            sig.unpersist()
+        _release_checkpoint(sig)
 
 
 def minhash_dropped_buckets(

@@ -104,13 +104,17 @@ def write_any(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 _DRIVER_FORMAT_MAX_ROWS = 5_000_000
 
 
-def _driver_cap(df: DataFrame, fmt: str) -> None:
-    n = df.limit(_DRIVER_FORMAT_MAX_ROWS + 1).count()
-    if n > _DRIVER_FORMAT_MAX_ROWS:
+def _driver_fetch(df: DataFrame, fmt: str, fetch: str):
+    """``df``'s rows by its ``fetch`` method (``toPandas`` or ``collect``),
+    fetched once over at most one row past the cap and refused when that
+    row is there — the plan runs once, with no separate count job."""
+    rows = getattr(df.limit(_DRIVER_FORMAT_MAX_ROWS + 1), fetch)()
+    if len(rows) > _DRIVER_FORMAT_MAX_ROWS:
         raise ValueError(
             f"{fmt} is a single-file driver-side format; dataset exceeds "
             f"{_DRIVER_FORMAT_MAX_ROWS} rows — write parquet instead"
         )
+    return rows
 
 
 def read_pickle(spark: SparkSession, path: str) -> DataFrame:
@@ -122,8 +126,7 @@ def read_pickle(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_pickle(df: DataFrame, path: str) -> None:
-    _driver_cap(df, "pickle")
-    df.toPandas().to_pickle(path)
+    _driver_fetch(df, "pickle", "toPandas").to_pickle(path)
 
 
 # Minimal SpreadsheetML (ECMA-376) support on the stdlib.  Scope: one
@@ -213,9 +216,9 @@ def write_xlsx(df: DataFrame, path: str, sheet: str = "Sheet1") -> None:
     import zipfile
     from xml.sax.saxutils import escape
 
-    _driver_cap(df, "xlsx")
+    rows = _driver_fetch(df, "xlsx", "collect")
     cols = df.columns
-    it = [cols] + [[row[c] for c in cols] for row in df.collect()]
+    it = [cols] + [[row[c] for c in cols] for row in rows]
     sheet_rows = []
     for ri, vals in enumerate(it, start=1):
         cells = []

@@ -73,16 +73,16 @@ def test_ccnet_dedup_bits(spark):
 def test_minhash_dedup_cluster_parity(spark, monkeypatch, rung):
     """MinHash-LSH survivors == oracle union-find on identical band hashes,
     on both rungs of minhash_dedup: the driver decision (n_docs × bands
-    within CC_LOCAL_EDGE_THRESHOLD) and the candidate-edge pipeline, forced
+    within CC_LOCAL_EDGE_THRESHOLD) and the star-edge pipeline, forced
     here by a bound one below n_docs × bands."""
     rows = make_token_docs(n=250, dup_frac=0.1, near_frac=0.1)
     df = spark.createDataFrame(rows, TOKEN_SCHEMA)
     if rung == "edges":
         monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", len(rows) * 16 - 1)
     edge_calls = []
-    real_edges = dedup.minhash_candidate_edges
+    real_edges = dedup._star_edges
     monkeypatch.setattr(
-        dedup, "minhash_candidate_edges",
+        dedup, "_star_edges",
         lambda *a, **kw: edge_calls.append(1) or real_edges(*a, **kw),
     )
     out = dedup.minhash_dedup(df, use_tokens=True, token_ngram=3, bands=16, num_perm=128)
@@ -174,24 +174,30 @@ def test_cluster_min_losers_matches_union_find():
     assert got == [s_ for s_ in want if s_ not in held]
 
 
-def test_minhash_dedup_driver_rung_job_budget(spark):
-    """A driver-rung minhash_dedup call runs 4 Spark jobs before it
-    returns: the signature ``count()`` (under AQE, the cache stage that
-    runs the band UDF, then the two aggregate stages) and the one
-    band-key fetch.  The candidate-edge rung runs 10 on this input: the
-    same count, then the roots aggregation, join and distinct into the
-    edge checkpoint, the edge count and the edge collect."""
-    df = spark.createDataFrame(
-        make_token_docs(n=250, dup_frac=0.1, near_frac=0.1), TOKEN_SCHEMA
-    )
+@pytest.mark.parametrize("rung", ["driver", "edges"])
+def test_minhash_dedup_job_budget(spark, monkeypatch, rung):
+    """The Spark jobs a minhash_dedup call runs before it returns.  Both
+    rungs start with the signature checkpoint, the one job that runs the
+    band UDF; its row count, which picks the rung, is observed on that job.
+    The driver rung then runs the band-key fetch: 2 jobs.  The edge rung
+    (forced by a bound one below n_docs × bands) runs the edge
+    checkpoint — under AQE one job per query stage: the roots
+    aggregation's shuffle, the banded side's shuffle, that side's
+    broadcast (AQE turns the join into a broadcast join), the distinct's
+    shuffle and the result stage (5 jobs) — then the edge fetch of the
+    local CC solve: 7 jobs."""
+    rows = make_token_docs(n=250, dup_frac=0.1, near_frac=0.1)
+    df = spark.createDataFrame(rows, TOKEN_SCHEMA)
+    if rung == "edges":
+        monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", len(rows) * 16 - 1)
     sc = spark.sparkContext
-    group = "minhash-driver-rung-budget"
+    group = f"minhash-{rung}-rung-budget"
     sc.setJobGroup(group, group)
     try:
         out = dedup.minhash_dedup(df, use_tokens=True)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == (2 if rung == "driver" else 7)
     assert out.count() < 250
 
 
@@ -500,10 +506,10 @@ def _spy_solve(monkeypatch):
     rows = []
     real = dedup._solve
 
-    def solve(edges, _depth=0):
-        row = {"depth": _depth, "edges": edges.count()}
+    def solve(edges, n, _depth=0):
+        row = {"depth": _depth, "edges": n}
         rows.append(row)
-        out = real(edges, _depth)
+        out = real(edges, n, _depth)
         row["strategy"] = "contract" if isinstance(out, DataFrame) else "local"
         return out
 
@@ -572,7 +578,7 @@ def test_cc_min_numpy_and_keep_cluster_min_total_on_no_edges(spark):
 
 
 @pytest.mark.parametrize(
-    "path", ["local", "contract", "keep_cluster_min", "minhash"]
+    "path", ["local", "contract", "keep_cluster_min", "minhash", "minhash_edges"]
 )
 def test_cc_releases_checkpoints(spark, monkeypatch, path):
     """CC leaves no checkpoint behind in getPersistentRDDs: the local path
@@ -580,8 +586,10 @@ def test_cc_releases_checkpoints(spark, monkeypatch, path):
     driver) keeps only the materialized local roots, which the returned
     lazy plan still reads — the input and residual checkpoints are
     released once solved.  keep_cluster_min's distributed branch is the
-    contract path behind the same threshold; minhash_dedup (signature
-    cache, edge checkpoint, local CC) adds none."""
+    contract path behind the same threshold; minhash_dedup adds none on
+    either rung — the driver rung (signature checkpoint, band-key fetch)
+    and the edge rung, forced by a bound one below n_docs × bands
+    (signature checkpoint, edge checkpoint, local CC)."""
     edges = [(i, i + 1) for i in range(0, 60)]
     edges += [(1000 + i, 1000 + i + 1) for i in range(0, 60)]
     edges += [(30, 1030)]
@@ -590,7 +598,9 @@ def test_cc_releases_checkpoints(spark, monkeypatch, path):
     threshold = len(edges) if path == "local" else len(edges) - 1
     jsc = spark.sparkContext._jsc
     before = set(dict(jsc.getPersistentRDDs()))
-    if path == "minhash":
+    if path.startswith("minhash"):
+        if path == "minhash_edges":
+            monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", 250 * 16 - 1)
         docs = spark.createDataFrame(
             make_token_docs(n=250, dup_frac=0.1, near_frac=0.1), TOKEN_SCHEMA
         )
@@ -616,11 +626,15 @@ def test_cc_releases_checkpoints(spark, monkeypatch, path):
 
 @pytest.mark.parametrize("rung", ["local", "contract"])
 def test_keep_cluster_min_counts_edges_once(spark, monkeypatch, rung):
-    """keep_cluster_min counts its input edge set once on both rungs: the
-    count in ``_solve`` that picks the rung is the only one, and the
-    contraction is entered without counting the same edges again."""
+    """keep_cluster_min runs no ``DataFrame.count`` on lazy edges on either
+    rung: the count that picks the rung is observed on the job that
+    checkpoints them, and the contraction's residual is counted the same
+    way.  A materialized edge set (``edges_materialized=True``) is counted
+    exactly once, and the contraction is entered without counting the same
+    edges again."""
     pairs = [(i, i + 1) for i in range(0, 60)] + [(500, m) for m in range(501, 520)]
-    edges = spark.createDataFrame(pairs, "a long, b long").localCheckpoint(eager=True)
+    lazy = spark.createDataFrame(pairs, "a long, b long")
+    edges = lazy.localCheckpoint(eager=True)
     threshold = len(pairs) if rung == "local" else len(pairs) - 1
     monkeypatch.setattr(dedup, "CC_LOCAL_EDGE_THRESHOLD", threshold)
     counted = []
@@ -633,11 +647,15 @@ def test_keep_cluster_min_counts_edges_once(spark, monkeypatch, rung):
 
     monkeypatch.setattr(frame_cls, "count", count)
     docs = spark.range(1000).withColumnRenamed("id", "doc_seq")
+    got_lazy = {r.doc_seq for r in dedup.keep_cluster_min(docs, lazy).collect()}
+    assert counted == []
     got = {
         r.doc_seq
         for r in dedup.keep_cluster_min(docs, edges, edges_materialized=True).collect()
     }
     monkeypatch.undo()
     labels = _uf_oracle(pairs)
-    assert got == set(range(1000)) - {n for n, c in labels.items() if n != c}
+    want = set(range(1000)) - {n for n, c in labels.items() if n != c}
+    assert got_lazy == want
+    assert got == want
     assert sum(c is edges for c in counted) == 1, counted

@@ -187,6 +187,21 @@ def test_pickle_xlsx_roundtrip(spark, tmp_path):
         ) == sorted((r.id, r.score, r.s) for r in df.collect())
 
 
+@pytest.mark.parametrize("ext", ["pkl", "xlsx"])
+def test_driver_formats_refuse_over_cap(spark, tmp_path, monkeypatch, ext):
+    """The single-file driver formats write a frame of exactly
+    ``_DRIVER_FORMAT_MAX_ROWS`` rows and refuse one row more, with no file
+    left behind."""
+    monkeypatch.setattr(src_io, "_DRIVER_FORMAT_MAX_ROWS", 3)
+    at_cap = str(tmp_path / f"ok.{ext}")
+    src_io.write_any(spark.range(3), at_cap)
+    assert sorted(r.id for r in src_io.read_any(spark, at_cap).collect()) == [0, 1, 2]
+    over = str(tmp_path / f"over.{ext}")
+    with pytest.raises(ValueError, match="exceeds 3 rows"):
+        src_io.write_any(spark.range(4), over)
+    assert not os.path.exists(over)
+
+
 def test_xlsx_nulls_and_shared_strings(spark, tmp_path):
     # a null cell is simply absent from the row XML; reader must re-align
     # columns from cell refs, not positions

@@ -92,10 +92,6 @@ def test_minhash_signature_udf_planned_once(corpus, path):
 
     if path == "tokens":
         bands_expr = dedup.minhash_bands_from_tokens_udf(32, 8, 3, 1)(F.col("tokens"))
-        edges = dedup.minhash_candidate_edges(
-            corpus, None, "doc_seq", 32, 8, 1, bands_expr=bands_expr,
-            materialize=False,
-        )
     else:
         key, n = "text_rep" if "text_rep" in corpus.columns else "text", 5
         s = F.col(key)
@@ -106,18 +102,20 @@ def test_minhash_signature_udf_planned_once(corpus, path):
                 f"i -> substring({key}, i, {n}))"
             ),
         ).otherwise(F.array(s))
-        edges = dedup.minhash_candidate_edges(
-            corpus,
-            F.transform(shingles, lambda g: F.xxhash64(g)),
-            "doc_seq", 32, 8, 1,
-            materialize=False,
+        bands_expr = dedup.minhash_band_udf(32, 8, 1)(
+            F.transform(shingles, lambda g: F.xxhash64(g))
         )
+    sig = dedup._signature(corpus, "doc_seq", bands_expr)
+    edges = dedup._star_edges(
+        dedup.packed_band_keys(sig, "_seq", "_bands", "_bkey"), dedup.MINHASH_BUCKET_CAP
+    )
     nodes = plan_nodes(edges)
-    # The unmaterialized audit plan has exactly TWO signature consumers (the
-    # (min,count) roots agg and the join-back for star edges) -> the UDF is
-    # planned once per consumer; in production the signature is persisted and
-    # the UDF runs once (PLANS.md §MinHash).  The InferFiltersFromGenerate
-    # trap (NOTES round-2) would plan an EXTRA copy per consumer -> 3-4.
+    # The lazy star-edge plan over an unmaterialized signature has exactly
+    # TWO signature consumers (the (min,count) roots agg and the join-back
+    # for star edges) -> the UDF is planned once per consumer; in production
+    # the signature is checkpointed first and the UDF runs once (PLANS.md
+    # §MinHash).  The InferFiltersFromGenerate trap (NOTES round-2) would
+    # plan an EXTRA copy per consumer -> 3-4.
     assert nodes.count("ArrowEvalPython") == 2, nodes
     assert "CartesianProduct" not in nodes and "BroadcastNestedLoopJoin" not in nodes
 

@@ -87,12 +87,11 @@ def main():
     corpus.write.mode("overwrite").parquet(mat_dir)
     mat = spark.read.parquet(mat_dir)
 
-    edges = dedup.minhash_candidate_edges(
-        mat, None, "doc_seq", 128, 16, 1,
-        bands_expr=dedup.minhash_bands_from_tokens_udf(128, 16, 3, 1)(
-            F.col("tokens")
-        ),
-        materialize=False,
+    sig = dedup._signature(
+        mat, "doc_seq", dedup.minhash_bands_from_tokens_udf(128, 16, 3, 1)(F.col("tokens"))
+    )
+    edges = dedup._star_edges(
+        dedup.packed_band_keys(sig, "_seq", "_bands", "_bkey"), dedup.MINHASH_BUCKET_CAP
     )
     sections.append(
         (
@@ -100,23 +99,24 @@ def main():
             "-> join -> star edges), tokens fast path",
             "minhash_dedup runs this plan only above CC_LOCAL_EDGE_THRESHOLD "
             "band keys (n_docs x bands; ~250k docs at 16 bands); below it "
-            "the band keys are fetched once from the signature cache and "
-            "dedup.cluster_min_losers decides on the driver.  "
-            "Expected: EXACTLY ONE ArrowEvalPython reading only (doc_seq, "
-            "tokens) — the token n-gram hashing AND the numpy signature both "
-            "run inside the Arrow batch, so 4 bytes/token cross the "
-            "JVM-Python boundary and no JVM HOF materializes per-gram "
-            "arrays (posexplode_outer keeps InferFiltersFromGenerate from "
-            "planning the UDF a second time).  Then: one Exchange into the "
-            "(min, count) per-bucket aggregation — FIXED 16-byte agg "
+            "the band keys are fetched once from the signature checkpoint "
+            "and dedup.cluster_min_losers decides on the driver.  "
+            "Expected: ONE ArrowEvalPython per signature consumer, reading "
+            "only (doc_seq, tokens) — the token n-gram hashing AND the numpy "
+            "signature both run inside the Arrow batch, so 4 bytes/token "
+            "cross the JVM-Python boundary and no JVM HOF materializes "
+            "per-gram arrays (posexplode_outer keeps InferFiltersFromGenerate "
+            "from planning the UDF a second time).  Then: one Exchange into "
+            "the (min, count) per-bucket aggregation — FIXED 16-byte agg "
             "buffers, partial agg map-side, no collect_list anywhere — a "
             "join of the banded rows back against the kept roots (AQE "
-            "broadcasts the root table when small; in production the "
-            "signature is persisted so the UDF runs once for both "
-            "consumers), and the final edge distinct.  Never B^2 pairs.  "
-            "Audited with materialize=False: the production path persists "
-            "the signature and eagerly checkpoints the edges, which would "
-            "hide this plan behind a Scan ExistingRDD.",
+            "broadcasts the root table when small), and the final edge "
+            "distinct.  Never B^2 pairs.  Audited as the lazy dedup._star_edges "
+            "plan over an unmaterialized signature, so both consumers (roots "
+            "agg and join) show the UDF: minhash_dedup first checkpoints the "
+            "signature (dedup._checkpoint, the one job that runs the UDF, its "
+            "row count observed on that job), which would hide this plan "
+            "behind a Scan ExistingRDD.",
             cap(edges),
         )
     )
