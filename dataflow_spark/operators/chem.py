@@ -35,11 +35,8 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from dataflow_spark.core.stage import Stage, register
+from dataflow_spark.functions.text import c
 from dataflow_spark.operators import _smiles
-
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 @pandas_udf(T.StringType())
@@ -134,7 +131,7 @@ def smiles_block_scores(
     exploded entries and compared, reproducing the RDKit contract."""
     if mode == "exact":
         equiv = lambda a, b: F.trim(a) == F.trim(b)  # noqa: E731
-        final, bs, bt, ba = _score_blocks(_c(golden_col), _c(synth_col), equiv)
+        final, bs, bt, ba = _score_blocks(c(golden_col), c(synth_col), equiv)
         return df.withColumns(
             {
                 output_key: final,
@@ -223,7 +220,7 @@ def smiles_block_scores(
             }
         )
 
-    res = score_block_udf(_c(golden_col), _c(synth_col))
+    res = score_block_udf(c(golden_col), c(synth_col))
     return (
         df.withColumn("_res", res)
         .withColumns(

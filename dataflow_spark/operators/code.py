@@ -31,10 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from dataflow_spark.core.stage import Stage, register
-
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from dataflow_spark.functions.text import c
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +52,7 @@ def autogen_marker_count(col) -> Column:
     (code_auto_generated_sample_evaluator.py:18-88: presence per pattern,
     not occurrences)."""
     first5 = F.lower(
-        F.array_join(F.slice(F.split(_c(col), "\n"), 1, 5), "\n")
+        F.array_join(F.slice(F.split(c(col), "\n"), 1, 5), "\n")
     )
     cnt = F.lit(0)
     for p in AUTOGEN_PATTERNS:
@@ -81,7 +78,7 @@ LENGTH_EXCLUDED_LANGS = (
 def length_metrics(col) -> tuple[Column, Column, Column]:
     """(n_lines, avg_line_len, max_line_len) over ``splitlines`` semantics
     (code_length_sample_evaluator.py:80-86)."""
-    lines = F.split(_c(col), "\n")
+    lines = F.split(c(col), "\n")
     lens = F.transform(lines, lambda l: F.length(l))
     n = F.size(lines)
     avg = (
@@ -96,7 +93,7 @@ def length_metrics(col) -> tuple[Column, Column, Column]:
 def length_score(col, language) -> Column:
     """code_length_sample_evaluator.py:89-101 scoring rules."""
     n, avg, mx = length_metrics(col)
-    lang = _c(language)
+    lang = c(language)
     excluded = lang.isin(*LENGTH_EXCLUDED_LANGS)
     return (
         F.when(n > 100_000, 0.0)
@@ -117,7 +114,7 @@ def composition_ratios(col) -> tuple[Column, Column]:
     """(alpha_ratio, alnum_ratio) — Unicode letter / letter+number classes
     (reference: str.isalpha()/isalnum(),
     code_text_composition_sample_evaluator.py:76-77)."""
-    t = _c(col)
+    t = c(col)
     total = F.greatest(F.lit(1), F.length(t))
     alpha = F.length(t) - F.length(F.regexp_replace(t, r"\p{L}", ""))
     alnum = F.length(t) - F.length(F.regexp_replace(t, r"[\p{L}\p{N}]", ""))
@@ -126,7 +123,7 @@ def composition_ratios(col) -> tuple[Column, Column]:
 
 def composition_score(col, language) -> Column:
     alpha, alnum = composition_ratios(col)
-    special = _c(language).isin(*COMPOSITION_SPECIAL_LANGS)
+    special = c(language).isin(*COMPOSITION_SPECIAL_LANGS)
     return (
         F.when(special & (alnum < 0.25), 0.0)
         .when(~special & (alpha < 0.25), 0.0)
@@ -148,7 +145,7 @@ ENCODED_PATTERNS = (
 def encoded_ratio(col, pattern: str) -> Column:
     """Total matched length of ``pattern`` / text length
     (code_encoded_data_sample_evaluator.py:79-103)."""
-    t = _c(col)
+    t = c(col)
     matches = F.regexp_extract_all(t, F.lit(pattern), 0)
     matched = F.coalesce(
         F.aggregate(
@@ -326,11 +323,11 @@ def keep_file_type_content(
     text files pass regardless of filename.  Reproduced as-is (the
     filename predicate stays available here for callers that want the
     documented intent)."""
-    ft = F.lower(_c(filetype))
-    fn = F.lower(_c(filename))
-    lc = _c(line_count)
-    vt = _c(visible_text_length) if visible_text_length is not None else F.lit(0)
-    tc = _c(total_code_length) if total_code_length is not None else F.lit(1)
+    ft = F.lower(c(filetype))
+    fn = F.lower(c(filename))
+    lc = c(line_count)
+    vt = c(visible_text_length) if visible_text_length is not None else F.lit(0)
+    tc = c(total_code_length) if total_code_length is not None else F.lit(1)
     name_no_ext = F.regexp_replace(fn, r"\.[^.]*$", "")
     text_name_ok = F.contains(fn, F.lit("requirement")) | name_no_ext.isin(*VALID_TEXT_NAMES)
     html_ok = (vt >= 100) & (
@@ -347,7 +344,7 @@ def keep_file_type_content(
 def keep_generic_score(score_col, threshold: float = 8, method: str = "greater_equal") -> Column:
     """CodeGenericScoreFilter (code_score_filter.py:25): comparison-method
     threshold filter over a numeric score column."""
-    s = _c(score_col)
+    s = c(score_col)
     ops = {
         "greater": s > threshold,
         "greater_equal": s >= threshold,

@@ -43,12 +43,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.functions import pandas_udf
 
 from dataflow_spark.core.stage import Stage, register
+from dataflow_spark.functions.arrow import lists, ragged
 from dataflow_spark.functions.text import ngram_strings
 
 # ---------------------------------------------------------------------------
@@ -496,92 +499,70 @@ def _perms(num_perm: int, seed: int = 1):
 
 
 def minhash_band_udf(num_perm: int = 128, bands: int = 16, seed: int = 1):
-    """pandas_udf: array<long> shingle hashes -> array<long> band hashes.
+    """arrow_udf: array<long> shingle hashes -> array<long> band hashes,
+    null for a row with no shingle.
 
-    The expensive inner loop ((a*h + b) mod p, min over shingles) runs as one
-    numpy einsum-style broadcast per Arrow batch — no per-row Python.  Band
-    hash = polynomial combine of the band's r signature values.
+    The expensive inner loop (multiply-shift permutation, min over shingles)
+    runs over the whole Arrow batch at once (``_band_hashes_from_flat``) —
+    no per-row Python.  Band hash = polynomial combine of the band's r
+    signature values.
     """
     assert num_perm % bands == 0
-    r = num_perm // bands
     a, b = _perms(num_perm, seed)
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def udf(hashes: pd.Series) -> pd.Series:
-        # One numpy pass for the WHOLE Arrow batch: concatenate every row's
-        # shingle hashes, permute as a single (num_perm, total) broadcast,
-        # reduce per-row signatures with minimum.reduceat — no per-row numpy
-        # call overhead (the per-row loop was 10x slower at bench scale).
-        n = len(hashes)
-        lens = np.fromiter(
-            ((0 if hs is None else len(hs)) for hs in hashes), dtype=np.int64, count=n
-        )
-        nonempty = lens > 0
-        if not nonempty.any():
-            return pd.Series([None] * n)
-        flat = np.concatenate(
-            [np.asarray(hs, dtype=np.int64) for hs in hashes[nonempty.tolist()]]
-        ).astype(np.uint64)
-        lens_ne = lens[nonempty]
-        bh = _band_hashes_from_flat(flat, lens_ne, a, b, num_perm, bands, r)
-        return _pack_band_rows(bh, nonempty, n)
+    @arrow_udf(T.ArrayType(T.LongType()))
+    def udf(hashes: pa.Array) -> pa.Array:
+        flat, lens = ragged(hashes)
+        keep = lens > 0
+        bh = _band_hashes_from_flat(flat.astype(np.uint64), lens[keep], a, b, num_perm, bands)
+        return lists(bh.ravel(), bands * keep, keep)
 
     return udf
 
 
+def _row_chunks(lens: np.ndarray, budget: int):
+    """Walk non-empty rows in consecutive runs whose values span at most
+    ``budget`` (a longer row runs alone): yields (row slice, value slice,
+    each row's start within the value slice) — the ``reduceat`` indices."""
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    r0 = 0
+    while r0 < len(lens):
+        c0 = starts[r0]
+        r1 = max(int(np.searchsorted(ends, c0 + budget, side="right")), r0 + 1)
+        yield slice(r0, r1), slice(c0, ends[r1 - 1]), starts[r0:r1] - c0
+        r0 = r1
+
+
 def _band_hashes_from_flat(
-    flat: np.ndarray, lens_ne: np.ndarray, a, b, num_perm: int, bands: int, r: int
+    flat: np.ndarray, lens_ne: np.ndarray, a, b, num_perm: int, bands: int
 ) -> np.ndarray:
-    """uint64 shingle hashes (flat, row lengths) -> (n_rows, bands) int64
-    band hashes.  multiply-shift (no division): (a*x + b) >> 32, uint64
+    """uint64 shingle hashes (flat, non-empty row lengths) -> (n_rows, bands)
+    int64 band hashes.  multiply-shift (no division): (a*x + b) >> 32, uint64
     wrap-around.  Chunk along the SHINGLE axis so the (num_perm x chunk)
     matrix stays cache-resident: a full-width matrix makes the kernel pure
     DRAM traffic, which saturates at ~8 cores and flatlines scaling —
     measured 50s at local[8] == 52s at local[32] before chunking.  The
     budget is per-WORKER (SIG_CHUNK_BYTES, 512 KiB): with 32
     concurrent workers the combined working set must fit the shared L3."""
-    n_ne = len(lens_ne)
-    offsets = np.zeros(n_ne, dtype=np.int64)
-    np.cumsum(lens_ne[:-1], out=offsets[1:])
-    total = int(lens_ne.sum())
-    CHUNK = max(256, SIG_CHUNK_BYTES // (num_perm * 8))
-    sig = np.empty((num_perm, n_ne), dtype=np.uint64)
+    sig = np.empty((num_perm, len(lens_ne)), dtype=np.uint64)
     shift = np.uint64(32)
-    r0 = 0
-    while r0 < n_ne:
-        r1 = r0
-        c0 = offsets[r0]
-        while r1 < n_ne and (offsets[r1] + lens_ne[r1] - c0) <= CHUNK:
-            r1 += 1
-        if r1 == r0:
-            r1 = r0 + 1  # single row larger than CHUNK
-        c1 = int(offsets[r1]) if r1 < n_ne else total
-        seg = flat[c0:c1]
-        phv = (a[:, None] * seg[None, :] + b[:, None]) >> shift
-        sig[:, r0:r1] = np.minimum.reduceat(phv, (offsets[r0:r1] - c0), axis=1)
-        r0 = r1
-    bandsig = sig.reshape(bands, r, -1)
+    for rows, vals, idx in _row_chunks(lens_ne, max(256, SIG_CHUNK_BYTES // (num_perm * 8))):
+        phv = (a[:, None] * flat[None, vals] + b[:, None]) >> shift
+        sig[:, rows] = np.minimum.reduceat(phv, idx, axis=1)
+    bandsig = sig.reshape(bands, num_perm // bands, -1)
     bh = np.zeros((bands, bandsig.shape[2]), dtype=np.uint64)
-    for j in range(r):
+    for j in range(bandsig.shape[1]):
         bh = bh * np.uint64(1000003) + bandsig[:, j, :]
     return bh.astype(np.int64).T  # (n_nonempty, bands)
-
-
-def _pack_band_rows(cols: np.ndarray, nonempty: np.ndarray, n: int) -> pd.Series:
-    out: list = [None] * n
-    j = 0
-    for i in range(n):
-        if nonempty[i]:
-            out[i] = cols[j].tolist()
-            j += 1
-    return pd.Series(out)
 
 
 def minhash_bands_from_tokens_udf(
     num_perm: int = 128, bands: int = 16, token_ngram: int = 3, seed: int = 1
 ):
-    """pandas_udf: tokens array<int> -> array<long> band hashes, with the
-    token n-gram shingle hashing done IN NUMPY instead of a JVM HOF.
+    """arrow_udf: tokens array<int> -> array<long> band hashes (null for a
+    row with no full gram), with the token n-gram shingle hashing done IN
+    NUMPY instead of a JVM HOF.
 
     Same outputs, very different memory profile: the JVM
     ``token_shingle_hashes`` transform materializes one long per gram as a
@@ -600,27 +581,20 @@ def minhash_bands_from_tokens_udf(
     from dataflow_spark.functions.text import _SHINGLE_BASE, _SHINGLE_MOD
 
     assert num_perm % bands == 0
-    r = num_perm // bands
     a, b = _perms(num_perm, seed)
     B = np.int64(_SHINGLE_BASE)
     M = np.int64(_SHINGLE_MOD)
     n_g = token_ngram
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def udf(tokens: pd.Series) -> pd.Series:
-        n = len(tokens)
-        lens = np.fromiter(
-            ((0 if t is None else len(t)) for t in tokens), dtype=np.int64, count=n
-        )
+    @arrow_udf(T.ArrayType(T.LongType()))
+    def udf(tokens: pa.Array) -> pa.Array:
+        flat, lens = ragged(tokens)
+        flat = flat.astype(np.int64)
         # a row pairs only if it has >= 1 full n-gram (token_shingle_hashes
         # emits an empty array below n tokens — same contract)
-        nonempty = lens >= n_g
-        if not nonempty.any():
-            return pd.Series([None] * n)
-        flat = np.concatenate(
-            [np.asarray(t, dtype=np.int64) for t in tokens[nonempty.tolist()]]
-        )
-        lens_ne = lens[nonempty]
+        keep = lens >= n_g
+        if not keep.any():
+            return pa.nulls(len(lens), pa.list_(pa.int64()))
         # rolling hash over the flat token stream: h_p = gram hash starting
         # at p, computed for ALL positions then compacted to in-row grams.
         # Congruence lets the mod run ONCE per gram instead of per step when
@@ -628,8 +602,7 @@ def minhash_bands_from_tokens_udf(
         # the gram value is < 2^(20n); n <= 3 fits), and the mod itself uses
         # a float-reciprocal quotient + fixup — x86 has no SIMD integer
         # division, so numpy's % is a scalar loop ~10x slower.
-        T_ = len(flat)
-        n_pos = T_ - n_g + 1
+        n_pos = len(flat) - n_g + 1
         if n_g * 20 <= 62 and 0 <= int(flat.min()) and int(flat.max()) < (1 << 20):
             h = flat[:n_pos].copy()
             for j in range(1, n_g):
@@ -642,18 +615,16 @@ def minhash_bands_from_tokens_udf(
             h = flat[:n_pos] % M
             for j in range(1, n_g):
                 h = (h * B + flat[j : n_pos + j]) % M
-        # valid gram positions: the first len-n+1 of each row
-        g_lens = lens_ne - n_g + 1
-        row_off = np.zeros(len(lens_ne), dtype=np.int64)
-        np.cumsum(lens_ne[:-1], out=row_off[1:])
-        # mark [row_off, row_off + g_len) per row via diff-trick
+        # valid gram positions: the first len-n+1 of each kept row, marked
+        # [row start, row start + g_len) via the diff trick
+        g_lens = lens[keep] - n_g + 1
+        row_off = (np.cumsum(lens) - lens)[keep]
         marks = np.zeros(n_pos + 1, dtype=np.int64)
         np.add.at(marks, row_off, 1)
         np.add.at(marks, row_off + g_lens, -1)
-        valid = np.cumsum(marks[:-1]) > 0
-        grams = h[valid].astype(np.uint64)
-        bh = _band_hashes_from_flat(grams, g_lens, a, b, num_perm, bands, r)
-        return _pack_band_rows(bh, nonempty, n)
+        grams = h[np.cumsum(marks[:-1]) > 0].astype(np.uint64)
+        bh = _band_hashes_from_flat(grams, g_lens, a, b, num_perm, bands)
+        return lists(bh.ravel(), bands * keep, keep)
 
     return udf
 
@@ -907,52 +878,29 @@ def minhash_dedup_stage(input_key: str = "text", seq_col: str = "doc_seq", **kw)
 
 
 def simhash_udf():
-    """pandas_udf: array<long> word hashes -> 64-bit simhash fingerprint.
-    Vectorized per Arrow batch: bit-unpack each hash, ±1 sum, sign."""
+    """arrow_udf: array<long> word hashes -> 64-bit simhash fingerprint, 0
+    for a row with no word.  Vectorized per Arrow batch: bit-unpack each
+    hash, ±1 sum, sign."""
+    shifts = np.arange(64, dtype=np.uint64)
 
-    @pandas_udf(T.LongType())
-    def udf(hashes: pd.Series) -> pd.Series:
-        # same cache-chunked whole-batch shape as the MinHash kernel: concat
-        # all word hashes, bit-unpack a (64 x chunk) slab while it is
-        # cache-resident, per-row popcounts via add.reduceat
-        n = len(hashes)
-        lens = np.fromiter(
-            ((0 if hs is None else len(hs)) for hs in hashes), dtype=np.int64, count=n
-        )
-        out = np.zeros(n, dtype=np.int64)
-        nonempty = lens > 0
-        if not nonempty.any():
-            return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(hs, dtype=np.int64) for hs in hashes[nonempty]]
-        ).astype(np.uint64)
-        lens_ne = lens[nonempty]
-        n_ne = len(lens_ne)
-        offsets = np.zeros(n_ne, dtype=np.int64)
-        np.cumsum(lens_ne[:-1], out=offsets[1:])
-        total = int(lens_ne.sum())
-        shifts = np.arange(64, dtype=np.uint64)
-        fps = np.zeros(n_ne, dtype=np.uint64)
-        CHUNK = 4096
-        r0 = 0
-        while r0 < n_ne:
-            r1 = r0
-            c0 = offsets[r0]
-            while r1 < n_ne and (offsets[r1] + lens_ne[r1] - c0) <= CHUNK:
-                r1 += 1
-            if r1 == r0:
-                r1 = r0 + 1
-            c1 = int(offsets[r1]) if r1 < n_ne else total
-            seg = flat[c0:c1]
-            bits = ((seg[None, :] >> shifts[:, None]) & np.uint64(1)).astype(np.int64)
-            ones = np.add.reduceat(bits, offsets[r0:r1] - c0, axis=1)  # (64, rows)
-            rl = lens_ne[r0:r1]
-            v = 2 * ones - rl[None, :]
-            fp_bits = (v > 0).astype(np.uint64)
-            fps[r0:r1] = (fp_bits << shifts[:, None]).sum(axis=0, dtype=np.uint64)
-            r0 = r1
-        out[nonempty] = fps.astype(np.int64)
-        return pd.Series(out)
+    @arrow_udf(T.LongType())
+    def udf(hashes: pa.Array) -> pa.Array:
+        # same cache-chunked whole-batch shape as the MinHash kernel:
+        # bit-unpack a (64 x chunk) slab while it is cache-resident, per-row
+        # popcounts via add.reduceat
+        flat, lens = ragged(hashes)
+        flat = flat.astype(np.uint64)
+        keep = lens > 0
+        lens_ne = lens[keep]
+        fps = np.zeros(len(lens_ne), dtype=np.uint64)
+        for rows, vals, idx in _row_chunks(lens_ne, 4096):
+            bits = ((flat[None, vals] >> shifts[:, None]) & np.uint64(1)).astype(np.int64)
+            ones = np.add.reduceat(bits, idx, axis=1)  # (64, rows)
+            fp_bits = (2 * ones - lens_ne[None, rows] > 0).astype(np.uint64)
+            fps[rows] = (fp_bits << shifts[:, None]).sum(axis=0, dtype=np.uint64)
+        out = np.zeros(len(lens), dtype=np.int64)
+        out[keep] = fps.astype(np.int64)
+        return pa.array(out)
 
     return udf
 

@@ -2,8 +2,9 @@
 
 Reference pattern: ``eval(df, key) -> scores``; ``run`` writes ``output_key``
 and keeps all rows (ngram_sample_evaluator.py:81-93).  Expression-expressible
-scores are Catalyst; MTLD/HD-D and the perplexity proxy are Arrow pandas UDFs
-(vectorized batches, never per-row Python loops on the driver).
+scores are Catalyst; MTLD/HD-D is a pandas UDF, and the kernels over a tokens
+or embedding array (perplexity proxy, rolling fingerprint, Vendi's Gram) are
+whole-batch numpy over Arrow through ``functions.arrow``.
 """
 
 from __future__ import annotations
@@ -12,12 +13,15 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.functions import pandas_udf
 
 from dataflow_spark.core.stage import Stage, register
+from dataflow_spark.functions.arrow import lists, matrix, ragged
 from dataflow_spark.functions.text import (
     c,
     char_count_no_ws,
@@ -112,7 +116,7 @@ def rolling_fingerprint_udf(window: int = 16, base: int = 1000003):
     polynomial hash of each ``window``-token span, min-sampled to 8 values —
     a winnowing-style document sketch.  Arrow-vectorized."""
 
-    # Whole-batch vectorization (same concat shape as the MinHash kernel):
+    # Whole-batch vectorization (same flat shape as the MinHash kernel):
     # H_i = sum_j t[i+j] * b^(w-1-j)  (mod 2^64)
     #     = b^(w-1+i) * (S[i+w] - S[i]) where S[k] = sum_{j<k} t[j] * b^(-j);
     # base is odd, so b is invertible mod 2^64 and the prefix sum S plus two
@@ -121,51 +125,35 @@ def rolling_fingerprint_udf(window: int = 16, base: int = 1000003):
     # the hash path.
     inv_base = pow(base, -1, 1 << 64)
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def udf(tokens: pd.Series) -> pd.Series:
-        n = len(tokens)
-        lens = np.fromiter(
-            ((0 if t is None else len(t)) for t in tokens), dtype=np.int64, count=n
-        )
+    @arrow_udf(T.ArrayType(T.LongType()))
+    def udf(tokens: pa.Array) -> pa.Array:
+        # H depends only on the window's tokens, so rows too short for one
+        # window can stay in the flat stream; they just yield no window
+        flat, lens = ragged(tokens)
+        flat = flat.astype(np.uint64)
         ok = lens >= window
-        out: list = [[] for _ in range(n)]
-        if not ok.any():
-            return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(t, dtype=np.int64) for t in tokens[ok.tolist()]]
-        ).astype(np.uint64)
-        lens_ok = lens[ok]
-        offs = np.zeros(len(lens_ok), dtype=np.int64)
-        np.cumsum(lens_ok[:-1], out=offs[1:])
         L = flat.size
-        pb = np.empty(L, dtype=np.uint64)
+        pb = np.full(L + 1, base, dtype=np.uint64)
         pb[0] = 1
-        pb[1:] = np.uint64(base)
         np.cumprod(pb, out=pb)  # pb[i] = b^i (wraps mod 2^64)
-        pinv = np.empty(L, dtype=np.uint64)
+        pinv = np.full(L + 1, inv_base, dtype=np.uint64)
         pinv[0] = 1
-        pinv[1:] = np.uint64(inv_base)
         np.cumprod(pinv, out=pinv)
         S = np.zeros(L + 1, dtype=np.uint64)
-        np.cumsum(flat * pinv, out=S[1:])
-        counts = lens_ok - window + 1
+        np.cumsum(flat * pinv[:L], out=S[1:])
+        counts = lens[ok] - window + 1
         total = int(counts.sum())
-        grp_first = np.zeros(len(counts), dtype=np.int64)
-        np.cumsum(counts[:-1], out=grp_first[1:])
+        grp_first = np.cumsum(counts) - counts
         rowids = np.repeat(np.arange(len(counts)), counts)
-        starts = np.repeat(offs, counts) + (np.arange(total) - grp_first[rowids])
+        row_start = (np.cumsum(lens) - lens)[ok]
+        starts = np.repeat(row_start, counts) + (np.arange(total) - grp_first[rowids])
         H = (S[starts + window] - S[starts]) * pb[starts + (window - 1)]
         order = np.lexsort((H, rowids))  # per row, ascending hash
         Hs, rs = H[order], rowids[order]
-        pos_in_grp = np.arange(total) - grp_first[rs]
-        sel = pos_in_grp < 8
-        Hsel = Hs[sel].astype(np.int64)
-        take = np.minimum(counts, 8)
-        bounds = np.zeros(len(take) + 1, dtype=np.int64)
-        np.cumsum(take, out=bounds[1:])
-        for j, gi in enumerate(np.flatnonzero(ok)):
-            out[gi] = Hsel[bounds[j] : bounds[j + 1]].tolist()
-        return pd.Series(out)
+        sel = np.arange(total) - grp_first[rs] < 8
+        take = np.zeros(len(lens), dtype=np.int64)
+        take[ok] = np.minimum(counts, 8)
+        return lists(Hs[sel].astype(np.int64), take)
 
     return udf
 
@@ -270,24 +258,25 @@ def fit_unigram_lm(df: DataFrame, tokens_col: str = "tokens", vocab: int = 50257
 
 
 def perplexity_proxy_udf(logprobs: dict[int, float], vocab: int = 50257, default_total: float | None = None):
-    """pandas_udf: tokens -> exp(mean NLL) under the broadcast unigram LM —
-    `exp(loss)` parity with perplexity_sample_evaluator.py:67-68."""
+    """arrow_udf: tokens -> exp(mean NLL) under the broadcast unigram LM, null
+    for a row with no token — `exp(loss)` parity with
+    perplexity_sample_evaluator.py:67-68."""
     default_lp = default_total if default_total is not None else math.log(1.0 / vocab)
+    # dense numpy lookup table beats dict probing at Arrow batch sizes; built
+    # once here, so the UDF ships the table, not the dict
+    lut = np.full(vocab, default_lp, dtype=np.float64)
+    for t, lp in logprobs.items():
+        if 0 <= t < vocab:
+            lut[t] = lp
 
-    @pandas_udf(T.DoubleType())
-    def udf(tokens: pd.Series) -> pd.Series:
-        # dense numpy lookup table beats dict probing at Arrow batch sizes
-        lut = np.full(vocab, default_lp, dtype=np.float64)
-        for t, lp in logprobs.items():
-            if 0 <= t < vocab:
-                lut[t] = lp
-        out = np.full(len(tokens), np.nan)
-        for i, toks in enumerate(tokens):
-            if toks is None or len(toks) == 0:
-                continue
-            idx = np.asarray(toks, dtype=np.int64)
-            out[i] = float(np.exp(-lut[idx].mean()))
-        return pd.Series(out)
+    @arrow_udf(T.DoubleType())
+    def udf(tokens: pa.Array) -> pa.Array:
+        flat, lens = ragged(tokens)
+        keep = lens > 0
+        out = np.zeros(len(lens))
+        sums = np.add.reduceat(lut[flat], (np.cumsum(lens) - lens)[keep])
+        out[keep] = np.exp(-sums / lens[keep])
+        return pa.array(out, mask=~keep)
 
     return udf
 
@@ -617,30 +606,28 @@ def vendi_score(df: DataFrame, vec_col: str = "embedding") -> float:
     exp(Shannon entropy of the eigenvalues of K/n) for the cosine-kernel Gram
     matrix K.  The n×n matrix is impossible at scale, but eig(K/n) equals
     eig(Xn^T Xn / n) where Xn is the row-normalized embedding matrix — a d×d
-    problem.  The d×d Gram accumulates distributed via mapInPandas partial
-    sums (one pass, one tiny collect); the eigendecomposition is driver-side
-    on d×d."""
-    from collections.abc import Iterator
+    problem.  Each partition emits its (row count, d×d partial Gram) from
+    mapInArrow, so the whole score is one Spark job and one tiny collect;
+    the collected partials are summed and the d×d eigendecomposition runs
+    on their sum."""
 
-    d = len(df.select(vec_col).first()[0])
-    part_schema = T.StructType([T.StructField("g", T.ArrayType(T.DoubleType()))])
-
-    def partial_gram(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = np.zeros((d, d))
-        for pdf in it:
-            if not len(pdf):
+    def partial_gram(batches):
+        n, g = 0, 0.0
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            X = matrix(batch.column(0))
             Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            acc += Xn.T @ Xn
-        yield pd.DataFrame({"g": [acc.ravel().tolist()]})
+            n, g = n + len(X), g + Xn.T @ Xn
+        if n:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([n]), lists(np.ravel(g), [np.size(g)])], ["n", "g"]
+            )
 
-    parts = df.select(vec_col).mapInPandas(partial_gram, part_schema).collect()
-    G = np.zeros((d, d))
-    for r in parts:
-        G += np.asarray(r["g"]).reshape(d, d)
-    n = df.count()
-    lam = np.linalg.eigvalsh(G / n)
+    parts = df.select(vec_col).mapInArrow(partial_gram, "n long, g array<double>").collect()
+    G = np.sum([r["g"] for r in parts], axis=0)
+    d = math.isqrt(G.size)
+    lam = np.linalg.eigvalsh(G.reshape(d, d) / sum(r["n"] for r in parts))
     lam = np.clip(lam, 0, None)
     lam = lam[lam > 1e-12]
     ent = -(lam * np.log(lam)).sum()

@@ -46,10 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataflow_spark.core.stage import Stage, register
-
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from dataflow_spark.functions.text import c
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +61,7 @@ def refine_title(col, strict_title_match: bool = False) -> Column:
     """Strip all whitespace; unless strict, reduce to the first arabic
     (``1.2``/``3``) or CJK-numeral chapter number, falling back to the
     cleaned title (format_utils.py:4-19)."""
-    cleaned = F.regexp_replace(_c(col), r"\s+", "")
+    cleaned = F.regexp_replace(c(col), r"\s+", "")
     if strict_title_match:
         return cleaned
     arabic = F.regexp_extract(cleaned, f"({_ARABIC_RE})", 1)
@@ -410,17 +407,17 @@ def fix_image_paths(col, name_col) -> Column:
     """``![alt](path)`` → ``![alt](<name>/path)`` (qa_merger.py:66-80) —
     pure Catalyst: column-valued replacement with backrefs."""
     return F.regexp_replace(
-        _c(col), F.lit(_MD_IMG), F.concat(F.lit("![$1]("), _c(name_col), F.lit("/$2)"))
+        c(col), F.lit(_MD_IMG), F.concat(F.lit("![$1]("), c(name_col), F.lit("/$2)"))
     )
 
 
 def qa_markdown(label, question, answer, solution) -> Column:
     """One merged QA pair → its markdown block (format_utils.py:126-134)."""
     head = F.concat(
-        F.lit("### Question "), _c(label).cast("string"), F.lit("\n\n"),
-        _c(question), F.lit("\n\n**Answer:** "), _c(answer), F.lit("\n\n"),
+        F.lit("### Question "), c(label).cast("string"), F.lit("\n\n"),
+        c(question), F.lit("\n\n**Answer:** "), c(answer), F.lit("\n\n"),
     )
-    sol = _c(solution)
+    sol = c(solution)
     return F.when(
         sol.isNotNull() & (sol != ""), F.concat(head, F.lit("**Solution:**\n\n"), sol, F.lit("\n\n"))
     ).otherwise(head)
@@ -453,14 +450,14 @@ _MD_IMG_PATH = r"!\[.*?\]\((.*?)\)"
 
 def extract_images(col) -> Column:
     """All markdown image paths in order (vqa_formatter.py:93-99)."""
-    return F.regexp_extract_all(_c(col), F.lit(_MD_IMG_PATH), F.lit(1))
+    return F.regexp_extract_all(c(col), F.lit(_MD_IMG_PATH), F.lit(1))
 
 
 def strip_image_tags(col) -> Column:
     """Remove image tags, collapse 3+ newlines, strip (vqa_formatter.py:101-106)."""
-    c = F.regexp_replace(_c(col), _MD_IMG_PATH, "")
-    c = F.regexp_replace(c, r"\n{3,}", "\n\n")
-    return F.regexp_replace(c, r"^\s+|\s+$", "")
+    s = F.regexp_replace(c(col), _MD_IMG_PATH, "")
+    s = F.regexp_replace(s, r"\n{3,}", "\n\n")
+    return F.regexp_replace(s, r"^\s+|\s+$", "")
 
 
 def vqa_format(
@@ -480,14 +477,14 @@ def vqa_format(
     The reference resolves image paths through a cwd-glob filename index —
     a single-process filesystem affordance; here paths stay as written,
     optionally prefixed with ``image_base`` (its normpath-join fallback)."""
-    q = F.coalesce(_c(question_col), F.lit(""))
-    a = F.coalesce(_c(answer_col), F.lit(""))
-    s = F.coalesce(_c(solution_col), F.lit(""))
+    q = F.coalesce(c(question_col), F.lit(""))
+    a = F.coalesce(c(answer_col), F.lit(""))
+    s = F.coalesce(c(solution_col), F.lit(""))
     q, a, s = (F.regexp_replace(x, r"^\s+|\s+$", "") for x in (q, a, s))
 
     images = F.concat(extract_images(q), extract_images(s))
     if image_base is not None:
-        base = _c(image_base) if isinstance(image_base, (Column, str)) else F.lit(str(image_base))
+        base = c(image_base) if isinstance(image_base, (Column, str)) else F.lit(str(image_base))
         images = F.transform(images, lambda p: F.concat(base, F.lit("/"), p))
     ans_text = a
     sol_text = strip_image_tags(s)
@@ -560,7 +557,7 @@ def merge_pdfs(pdf_paths: list[str], output_path: str) -> int:
 def plan_merged_pdf_paths(df: DataFrame, output_dir: str, name_col: str = "name") -> DataFrame:
     """The deterministic half of PDF_Merger.run (pdf_merger.py:57-60):
     output path = ``<output_dir>/<name>/<name>_merged.pdf``."""
-    n = _c(name_col).cast("string")
+    n = c(name_col).cast("string")
     return df.withColumn(
         "merged_pdf_path",
         F.concat(F.lit(str(output_dir).rstrip("/") + "/"), n, F.lit("/"), n, F.lit("_merged.pdf")),

@@ -27,10 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataflow_spark.core.stage import Stage, register
-
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from dataflow_spark.functions.text import c
 
 
 # string.punctuation, as a Java/RE2 character class (same byte set the
@@ -44,10 +41,10 @@ _SPECIAL = ("yes", "no", "noanswer")
 def normalize_answer(col) -> Column:
     """``normalize_answer`` (reference lines 56-70): lower, drop punctuation,
     blank article words, collapse whitespace."""
-    c = F.lower(_c(col))
-    c = F.regexp_replace(c, _PUNCT_CLASS, "")
-    c = F.regexp_replace(c, r"\b(a|an|the)\b", " ")
-    return F.array_join(F.filter(F.split(c, r"\s+"), lambda x: x != ""), " ")
+    s = F.lower(c(col))
+    s = F.regexp_replace(s, _PUNCT_CLASS, "")
+    s = F.regexp_replace(s, r"\b(a|an|the)\b", " ")
+    return F.array_join(F.filter(F.split(s, r"\s+"), lambda x: x != ""), " ")
 
 
 def _tokens(norm: Column) -> Column:
@@ -85,7 +82,7 @@ def qa_f1(prediction, ground_truths) -> Column:
     truths (reference ``compute_f1``, lines 72-105). Null prediction, null
     list, or all-null references → 0.0."""
     pred_norm = normalize_answer(prediction)
-    gts = _c(ground_truths)
+    gts = c(ground_truths)
     scores = F.transform(
         gts,
         lambda g: F.when(g.isNull(), F.lit(0.0)).otherwise(
@@ -93,13 +90,13 @@ def qa_f1(prediction, ground_truths) -> Column:
         ),
     )
     out = F.coalesce(F.array_max(scores), F.lit(0.0))
-    return F.when(_c(prediction).isNull() | gts.isNull(), F.lit(0.0)).otherwise(out)
+    return F.when(c(prediction).isNull() | gts.isNull(), F.lit(0.0)).otherwise(out)
 
 
 def qa_f1_single(prediction, ground_truth) -> Column:
     """Scalar-reference form (the reference wraps a bare string into a
     one-element list, line 75-76)."""
-    return qa_f1(prediction, F.array(_c(ground_truth)))
+    return qa_f1(prediction, F.array(c(ground_truth)))
 
 
 @register("AgenticRAGQAF1SampleEvaluator")

@@ -34,10 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from dataflow_spark.core.stage import Stage, register
-
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from dataflow_spark.functions.text import c
 
 
 # ---------------------------------------------------------------------------
@@ -223,14 +220,14 @@ def keep_answer_format(col, require_boxed: bool = False) -> Column:
     returns True (its boxed regex is commented out) — reproduced; opt into
     the documented intent with require_boxed."""
     if not require_boxed:
-        return _c(col).isNotNull() | _c(col).isNull()  # keep-all, like the reference
-    return _c(col).rlike(r"\\boxed\{.*\}")
+        return c(col).isNotNull() | c(col).isNull()  # keep-all, like the reference
+    return c(col).rlike(r"\\boxed\{.*\}")
 
 
 def keep_answer_groundtruth(answer_col, gt_col) -> Column:
     """exact-mode compare of the EXTRACTED answer
     (reasoning_answer_groundtruth_filter.py:26-27,77-80)."""
-    return extract_answer_udf()(_c(answer_col)) == _c(gt_col).cast("string")
+    return extract_answer_udf()(c(answer_col)) == c(gt_col).cast("string")
 
 
 # ---------------------------------------------------------------------------
@@ -241,7 +238,7 @@ _CJK_RE = "[\u4e00-\u9fff]"
 
 
 def _word_ngram_score(col, n: int) -> Column:
-    cleaned = F.regexp_replace(F.lower(_c(col)), r"(?U)[^\w\s]", " ")
+    cleaned = F.regexp_replace(F.lower(c(col)), r"(?U)[^\w\s]", " ")
     ws = F.filter(F.split(cleaned, r"\s+"), lambda w: w != "")
     grams = F.when(
         F.size(ws) >= n,
@@ -258,7 +255,7 @@ def _word_ngram_score(col, n: int) -> Column:
 def repetition_score(col, n: int = 5) -> Column:
     """unique n-grams / total n-grams; char n-grams when the text contains
     CJK, word n-grams otherwise; 0.0 when too short for any n-gram."""
-    t = _c(col)
+    t = c(col)
     word = _word_ngram_score(t, n)
     cleaned = F.regexp_replace(F.lower(t), "[^\u4e00-\u9fff0-9a-z]", "")
     char_grams = F.transform(
@@ -328,8 +325,8 @@ def pretrain_format_convert(
     (reasoning_pretrain_format_convert_generator.py:13-38): SFT → PT format,
     ``text = question + '\\n' + answer`` with nulls as ''. The reference
     emits ONLY the text column (it writes a fresh record list) — reproduced."""
-    q = F.coalesce(_c(question_col).cast("string"), F.lit(""))
-    a = F.coalesce(_c(answer_col).cast("string"), F.lit(""))
+    q = F.coalesce(c(question_col).cast("string"), F.lit(""))
+    a = F.coalesce(c(answer_col).cast("string"), F.lit(""))
     return df.select(F.concat(q, F.lit("\n"), a).alias(output_key))
 
 
@@ -342,8 +339,8 @@ def answer_pipeline_root(
     (``extract_answer(answer, None, True)``), then split into the with-gt and
     without-gt branches (the reference writes two files; here two DataFrames
     off one lazy plan). Empty/null answers leave gt null."""
-    gt = _c(gt_key)
-    ans = _c(answer_key)
+    gt = c(gt_key)
+    ans = c(answer_key)
     backfilled = F.when(gt.isNotNull() & (gt != ""), gt).otherwise(
         F.when(ans.isNull() | (ans == ""), F.lit(None).cast("string")).otherwise(
             extract_answer_udf()(ans)
@@ -363,7 +360,7 @@ def difficulty_stats(df: DataFrame, difficulty_col: str = "difficulty_score") ->
     counts. pandas ``value_counts`` drops NaN — mirrored by the isNotNull
     filter (the ``.get(key,'null')`` default is unreachable: the column
     exists on every record once it exists in the frame)."""
-    d = _c(difficulty_col)
+    d = c(difficulty_col)
     return (
         df.where(d.isNotNull())
         .groupBy(d.cast("string").alias("difficulty"))
@@ -387,8 +384,8 @@ def category_stats(
     from pyspark.sql.window import Window
 
     out = df.groupBy(
-        _c(primary_col).alias("primary_category"),
-        _c(secondary_col).alias("secondary_category"),
+        c(primary_col).alias("primary_category"),
+        c(secondary_col).alias("secondary_category"),
     ).agg(F.count(F.lit(1)).alias("secondary_num"))
     w = Window.partitionBy("primary_category")
     return out.select(
@@ -434,7 +431,7 @@ def token_stats(
     from dataflow_spark.operators.evaluators import token_count_bpe
 
     tl = token_len or token_count_bpe
-    zlen = lambda c: F.coalesce(tl(F.coalesce(_c(c), F.lit(""))), F.lit(0))  # noqa: E731
+    zlen = lambda col: F.coalesce(tl(F.coalesce(c(col), F.lit(""))), F.lit(0))  # noqa: E731
     pairs = df.select(
         F.explode(
             F.create_map(
@@ -668,7 +665,7 @@ def category_hash(primary_col, secondary_col) -> Column:
         SECONDARY_CATEGORIES,
     )
 
-    p, s = _c(primary_col), _c(secondary_col)
+    p, s = c(primary_col), c(secondary_col)
     expr = F.lit(170.0)
     for k, prim in enumerate(PRIMARY_CATEGORIES):
         for m, sec in enumerate(SECONDARY_CATEGORIES[prim]):

@@ -17,10 +17,14 @@ full matrix is impossible — we ship:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 
 from dataflow_spark.core.stage import Stage, register
+from dataflow_spark.functions.arrow import lists, matrix
 from dataflow_spark.operators.dedup import keep_cluster_min
 
 
@@ -98,7 +102,7 @@ def lsh_bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
 
 
 def lsh_bucket_udf(planes: list[list[float]]):
-    """pandas_udf: embedding -> LSH sign bucket (same bits as
+    """arrow_udf: embedding -> LSH sign bucket (same bits as
     ``lsh_bucket_expr``) as ONE numpy matmul per Arrow batch.  Preferred
     over the Catalyst HOF expression when n_bits × dim is large: the HOF
     form builds an (n_bits × dim)-literal expression tree whose per-run
@@ -106,19 +110,12 @@ def lsh_bucket_udf(planes: list[list[float]]):
     is interpreted per element, while this is a single vectorized matmul
     (diagnosed round 5: the 8×64 HOF tree cost ~1.2 s/run on a 2k-row scan,
     nearly all driver-side planning)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.functions import pandas_udf
-
     P = np.asarray(planes, dtype=np.float64)  # (n_bits, dim)
-    n_bits = P.shape[0]
+    weights = np.int64(1) << np.arange(P.shape[0], dtype=np.int64)
 
-    @pandas_udf(T.LongType())
-    def udf(vecs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        D = X @ P.T
-        weights = np.int64(1) << np.arange(n_bits, dtype=np.int64)
-        return pd.Series(((D >= 0).astype(np.int64) * weights[None, :]).sum(axis=1))
+    @arrow_udf(T.LongType())
+    def udf(vecs: pa.Array) -> pa.Array:
+        return pa.array(((matrix(vecs) @ P.T >= 0) * weights).sum(axis=1))
 
     return udf
 
@@ -156,31 +153,24 @@ def lsh_topk(
 
 
 def lsh_probe_buckets_udf(planes: list[list[float]], n_probe: int = 4):
-    """pandas_udf: embedding -> array of multi-probe LSH buckets: the exact
+    """arrow_udf: embedding -> array of multi-probe LSH buckets: the exact
     sign bucket plus single-bit flips of the ``n_probe`` lowest-|margin|
     planes (Lv et al., multi-probe LSH).  A vector whose true near-neighbor
     sits just across a hyperplane has a tiny margin at exactly that plane, so
     probing those flips recovers pairs the exact bucket split apart — recall
     goes up ~(1+n_probe)x in candidate volume, never candidate-pair^2.
     One numpy matmul per Arrow batch."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.functions import pandas_udf
-
     P = np.asarray(planes, dtype=np.float64)  # (n_bits, dim)
-    n_bits = P.shape[0]
-    m = min(n_probe, n_bits)
+    weights = np.int64(1) << np.arange(P.shape[0], dtype=np.int64)
+    m = min(n_probe, P.shape[0])
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def udf(vecs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        D = X @ P.T  # (n, n_bits) signed margins
-        weights = (np.int64(1) << np.arange(n_bits, dtype=np.int64))
-        base = ((D >= 0).astype(np.int64) * weights[None, :]).sum(axis=1)
+    @arrow_udf(T.ArrayType(T.LongType()))
+    def udf(vecs: pa.Array) -> pa.Array:
+        D = matrix(vecs) @ P.T  # (n, n_bits) signed margins
+        base = ((D >= 0) * weights).sum(axis=1)
         order = np.argsort(np.abs(D), axis=1)[:, :m]  # lowest-margin planes
-        flips = base[:, None] ^ (np.int64(1) << order.astype(np.int64))
-        out = np.concatenate([base[:, None], flips], axis=1)
-        return pd.Series(list(out))
+        out = np.column_stack([base, base[:, None] ^ (np.int64(1) << order)])
+        return lists(out.ravel(), np.full(len(out), 1 + m))
 
     return udf
 
@@ -242,11 +232,6 @@ def sem_dedup_stage(id_col: str = "vec_id", vec_col: str = "embedding", eps: flo
 # IVF (inverted-file) ANN — the scale path beyond sign-LSH
 # ---------------------------------------------------------------------------
 
-import pandas as pd
-from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
-
-
 def train_ivf_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -258,7 +243,7 @@ def train_ivf_centroids(
 ) -> list[list[float]]:
     """Deterministic IVF coarse quantizer: seed centroids are a hash-ordered
     sample of corpus vectors, refined by ``lloyd_iters`` distributed k-means
-    steps (assign via the same pandas-UDF matmul as search, re-center via
+    steps (assign via the same Arrow-UDF matmul as search, re-center via
     groupBy mean over exploded dimensions — both single-shuffle jobs).  At
     10^12 vectors train on a sample (``sample_fraction``); the assignment
     scan is the only full pass."""
@@ -294,28 +279,28 @@ def train_ivf_centroids(
 
 
 def ivf_assign_udf(centroids: list[list[float]], nprobe: int = 1):
-    """pandas_udf: embedding -> nearest-centroid id (nprobe=1) or the
+    """arrow_udf: embedding -> nearest-centroid id (nprobe=1) or the
     ``nprobe`` nearest centroid ids.  One numpy matmul per Arrow batch."""
     C = np.asarray(centroids, dtype=np.float64)
     Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
+    def sims(vecs: pa.Array) -> np.ndarray:
+        X = matrix(vecs)
+        Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+        return Xn @ Cn.T
+
     if nprobe == 1:
 
-        @pandas_udf(T.IntegerType())
-        def udf(vecs: pd.Series) -> pd.Series:
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            return pd.Series(np.argmax(Xn @ Cn.T, axis=1).astype(np.int32))
+        @arrow_udf(T.IntegerType())
+        def udf(vecs: pa.Array) -> pa.Array:
+            return pa.array(np.argmax(sims(vecs), axis=1).astype(np.int32))
 
         return udf
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def udf_multi(vecs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        sims = Xn @ Cn.T
-        idx = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int32)
-        return pd.Series(list(idx))
+    @arrow_udf(T.ArrayType(T.IntegerType()))
+    def udf_multi(vecs: pa.Array) -> pa.Array:
+        idx = np.argsort(-sims(vecs), axis=1)[:, :nprobe].astype(np.int32)
+        return lists(idx.ravel(), np.full(len(idx), idx.shape[1]))
 
     return udf_multi
 
@@ -357,10 +342,9 @@ def ivf_topk(
 def _dist_to_center_udf(center: list[float]):
     c = np.asarray(center, dtype=np.float64)
 
-    @pandas_udf(T.DoubleType())
-    def udf(vecs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        return pd.Series(np.linalg.norm(X - c[None, :], axis=1))
+    @arrow_udf(T.DoubleType())
+    def udf(vecs: pa.Array) -> pa.Array:
+        return pa.array(np.linalg.norm(matrix(vecs) - c, axis=1))
 
     return udf
 

@@ -334,7 +334,14 @@ def test_vendi_matches_full_matrix(spark, emb):
     lam = np.clip(np.linalg.eigvalsh(K / len(X)), 0, None)
     lam = lam[lam > 1e-12]
     expect = float(np.exp(-(lam * np.log(lam)).sum()))
-    got = vendi_score(small)
+    # one pass: the per-partition (n, Gram) partials are the only job
+    sc = spark.sparkContext
+    sc.setJobGroup("vendi-one-pass", "vendi-one-pass")
+    try:
+        got = vendi_score(small)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("vendi-one-pass")) == 1
     assert abs(got - expect) < 1e-6
     assert 1.0 <= got <= len(X)
 

@@ -8,6 +8,7 @@ import contextlib
 import io
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -81,10 +82,10 @@ def main():
     # MATERIALIZED parquet corpus: production inputs are tables, and the lazy
     # synthetic-corpus expression would smear generator CASE/transform
     # expressions (and a spurious re-evaluation) all over the audit.
-    import tempfile
-
-    mat_dir = os.path.join(tempfile.gettempdir(), "explain_corpus")
-    corpus.write.mode("overwrite").parquet(mat_dir)
+    # removed after spark.stop(), or at interpreter exit if main() raises
+    tmp = tempfile.TemporaryDirectory()
+    mat_dir = os.path.join(tmp.name, "explain_corpus")
+    corpus.write.parquet(mat_dir)
     mat = spark.read.parquet(mat_dir)
 
     sig = dedup._signature(
@@ -101,7 +102,8 @@ def main():
             "band keys (n_docs x bands; ~250k docs at 16 bands); below it "
             "the band keys are fetched once from the signature checkpoint "
             "and dedup.cluster_min_losers decides on the driver.  "
-            "Expected: ONE ArrowEvalPython per signature consumer, reading "
+            "Expected: ONE ArrowEvalPython per signature consumer (eval "
+            "type 250: an arrow_udf, no pandas conversion), reading "
             "only (doc_seq, tokens) — the token n-gram hashing AND the numpy "
             "signature both run inside the Arrow batch, so 4 bytes/token "
             "cross the JVM-Python boundary and no JVM HOF materializes "
@@ -158,11 +160,13 @@ def main():
 
     out = ["# PLANS — physical-plan audit (generated by tools/explain_plans.py)", ""]
     for title, expect, plan in sections:
+        plan = plan.replace(tmp.name, "<tmp>")  # the scan node names the random dir
         out += [f"## {title}", "", expect, "", "```", plan.rstrip(), "```", ""]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
     spark.stop()
+    tmp.cleanup()
 
 
 if __name__ == "__main__":
