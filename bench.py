@@ -1,5 +1,6 @@
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may use); prints
+ONE JSON line.
 
 Headline metric: tokens/sec through the full dedup+filter pipeline over the
 north-star tokenized corpus (BASELINE.json).  The sf documents table is small
@@ -26,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 REPLICAS = int(os.environ.get("BENCH_REPLICAS", "40"))
 _CODEC = os.environ.get("BENCH_CORPUS_CODEC", "snappy")
 CORPUS_DIR = os.environ.get(

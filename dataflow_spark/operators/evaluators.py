@@ -260,11 +260,13 @@ def fit_unigram_lm(df: DataFrame, tokens_col: str = "tokens", vocab: int = 50257
 def perplexity_proxy_udf(logprobs: dict[int, float], vocab: int = 50257, default_total: float | None = None):
     """arrow_udf: tokens -> exp(mean NLL) under the broadcast unigram LM, null
     for a row with no token — `exp(loss)` parity with
-    perplexity_sample_evaluator.py:67-68."""
+    perplexity_sample_evaluator.py:67-68.  A token id outside ``[0, vocab)``
+    scores ``default_lp``, like an unseen in-range id."""
     default_lp = default_total if default_total is not None else math.log(1.0 / vocab)
     # dense numpy lookup table beats dict probing at Arrow batch sizes; built
-    # once here, so the UDF ships the table, not the dict
-    lut = np.full(vocab, default_lp, dtype=np.float64)
+    # once here, so the UDF ships the table, not the dict.  Slot ``vocab`` is
+    # the default every out-of-range id reads.
+    lut = np.full(vocab + 1, default_lp, dtype=np.float64)
     for t, lp in logprobs.items():
         if 0 <= t < vocab:
             lut[t] = lp
@@ -272,6 +274,7 @@ def perplexity_proxy_udf(logprobs: dict[int, float], vocab: int = 50257, default
     @arrow_udf(T.DoubleType())
     def udf(tokens: pa.Array) -> pa.Array:
         flat, lens = ragged(tokens)
+        flat = np.where((flat >= 0) & (flat < vocab), flat, vocab)
         keep = lens > 0
         out = np.zeros(len(lens))
         sums = np.add.reduceat(lut[flat], (np.cumsum(lens) - lens)[keep])

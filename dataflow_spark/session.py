@@ -1,10 +1,13 @@
 """SparkSession factory tuned for the dedup+filter pipeline.
 
-Defaults are chosen for the sandbox (local[N], 128 GiB single JVM) but every
-knob is the one you would set on a 1000-executor cluster too: AQE on (runtime
-re-plan + skew-join splitting), Arrow for every pandas UDF boundary, shuffle
-partitions sized to cores locally (on a real cluster: 2-3x total cores or
-AQE-coalesced), UTC so results compare bit-for-bit against the DuckDB oracle.
+Defaults are chosen for one box (local[N], N = the CPUs this process may
+use) but every knob is the one you would set on a 1000-executor cluster too:
+AQE on (runtime re-plan + skew-join splitting), Arrow for every pandas UDF
+boundary, UTC so results compare bit-for-bit against the DuckDB oracle, and
+one shuffle partition per core.  Batch shuffles are AQE-coalesced whatever the
+count; a stream's state partition count is fixed at its first start (Spark
+records it in the offset log) and every state partition pays a fixed commit
+per micro-batch, so more partitions than cores only adds task waves.
 """
 
 from __future__ import annotations
@@ -21,9 +24,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
+        shuffle_partitions = cpus
 
     # SPARK_GRAFT_MASTER overrides the master verbatim — a tools/ab.py leg
     # such as `.:SPARK_GRAFT_MASTER=local-cluster[2,4,6144]` runs the engine

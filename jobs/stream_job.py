@@ -6,7 +6,7 @@ Launch (multi-executor cluster, north rule):
     spark-submit \
       --master yarn --deploy-mode cluster \
       --num-executors $N --executor-cores 4 --executor-memory 8g \
-      --conf spark.sql.shuffle.partitions=$((N*8)) \
+      --conf spark.sql.shuffle.partitions=$((N*4)) \
       --conf spark.sql.adaptive.enabled=true \
       --conf spark.sql.sources.parallelPartitionDiscovery.threshold=100000 \
       --py-files dist/dataflow_spark.zip \
@@ -20,6 +20,10 @@ near`` the ``near`` tier; ``--min-tok``/``--max-tok`` become a
 ``GeneralFilter`` stage ``n_tok >= MIN AND n_tok < MAX`` on both;
 ``--watermark`` enters the spec only when given, so ``--mode near
 --watermark ...`` is rejected like the spec key.
+
+One shuffle partition per executor core: the builtin tier's state partition
+count is fixed at the stream's first start, and every state partition pays a
+fixed commit per micro-batch, so more partitions than cores add task waves.
 
 The listing threshold keeps the file source from running a parallel-listing
 job in every trigger of more than 32 files; ``dataflow_spark.session.get_spark``

@@ -100,6 +100,26 @@ def test_perplexity_unigram_exact(spark):
     assert got[3] is None or math.isnan(got[3])
 
 
+def test_perplexity_out_of_range_token_scores_as_unseen(spark):
+    """A token id >= vocab or < 0 scores like an unseen in-range id (7)
+    in the same position: it neither fails the task nor reads the LUT from
+    its end (id vocab - 1 has its own log-prob here)."""
+    vocab = 50257
+    lp = {3: math.log(0.25), vocab - 1: math.log(0.5)}
+    udf = perplexity_proxy_udf(lp)
+    pairs = [([3, 60000], [3, 7]), ([-1, 3], [7, 3])]
+    for bad, unseen in pairs:
+        got = [
+            spark.createDataFrame([(t,)], "tokens array<bigint>")
+            .select(udf(F.col("tokens")).alias("ppl"))
+            .first()
+            .ppl
+            for t in (bad, unseen)
+        ]
+        assert got[0] == pytest.approx(got[1], rel=1e-12), (bad, got)
+    assert got[1] == pytest.approx(math.exp(-(math.log(1 / vocab) + lp[3]) / 2))
+
+
 def test_bleu_bounds(spark):
     rows = [
         (1, "a b c d e", "a b c d e"),

@@ -17,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -181,6 +182,119 @@ def test_checkpoint_resume_preserves_state(spark, dirs):
     recs = [json.loads(l) for l in open(metrics)]
     assert sum(r["rows"] for r in recs) == 3
     assert all(set(r) == V1_KEYS and r["v"] == 1 for r in recs), recs
+
+
+def _state_partitions(q):
+    """The ``numShufflePartitions`` every state operator of every progress
+    event of ``q`` reported."""
+    return {
+        s["numShufflePartitions"]
+        for p in q.recentProgress
+        for s in p["stateOperators"]
+    }
+
+
+@pytest.mark.parametrize("first", [8, 4])
+def test_builtin_resume_keeps_first_state_partitions(spark, tmp_path, first):
+    """A builtin stream keeps the state partition count of its first start:
+    started under ``spark.sql.shuffle.partitions=first`` and resumed on the
+    same checkpoint under 4, the resumed batches still report ``first``.
+    The output equals an uninterrupted run over the same files, and each
+    written batch has exactly one v1 ``_metrics.jsonl`` record."""
+    corpus_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("c", "o", "k"))
+    # 16 contents in file 1; file 2 repeats 8 of them and adds 8 new ones,
+    # so the state must carry file 1's keys across the restart
+    f1 = make_rows([(i, toks(i, i + 1), "cc", i) for i in range(1, 17)])
+    f2 = make_rows(
+        [(100 + i, toks(i, i + 1), "cc", 20 + i) for i in range(1, 9)]
+        + [(100 + i, toks(i, i + 1), "web", 20 + i) for i in range(17, 25)]
+    )
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(first))
+        write_file(spark, f1, corpus_dir)
+        q = run_dedup_filter_stream(spark, corpus_dir, out_dir, ckpt)
+        q.processAllAvailable()
+        q.stop()
+        assert _state_partitions(q) == {first}
+
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        write_file(spark, f2, corpus_dir)
+        q2 = run_dedup_filter_stream(spark, corpus_dir, out_dir, ckpt)
+        q2.processAllAvailable()
+        q2.stop()
+        assert _state_partitions(q2) == {first}
+
+        once_out = str(tmp_path / "once_o")
+        once = run_dedup_filter_stream(
+            spark, corpus_dir, once_out, str(tmp_path / "once_k")
+        )
+        once.processAllAvailable()
+        once.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", conf)
+
+    def rows(d):
+        return sorted(
+            (r.doc_id, tuple(r.tokens))
+            for r in read_sink(spark, d).select("doc_id", "tokens").collect()
+        )
+
+    got = rows(out_dir)
+    assert got == rows(once_out)
+    assert [d for d, _ in got] == [f"d{s:06d}" for s in [*range(1, 17), *range(117, 125)]]
+    with open(os.path.join(out_dir, "_metrics.jsonl")) as fh:
+        recs = [json.loads(line) for line in fh]
+    written = sorted(
+        int(d[len("batch_id="):]) for d in os.listdir(out_dir)
+        if d.startswith("batch_id=")
+    )
+    assert [r["batch_id"] for r in recs] == written
+    assert all(set(r) == V1_KEYS and r["v"] == 1 for r in recs), recs
+    assert sum(r["rows"] for r in recs) == len(got)
+
+
+def test_get_spark_defaults_to_one_partition_per_usable_cpu(monkeypatch):
+    """With no ``SPARK_GRAFT_CPUS``, ``get_spark`` runs ``local[n]`` with n
+    shuffle partitions, n the CPUs this process may use; an explicit
+    ``cpus`` sizes both the same way.  A recording stand-in for
+    ``SparkSession.builder`` keeps a second session from starting."""
+    from dataflow_spark import session
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            self.conf["master"] = master
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    def conf_of(**kw):
+        b = Builder()
+        monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=b))
+        session.get_spark(**kw)
+        return b.conf
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    n = len(os.sched_getaffinity(0))
+    got = conf_of()
+    assert got["master"] == f"local[{n}]"
+    assert got["spark.sql.shuffle.partitions"] == str(n)
+    assert got["spark.default.parallelism"] == str(n)
+    got = conf_of(cpus=2)
+    assert (got["master"], got["spark.sql.shuffle.partitions"]) == ("local[2]", "2")
+    assert conf_of(cpus=2, shuffle_partitions=8)["spark.sql.shuffle.partitions"] == "8"
 
 
 def test_sink_replay_is_noop(spark, tmp_path):
