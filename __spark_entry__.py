@@ -3503,7 +3503,7 @@ def reasoning_difficulty_stats(spark, sf_dir):
       FROM t GROUP BY ALL
     )
     SELECT primary_category, secondary_category, secondary_num,
-      sum(secondary_num) OVER (PARTITION BY primary_category) AS primary_num
+      (sum(secondary_num) OVER (PARTITION BY primary_category))::BIGINT AS primary_num
     FROM pairs
     """,
 )

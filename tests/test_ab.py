@@ -62,7 +62,9 @@ def test_ab_interleaves_and_summarizes(repo, tmp_path):
     ]
     assert rep["legs"]["a"]["sha"] == _git(repo, "rev-parse", "HEAD~1").strip()
     assert rep["legs"]["b"]["sha"] == _git(repo, "rev-parse", "HEAD").strip()
-    assert set(rep["metrics"]) == {"m", "n.x"}
+    # a bool leaf reads 0/1; a list is skipped
+    assert set(rep["metrics"]) == {"m", "n.x", "ok"}
+    assert rep["metrics"]["ok"]["median_a"] == 1
     m, x = rep["metrics"]["m"], rep["metrics"]["n.x"]
     assert (m["median_a"], m["median_b"]) == (1, 2)
     assert (x["median_a"], x["median_b"]) == (0, 3)
@@ -107,3 +109,20 @@ def test_ab_env_value_keeps_commas(repo, tmp_path):
     assert rep["legs"]["a"]["env"] == {"K": "local-cluster[2,4,6144]", "AB_LEG": "a"}
     assert rep["metrics"]["k"]["median_a"] == len("local-cluster[2,4,6144]")
     assert rep["metrics"]["k"]["median_b"] == 0
+
+
+def test_ab_incorrect_run_fails_its_pair(repo, tmp_path):
+    """A run that reports ``"correct": false`` fails like a crash: its pair
+    leaves the summary and the exit status is 1."""
+    p, _, _ = _ab(
+        repo, tmp_path, ".:C=1", ".:C=0", "--pairs", "2", "--", sys.executable, "-c",
+        "import json, os; open(os.environ['AB_LOG'], 'a').write('r\\n');"
+        " print(json.dumps({'correct': os.environ['C'] == '1', 'm': 1.5}))",
+    )
+    assert p.returncode == 1
+    rep = json.loads(p.stdout.splitlines()[-1])
+    assert rep["failed_runs"] == 2
+    assert [(r["leg"], r["metrics"]["correct"], "stderr_tail" in r) for r in rep["runs"]] == [
+        ("a", 1, False), ("b", 0, True), ("b", 0, True), ("a", 1, False)
+    ]
+    assert rep["metrics"] == {}

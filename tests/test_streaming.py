@@ -254,11 +254,14 @@ def test_builtin_resume_keeps_first_state_partitions(spark, tmp_path, first):
     assert sum(r["rows"] for r in recs) == len(got)
 
 
-def test_get_spark_defaults_to_one_partition_per_usable_cpu(monkeypatch):
-    """With no ``SPARK_GRAFT_CPUS``, ``get_spark`` runs ``local[n]`` with n
-    shuffle partitions, n the CPUs this process may use; an explicit
-    ``cpus`` sizes both the same way.  A recording stand-in for
-    ``SparkSession.builder`` keeps a second session from starting."""
+@pytest.fixture
+def stand_in(monkeypatch, tmp_path):
+    """``get_spark`` over a recording stand-in for ``SparkSession.builder``,
+    as the launch of a fresh driver JVM would run it, with the class-data
+    cache under ``tmp_path`` and a stand-in trainer that records its key and
+    publishes a small archive: no JVM and no trainer process starts.
+    ``get_spark(**kw)`` returns the builder's conf, with the
+    ``SPARK_CONF_DIR`` it saw at ``getOrCreate``."""
     from dataflow_spark import session
 
     class Builder:
@@ -277,24 +280,192 @@ def test_get_spark_defaults_to_one_partition_per_usable_cpu(monkeypatch):
             return self
 
         def getOrCreate(self):
+            self.conf["SPARK_CONF_DIR at launch"] = os.environ.get("SPARK_CONF_DIR")
             return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
 
-    def conf_of(**kw):
+    def train(path, heap):
+        trained.append(path)
+        with open(path + ".jsa", "wb") as f:
+            f.write(b"x" * 10)
+        with open(path + ".json", "w") as f:
+            json.dump({"bytes": 10}, f)
+
+    def get_spark(**kw):
         b = Builder()
         monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=b))
         session.get_spark(**kw)
         return b.conf
 
+    trained = []
+    state = SimpleNamespace(
+        get_spark=get_spark, trained=trained,
+        cache=tmp_path / "xdg" / "dataflow_spark" / "cds", conf_dir=tmp_path / "spark_conf",
+    )
+    state.conf_dir.mkdir()
+    (state.conf_dir / "spark-defaults.conf.template").write_text("")
+    monkeypatch.setattr(session, "_train", train)
+    monkeypatch.setattr(session, "SparkContext", SimpleNamespace(_gateway=None))
+    for var in ("PYSPARK_GATEWAY_PORT", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DRIVER_MEM"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "xdg"))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(state.conf_dir))
+    return state
+
+
+def test_get_spark_defaults_to_one_partition_per_usable_cpu(stand_in, monkeypatch):
+    """With no ``SPARK_GRAFT_CPUS``, ``get_spark`` runs ``local[n]`` with n
+    shuffle partitions, n the CPUs this process may use; an explicit
+    ``cpus`` sizes both the same way."""
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
     n = len(os.sched_getaffinity(0))
-    got = conf_of()
+    got = stand_in.get_spark()
     assert got["master"] == f"local[{n}]"
     assert got["spark.sql.shuffle.partitions"] == str(n)
     assert got["spark.default.parallelism"] == str(n)
-    got = conf_of(cpus=2)
+    got = stand_in.get_spark(cpus=2)
     assert (got["master"], got["spark.sql.shuffle.partitions"]) == ("local[2]", "2")
-    assert conf_of(cpus=2, shuffle_partitions=8)["spark.sql.shuffle.partitions"] == "8"
+    assert stand_in.get_spark(cpus=2, shuffle_partitions=8)["spark.sql.shuffle.partitions"] == "8"
+
+
+def test_get_spark_maps_class_data_archive(stand_in):
+    """The first launch on a key trains once; every launch on it passes the
+    archive flags in ``defaultJavaOptions``, where a caller's
+    ``extraJavaOptions`` cannot replace them, and launches with the cache's
+    empty conf dir, restoring the caller's ``SPARK_CONF_DIR`` after."""
+    caller = {"spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/x"}
+    for _ in range(2):
+        got = stand_in.get_spark(cpus=2, extra_conf=caller)
+        assert len(stand_in.trained) == 1
+        jsa = stand_in.trained[0] + ".jsa"
+        assert got["spark.driver.defaultJavaOptions"] == f"-XX:SharedArchiveFile={jsa} -Xshare:auto"
+        assert got["spark.driver.extraJavaOptions"] == "-Djava.io.tmpdir=/x"
+        assert got["SPARK_CONF_DIR at launch"] == str(stand_in.cache / "conf")
+        assert os.listdir(stand_in.cache / "conf") == []
+        assert os.environ["SPARK_CONF_DIR"] == str(stand_in.conf_dir)
+
+
+@pytest.mark.parametrize(
+    "case", ["size_mismatch", "failed", "unwritable", "spark_defaults", "hadoop_conf"]
+)
+def test_get_spark_without_usable_archive_starts_plain(stand_in, monkeypatch, case):
+    """A torn archive, a failed key, an unwritable cache, a conf dir with
+    real files and a Hadoop conf dir each give a plain launch: no archive
+    flags, the caller's ``SPARK_CONF_DIR``, and no trainer."""
+    from dataflow_spark import session
+
+    key = stand_in.cache / session._archive_key("8g")
+    stand_in.cache.mkdir(parents=True)
+    if case == "size_mismatch":
+        (stand_in.cache / "conf").mkdir()
+        key.with_suffix(".jsa").write_bytes(b"x" * 10)
+        key.with_suffix(".json").write_text(json.dumps({"bytes": 11}))
+    elif case == "failed":
+        key.with_suffix(".failed").write_text("trainer exited 1\n")
+    elif case == "unwritable":
+        stand_in.cache.rmdir()
+        stand_in.cache.parent.rmdir()
+        stand_in.cache.parent.write_text("a file where the cache dir should be")
+    elif case == "spark_defaults":
+        (stand_in.conf_dir / "spark-defaults.conf").write_text("spark.foo bar\n")
+    else:
+        monkeypatch.setenv("HADOOP_CONF_DIR", str(stand_in.conf_dir))
+    for _ in range(2):
+        got = stand_in.get_spark(cpus=2)
+        assert "spark.driver.defaultJavaOptions" not in got
+        assert got["SPARK_CONF_DIR at launch"] == str(stand_in.conf_dir)
+    assert stand_in.trained == []
+
+
+def _alive(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except FileNotFoundError:
+        return False
+
+
+@pytest.mark.parametrize("mode", ["exit", "timeout"])
+def test_failed_trainer_marks_key_and_leaves_no_process(tmp_path, monkeypatch, mode):
+    """A trainer that exits non-zero or outlives its timeout has its whole
+    process group killed, its partial archive removed and its key marked
+    failed.  The stand-in trainer is a shell script that leaves a
+    background child and a partial archive behind."""
+    from dataflow_spark import session
+
+    script = tmp_path / "trainer.sh"
+    script.write_text(
+        "#!/bin/sh\n"
+        'sleep 60 &\necho $! > "$TRAINER_PIDS"\ntouch "$3.jsa.tmp"\n'
+        '[ "$TRAINER_MODE" = exit ] && exit 3\nsleep 60\n'
+    )
+    script.chmod(0o755)
+    monkeypatch.setattr(session, "sys", SimpleNamespace(executable=str(script)))
+    monkeypatch.setattr(session, "TRAIN_TIMEOUT_S", 2)
+    monkeypatch.setenv("TRAINER_PIDS", str(tmp_path / "pids"))
+    monkeypatch.setenv("TRAINER_MODE", mode)
+    path = str(tmp_path / "key")
+    session._train(path, "8g")
+    grandchild = int((tmp_path / "pids").read_text())
+    deadline = time.time() + 10
+    while _alive(grandchild) and time.time() < deadline:
+        time.sleep(0.05)
+    assert not _alive(grandchild)
+    assert not os.path.exists(path + ".jsa.tmp")
+    assert not os.path.exists(path + ".json")
+    why = "exited 3" if mode == "exit" else "timed out after 2 s"
+    assert open(path + ".failed").read() == f"trainer {why}; see {path}.log\n"
+
+
+def test_archive_for_another_classpath_falls_back(tmp_path):
+    """A complete archive dumped for another classpath (a one-class jar),
+    published under this session's key, is passed to the driver JVM, which
+    warns, refuses it and starts without it: a fresh process still gets a
+    session that computes right."""
+    import subprocess
+    import sys
+
+    from dataflow_spark import session
+
+    (tmp_path / "Hello.java").write_text(
+        "public class Hello { public static void main(String[] a) {} }\n"
+    )
+    cache = tmp_path / "xdg" / "dataflow_spark" / "cds"
+    (cache / "conf").mkdir(parents=True)
+    key = cache / session._archive_key("8g")
+    bin_dir = os.path.dirname(os.path.realpath(session._java()))
+    for cmd in (
+        ["javac", "Hello.java"],
+        ["jar", "cf", "hello.jar", "Hello.class"],
+        ["java", f"-XX:ArchiveClassesAtExit={key}.jsa", "-cp", "hello.jar", "Hello"],
+    ):
+        subprocess.run([os.path.join(bin_dir, cmd[0]), *cmd[1:]], cwd=tmp_path, check=True, timeout=120)
+    key.with_suffix(".json").write_text(json.dumps({"bytes": os.path.getsize(f"{key}.jsa")}))
+    conf_dir = tmp_path / "spark_conf"
+    conf_dir.mkdir()
+    code = (
+        "import json\n"
+        "from dataflow_spark.session import get_spark\n"
+        "s = get_spark(cpus=2)\n"
+        "n = s.range(1000).selectExpr('sum(id) AS n').collect()[0].n\n"
+        "u = s.createDataFrame([(i,) for i in range(10)], 'x INT')"
+        ".selectExpr('sum(x) AS u').toPandas()['u'][0]\n"
+        "opts = s.sparkContext.getConf().get('spark.driver.defaultJavaOptions')\n"
+        "print(json.dumps({'n': n, 'u': int(u), 'opts': opts}))\n"
+        "s.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k not in ("SPARK_DRIVER_MEM", "SPARK_GRAFT_MASTER")}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env.update(XDG_CACHE_HOME=str(tmp_path / "xdg"), SPARK_CONF_DIR=str(conf_dir), PYTHONPATH=repo)
+    p = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=300
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    got = json.loads(p.stdout.splitlines()[-1])
+    assert (got["n"], got["u"]) == (499500, 45)
+    assert got["opts"] == f"-XX:SharedArchiveFile={key}.jsa -Xshare:auto"
+    assert "Unable to use shared archive" in p.stdout + p.stderr
+    assert sorted(os.listdir(cache)) == sorted(["conf", key.name + ".jsa", key.name + ".json"])
 
 
 def test_sink_replay_is_noop(spark, tmp_path):

@@ -15,9 +15,11 @@ cannot spill its JVM and Python threads onto the others.
 Pair p runs A then B when p is even and B then A when it is odd, each run a
 fresh process with its cwd at the leg's tree, so box drift hits both legs
 alike.  A run's result is the last stdout line that parses as a JSON object,
-flattened to its dotted numeric leaves (lists and bools are skipped): this
-reads ``perfbench/run.py`` and ``bench.py`` alike.  A run that exits non-zero
-or prints no JSON object fails; the loop goes on and the exit status is 1.
+flattened to its dotted numeric leaves, a bool read as 0/1 (lists are
+skipped): this reads ``perfbench/run.py`` and ``bench.py`` alike.  A run that
+exits non-zero, prints no JSON object, or reports ``correct`` false (as
+``perfbench/run.py`` does when its output check fails) fails: its pair is left
+out of the summary, the loop goes on, and the exit status is 1.
 
 The last stdout line is one JSON report: the legs with their resolved SHAs,
 the command, every run, and for each metric present in every complete pair
@@ -75,8 +77,8 @@ def flatten(obj: dict, prefix: str = "") -> dict:
     for k, v in obj.items():
         if isinstance(v, dict):
             out.update(flatten(v, f"{prefix}{k}."))
-        elif isinstance(v, (int, float)) and not isinstance(v, bool):
-            out[f"{prefix}{k}"] = v
+        elif isinstance(v, (int, float)):
+            out[f"{prefix}{k}"] = int(v) if isinstance(v, bool) else v
     return out
 
 
@@ -98,7 +100,7 @@ def run(cmd: list, leg_env: dict, cwd: str) -> dict:
     rec = {"rc": p.returncode}
     if result is not None:
         rec["metrics"] = flatten(result)
-    if p.returncode != 0 or result is None:
+    if p.returncode != 0 or result is None or rec["metrics"].get("correct") == 0:
         rec["stderr_tail"] = p.stderr.splitlines()[-20:]
     return rec
 
